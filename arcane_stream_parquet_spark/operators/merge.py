@@ -17,16 +17,37 @@ Layout (every metadata file IMMUTABLE — create-only, round-4 redesign
 closing the round-3 S3A mutable-commit findings)::
 
     <path>/data/vNNNNN-<nonce>/__bucket=N/*.parquet  immutable version dirs
-                                               (nonce per write attempt,
-                                               r10; manifest entries
-                                               record the dirname)
-    <path>/_asp_meta/manifest-vNNNNN.json      one per commit; the CURRENT
-                                               manifest is the max version
-                                               ({bucket -> version} map +
-                                               the authoritative schema)
+                                               (nonce per write attempt;
+                                               file entries record the
+                                               dirname)
+    <path>/deletes/vNNNNN-<nonce>/*.parquet    MoR equality-delete files
+    <path>/_asp_meta/manifest-vNNNNN.json      one root per commit; the
+                                               CURRENT manifest is the
+                                               max version
+    <path>/_asp_meta/manifest-vNNNNN-shard-NNNNN.json  file-entry shards
+                                               of large roots
     <path>/_asp_meta/watermark-<20-digits>.json  stream watermark (ST2);
                                                current = max in listing
                                                (filename IS the value)
+
+The root manifest (one format; :meth:`ParquetMergeTarget._read_manifest`
+refuses any other):
+
+- ``version``, ``committed_at``, ``op`` (commit kind), ``schema`` (the
+  authoritative table schema), ``num_buckets``, ``buckets``
+  ({bucket -> version that last changed it}, the CDC diff scope) and
+  ``deletes`` (pending delete entries);
+- the live file entries, EITHER inline as ``files`` OR sharded as
+  ``file_shards`` descriptors ``{"n", "b0", "b1", "nf", "hist",
+  "coal"}`` with the ``n_files`` / ``size_hist`` summary beside them.
+
+A file entry is ``{"v": commit version, "d": dirname, "b": bucket,
+"n": name, "sz": bytes}`` plus optional stats ``"mn"``/``"mx"`` (key
+range), ``"hn"`` (may hold a null key), ``"rc"`` (row count), ``"cs"``
+(per-column ranges) and ``"bf"`` (bloom filters).  A delete entry is
+``{"seq": commit version, "d": dirname, "n": name, "bs": buckets its
+keys hash into, "mn", "mx", "hn", "sz"}``; ``"sc"`` marks a
+consolidated file that stores each key's original seq.
 
 A merge (1) dedups the batch per key (J2 window), (2) reads ONLY the
 affected buckets of the live table (partition pruning on ``__bucket``),
@@ -721,26 +742,51 @@ class ParquetMergeTarget:
     def _manifest_file(self, version: int) -> str:
         return fs_join(self._meta_path, f"manifest-v{version:05d}.json")
 
-    def _version_dir(self, version: int) -> str:
-        """Legacy (pre-r10) fixed dir for ``version`` — still the
-        resolution target for manifest entries without a ``"d"``
-        dirname, and for pre-r5 bucket-granularity manifests."""
-        return fs_join(self.path, "data", f"v{version:05d}")
+    def _read_manifest(self, version: int) -> dict:
+        """THE manifest loader: every root manifest read goes through
+        here, and one root-only check (never a shard read) refuses any
+        layout but the one this class writes (module docstring) — a
+        table whose manifests predate it is refused, not upgraded,
+        exactly as an Iceberg reader refuses an unknown
+        ``format-version``.  Raises FileNotFoundError when the root
+        does not exist."""
+        m = json.loads(self._fio.read_text(self._manifest_file(version)))
+        shards = m.get("file_shards")
+        deletes = m.get("deletes") or []
+        missing = [
+            name
+            for name, ok in (
+                ("num_buckets", "num_buckets" in m),
+                ("files or file_shards", "files" in m or shards is not None),
+                (
+                    "file_shards descriptors",
+                    not shards or isinstance(shards[0], dict),
+                ),
+                ("n_files", shards is None or "n_files" in m),
+                ("size_hist", shards is None or "size_hist" in m),
+                ("delete entry bs", not deletes or "bs" in deletes[0]),
+            )
+            if not ok
+        ]
+        if missing:
+            raise ValueError(
+                f"manifest v{version} at {self.path} predates the current "
+                f"manifest format (missing: {', '.join(missing)}); such "
+                f"tables are refused, not upgraded"
+            )
+        return m
 
-    # -- nonce-namespaced staging (r10) ------------------------------------
+    # -- nonce-namespaced staging ------------------------------------------
     #
     # Every write attempt lands in a FRESH unique dir
     # ``v{version}-{nonce}`` and the committed manifest records the
     # dirname per file entry (``"d"``).  No writer ever deletes
-    # another's in-flight dir (the pre-r10 "clear the orphan and
-    # retry" rule was the last torn-state path under two interleaved
-    # in-flight writers: one could clear the other's uncommitted
-    # staging, then the other committed a manifest referencing deleted
-    # files).  Crashed/lost attempts become unreferenced dirs that
-    # :meth:`vacuum` reclaims.  Commit atomicity is unchanged — the
-    # create-only root manifest stays the single commit point and CAS
-    # fence.  Entries without ``"d"`` (pre-r10 tables) resolve to the
-    # legacy fixed dir; mixed manifests are fine.
+    # another's in-flight dir: a writer clearing "orphans" could clear
+    # another's uncommitted staging right before that one commits a
+    # manifest referencing it.  Crashed/lost attempts become
+    # unreferenced dirs that :meth:`vacuum` reclaims.  Commit atomicity
+    # is unchanged — the create-only root manifest stays the single
+    # commit point and CAS fence.
 
     @staticmethod
     def _new_dirname(version: int) -> str:
@@ -751,9 +797,8 @@ class ParquetMergeTarget:
 
     @staticmethod
     def _dirname_of(entry: dict) -> str:
-        """Physical dirname of a data file entry (nonce-era ``"d"`` or
-        the legacy fixed name derived from its commit version)."""
-        return entry.get("d") or f"v{int(entry['v']):05d}"
+        """Physical dirname of a data file entry."""
+        return entry["d"]
 
     def exists(self) -> bool:
         """True iff at least one committed manifest exists. Create-only
@@ -794,26 +839,21 @@ class ParquetMergeTarget:
         versions = self.snapshot_versions()
         for v in reversed(versions):
             try:
-                m = json.loads(self._fio.read_text(self._manifest_file(v)))
+                m = self._read_manifest(v)
             except FileNotFoundError:
                 continue
-            # the manifest is the authority on the bucket count (r11
-            # online rebucketing): the constructor value only seeds a
-            # new table.  Pre-r11 manifests carry no field — for them
-            # the constructor keeps governing, which is exactly the
-            # numbering they were written under.
-            nb = m.get("num_buckets")
-            if nb is not None:
-                self.num_buckets = int(nb)
+            # the manifest is the authority on the bucket count (online
+            # rebucketing): the constructor value only seeds a new table
+            self.num_buckets = int(m["num_buckets"])
             return m
         raise FileNotFoundError(f"no committed manifest under {self._meta_path}")
 
     def _shard_name(self, version: int, i: int) -> str:
         return f"manifest-v{version:05d}-shard-{i:05d}.json"
 
-    # -- bucket-ranged reusable manifest shards (r9) -----------------------
+    # -- bucket-ranged reusable manifest shards ----------------------------
     #
-    # A sharded manifest's root carries DESCRIPTORS, not bare names:
+    # A sharded manifest's root carries DESCRIPTORS
     # ``{"n": name, "b0"/"b1": bucket range, "nf": entry count,
     # "hist": size histogram, "coal": cumulative coalescable-small-file
     # histogram}``.  Entries are bucket-sorted and shards cut only at
@@ -825,21 +865,11 @@ class ParquetMergeTarget:
     # not the full ~100 MB shard set, and the adaptive maintenance gate
     # answers its coalescable-small-file question exactly from ~40 ints
     # per shard descriptor (closing the r8 "delete-pressure-only at
-    # sharded scale" honesty hole, VERDICT r8 item 1).  Pre-r9 sharded
-    # roots (plain name lists) stay readable; their next commit
-    # upgrades them in place.
+    # sharded scale" honesty hole, VERDICT r8 item 1).
 
     @staticmethod
-    def _is_shard_descs(shards) -> bool:
-        return bool(shards) and isinstance(shards[0], dict)
-
-    def _shard_names(self, manifest: dict) -> list[str]:
-        """Shard file names for either root format (descriptors or the
-        pre-r9 bare-name list)."""
-        return [
-            s["n"] if isinstance(s, dict) else s
-            for s in manifest.get("file_shards") or []
-        ]
+    def _shard_names(manifest: dict) -> list[str]:
+        return [s["n"] for s in manifest.get("file_shards") or []]
 
     def _read_shard(self, name: str) -> list[dict]:
         return json.loads(self._fio.read_text(fs_join(self._meta_path, name)))
@@ -911,20 +941,17 @@ class ParquetMergeTarget:
 
     def _files_for_buckets(
         self, manifest: dict, buckets: set[int]
-    ) -> tuple[list[dict] | None, list[dict] | None]:
+    ) -> tuple[list[dict], list[dict] | None]:
         """(region, keep) for a commit touching ``buckets``: ``region``
         is every live file entry that could belong to a touched bucket
         (the inline list, or only the shards whose bucket range
         intersects); ``keep`` is the descriptors of shards provably
         untouched — reusable verbatim in the next root WITHOUT being
         read.  ``keep is None`` means the caller must commit a full
-        file list (inline root, pre-r9 name-list shards, or pre-r5
-        ``region is None`` legacy)."""
+        file list (inline root)."""
         shards = manifest.get("file_shards")
         if shards is None:
-            return manifest.get("files"), None
-        if not self._is_shard_descs(shards):
-            return self._files_of_manifest(manifest), None
+            return manifest["files"], None
         region: list[dict] = []
         keep: list[dict] = []
         for s in shards:
@@ -965,28 +992,21 @@ class ParquetMergeTarget:
         # retention_threshold, docs/crd.md:150-182) and history();
         # never used for ordering (versions do that)
         manifest["committed_at"] = round(time.time(), 3)
-        # every commit records its bucket count (r11): rollback across
-        # a rebucket restores the old numbering from the snapshot
-        # itself, and a reader constructed with a stale num_buckets is
+        # every commit records its bucket count: rollback across a
+        # rebucket restores the old numbering from the snapshot itself,
+        # and a reader constructed with a stale num_buckets is
         # corrected at the first _manifest() read
         manifest.setdefault("num_buckets", self.num_buckets)
         keep = manifest.pop("keep_shards", None) or []
         manifest.pop("file_shards", None)  # never carry a stale list over
         manifest.pop("n_files", None)
         manifest.pop("size_hist", None)
-        files = manifest.get("files")
+        files = list(manifest.get("files") or [])
         version = manifest["version"]
         # CAS fence (r9): if this root already exists another writer
         # won the race from the same base version — lose cleanly
         # BEFORE replacing any shard the winner's root may reference
         self._raise_if_version_committed(version)
-        if files is None and not keep:
-            # pre-r5 bucket-granularity manifest: root only
-            self._fio.create_text(
-                self._manifest_file(version), json.dumps(manifest)
-            )
-            return
-        files = list(files or [])
         total = len(files) + sum(int(s["nf"]) for s in keep)
         ideal = total // self.manifest_shard_entries + 1
         if keep and total <= self.manifest_shard_entries:
@@ -1191,17 +1211,12 @@ class ParquetMergeTarget:
         rows = []
         for v in self.snapshot_versions():
             m = self._manifest_at(v)
-            files = m.get("files")
-            if m.get("file_shards"):
-                n_files = int(m.get("n_files") or 0) or None
-                n_bytes = None
-            elif files is not None:
-                n_files = len(files)
-                n_bytes = sum(int(f.get("sz") or 0) for f in files)
-            else:  # pre-r5 bucket-granularity manifest
-                n_files, n_bytes = None, None
+            if "file_shards" in m:
+                n_files, n_bytes = int(m["n_files"]), None
+            else:
+                n_files = len(m["files"])
+                n_bytes = sum(int(f["sz"]) for f in m["files"])
             ts = m.get("committed_at")
-            nb = m.get("num_buckets")
             rows.append(
                 (
                     int(v),
@@ -1210,7 +1225,7 @@ class ParquetMergeTarget:
                     n_files,
                     n_bytes,
                     len(m.get("deletes") or []),
-                    int(nb) if nb is not None else None,
+                    int(m["num_buckets"]),
                 )
             )
         df = self.spark.createDataFrame(
@@ -1224,8 +1239,8 @@ class ParquetMergeTarget:
                     StructField("total_bytes", LongType(), True),
                     StructField("pending_deletes", LongType(), False),
                     # the snapshot's bucket count: makes a rebucket
-                    # visible in DESCRIBE HISTORY (null = pre-stamp)
-                    StructField("num_buckets", LongType(), True),
+                    # visible in DESCRIBE HISTORY
+                    StructField("num_buckets", LongType(), False),
                 ]
             ),
         )
@@ -1243,54 +1258,19 @@ class ParquetMergeTarget:
         live reads of pre-drift files)."""
         current = self._manifest()
         schema = self._schema_of(current)
-        if at_version is not None and at_version != current["version"]:
-            try:
-                manifest = json.loads(
-                    self._fio.read_text(self._manifest_file(at_version))
-                )
-            except FileNotFoundError:
-                raise ValueError(
-                    f"no snapshot v{at_version}; available: "
-                    f"{self.snapshot_versions()}"
-                ) from None
-        else:
-            manifest = current
+        manifest = self._manifest_at(at_version, current=current)
         files = self._files_of_manifest(manifest)
-        if files is not None:
-            if not files:
-                if schema is None:
-                    raise ValueError(
-                        f"empty manifest and no saved schema at {self.path}"
-                    )
-                return self.spark.createDataFrame([], schema)
-            return self._scan_with_deletes(
-                files, schema, manifest.get("deletes") or []
-            )
-        # pre-r5 bucket-granularity manifests can never carry deletes
-        # (every MoR commit writes file-level entries), so the legacy
-        # path below needs no delete handling
-        by_version: dict[int, list[int]] = {}
-        for bucket, version in manifest["buckets"].items():
-            by_version.setdefault(int(version), []).append(int(bucket))
-        if not by_version:
+        if not files:
             # empty table (e.g. overwrite() from an empty source):
             # readable as zero rows with the authoritative schema
             if schema is None:
-                raise ValueError(f"empty manifest and no saved schema at {self.path}")
+                raise ValueError(
+                    f"empty manifest and no saved schema at {self.path}"
+                )
             return self.spark.createDataFrame([], schema)
-        parts = []
-        for version, buckets in sorted(by_version.items()):
-            reader = self.spark.read
-            if schema is not None:
-                reader = reader.schema(schema)
-            part = reader.parquet(self._version_dir(version)).filter(
-                F.col(BUCKET_COLUMN).isin(buckets)
-            )
-            parts.append(part)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return self._scan_with_deletes(
+            files, schema, manifest.get("deletes") or []
+        )
 
     def read(
         self,
@@ -1365,9 +1345,7 @@ class ParquetMergeTarget:
         if at_version is None or at_version == current["version"]:
             return current
         try:
-            return json.loads(
-                self._fio.read_text(self._manifest_file(at_version))
-            )
+            return self._read_manifest(at_version)
         except FileNotFoundError:
             raise ValueError(
                 f"no snapshot v{at_version}; available: "
@@ -1394,10 +1372,10 @@ class ParquetMergeTarget:
         takes a non-empty string prefix on a string column and prunes
         on the [prefix, prefix-successor) interval).
         Pruning is strictly conservative: files without stats for a
-        referenced column (legacy manifests, schema drift, col not in
-        ``stats_cols``) stay in the scan, and the exact residual
-        filter ALWAYS applies — stats can only shrink the plan, never
-        change the answer.  Driver cost: one in-memory pass over the
+        referenced column (schema drift, col not in ``stats_cols``)
+        stay in the scan, and the exact residual filter ALWAYS applies
+        — stats can only shrink the plan, never change the answer.
+        Driver cost: one in-memory pass over the
         manifest entries (same O(#files) the merge planner already
         pays).  Pending MoR deletes apply as in any read.
 
@@ -1415,8 +1393,6 @@ class ParquetMergeTarget:
             raise ValueError(f"no schema committed at {self.path}")
         parsed, residual = self._parse_predicates(schema, preds)
         files = self._files_of_manifest(manifest)
-        if files is None:  # pre-r5 bucket-granularity manifest
-            return self.read(at_version).filter(residual)
         pruned = self._may_match_files(files, parsed)
         if not pruned:
             from pyspark.sql.types import StructType
@@ -1625,8 +1601,6 @@ class ParquetMergeTarget:
             raise ValueError(f"no schema committed at {self.path}")
         parsed, residual = self._parse_predicates(schema, preds)
         files = self._files_of_manifest(manifest)
-        if files is None:  # pre-r5 bucket-granularity manifest
-            return self.read(at_version).filter(residual).count()
         deletes = manifest.get("deletes") or []
         dirty = {
             int(b) for d in deletes for b in self._delete_buckets(d)
@@ -1744,7 +1718,7 @@ class ParquetMergeTarget:
         ct = F.col(CHANGE_TYPE_COLUMN)
         parts: list[DataFrame] = []
         for v in range(from_version + 1, to_version + 1):
-            m_new = json.loads(self._fio.read_text(self._manifest_file(v)))
+            m_new = self._read_manifest(v)
             op = m_new.get("op")
             if op in ("compact", "compact-minor", "rebucket"):
                 continue  # pure repack: contents proven unchanged
@@ -1801,7 +1775,7 @@ class ParquetMergeTarget:
         additions, with the deletes pending BEFORE it applied) — a
         key-range-pruned scan of the same candidate files the MoR
         commit itself probed, so still O(delta), never O(table)."""
-        all_files = self._files_of_manifest(m_new) or []
+        all_files = self._files_of_manifest(m_new)
         files_v = [f for f in all_files if int(f["v"]) == v]
         if not files_v:
             return None
@@ -1847,10 +1821,8 @@ class ParquetMergeTarget:
         # key-range-pruned to the update key set.  The key df buckets
         # under THIS manifest's numbering (m_new["num_buckets"]), not
         # the live table's — a later rebucket (r11) must not skew the
-        # pruning of a historical commit (absent field → the table has
-        # never rebucketed, rebucket() refuses to flip over un-stamped
-        # history — so the live count is exact)
-        nb_v = int(m_new.get("num_buckets") or self.num_buckets)
+        # pruning of a historical commit
+        nb_v = int(m_new["num_buckets"])
         kdf = self._read_delete_files(dels_v).select(
             F.col(_DEL_KEY_COL).alias(self.key_col)
         ).withColumn(BUCKET_COLUMN, _bucket_expr(self.key_col, nb_v))
@@ -1906,10 +1878,8 @@ class ParquetMergeTarget:
                     f"snapshot v{prev} (diff base for v{v}) already "
                     f"vacuumed — resume from a full read() instead"
                 )
-            m_old = json.loads(
-                self._fio.read_text(self._manifest_file(prev))
-            )
-            if m_old.get("num_buckets") != m_new.get("num_buckets"):
+            m_old = self._read_manifest(prev)
+            if m_old["num_buckets"] != m_new["num_buckets"]:
                 # the commit changed the bucket numbering (rollback
                 # across a rebucket is the one diff-branch commit that
                 # can): bucket ids are not comparable across the two
@@ -2021,8 +1991,6 @@ class ParquetMergeTarget:
             for r in kdf.select(BUCKET_COLUMN).distinct().collect()
         ]
         files = self._files_of_manifest(manifest)
-        if files is None:
-            files = self._legacy_files(manifest)
         touched, _kept = self._prune_touched_files(files, kdf, buckets)
         if not touched:
             return self.spark.createDataFrame([], schema)
@@ -2073,8 +2041,6 @@ class ParquetMergeTarget:
                 [], StructType([f for f in schema.fields if f.name != BUCKET_COLUMN])
             )
         files = self._files_of_manifest(manifest)
-        if files is None:
-            files = self._legacy_files(manifest)
         touched, _ = self._prune_touched_files(files, kdf, buckets)
         if not touched:
             return self.spark.createDataFrame(
@@ -2266,12 +2232,9 @@ class ParquetMergeTarget:
 
     # -- file-level manifest entries (Iceberg-manifest-style) --------------
     #
-    # Each manifest may carry ``"files"``: the COMPLETE live file set as
-    # ``{"v": version, "b": bucket, "n": name, "mn"/"mx": min/max merge
-    # key, "sz": bytes}`` entries.  Reads then target exactly these
-    # files; merges prune by key range.  Manifests without the entry
-    # (pre-r5 tables) fall back to bucket→version-dir granularity and
-    # are upgraded in place on their next commit.
+    # The manifest's file entries (module docstring) are the COMPLETE
+    # live file set: reads target exactly these files; merges prune by
+    # key range.
 
     def _file_path(self, entry: dict) -> str:
         return fs_join(
@@ -2555,17 +2518,15 @@ class ParquetMergeTarget:
             out.append(entry)
         return sorted(out, key=lambda e: (e["b"], e["n"]))
 
-    def _files_of_manifest(self, manifest: dict) -> list[dict] | None:
+    def _files_of_manifest(self, manifest: dict) -> list[dict]:
         """The manifest's live-file entries — inline, or concatenated
-        from its immutable manifest shards (``manifest_shard_entries``);
-        ``None`` for a pre-r5 manifest (callers fall back to bucket
-        granularity)."""
+        from its immutable manifest shards (``manifest_shard_entries``)."""
         if manifest.get("file_shards") is not None:
             out: list[dict] = []
             for name in self._shard_names(manifest):
                 out.extend(self._read_shard(name))
             return out
-        return manifest.get("files")
+        return manifest["files"]
 
     def _read_files(
         self, entries: list[dict], schema, tag_version: bool = False
@@ -2595,33 +2556,9 @@ class ParquetMergeTarget:
             out = out.unionByName(p)
         return out
 
-    def _legacy_files(self, manifest: dict) -> list[dict]:
-        """Synthesize file entries for a pre-r5 manifest by listing its
-        bucket→version dirs.  No min/max recorded (``None`` = never
-        prunable, always scanned) — the next commit persists real
-        stats for everything it rewrites."""
-        out = []
-        for bucket, version in manifest["buckets"].items():
-            d = fs_join(
-                self._version_dir(int(version)), f"{BUCKET_COLUMN}={bucket}"
-            )
-            for name, size in self._fio.list_files(d):
-                if name.endswith(".parquet"):
-                    out.append(
-                        {
-                            "v": int(version),
-                            "b": int(bucket),
-                            "n": name,
-                            "mn": None,
-                            "mx": None,
-                            "sz": size,
-                        }
-                    )
-        return out
-
     # -- merge-on-read delete files (Iceberg-v2-equality-delete-style) -----
     #
-    # A MoR commit at version N writes ``deletes/vNNNNN/*.parquet``
+    # A MoR commit at version N writes ``deletes/vNNNNN-<nonce>/*.parquet``
     # holding ONLY the merge-key column: every key in it is superseded
     # in all data files committed BEFORE N (entry ``seq`` = N; a data
     # file entry's ``v`` is its commit, so the rule is ``file.v <
@@ -2636,16 +2573,11 @@ class ParquetMergeTarget:
     # data files clean/dirty by pure metadata and anti-join only the
     # dirty ones.
 
-    def _delete_dir(self, version: int) -> str:
-        """Legacy fixed delete dir (pre-r10 entries without ``"d"``)."""
-        return fs_join(self.path, "deletes", f"v{version:05d}")
-
     def _delete_data_dir(self, dirname: str) -> str:
         return fs_join(self.path, "deletes", dirname)
 
     def _delete_path(self, entry: dict) -> str:
-        dirname = entry.get("d") or f"v{int(entry['seq']):05d}"
-        return fs_join(self._delete_data_dir(dirname), entry["n"])
+        return fs_join(self._delete_data_dir(entry["d"]), entry["n"])
 
     def _write_deletes(
         self, keys_df: DataFrame, n_keys: int, version: int
@@ -2746,16 +2678,6 @@ class ParquetMergeTarget:
     @staticmethod
     def _delete_buckets(d: dict) -> list[int]:
         """Buckets a delete entry can touch."""
-        if "bs" not in d:
-            # the short-lived intermediate layout wrote per-bucket
-            # entries ({"b": ...}) under bucket subdirs; it shipped in
-            # exactly one revision and is not readable here — reject
-            # loudly rather than crash with KeyError or misread paths
-            raise ValueError(
-                "unsupported legacy per-bucket delete entry (pre-flat "
-                "MoR layout); compact the table with the revision that "
-                "wrote it, then upgrade"
-            )
         return [int(x) for x in d["bs"]]
 
     @staticmethod
@@ -2764,8 +2686,8 @@ class ParquetMergeTarget:
         of data file ``f``?  Callers already checked seq/bucket; this
         is the key-range part.  Missing stats on either side → True
         (never prune on absent evidence); a null-key delete applies to
-        any file that may hold null rows (file ``hn`` missing → assume
-        it may — pre-r6 entries)."""
+        any file that may hold null rows (file ``hn`` missing → stats
+        off, assume it may)."""
         if d.get("hn") and f.get("hn", True):
             return True
         fm, fx, dm, dx = f.get("mn"), f.get("mx"), d.get("mn"), d.get("mx")
@@ -3048,14 +2970,10 @@ class ParquetMergeTarget:
         (r17 — previously two jobs: a distinct-bucket collect plus the
         prune join).  Sharded manifests keep the two-step path so
         metadata IO stays O(touched shards), not O(table)."""
-        files_inline = (
-            manifest.get("files")
-            if manifest.get("file_shards") is None
-            else None
-        )
+        files_inline = manifest.get("files")
         if files_inline is None:
-            # sharded (r9) or pre-r5 legacy manifest: buckets first,
-            # then only intersecting shards are read
+            # sharded manifest: buckets first, then only intersecting
+            # shards are read
             buckets = [
                 r[BUCKET_COLUMN]
                 for r in batch_bucketed.select(BUCKET_COLUMN)
@@ -3065,8 +2983,6 @@ class ParquetMergeTarget:
             if not buckets:
                 return [], [], None, [], []
             region, keep = self._files_for_buckets(manifest, set(buckets))
-            if region is None:
-                region = self._legacy_files(manifest)  # in-place upgrade
             touched, kept = self._prune_touched_files(
                 region, batch_bucketed, buckets
             )
@@ -3476,11 +3392,6 @@ class ParquetMergeTarget:
         old = self._manifest_at(to_version)
         old_files = self._files_of_manifest(old)
         cur_files = self._files_of_manifest(cur)
-        if old_files is None or cur_files is None:
-            raise ValueError(
-                "rollback requires file-level manifests "
-                "(pre-r5 bucket-granularity table)"
-            )
         new_version = cur["version"] + 1
 
         # buckets whose visible state differs: data file set, or the
@@ -3499,14 +3410,14 @@ class ParquetMergeTarget:
         def deletes_by_bucket(man: dict) -> dict:
             out: dict[int, set] = {}
             for d in man.get("deletes") or []:
-                key = (d.get("d") or "", d["n"], int(d["seq"]))
+                key = (d["d"], d["n"], int(d["seq"]))
                 for b in self._delete_buckets(d):
                     out.setdefault(int(b), set()).add(key)
             return out
 
         ofb, cfb = files_by_bucket(old_files), files_by_bucket(cur_files)
         odb, cdb = deletes_by_bucket(old), deletes_by_bucket(cur)
-        if old.get("num_buckets") != cur.get("num_buckets"):
+        if old["num_buckets"] != cur["num_buckets"]:
             # rolling back across a rebucket (r11): the restore changes
             # the bucket NUMBERING, so per-bucket diffs are meaningless
             # — stamp every target bucket changed (the CDC diff branch
@@ -3537,7 +3448,7 @@ class ParquetMergeTarget:
         self._commit_manifest(m)
         # the restore re-commits the target snapshot's bucket count
         # (carried in m via dict(old)); resync the writer immediately
-        self.num_buckets = int(old.get("num_buckets") or self.num_buckets)
+        self.num_buckets = int(old["num_buckets"])
         return new_version
 
     def delete_keys(self, keys: "DataFrame | Sequence") -> int:
@@ -3597,8 +3508,6 @@ class ParquetMergeTarget:
         if not buckets:
             return 0
         region, keep = self._files_for_buckets(manifest, set(buckets))
-        if region is None:
-            region = self._legacy_files(manifest)  # in-place upgrade
         touched, _kept = self._prune_touched_files(region, kdf, buckets)
         if not touched:
             return 0  # no candidate file can hold any key: nothing live
@@ -3632,9 +3541,9 @@ class ParquetMergeTarget:
         if keep is not None:
             manifest["keep_shards"] = keep
         manifest["deletes"] = (manifest.get("deletes") or []) + new_deletes
-        # bucket→version map intentionally NOT bumped: there is no
-        # v{new} data dir for a legacy-path reader to open; CDC finds
-        # the touched buckets through the delete entries' "bs" lists
+        # bucket→version map intentionally NOT bumped: the commit
+        # writes no data dir; CDC finds the touched buckets through the
+        # delete entries' "bs" lists
         manifest["version"] = new_version
         manifest["schema"] = schema.jsonValue()
         manifest["op"] = "delete"  # CDC: snapshot diff, deletes certain
@@ -3688,35 +3597,17 @@ class ParquetMergeTarget:
     def _live_files(
         self, manifest: dict | None = None
     ) -> dict[int, list[tuple[str, int]]]:
-        """bucket -> live (path, bytes) data files.  Straight from the
-        manifest's file entries when present (pure metadata — no FS
-        listing at all, exactly Iceberg's manifest read); pre-r5
-        manifests fall back to listing their bucket→version dirs.
-        Pass an already-read ``manifest`` to avoid a second metadata
-        round-trip."""
+        """bucket -> live (path, bytes) data files, straight from the
+        manifest's file entries (pure metadata — no FS listing at all,
+        exactly Iceberg's manifest read).  Pass an already-read
+        ``manifest`` to avoid a second metadata round-trip."""
         if manifest is None:
             manifest = self._manifest()
-        files = self._files_of_manifest(manifest)
-        if files is not None:
-            out: dict[int, list[tuple[str, int]]] = {}
-            for f in files:
-                out.setdefault(int(f["b"]), []).append(
-                    (self._file_path(f), int(f["sz"]))
-                )
-            return out
-        out = {}
-        fio = self._fio
-        for bucket, version in manifest["buckets"].items():
-            d = fs_join(
-                self._version_dir(int(version)), f"{BUCKET_COLUMN}={bucket}"
+        out: dict[int, list[tuple[str, int]]] = {}
+        for f in self._files_of_manifest(manifest):
+            out.setdefault(int(f["b"]), []).append(
+                (self._file_path(f), int(f["sz"]))
             )
-            entries = [
-                (fs_join(d, name), size)
-                for name, size in fio.list_files(d)
-                if name.endswith(".parquet")
-            ]
-            if entries:
-                out[int(bucket)] = entries
         return out
 
     def compact(
@@ -3744,8 +3635,6 @@ class ParquetMergeTarget:
         prune after maintenance."""
         manifest = self._manifest()
         files = self._files_of_manifest(manifest)
-        if files is None:
-            files = self._legacy_files(manifest)
         deletes = manifest.get("deletes") or []
         per_bucket: dict[int, int] = {}
         for f in files:
@@ -3815,9 +3704,7 @@ class ParquetMergeTarget:
         manifest = None
         for v in reversed(versions):
             try:
-                manifest = json.loads(
-                    self._fio.read_text(self._manifest_file(v))
-                )
+                manifest = self._read_manifest(v)
                 break
             except FileNotFoundError:
                 continue
@@ -3833,37 +3720,23 @@ class ParquetMergeTarget:
             "delete_bytes": sum(int(d["sz"]) for d in deletes),
         }
         shards = manifest.get("file_shards")
-        if shards is not None and manifest.get("n_files") is not None:
-            hist = manifest.get("size_hist") or {}
+        if shards is not None:
             out["file_count"] = int(manifest["n_files"])
             out["small_file_count"] = sum(
                 int(c)
-                for k, c in hist.items()
+                for k, c in manifest["size_hist"].items()
                 if (1 << int(k)) - 1 <= small_file_bytes
             )
-            if self._is_shard_descs(shards):
-                # r9 descriptors: exact per-shard coalescable counts
-                # (files of a fully-under-threshold size class sharing
-                # a bucket with ≥2 such files), summed from the root's
-                # cumulative step functions — still zero shard reads
-                k = self._size_class_at(small_file_bytes)
-                out["coalescable_small_files"] = sum(
-                    self._step_at(s.get("coal") or {}, k) for s in shards
-                )
-            else:
-                # pre-r9 name-list shards carry no bucket info, so the
-                # coalescable count is UNKNOWABLE without reading them
-                # — and the gate must never gamble on it (the r8 review
-                # showed small≈coalescable can drive a futile full
-                # compact).  None = "unknown", distinguishable from a
-                # genuinely clean table (r8 ADVICE); the adaptive gate
-                # treats it as a disabled dimension until the next
-                # commit upgrades the root to descriptors.
-                out["coalescable_small_files"] = None
+            # exact per-shard coalescable counts (files of a fully-
+            # under-threshold size class sharing a bucket with ≥2 such
+            # files), summed from the descriptors' cumulative step
+            # functions — still zero shard reads
+            k = self._size_class_at(small_file_bytes)
+            out["coalescable_small_files"] = sum(
+                self._step_at(s["coal"], k) for s in shards
+            )
             return out
-        files = self._files_of_manifest(manifest)
-        if files is None:  # pre-r5 manifest: no per-file sizes recorded
-            files = []
+        files = manifest["files"]
         out["file_count"] = len(files)
         # ONE definition of "small" across layouts (r9 review): a file
         # whose power-of-two size class fits entirely under the
@@ -3910,16 +3783,14 @@ class ParquetMergeTarget:
         never oscillates."""
         manifest = self._manifest()
         n = int(self.num_buckets)
-        hist = manifest.get("size_hist")
-        if manifest.get("file_shards") is not None and hist is not None:
-            total = sum(int(c) * (1 << int(k)) for k, c in hist.items())
-            approx = True
+        approx = "file_shards" in manifest
+        if approx:
+            total = sum(
+                int(c) * (1 << int(k))
+                for k, c in manifest["size_hist"].items()
+            )
         else:
-            files = self._files_of_manifest(manifest)
-            if files is None:
-                files = self._legacy_files(manifest)
-            total = sum(int(f["sz"]) for f in files)
-            approx = False
+            total = sum(int(f["sz"]) for f in manifest["files"])
         avg = total / n if n else 0.0
         suggested = n
         if avg >= 2 * target_bucket_bytes:
@@ -3991,10 +3862,9 @@ class ParquetMergeTarget:
             )
 
         def due(m: dict) -> bool:
-            c = m["coalescable_small_files"]  # None = unknowable (pre-r9
-            # sharded root): treat the dimension as disabled, never gamble
             return delete_due(m) or bool(
-                on_small_files and c is not None and c >= on_small_files
+                on_small_files
+                and m["coalescable_small_files"] >= on_small_files
             )
 
         if not (
@@ -4071,12 +3941,10 @@ class ParquetMergeTarget:
         manifest = self._manifest()
         shards = manifest.get("file_shards")
         keep: list[dict] | None = None
-        if shards is not None and self._is_shard_descs(shards):
+        if shards is not None:
             k = self._size_class_at(small_file_bytes)
             cand_names = {
-                s["n"]
-                for s in shards
-                if self._step_at(s.get("coal") or {}, k) > 0
+                s["n"] for s in shards if self._step_at(s["coal"], k) > 0
             }
             files = []
             keep = []
@@ -4086,9 +3954,7 @@ class ParquetMergeTarget:
                 else:
                     keep.append(s)
         else:
-            files = self._files_of_manifest(manifest)
-        if files is None:
-            return {"delete_files_merged": 0, "small_files_rewritten": 0}
+            files = manifest["files"]
         deletes = manifest.get("deletes") or []
         schema = self._schema_of(manifest)
 
@@ -4256,10 +4122,9 @@ class ParquetMergeTarget:
         in-progress migrations)."""
         live_dirs: set[str] = set()
         if manifest is not None:
-            files = self._files_of_manifest(manifest)
-            if files is None:
-                files = self._legacy_files(manifest)
-            live_dirs = {self._dirname_of(f) for f in files}
+            live_dirs = {
+                self._dirname_of(f) for f in self._files_of_manifest(manifest)
+            }
         count = 0
         for name in self._rebucket_marker_names():
             mpath = fs_join(self._meta_path, name)
@@ -4298,7 +4163,7 @@ class ParquetMergeTarget:
             if int(f["b"]) in old_buckets
         )
         dels = sorted(
-            (d.get("d") or f"v{int(d['seq']):05d}", d["n"], int(d["seq"]))
+            (d["d"], d["n"], int(d["seq"]))
             for d in (deletes or [])
             if set(self._delete_buckets(d)) & old_buckets
         )
@@ -4398,28 +4263,10 @@ class ParquetMergeTarget:
                     f"every unit's rewrite bucket-local; an unrelated "
                     f"count would be one table-wide shuffle"
                 )
-            # exact-numbering invariant for CDC/rollback over history:
-            # every retained snapshot must record its bucket count, so
-            # an un-stamped (pre-r11) manifest proves the table never
-            # rebucketed.  Refuse BEFORE any staging IO is spent
-            # (O(retained snapshots) root reads — nothing next to one
-            # unit's rewrite); an un-stamped LIVE root is stamped by
-            # any new commit, expired history by vacuum().
-            for v in self.snapshot_versions():
-                if "num_buckets" not in self._manifest_at(v, current=manifest):
-                    raise ValueError(
-                        f"rebucket requires every retained snapshot to "
-                        f"record its bucket count; v{v} predates that — "
-                        f"vacuum() pre-upgrade history first (an "
-                        f"un-stamped live root is stamped by any new "
-                        f"commit)"
-                    )
             schema = self._schema_of(manifest)
             if schema is None:
                 raise ValueError(f"no schema committed at {self.path}")
             files = self._files_of_manifest(manifest)
-            if files is None:
-                files = self._legacy_files(manifest)
             deletes = manifest.get("deletes") or []
             units = min(n, nb)
             markers: dict[int, dict] = {}
@@ -4513,12 +4360,10 @@ class ParquetMergeTarget:
         (``read(at_version=...)``) and the CDC changelog
         (``read_changes(since)``) keep working across the retained
         window.  The default (1, None) reclaims all history (the
-        original contract).  Pre-stamp manifests (no ``committed_at``)
-        count as infinitely old.  With file-level manifests a version
-        dir can be PARTIALLY live (kept files ride alongside
-        superseded ones), so reclamation is per-file inside referenced
-        dirs and per-dir otherwise.  Returns removed entries;
-        ``dry_run=True`` returns exactly what a real run would remove
+        original contract).  A version dir can be PARTIALLY live (kept
+        files ride alongside superseded ones), so reclamation is
+        per-file inside referenced dirs and per-dir otherwise.  Returns
+        removed entries; ``dry_run=True`` returns exactly what a real run would remove
         without touching anything (audit before reclaiming a 100 TB
         table's history).
 
@@ -4587,17 +4432,10 @@ class ParquetMergeTarget:
                     m = self._manifest_at(v, current=manifest)
                 except FileNotFoundError:
                     continue
-                fl = self._files_of_manifest(m)
-                if fl is None:
-                    expired_data_dirs |= {
-                        f"v{int(x):05d}" for x in m["buckets"].values()
-                    }
-                else:
-                    expired_data_dirs |= {self._dirname_of(f) for f in fl}
-                for d in m.get("deletes") or []:
-                    expired_del_dirs.add(
-                        d.get("d") or f"v{int(d['seq']):05d}"
-                    )
+                expired_data_dirs |= {
+                    self._dirname_of(f) for f in self._files_of_manifest(m)
+                }
+                expired_del_dirs |= {d["d"] for d in m.get("deletes") or []}
                 expired_shards |= set(self._shard_names(m))
 
         def young_orphan(path: str) -> bool:
@@ -4612,24 +4450,16 @@ class ParquetMergeTarget:
                 return True  # cannot stat -> leave it for a later run
 
         # union the live references of every retained snapshot
-        whole_dirs: set[str] = set()  # legacy manifests: whole-dir refs
         live_data: dict[str, set[tuple[int, str]]] = {}
         live_del: dict[str, set[str]] = {}
         live_shards: set[str] = set()
         for m in manifests:
-            fl = self._files_of_manifest(m)
-            if fl is None:  # pre-r5 bucket-granularity manifest
-                whole_dirs |= {
-                    f"v{int(v):05d}" for v in m["buckets"].values()
-                }
-                continue
-            for f in fl:
+            for f in self._files_of_manifest(m):
                 live_data.setdefault(self._dirname_of(f), set()).add(
                     (int(f["b"]), f["n"])
                 )
             for d in m.get("deletes") or []:
-                dirname = d.get("d") or f"v{int(d['seq']):05d}"
-                live_del.setdefault(dirname, set()).add(d["n"])
+                live_del.setdefault(d["d"], set()).add(d["n"])
             live_shards |= set(self._shard_names(m))
 
         # staged-but-uncommitted rebucket dirs are referenced only by
@@ -4650,7 +4480,7 @@ class ParquetMergeTarget:
         # retained manifest — crashed, concurrency-losing, or expired
         # writers — reclaim whole; referenced dirs reclaim per-file
         for name in fio.list_names(data_root):
-            if name in whole_dirs or name in marker_dirs:
+            if name in marker_dirs:
                 continue
             vdir = fs_join(data_root, name)
             live = live_data.get(name)
@@ -4680,9 +4510,7 @@ class ParquetMergeTarget:
 
         # delete dirs are flat (one file per commit); drop dirs with no
         # live entries and dead files inside partially-live ones (a
-        # crash-retry can leave both).  Legacy manifests cannot
-        # reference deletes (MoR commits always write file entries), so
-        # their retention adds nothing here.
+        # crash-retry can leave both).
         for name in fio.list_names(deletes_root):
             vdir = fs_join(deletes_root, name)
             live = live_del.get(name)

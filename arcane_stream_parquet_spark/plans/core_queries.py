@@ -558,7 +558,7 @@ def q_rebucket_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     t.merge(batch(5, 3, "c"))
     t.rebucket(4)
     m = t._manifest()
-    ents = t._files_of_manifest(m) or []
+    ents = t._files_of_manifest(m)
     layout_ok = bool(ents) and all(
         0 <= int(f["b"]) < int(m["num_buckets"]) for f in ents
     )
@@ -696,7 +696,7 @@ def q_count_where_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _may_match_files / _file_must_match_all — one implementation of
     # the skip rule, so the attestation can never drift from the plan)
     m = t._manifest()
-    files = t._files_of_manifest(m) or []
+    files = t._files_of_manifest(m)
     schema = t._schema_of(m)
 
     def plan(preds):

@@ -44,16 +44,15 @@ def dir_bytes(path: str) -> int:
 
 
 def commit_bytes(table_path: str, version: int) -> int:
-    # r10 nonce staging: the commit's dir is v{version:05d}-<nonce>
-    # (legacy fixed name matched too)
+    # nonce staging: the commit's dirs are v{version:05d}-<nonce>
     total = 0
-    prefix = f"v{version:05d}"
+    prefix = f"v{version:05d}-"
     for sub in ("data", "deletes"):
         root = os.path.join(table_path, sub)
         if not os.path.isdir(root):
             continue
         for name in os.listdir(root):
-            if name == prefix or name.startswith(prefix + "-"):
+            if name.startswith(prefix):
                 total += dir_bytes(os.path.join(root, name))
     return total
 

@@ -134,7 +134,6 @@ _SLOW_TESTS = {
     "test_rerank_lifts_unstructured_recall",
     "test_backward_preserves_matched_nulls",
     "test_lsh_nan_policy_sql_matches_pure_sql",
-    "test_sharded_manifest_legacy_name_list_back_compat",
     "test_funnel_composes",
 }
 

@@ -2,9 +2,14 @@
 
 from __future__ import annotations
 
+import json
+import re
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
+from arcane_stream_parquet_spark.fsio import fs_join
 from arcane_stream_parquet_spark.operators.merge import ParquetMergeTarget
 
 
@@ -259,36 +264,68 @@ def test_null_merge_key_stays_single_row_under_pruning(spark, tmp_path):
     assert len(new) == 1, "non-null upsert must still touch exactly one file"
 
 
-def test_legacy_manifest_upgrades_in_place(spark, tmp_path):
-    """A pre-r5 manifest (no "files" entry) reads via the bucket
-    fallback and the next merge persists real file entries."""
-    import json
+def _bare_name_shards(t, m):
+    files = m.pop("files")
+    name = t._shard_name(m["version"] + 1, 0)
+    t._fio.create_text(fs_join(t._meta_path, name), json.dumps(files))
+    m["file_shards"] = [name]
+    m["n_files"] = len(files)
+    m["size_hist"] = t._shard_summary(files)[0]
 
-    from arcane_stream_parquet_spark.fsio import fs_join
 
-    t = ParquetMergeTarget(spark=spark, path=str(tmp_path / "t"), num_buckets=4)
-    t.merge(df_of(spark, [(f"k{i}", 1, f"p{i}") for i in range(20)]))
-    # rewrite the manifest as a legacy one (next version, files stripped)
-    m = t._manifest()
-    legacy = {k: v for k, v in m.items() if k != "files"}
-    legacy["version"] = m["version"]  # same data, files-less view
-    t._fio.delete(t._manifest_file(m["version"]))
-    t._fio.create_text(t._manifest_file(m["version"]), json.dumps(legacy))
-    # legacy tables used the FIXED dir layout (pre-r10, no nonce):
-    # relocate the freshly written nonce dir to where a pre-r5 table
-    # would actually have its data
-    data_root = fs_join(str(tmp_path / "t"), "data")
-    (nonce_dir,) = t._fio.list_names(data_root)
-    t._fio.move(
-        fs_join(data_root, nonce_dir), fs_join(data_root, "v00001")
+def _per_bucket_deletes(t, m):
+    m["deletes"] = [
+        {k: v for k, v in d.items() if k != "bs"} | {"b": d["bs"][0]}
+        for d in m["deletes"]
+    ]
+
+
+# root shapes written by earlier layouts -> the field the check names
+_OLD_ROOTS = {
+    "no_file_list": ("files or file_shards", lambda t, m: m.pop("files")),
+    "bare_name_shards": ("file_shards descriptors", _bare_name_shards),
+    "no_num_buckets": ("num_buckets", lambda t, m: m.pop("num_buckets")),
+    "per_bucket_delete": ("delete entry bs", _per_bucket_deletes),
+}
+
+
+@pytest.fixture(scope="module")
+def mor_table_dir(spark, tmp_path_factory):
+    path = tmp_path_factory.mktemp("old_roots") / "t"
+    t = ParquetMergeTarget(
+        spark=spark, path=str(path), num_buckets=4, merge_mode="mor"
     )
-    assert t._files_of_manifest(t._manifest()) is None
-    assert t.read().count() == 20  # bucket-granular fallback read
+    t.merge(df_of(spark, [(f"k{i}", 1, f"p{i}") for i in range(20)]))
     t.merge(df_of(spark, [("k1", 2, "new")]))
-    m2 = t._manifest()
-    assert t._files_of_manifest(m2) is not None
-    out = {r["arcane_merge_key"]: r["payload"] for r in t.read().collect()}
-    assert out["k1"] == "new" and len(out) == 20
+    assert t._manifest()["deletes"]
+    return path
+
+
+@pytest.mark.parametrize("shape", list(_OLD_ROOTS))
+def test_old_manifest_format_refused(spark, tmp_path, mor_table_dir, shape):
+    """A root in any earlier manifest layout is refused by the one
+    load-time check: reads, merges, maintenance polls and vacuum all
+    raise the same ValueError naming the version and the missing
+    field, and vacuum deletes nothing under the table."""
+    path = tmp_path / "t"
+    shutil.copytree(mor_table_dir, path)
+    t = ParquetMergeTarget(spark=spark, path=str(path), num_buckets=4)
+    field, downgrade = _OLD_ROOTS[shape]
+    m = t._manifest()
+    downgrade(t, m)
+    m["version"] += 1
+    t._fio.create_text(t._manifest_file(m["version"]), json.dumps(m))
+    before = sorted(p.relative_to(path) for p in path.rglob("*"))
+    msg = rf"manifest v{m['version']} .*\(missing: {re.escape(field)}\)"
+    for call in (
+        lambda: t.read().collect(),
+        lambda: t.merge(df_of(spark, [("k2", 3, "x")])),
+        t.maintenance_metrics,
+        t.vacuum,
+    ):
+        with pytest.raises(ValueError, match=msg):
+            call()
+    assert sorted(p.relative_to(path) for p in path.rglob("*")) == before
 
 
 def test_sorted_by_wins_over_key_sort(spark, tmp_path):
@@ -504,7 +541,7 @@ def test_sharded_adaptive_gate_fires_on_small_files_candidate_reads_only(
     for v in range(2, 6):
         t.merge(df_of(spark, [("k000", v, f"p{v}")]), mode="mor")
     m = t._manifest()
-    assert t._is_shard_descs(m["file_shards"]), "expected r9 descriptors"
+    assert isinstance(m["file_shards"][0], dict), "expected shard descriptors"
 
     with _shard_reads(t._fio.__class__) as reads:
         metrics = t.maintenance_metrics()
@@ -547,42 +584,6 @@ def test_sharded_adaptive_gate_fires_on_small_files_candidate_reads_only(
     after = t.maintenance_metrics()
     assert after["coalescable_small_files"] < metrics["coalescable_small_files"]
     assert sorted(map(tuple, t.read().collect())) == before
-
-
-def test_sharded_manifest_legacy_name_list_back_compat(spark, tmp_path):
-    """Pre-r9 roots carry bare shard-name lists: reads still work, the
-    coalescable metric reports None ("unknowable", r8 ADVICE) instead
-    of a silently wrong 0, the adaptive gate treats that dimension as
-    disabled, and the next commit upgrades the root to descriptors."""
-    import json as _json
-
-    t = _sharded_target(spark, tmp_path, num_buckets=8, max_records_per_file=4)
-    t.merge(df_of(spark, [(f"k{i:03d}", 1, f"p{i}") for i in range(80)]))
-    for v in range(2, 5):  # real coalescable debris
-        t.merge(df_of(spark, [("k000", v, f"p{v}")]))
-    m = t._manifest()
-    # hand-downgrade: next root version with the pre-r9 name list
-    legacy = dict(m)
-    legacy["file_shards"] = t._shard_names(m)
-    legacy["version"] = m["version"] + 1
-    t._fio.create_text(
-        t._manifest_file(legacy["version"]), _json.dumps(legacy)
-    )
-    before = sorted(map(tuple, t.read().collect()))
-    metrics = t.maintenance_metrics()
-    assert metrics["coalescable_small_files"] is None
-    assert metrics["file_count"] == m["n_files"]
-    # the gate must NOT fire on the unknowable dimension
-    ran = t.run_adaptive_maintenance(
-        on_small_files=1, on_delete_files=None, on_delete_bytes=None
-    )
-    assert not ran["ran"]
-    assert sorted(map(tuple, t.read().collect())) == before
-    # next commit upgrades in place to descriptors
-    t.merge(df_of(spark, [("k001", 9, "up")]))
-    m2 = t._manifest()
-    assert t._is_shard_descs(m2["file_shards"])
-    assert t.maintenance_metrics()["coalescable_small_files"] is not None
 
 
 def test_sharded_manifest_fragmentation_bound_reshards(spark, tmp_path):

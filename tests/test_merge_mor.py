@@ -13,6 +13,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import Row
 
+from arcane_stream_parquet_spark.fsio import fs_join
 from arcane_stream_parquet_spark.operators.merge import ParquetMergeTarget
 
 
@@ -457,7 +458,7 @@ def test_vacuum_reclaims_spent_delete_dirs(spark, tmp_path):
     t.compact()
     removed = t.vacuum()
     assert any(r.startswith("deletes/") for r in removed)
-    assert t._fio.list_names(t._delete_dir(2).rsplit("/", 1)[0]) == []
+    assert t._fio.list_names(fs_join(t.path, "deletes")) == []
     assert contents(t) == EXPECTED
 
 
@@ -577,28 +578,6 @@ def test_mor_equals_cow_for_random_batch_sequences(
         if i == compact_after:
             mor.compact()
     assert contents(cow) == contents(mor)
-
-
-def test_legacy_per_bucket_delete_entry_rejected_loudly(spark, tmp_path):
-    """Manifests written by the short-lived intermediate layout carry
-    per-bucket delete entries ({'b': ...}); they must fail with a
-    descriptive ValueError, not KeyError (r6 review find)."""
-    import json
-
-    t = make_target(spark, tmp_path / "t", merge_mode="mor")
-    t.merge(df_of(spark, [("k1", 1, "a")]))
-    t.merge(df_of(spark, [("k1", 2, "b")]))
-    m = t._manifest()
-    assert m["deletes"]
-    legacy = [
-        {k: v for k, v in d.items() if k != "bs"} | {"b": d["bs"][0]}
-        for d in m["deletes"]
-    ]
-    m["deletes"] = legacy
-    m["version"] += 1
-    t._commit_manifest(m)
-    with pytest.raises(ValueError, match="legacy per-bucket delete"):
-        t.read().collect()
 
 
 def test_mor_with_sorted_by_and_tiebreakers(spark, tmp_path):

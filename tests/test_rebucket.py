@@ -51,8 +51,7 @@ def seeded(spark, tmp_path, n=200, **kw):
 
 
 def entries_of(t):
-    m = t._manifest()
-    return t._files_of_manifest(m) or t._legacy_files(m)
+    return t._files_of_manifest(t._manifest())
 
 
 def cdc_fold(t):
