@@ -1,68 +1,41 @@
 """Pure byte-level media codecs, stdlib-only — no Spark imports.
 
-The multimodal decode story (VERDICT r3 "what's missing #2", r4 task 2):
-every format a container with NO media libraries can still decode
-honestly, from the public specs:
+The two container formats the multimodal curation pipeline decodes for
+real, from the public specs, plus two standalone byte codecs that no
+pipeline calls (kept with their hand-pinned tests, see below):
 
-- **BMP**: BITMAPINFOHEADER-family bitmaps — uncompressed 24/32-bit
-  (BI_RGB), paletted 1/4/8-bit, RLE8/RLE4, and (r6) BI_BITFIELDS
-  16/32-bit with arbitrary contiguous channel masks (565/555/custom,
-  V3+ alpha; bit-replication channel widening) — row padding,
-  bottom-up/top-down ordering, BGR(A)→RGB(A) swizzle. Public spec:
-  Windows BMP file format (BITMAPFILEHEADER + BITMAPINFOHEADER).
-- **GIF**: full GIF87a/89a pixel decode including a from-scratch
-  variable-width LZW decompressor (LSB-first code packing, clear/EOI
-  codes, 12-bit cap, KwKwK case), global/local color tables, interlace
-  de-pass, and MULTI-FRAME (animated) extraction — which makes video
-  frame-sampling a real decode path for one honest format. Public
-  spec: GIF89a specification (CompuServe, 1990).
-- **JPEG** (r5): sequential baseline/extended (SOF0/SOF1) AND
-  progressive (SOF2) decode — canonical Huffman from DHT, spectral
-  selection + successive approximation with EOB runs, dequant,
-  dezigzag, exact-integer DC fast path + separable float IDCT,
-  JFIF YCbCr→RGB, DRI/RSTn restarts. Public spec: ITU-T T.81.
-- **AVI** (r5): RIFF container walk; MJPEG '00dc' frames are complete
-  JPEGs, giving real video frame extraction for one honest container.
-  Public spec: Microsoft RIFF/AVI.
+- **BMP**: BITMAPINFOHEADER-family pixel decode — uncompressed 24/32-bit
+  (BI_RGB), paletted 1/4/8-bit, RLE8/RLE4, BI_BITFIELDS 16/32-bit with
+  contiguous channel masks (V3+ alpha, bit-replication widening) — and
+  an uncompressed 24-bit encoder. Public spec: Windows BMP file format.
+- **LZW** (GIF flavour): variable-width, LSB-first code packing with
+  clear/end codes, 12-bit cap and the KwKwK case. Public spec: GIF89a
+  appendix F.
 - **WAV**: RIFF/WAVE chunk walk + PCM sample decode (8/16-bit, any
   channel count) with deterministic integer features. Public spec:
   Microsoft/IBM RIFF WAVE.
-- **MP4 / ISO BMFF** (r6): box-walk METADATA decode
+- **MP4 / ISO BMFF**: box-walk METADATA decode
   (ftyp/moov/mvhd/trak/tkhd/mdhd/hdlr/stsd → duration, track count,
-  codecs, dimensions; 64-bit largesize boxes, v0/v1 headers). Public
-  spec: ISO/IEC 14496-12.
-
-- **JPEG lossless** (r6): SOF3 predictor coding (T.81 Annex H) —
-  Huffman DIFF categories, all 7 predictors, point transform,
-  grayscale and as-stored 3-component color. Public spec: ITU-T T.81
-  Annex H.
-
-Animated GIF frames are returned as coded rectangles AND a full
-disposal-aware compositor is provided (``composite_gif_frames``, r5:
-none/keep/restore-background/restore-previous semantics over the
-per-frame outputs).
-
-- **JPEG arithmetic** (r8): extended sequential SOF9 AND progressive
-  SOF10 — the T.81 Annex D QM-coder (Table D.3 estimator,
-  carry/stuffing byteout) with the Annex F.1.4 DC/AC conditioning
-  models, the G.1.3 progressive decision classes (DC refine fixed-bin,
-  AC first/refine with EOBx), and DAC parsing. Public spec: ITU-T T.81
-  Annex D/F/G.
+  codecs, dimensions; 64-bit largesize boxes, v0/v1 headers) and the
+  stbl sample-table walk (stts/stsc/stsz/stco/co64/stss → per-sample
+  offset, size, timestamp, keyframe flag). Public spec: ISO/IEC
+  14496-12.
 
 Remaining honest stub: coded SAMPLE decode for MP4-class containers
-(H.264/AAC bitstreams — the container metadata is real, above).
+(H.264/AAC bitstreams — the container metadata and sample layout are
+real, above).  Image decode in the pipeline is out of scope: no codec
+library in this environment, and no pipeline needs one; BMP and LZW are
+not wired into ``operators.multimodal``.
 
-Every decoder has a matching encoder used ONLY by tests/synthesis, and
+Each decoder has a matching encoder used ONLY by tests/synthesis, and
 the test suite pins decoders against hand-computed known bytes so an
-encoder/decoder bug pair cannot cancel (same policy as the PNG path).
-The progressive JPEG pair is additionally cross-checked: identical
-coefficients through the sequential and progressive entropy paths must
-decode to identical pixels (the paths share only the IDCT).
+encoder/decoder bug pair cannot cancel.
 """
 
 from __future__ import annotations
 
 import struct
+
 
 # ---------------------------------------------------------------------------
 # BMP
@@ -303,7 +276,7 @@ def decode_bmp_pixels(b: bytes) -> tuple[int, int, int, bytes]:
 
 
 # ---------------------------------------------------------------------------
-# GIF — LZW codec (GIF89a spec appendix; variable code width, LSB-first)
+# LZW — GIF flavour (GIF89a spec appendix; variable code width, LSB-first)
 
 _GIF_MAX_CODE = 4096
 
@@ -406,2585 +379,6 @@ def lzw_encode(min_code_size: int, indices: bytes) -> bytes:
     return bytes(out)
 
 
-# GIF interlace passes: (start row, step) per GIF89a §Appendix E
-_GIF_INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
-
-
-def _deinterlace(indices: bytearray, width: int, height: int) -> bytearray:
-    out = bytearray(len(indices))
-    src_row = 0
-    for start, step in _GIF_INTERLACE_PASSES:
-        for y in range(start, height, step):
-            out[y * width : (y + 1) * width] = indices[
-                src_row * width : (src_row + 1) * width
-            ]
-            src_row += 1
-    return out
-
-
-def parse_gif(b: bytes) -> dict:
-    """REAL stdlib-only GIF parse → ``{"width", "height", "frames"}``
-    where each frame is ``{"left", "top", "width", "height",
-    "delay_cs", "rgb"}`` with row-major RGB samples mapped through the
-    frame's (local or global) color table. Handles GIF87a/89a, graphic
-    control + generic extensions, interlaced frames, and any number of
-    image descriptors (animated GIFs). Frames are NOT composited — each
-    is its own coded rectangle (disposal semantics are post-processing,
-    out of scope here)."""
-    if b[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF payload")
-    if len(b) < 13:
-        raise ValueError("truncated GIF logical screen descriptor")
-    screen_w, screen_h = struct.unpack_from("<HH", b, 6)
-    packed = b[10]
-    bg_index = b[11]
-    pos = 13
-    global_table: bytes | None = None
-    if packed & 0x80:
-        n = 2 << (packed & 0x07)
-        global_table = b[pos : pos + 3 * n]
-        pos += 3 * n
-    frames: list[dict] = []
-    delay_cs = 0
-    disposal = 0
-    transparent: int | None = None
-    saw_trailer = False
-    while pos < len(b):
-        block = b[pos]
-        pos += 1
-        if block == 0x3B:  # trailer
-            saw_trailer = True
-            break
-        if block == 0x21:  # extension: label + sub-blocks
-            if pos >= len(b):
-                raise ValueError("truncated GIF extension")
-            label = b[pos]
-            pos += 1
-            if (
-                label == 0xF9 and pos + 5 <= len(b) and b[pos] >= 4
-            ):  # graphic control
-                gce_packed = b[pos + 1]
-                delay_cs = struct.unpack_from("<H", b, pos + 2)[0]
-                disposal = (gce_packed >> 2) & 0x07
-                transparent = b[pos + 4] if gce_packed & 0x01 else None
-            while pos < len(b) and b[pos] != 0:
-                pos += 1 + b[pos]
-            if pos >= len(b):
-                raise ValueError("truncated GIF extension sub-blocks")
-            pos += 1
-            continue
-        if block != 0x2C:
-            raise ValueError(f"unknown GIF block 0x{block:02x} at {pos - 1}")
-        if pos + 9 > len(b):
-            raise ValueError("truncated GIF image descriptor")
-        left, top, w, h = struct.unpack_from("<HHHH", b, pos)
-        img_packed = b[pos + 8]
-        pos += 9
-        table = global_table
-        if img_packed & 0x80:
-            n = 2 << (img_packed & 0x07)
-            table = b[pos : pos + 3 * n]
-            pos += 3 * n
-        if table is None:
-            raise ValueError("GIF frame has no color table")
-        if pos >= len(b):
-            raise ValueError("truncated GIF image data")
-        min_code_size = b[pos]
-        pos += 1
-        data = bytearray()
-        while pos < len(b) and b[pos] != 0:
-            ln = b[pos]
-            data += b[pos + 1 : pos + 1 + ln]
-            pos += 1 + ln
-        if pos >= len(b):
-            raise ValueError("truncated GIF image sub-blocks")
-        pos += 1
-        indices = lzw_decode(min_code_size, bytes(data))
-        if len(indices) < w * h:
-            raise ValueError(
-                f"GIF frame decoded to {len(indices)} indices, need {w * h}"
-            )
-        indices = indices[: w * h]
-        if img_packed & 0x40:
-            indices = _deinterlace(indices, w, h)
-        n_colors = len(table) // 3
-        rgb = bytearray(w * h * 3)
-        for i, idx in enumerate(indices):
-            if idx >= n_colors:
-                raise ValueError(f"GIF index {idx} outside {n_colors}-color table")
-            rgb[3 * i : 3 * i + 3] = table[3 * idx : 3 * idx + 3]
-        frames.append(
-            {
-                "left": left,
-                "top": top,
-                "width": w,
-                "height": h,
-                "delay_cs": delay_cs,
-                "rgb": bytes(rgb),
-                # compositing inputs (r5): raw palette indices, the
-                # frame's color table, transparency + disposal from the
-                # graphic control extension
-                "indices": bytes(indices),
-                "table": bytes(table),
-                "transparent": transparent,
-                "disposal": disposal,
-            }
-        )
-        delay_cs = 0
-        disposal = 0
-        transparent = None
-    if not saw_trailer:
-        # EOF without the 0x3B trailer: a truncation between blocks
-        # must not silently drop the remaining frames (r6 review find)
-        raise ValueError("truncated GIF: missing trailer")
-    return {
-        "width": screen_w,
-        "height": screen_h,
-        "bg_index": bg_index,
-        "global_table": global_table,
-        "frames": frames,
-    }
-
-
-def composite_gif_frames(b: bytes) -> list[bytes]:
-    """Full-canvas RGB frames of an animated GIF with DISPOSAL SEMANTICS
-    applied (GIF89a graphic control extension): each coded rectangle is
-    blitted onto the logical screen (transparent indices skipped),
-    yielding one width×height RGB buffer per frame; afterwards disposal
-    0/1 leaves the canvas, 2 restores the rectangle to the background
-    color, 3 restores the pre-frame canvas.  The per-rectangle parse
-    stays available via :func:`parse_gif` (this is pure post-processing
-    over it, as the r4 module docstring promised)."""
-    parsed = parse_gif(b)
-    w, h = parsed["width"], parsed["height"]
-    gt = parsed["global_table"]
-    if gt and parsed["bg_index"] < len(gt) // 3:
-        bg = gt[3 * parsed["bg_index"] : 3 * parsed["bg_index"] + 3]
-    else:
-        bg = b"\x00\x00\x00"
-    canvas = bytearray(bg * (w * h))
-    out: list[bytes] = []
-    for f in parsed["frames"]:
-        before = bytes(canvas) if f["disposal"] == 3 else None
-        fw, fh = f["width"], f["height"]
-        for yy in range(fh):
-            cy = f["top"] + yy
-            if cy >= h:
-                continue
-            for xx in range(fw):
-                cx = f["left"] + xx
-                if cx >= w:
-                    continue
-                idx = f["indices"][yy * fw + xx]
-                if f["transparent"] is not None and idx == f["transparent"]:
-                    continue
-                o = (cy * w + cx) * 3
-                canvas[o : o + 3] = f["table"][3 * idx : 3 * idx + 3]
-        out.append(bytes(canvas))
-        if f["disposal"] == 2:  # restore rect to background
-            for yy in range(fh):
-                cy = f["top"] + yy
-                if cy >= h:
-                    continue
-                for xx in range(fw):
-                    cx = f["left"] + xx
-                    if cx >= w:
-                        continue
-                    o = (cy * w + cx) * 3
-                    canvas[o : o + 3] = bg
-        elif f["disposal"] == 3 and before is not None:
-            canvas = bytearray(before)
-    return out
-
-
-def decode_gif_pixels(b: bytes) -> tuple[int, int, int, bytes]:
-    """First-frame convenience: (width, height, 3, row-major RGB) of a
-    GIF's first image descriptor (same tuple shape as the PNG/BMP
-    decoders)."""
-    parsed = parse_gif(b)
-    if not parsed["frames"]:
-        raise ValueError("GIF has no image data")
-    f = parsed["frames"][0]
-    return f["width"], f["height"], 3, f["rgb"]
-
-
-def gray_palette() -> bytes:
-    """256-entry grayscale color table (palette[i] = (i, i, i))."""
-    return bytes(v for i in range(256) for v in (i, i, i))
-
-
-def encode_gif(
-    width: int,
-    height: int,
-    frames: list[bytes],
-    palette: bytes | None = None,
-    delay_cs: int = 4,
-    interlace_frame: int | None = None,
-    frame_meta: list[dict] | None = None,
-    bg_index: int = 0,
-) -> bytes:
-    """A spec-valid (optionally animated) GIF89a from per-frame palette
-    INDEX arrays (row-major, one byte per pixel) over a shared global
-    color table (default grayscale). Each frame gets a graphic-control
-    extension with ``delay_cs``; ``interlace_frame`` writes that frame
-    with the 4-pass interlace row order so decoders must de-pass it.
-    ``frame_meta[i]`` may override ``left``/``top``/``width``/
-    ``height`` (a sub-rectangle frame) and set ``disposal`` /
-    ``transparent`` in the graphic-control extension (r5, for the
-    compositor).  Test/synthesis encoder, same policy as
-    ``encode_png``."""
-    table = palette if palette is not None else gray_palette()
-    n_colors = len(table) // 3
-    size_bits = max(1, (n_colors - 1).bit_length()) - 1
-    if 2 << size_bits != n_colors:
-        raise ValueError("palette size must be a power of two (2..256)")
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HH", width, height)
-    out += bytes([0x80 | size_bits, bg_index, 0])
-    out += table
-    min_code_size = max(2, size_bits + 1)
-    for fi, indices in enumerate(frames):
-        meta = (frame_meta[fi] if frame_meta else None) or {}
-        fx, fy = meta.get("left", 0), meta.get("top", 0)
-        fw, fh = meta.get("width", width), meta.get("height", height)
-        disposal = meta.get("disposal", 0)
-        transparent = meta.get("transparent")
-        if len(indices) != fw * fh:
-            raise ValueError("frame index array length != frame width * height")
-        gce_packed = (disposal & 0x07) << 2 | (1 if transparent is not None else 0)
-        out += bytes([0x21, 0xF9, 0x04, gce_packed])
-        out += struct.pack("<H", delay_cs)
-        out += bytes([transparent or 0, 0x00])
-        ilace = fi == interlace_frame
-        out += b"\x2c" + struct.pack("<HHHH", fx, fy, fw, fh)
-        out += bytes([0x40 if ilace else 0x00])
-        if ilace:
-            reordered = bytearray()
-            for start, step in _GIF_INTERLACE_PASSES:
-                for y in range(start, fh, step):
-                    reordered += indices[y * fw : (y + 1) * fw]
-            indices = bytes(reordered)
-        out.append(min_code_size)
-        compressed = lzw_encode(min_code_size, bytes(indices))
-        for off in range(0, len(compressed), 255):
-            chunk = compressed[off : off + 255]
-            out.append(len(chunk))
-            out += chunk
-        out.append(0)
-    out += b"\x3b"
-    return bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# JPEG — baseline sequential DCT (SOF0), ITU-T T.81 from scratch.
-#
-# Decoder scope (honest bounds, ValueError outside them): 8-bit Huffman
-# frames — baseline/extended sequential (SOF0/SOF1) AND progressive
-# (SOF2: spectral selection + successive approximation, DC/AC first and
-# refinement scans, EOB runs — r5), 1 or 3 components, any sampling
-# factors ≤ 4, DQT with 8- or 16-bit precision, DRI/RSTn restart
-# intervals, APPn/COM skipping, 0xFF00 byte unstuffing.  Lossless/
-# arithmetic coding, 12-bit precision, and 4-component (CMYK) raise.
-#
-# Determinism: the IDCT is exact integer arithmetic for DC-only blocks
-# (constant blocks round-trip EXACTLY under an all-ones quant table:
-# DC = 8·(v−128) and f(x,y) = DC/8 — the basis of the closed-form SQL
-# oracle in the multimodal facet) and float64 separable cosines with
-# round-half-up for general blocks — bit-stable across runs/machines
-# (IEEE 754 double ops are exactly specified).
-
-_ZIGZAG = (
-    0, 1, 8, 16, 9, 2, 3, 10,
-    17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34,
-    27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36,
-    29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46,
-    53, 60, 61, 54, 47, 55, 62, 63,
-)
-
-# M[u][x] = C(u)/2 · cos((2x+1)uπ/16); f(y,x) = Σu Σv M[u][x]·M[v][y]·F[v,u]
-import math as _math
-
-_IDCT_M = tuple(
-    tuple(
-        ((0.7071067811865476 if u == 0 else 1.0) / 2.0)
-        * _math.cos((2 * x + 1) * u * _math.pi / 16.0)
-        for x in range(8)
-    )
-    for u in range(8)
-)
-
-
-def _round_half_up(v: float) -> int:
-    return _math.floor(v + 0.5)
-
-
-def _clamp8(v: int) -> int:
-    return 0 if v < 0 else 255 if v > 255 else v
-
-
-class _HuffTable:
-    """Canonical JPEG Huffman table from a DHT segment's BITS/HUFFVAL
-    (T.81 Annex C): codes of length l are assigned consecutively,
-    doubling the code on each length step."""
-
-    def __init__(self, counts: bytes, symbols: bytes) -> None:
-        self.lookup: dict[tuple[int, int], int] = {}
-        code = 0
-        k = 0
-        for length in range(1, 17):
-            for _ in range(counts[length - 1]):
-                self.lookup[(length, code)] = symbols[k]
-                code += 1
-                k += 1
-            code <<= 1
-
-    def decode(self, reader: "_BitReader") -> int:
-        code = 0
-        for length in range(1, 17):
-            code = (code << 1) | reader.read_bit()
-            sym = self.lookup.get((length, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid JPEG Huffman code")
-
-
-class _BitReader:
-    """MSB-first bit reader over entropy-coded data with 0xFF00
-    unstuffing; RSTn markers are consumed by :meth:`restart`."""
-
-    def __init__(self, data: bytes, pos: int) -> None:
-        self.data = data
-        self.pos = pos
-        self.bit = 0
-
-    def read_bit(self) -> int:
-        if self.pos >= len(self.data):
-            # entropy data cut short: reject as the decoder's own
-            # error type, never IndexError (r6 hardening)
-            raise ValueError("JPEG entropy data truncated")
-        b = self.data[self.pos]
-        if b == 0xFF and self.bit == 0:
-            if self.pos + 1 >= len(self.data):
-                raise ValueError("JPEG entropy data truncated")
-            nxt = self.data[self.pos + 1]
-            if nxt != 0x00:
-                raise ValueError(
-                    f"unexpected marker 0xff{nxt:02x} inside entropy data"
-                )
-        out = (b >> (7 - self.bit)) & 1
-        self.bit += 1
-        if self.bit == 8:
-            self.bit = 0
-            self.pos += 1 + (1 if b == 0xFF else 0)  # skip the stuffed 0x00
-        return out
-
-    def receive(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.read_bit()
-        return v
-
-    def restart(self) -> None:
-        """Byte-align and consume the expected RSTn marker (T.81 E.2.4);
-        0xFF fill bytes before the marker are spec-legal padding
-        (B.1.1.2, r8 review find)."""
-        if self.bit:
-            self.bit = 0
-            self.pos += 1 + (1 if self.data[self.pos] == 0xFF else 0)
-        while (
-            self.pos + 1 < len(self.data)
-            and self.data[self.pos] == 0xFF
-            and self.data[self.pos + 1] == 0xFF
-        ):
-            self.pos += 1
-        if self.pos + 2 > len(self.data):
-            raise ValueError("JPEG entropy data truncated")
-        if self.data[self.pos] != 0xFF or not (
-            0xD0 <= self.data[self.pos + 1] <= 0xD7
-        ):
-            raise ValueError("expected JPEG restart marker")
-        self.pos += 2
-
-
-def _extend(v: int, s: int) -> int:
-    """DIFF/AC magnitude decoding (T.81 F.2.2.1): s low bits encode
-    values ±[2^(s-1), 2^s−1]; a leading 0 bit means negative."""
-    if s == 0:
-        return 0
-    return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-
-
-def _idct_block(coeffs: list[int], qtab: list[int]) -> list[int]:
-    """Dequantize + IDCT one block (natural-order quantized coeffs) →
-    64 clamped 8-bit samples.  DC-only blocks take the exact integer
-    path; general blocks the separable float64 path (same rounding)."""
-    if not any(coeffs[1:]):
-        f0 = coeffs[0] * qtab[0]
-        val = _clamp8(_round_half_up(f0 / 8.0) + 128)
-        return [val] * 64
-    deq = [coeffs[i] * qtab[i] for i in range(64)]
-    # rows: tmp[v][x] = Σ_u M[u][x] · F[v,u]
-    tmp = [[0.0] * 8 for _ in range(8)]
-    for v in range(8):
-        row = deq[v * 8 : v * 8 + 8]
-        for x in range(8):
-            s = 0.0
-            for u in range(8):
-                cu = row[u]
-                if cu:
-                    s += _IDCT_M[u][x] * cu
-            tmp[v][x] = s
-    out = [0] * 64
-    for y in range(8):
-        for x in range(8):
-            s = 0.0
-            for v in range(8):
-                tv = tmp[v][x]
-                if tv:
-                    s += _IDCT_M[v][y] * tv
-            out[y * 8 + x] = _clamp8(_round_half_up(s) + 128)
-    return out
-
-
-def decode_jpeg_pixels(b: bytes) -> tuple[int, int, int, bytes]:
-    """REAL stdlib-only JPEG decode → (width, height, n_channels,
-    row-major samples: gray for 1 component, RGB for 3 — lossless
-    3-component files are emitted as-stored, no color transform).
-    Processes: sequential baseline/extended (SOF0/SOF1), progressive
-    (SOF2), and lossless (SOF3, r6).  See module notes for scope;
-    anything outside raises."""
-    if not b.startswith(b"\xff\xd8"):
-        raise ValueError("not a JPEG payload")
-    qtables: dict[int, list[int]] = {}
-    huff_dc: dict[int, _HuffTable] = {}
-    huff_ac: dict[int, _HuffTable] = {}
-    dc_cond: dict[int, tuple[int, int]] = {}  # DAC: table -> (L, U)
-    ac_cond: dict[int, int] = {}  # DAC: table -> Kx
-    restart_interval = 0
-    frame = None  # (width, height, [(cid, h, v, tq)])
-    i = 2
-    saw_eoi = False
-    while i + 2 <= len(b):
-        if b[i] != 0xFF:
-            raise ValueError(f"bad JPEG marker alignment at {i}")
-        while i + 2 < len(b) and b[i + 1] == 0xFF:
-            i += 1  # T.81 B.1.1.2: 0xFF fill bytes before any marker
-        marker = b[i + 1]
-        if marker == 0xD9:  # EOI
-            saw_eoi = True
-            break
-        if marker == 0x01 or 0xD0 <= marker <= 0xD7:
-            i += 2
-            continue
-        if i + 4 > len(b):
-            raise ValueError("truncated JPEG segment header")
-        seg_len = int.from_bytes(b[i + 2 : i + 4], "big")
-        if seg_len < 2 or i + 2 + seg_len > len(b):
-            # a declared segment overrunning the buffer must reject as
-            # ValueError, not index short `seg` slices into IndexError
-            # (r6 property-fuzz find)
-            raise ValueError("truncated JPEG segment")
-        seg = b[i + 4 : i + 2 + seg_len]
-        if marker == 0xDB:  # DQT — one or more tables per segment
-            p = 0
-            while p < len(seg):
-                pq, tq = seg[p] >> 4, seg[p] & 0x0F
-                p += 1
-                if pq == 0:
-                    zz = list(seg[p : p + 64])
-                    p += 64
-                elif pq == 1:
-                    zz = [
-                        int.from_bytes(seg[p + 2 * j : p + 2 * j + 2], "big")
-                        for j in range(64)
-                    ]
-                    p += 128
-                else:
-                    raise ValueError(f"bad DQT precision {pq}")
-                nat = [0] * 64
-                for zi, q in enumerate(zz):
-                    nat[_ZIGZAG[zi]] = q
-                qtables[tq] = nat
-        elif marker == 0xC4:  # DHT — one or more tables per segment
-            p = 0
-            while p < len(seg):
-                tc, th = seg[p] >> 4, seg[p] & 0x0F
-                counts = seg[p + 1 : p + 17]
-                n = sum(counts)
-                symbols = seg[p + 17 : p + 17 + n]
-                if len(counts) < 16 or len(symbols) < n:
-                    # corrupted counts overrunning the segment must
-                    # reject as ValueError, not IndexError out of the
-                    # Huffman-table build (r8 corruption-fuzz find)
-                    raise ValueError("truncated JPEG DHT segment")
-                (huff_dc if tc == 0 else huff_ac)[th] = _HuffTable(
-                    counts, symbols
-                )
-                p += 17 + n
-        elif marker == 0xDD:  # DRI
-            restart_interval = int.from_bytes(seg[0:2], "big")
-        elif marker == 0xCC:  # DAC — arithmetic conditioning (B.2.4.3)
-            p = 0
-            while p + 1 < len(seg):
-                tc, tb = seg[p] >> 4, seg[p] & 0x0F
-                val = seg[p + 1]
-                p += 2
-                if tc == 0:
-                    low, up = val & 0x0F, val >> 4
-                    if not (low <= up <= 15):
-                        raise ValueError(f"bad DAC DC conditioning {val}")
-                    dc_cond[tb] = (low, up)
-                else:
-                    if not (1 <= val <= 63):
-                        raise ValueError(f"bad DAC AC conditioning Kx={val}")
-                    ac_cond[tb] = val
-        elif marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC9, 0xCA):
-            # SOF0/1 sequential, SOF2 progressive, SOF3 lossless (r6),
-            # SOF9/SOF10 sequential/progressive arithmetic (r8)
-            if len(seg) < 6:
-                raise ValueError("truncated JPEG SOF segment")
-            precision = seg[0]
-            if precision != 8:
-                raise ValueError(f"unsupported JPEG precision {precision}")
-            height = int.from_bytes(seg[1:3], "big")
-            width = int.from_bytes(seg[3:5], "big")
-            n_comp = seg[5]
-            if n_comp not in (1, 3):
-                raise ValueError(f"unsupported JPEG component count {n_comp}")
-            if len(seg) < 6 + 3 * n_comp:
-                raise ValueError("truncated JPEG SOF segment")
-            if width == 0 or height == 0:
-                raise ValueError("zero-dimension JPEG frame")
-            if width * height > 1_000_000:
-                # decompression-bomb guard (the PIL MAX_IMAGE_PIXELS
-                # idea, scaled to a pure-Python fixtures-grade decoder):
-                # a corrupted dimension byte must reject fast, not grind
-                # a 10^6-block MCU walk fed zero bits.  Real megapixel
-                # media is out of scope for this module by design — the
-                # multimodal facet swaps in a codec library for that.
-                raise ValueError(
-                    f"JPEG frame {width}x{height} exceeds the "
-                    "1M-pixel decode bound"
-                )
-            comps = []
-            for c in range(n_comp):
-                cid = seg[6 + 3 * c]
-                hv = seg[7 + 3 * c]
-                if not (1 <= hv >> 4 <= 4 and 1 <= (hv & 0x0F) <= 4):
-                    # T.81 B.2.2: Hi/Vi in 1..4 — a corrupted 0 would
-                    # divide by zero in the MCU geometry (r8 fuzz find)
-                    raise ValueError(f"bad JPEG sampling factors 0x{hv:02x}")
-                comps.append((cid, hv >> 4, hv & 0x0F, seg[8 + 3 * c]))
-            if marker == 0xC3:
-                if any(h != 1 or v != 1 for _, h, v, _ in comps):
-                    raise ValueError(
-                        "subsampled lossless JPEG is not supported"
-                    )
-                frame = {
-                    "lossless": True,
-                    "width": width,
-                    "height": height,
-                    "precision": precision,
-                    "cids": [cid for cid, _, _, _ in comps],
-                    "planes": {},
-                    # point transform is a SCAN property — record per
-                    # component (r6 review find: a single global let the
-                    # last scan's Pt silently override earlier scans')
-                    "pts": {},
-                    "scanned": False,
-                }
-            else:
-                frame = _new_jpeg_state(
-                    width, height, comps,
-                    progressive=marker in (0xC2, 0xCA),
-                )
-                frame["arith"] = marker in (0xC9, 0xCA)
-        elif 0xC5 <= marker <= 0xCF and marker != 0xC8:
-            raise ValueError(
-                f"unsupported JPEG frame type 0xff{marker:02x} "
-                "(sequential SOF0/SOF1/SOF9, progressive SOF2/SOF10 "
-                "and lossless SOF3 only)"
-            )
-        elif marker == 0xDA:  # SOS — scan follows
-            if frame is None:
-                raise ValueError("JPEG SOS before SOF")
-            if not seg or len(seg) < 4 + 2 * seg[0]:
-                # a corrupted component count must reject as ValueError,
-                # not index past the segment into IndexError (r8
-                # corruption-fuzz find — same class as the r6 slice bug)
-                raise ValueError("truncated JPEG SOS segment")
-            ns = seg[0]
-            scan_comps = []
-            for c in range(ns):
-                cid = seg[1 + 2 * c]
-                tabs = seg[2 + 2 * c]
-                scan_comps.append((cid, tabs >> 4, tabs & 0x0F))
-            ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-            ahal = seg[3 + 2 * ns]
-            if frame.get("lossless"):
-                i = _decode_jpeg_lossless_scan(
-                    b, i + 2 + seg_len, frame, scan_comps,
-                    ss, ahal & 0x0F, huff_dc, restart_interval,
-                )
-            elif frame.get("arith"):
-                if frame["progressive"]:
-                    i = _decode_jpeg_arith_prog_scan(
-                        b, i + 2 + seg_len, frame, scan_comps,
-                        (ss, se, ahal >> 4, ahal & 0x0F),
-                        dc_cond, ac_cond, restart_interval,
-                    )
-                else:
-                    if (ss, se, ahal) != (0, 63, 0):
-                        raise ValueError(
-                            "arithmetic sequential JPEG scan must be "
-                            "full-band (Ss=0 Se=63 Ah=Al=0)"
-                        )
-                    i = _decode_jpeg_arith_scan(
-                        b, i + 2 + seg_len, frame, scan_comps,
-                        dc_cond, ac_cond, restart_interval,
-                    )
-            else:
-                i = _decode_jpeg_scan(
-                    b, i + 2 + seg_len, frame, scan_comps,
-                    (ss, se, ahal >> 4, ahal & 0x0F),
-                    huff_dc, huff_ac, restart_interval,
-                )
-            continue
-        # APPn/COM and anything else: skip
-        i += 2 + seg_len
-    if frame is None or not frame["scanned"]:
-        raise ValueError("JPEG has no scan data")
-    if not saw_eoi:
-        # a cut landing exactly on a scan boundary would otherwise
-        # render a silently PARTIAL multi-scan (progressive) image —
-        # the r8 exhaustive truncation sweep's find; requiring the EOI
-        # marker turns every such prefix into a clean reject
-        raise ValueError("truncated JPEG (no EOI marker)")
-    if frame.get("lossless"):
-        return _finish_jpeg_lossless(frame)
-    return _finish_jpeg(frame, qtables)
-
-
-def _lossless_predict(
-    plane: list, x: int, y: int, width: int, predictor: int, default: int
-) -> int:
-    """T.81 Annex H.1.2 sample prediction: the first sample uses the
-    default (2^(P−Pt−1)), the rest of row 0 uses Ra (left), the first
-    column uses Rb (above), and interior samples the selected
-    predictor 1–7 (shifts are the spec's integer halving)."""
-    if y == 0 and x == 0:
-        return default
-    if y == 0:
-        return plane[x - 1]
-    if x == 0:
-        return plane[(y - 1) * width]
-    ra = plane[y * width + x - 1]
-    rb = plane[(y - 1) * width + x]
-    rc = plane[(y - 1) * width + x - 1]
-    if predictor == 1:
-        return ra
-    if predictor == 2:
-        return rb
-    if predictor == 3:
-        return rc
-    if predictor == 4:
-        return ra + rb - rc
-    if predictor == 5:
-        return ra + ((rb - rc) >> 1)
-    if predictor == 6:
-        return rb + ((ra - rc) >> 1)
-    if predictor == 7:
-        return (ra + rb) >> 1
-    raise ValueError(f"invalid lossless JPEG predictor {predictor}")
-
-
-def _decode_jpeg_lossless_scan(
-    b: bytes,
-    pos: int,
-    frame: dict,
-    scan_comps: list,
-    predictor: int,
-    pt: int,
-    huff_dc: dict,
-    restart_interval: int,
-) -> int:
-    """One lossless (SOF3) scan: per sample, a DC-table Huffman
-    category + magnitude bits give DIFF; the sample is (prediction +
-    DIFF) mod 2^16 (T.81 Annex H).  Components are interleaved one
-    sample each per MCU (all sampling factors are 1).  Restart
-    intervals in lossless scans are not supported (honest bound — the
-    prediction-reset semantics are untestable here without a second
-    implementation)."""
-    if restart_interval:
-        raise ValueError(
-            "restart intervals in lossless JPEG scans are not supported"
-        )
-    if not 1 <= predictor <= 7:
-        raise ValueError(f"invalid lossless JPEG predictor {predictor}")
-    width, height = frame["width"], frame["height"]
-    precision = frame["precision"]
-    if pt >= precision:
-        raise ValueError(f"point transform {pt} >= precision {precision}")
-    default = 1 << (precision - pt - 1)
-    reader = _BitReader(b, pos)
-    tables = []
-    planes = []
-    for cid, td, _ta in scan_comps:
-        if cid not in frame["cids"]:
-            raise ValueError(f"lossless scan references unknown comp {cid}")
-        if td not in huff_dc:
-            raise ValueError(f"lossless scan references missing DC table {td}")
-        tables.append(huff_dc[td])
-        plane = [0] * (width * height)
-        frame["planes"][cid] = plane
-        frame["pts"][cid] = pt
-        planes.append(plane)
-    for y in range(height):
-        for x in range(width):
-            for table, plane in zip(tables, planes):
-                s = table.decode(reader)
-                if s == 16:
-                    diff = 32768
-                elif s > 16:
-                    raise ValueError(f"invalid lossless DIFF category {s}")
-                else:
-                    diff = _extend(reader.receive(s), s)
-                px = _lossless_predict(plane, x, y, width, predictor, default)
-                plane[y * width + x] = (px + diff) & 0xFFFF
-    frame["scanned"] = True
-    return _next_marker(b, reader.pos)
-
-
-def _finish_jpeg_lossless(frame: dict) -> tuple[int, int, int, bytes]:
-    """Assemble lossless planes: each plane shifts back up by ITS
-    scan's point transform; 3-component files interleave WITHOUT a
-    color transform (T.81 defines none for the lossless process —
-    components are stored as-is, unlike the JFIF YCbCr convention of
-    the DCT processes).  A shifted sample exceeding the declared
-    precision is corrupt data and raises — never wraps silently (the
-    module's decode-honestly-or-raise contract)."""
-    width, height = frame["width"], frame["height"]
-    max_val = (1 << frame["precision"]) - 1
-    planes = []
-    pts = []
-    for cid in frame["cids"]:
-        if cid not in frame["planes"]:
-            raise ValueError(f"lossless JPEG never scanned component {cid}")
-        planes.append(frame["planes"][cid])
-        pts.append(frame["pts"][cid])
-    nch = len(planes)
-    out = bytearray(width * height * nch)
-    for idx in range(width * height):
-        for ci, (plane, pt) in enumerate(zip(planes, pts)):
-            v = plane[idx] << pt
-            if v > max_val:
-                raise ValueError(
-                    f"lossless JPEG sample {v} exceeds "
-                    f"{frame['precision']}-bit precision"
-                )
-            out[idx * nch + ci] = v
-    return width, height, nch, bytes(out)
-
-
-def _new_jpeg_state(width, height, comps, progressive):
-    max_h = max(c[1] for c in comps)
-    max_v = max(c[2] for c in comps)
-    mcus_x = (width + 8 * max_h - 1) // (8 * max_h)
-    mcus_y = (height + 8 * max_v - 1) // (8 * max_v)
-    comp_states = []
-    for cid, h, v, tq in comps:
-        blocks_w, blocks_h = mcus_x * h, mcus_y * v
-        comp_w = (width * h + max_h - 1) // max_h
-        comp_h = (height * v + max_v - 1) // max_v
-        comp_states.append(
-            {
-                "cid": cid, "h": h, "v": v, "tq": tq,
-                "blocks_w": blocks_w, "blocks_h": blocks_h,
-                # non-interleaved scan grid (T.81 A.2.2): the component's
-                # OWN block count, not the MCU-padded grid
-                "ni_w": (comp_w + 7) // 8, "ni_h": (comp_h + 7) // 8,
-                "store": [[0] * 64 for _ in range(blocks_w * blocks_h)],
-            }
-        )
-    return {
-        "width": width, "height": height, "progressive": progressive,
-        "max_h": max_h, "max_v": max_v,
-        "mcus_x": mcus_x, "mcus_y": mcus_y,
-        "comps": comp_states, "scanned": False,
-    }
-
-
-def _next_marker(b: bytes, pos: int) -> int:
-    """Index of the next real marker (0xFF + non-stuffing, non-RST
-    byte) at or after ``pos`` — where segment parsing resumes after an
-    entropy-coded scan."""
-    while pos + 1 < len(b):
-        if b[pos] == 0xFF and b[pos + 1] != 0x00 and not (
-            0xD0 <= b[pos + 1] <= 0xD7
-        ):
-            return pos
-        pos += 1
-    raise ValueError("JPEG scan data ran off the end (no trailing marker)")
-
-
-def _decode_jpeg_scan(
-    b: bytes,
-    pos: int,
-    state: dict,
-    scan_comps: list,
-    band: tuple,
-    huff_dc: dict,
-    huff_ac: dict,
-    restart_interval: int,
-) -> int:
-    """Decode ONE entropy-coded scan into the coefficient store and
-    return the stream position of the next marker.  Sequential frames
-    decode DC+AC per block; progressive frames dispatch on the band
-    (Ss/Se) and successive-approximation bits (Ah/Al) per T.81 G.1.2
-    (the classic spectral-selection + refinement algorithm)."""
-    ss, se, ah, al = band
-    if state["progressive"] and not (0 <= ss <= se <= 63):
-        # a corrupted Se must reject, not run the refinement loop off
-        # the end of the zigzag table (r8 corruption-fuzz find)
-        raise ValueError(f"bad JPEG spectral band Ss={ss} Se={se}")
-    comps_by_id = {c["cid"]: c for c in state["comps"]}
-    # corrupted scan headers must reject as ValueError before any
-    # KeyError-ing dict access (r8 corruption-fuzz find)
-    for cid, td, ta in scan_comps:
-        if cid not in comps_by_id:
-            raise ValueError(f"scan references unknown component {cid}")
-        needs_dc = not state["progressive"] or (ss == 0 and ah == 0)
-        needs_ac = not state["progressive"] or ss > 0
-        if needs_dc and td not in huff_dc:
-            raise ValueError(f"scan references missing DC table {td}")
-        if needs_ac and ta not in huff_ac:
-            raise ValueError(f"scan references missing AC table {ta}")
-    reader = _BitReader(b, pos)
-    state["scanned"] = True
-
-    def maybe_restart(unit_idx, preds, eob):
-        if restart_interval and unit_idx and unit_idx % restart_interval == 0:
-            reader.restart()
-            for k in preds:
-                preds[k] = 0
-            eob[0] = 0
-            return True
-        return False
-
-    if not state["progressive"]:
-        if len(scan_comps) != len(state["comps"]):
-            raise ValueError(
-                "non-interleaved sequential JPEG scans are not supported"
-            )
-        preds = {cid: 0 for cid, _, _ in scan_comps}
-        unit = 0
-        for my in range(state["mcus_y"]):
-            for mx in range(state["mcus_x"]):
-                maybe_restart(unit, preds, [0])
-                unit += 1
-                for cid, td, ta in scan_comps:
-                    comp = comps_by_id[cid]
-                    for by in range(comp["v"]):
-                        for bx in range(comp["h"]):
-                            block = comp["store"][
-                                (my * comp["v"] + by) * comp["blocks_w"]
-                                + mx * comp["h"] + bx
-                            ]
-                            s = huff_dc[td].decode(reader)
-                            if s > 11:
-                                raise ValueError(f"bad JPEG DC category {s}")
-                            preds[cid] += _extend(reader.receive(s), s)
-                            block[0] = preds[cid]
-                            k = 1
-                            while k < 64:
-                                rs = huff_ac[ta].decode(reader)
-                                r, sz = rs >> 4, rs & 0x0F
-                                if sz == 0:
-                                    if r == 15:
-                                        k += 16
-                                        continue
-                                    break  # EOB
-                                k += r
-                                if k > 63:
-                                    raise ValueError("JPEG AC run overflow")
-                                block[_ZIGZAG[k]] = _extend(
-                                    reader.receive(sz), sz
-                                )
-                                k += 1
-        return _next_marker(b, reader.pos if reader.bit == 0 else reader.pos + 1)
-
-    # ---- progressive scans -------------------------------------------
-    if ss == 0:
-        if se != 0:
-            raise ValueError("progressive DC scan must have Se=0")
-        preds = {cid: 0 for cid, _, _ in scan_comps}
-        if len(scan_comps) > 1:  # interleaved DC scan, MCU order
-            unit = 0
-            for my in range(state["mcus_y"]):
-                for mx in range(state["mcus_x"]):
-                    maybe_restart(unit, preds, [0])
-                    unit += 1
-                    for cid, td, ta in scan_comps:
-                        comp = comps_by_id[cid]
-                        for by in range(comp["v"]):
-                            for bx in range(comp["h"]):
-                                block = comp["store"][
-                                    (my * comp["v"] + by) * comp["blocks_w"]
-                                    + mx * comp["h"] + bx
-                                ]
-                                _dc_unit(reader, huff_dc, td, preds, cid,
-                                         block, ah, al)
-        else:
-            cid, td, ta = scan_comps[0]
-            comp = comps_by_id[cid]
-            unit = 0
-            for by in range(comp["ni_h"]):
-                for bx in range(comp["ni_w"]):
-                    maybe_restart(unit, preds, [0])
-                    unit += 1
-                    block = comp["store"][by * comp["blocks_w"] + bx]
-                    _dc_unit(reader, huff_dc, td, preds, cid, block, ah, al)
-        return _next_marker(b, reader.pos if reader.bit == 0 else reader.pos + 1)
-
-    # AC scan: always a single component (T.81 G.1.1.1)
-    if len(scan_comps) != 1:
-        raise ValueError("progressive AC scan must be single-component")
-    cid, td, ta = scan_comps[0]
-    comp = comps_by_id[cid]
-    ac_tab = huff_ac[ta]
-    eob = [0]  # EOB-run counter, shared across blocks within the scan
-    unit = 0
-    for by in range(comp["ni_h"]):
-        for bx in range(comp["ni_w"]):
-            maybe_restart(unit, {}, eob)
-            unit += 1
-            block = comp["store"][by * comp["blocks_w"] + bx]
-            if ah == 0:
-                _ac_first_unit(reader, ac_tab, block, ss, se, al, eob)
-            else:
-                _ac_refine_unit(reader, ac_tab, block, ss, se, al, eob)
-    return _next_marker(b, reader.pos if reader.bit == 0 else reader.pos + 1)
-
-
-def _dc_unit(reader, huff_dc, td, preds, cid, block, ah, al):
-    if ah == 0:  # first DC scan: diffs of (DC >> Al)
-        s = huff_dc[td].decode(reader)
-        if s > 11:
-            raise ValueError(f"bad JPEG DC category {s}")
-        preds[cid] += _extend(reader.receive(s), s)
-        block[0] = preds[cid] << al
-    else:  # refinement: one bit per block
-        if reader.receive(1):
-            block[0] |= 1 << al
-
-
-def _ac_first_unit(reader, ac_tab, block, ss, se, al, eob):
-    """First AC scan for a band (T.81 G.1.2.2): EOB runs + runs/sizes,
-    coefficients stored scaled up by 2^Al."""
-    if eob[0] > 0:
-        eob[0] -= 1
-        return
-    k = ss
-    while k <= se:
-        rs = ac_tab.decode(reader)
-        r, s = rs >> 4, rs & 0x0F
-        if s == 0:
-            if r == 15:  # ZRL
-                k += 16
-                continue
-            eob[0] = (1 << r) - 1 + (reader.receive(r) if r else 0)
-            break
-        k += r
-        if k > se:
-            raise ValueError("JPEG progressive AC run overflow")
-        block[_ZIGZAG[k]] = _extend(reader.receive(s), s) << al
-        k += 1
-
-
-def _ac_refine_unit(reader, ac_tab, block, ss, se, al, eob):
-    """AC refinement scan (T.81 G.1.2.3): newly-significant coefficients
-    arrive as ±2^Al; history-nonzero coefficients receive correction
-    bits embedded in the runs — the classic jdphuff recurrence."""
-    p1 = 1 << al
-    m1 = -(1 << al)
-    k = ss
-    if eob[0] == 0:
-        while k <= se:
-            rs = ac_tab.decode(reader)
-            r, s = rs >> 4, rs & 0x0F
-            newval = 0
-            if s == 0:
-                if r != 15:
-                    eob[0] = (1 << r) + (reader.receive(r) if r else 0)
-                    break
-                # r == 15: advance over 16 zero-history coefficients
-            else:
-                if s != 1:
-                    raise ValueError("JPEG AC refinement size must be 1")
-                newval = p1 if reader.receive(1) else m1
-            while k <= se:
-                z = _ZIGZAG[k]
-                if block[z] != 0:
-                    if reader.receive(1) and (block[z] & p1) == 0:
-                        block[z] += p1 if block[z] >= 0 else m1
-                else:
-                    if r == 0:
-                        break
-                    r -= 1
-                k += 1
-            if newval and k <= se:
-                block[_ZIGZAG[k]] = newval
-            k += 1
-    if eob[0] > 0:
-        while k <= se:
-            z = _ZIGZAG[k]
-            if block[z] != 0:
-                if reader.receive(1) and (block[z] & p1) == 0:
-                    block[z] += p1 if block[z] >= 0 else m1
-            k += 1
-        eob[0] -= 1
-
-
-def _finish_jpeg(state: dict, qtables: dict) -> tuple[int, int, int, bytes]:
-    """Dequantize + IDCT every stored block, assemble planes, upsample
-    chroma, and emit gray / RGB samples — shared by the sequential and
-    progressive paths (a progressive file reaches here only after ALL
-    its scans have accumulated into the store)."""
-    width, height = state["width"], state["height"]
-    max_h, max_v = state["max_h"], state["max_v"]
-    comps = state["comps"]
-    planes = []
-    for comp in comps:
-        pw, ph = comp["blocks_w"] * 8, comp["blocks_h"] * 8
-        plane = bytearray(pw * ph)
-        if comp["tq"] not in qtables:
-            raise ValueError(
-                f"component references missing quant table {comp['tq']}"
-            )
-        qtab = qtables[comp["tq"]]
-        for bi, coeffs in enumerate(comp["store"]):
-            block = _idct_block(coeffs, qtab)
-            by, bx = divmod(bi, comp["blocks_w"])
-            x0, y0 = bx * 8, by * 8
-            for yy in range(8):
-                row_off = (y0 + yy) * pw + x0
-                plane[row_off : row_off + 8] = bytes(
-                    block[yy * 8 : yy * 8 + 8]
-                )
-        planes.append(plane)
-    if len(comps) == 1:
-        pw = comps[0]["blocks_w"] * 8
-        out = bytearray(width * height)
-        for y in range(height):
-            out[y * width : (y + 1) * width] = planes[0][
-                y * pw : y * pw + width
-            ]
-        return width, height, 1, bytes(out)
-    # YCbCr → RGB (JFIF): nearest-sample (box) chroma upsampling
-    out = bytearray(width * height * 3)
-    pws = [c["blocks_w"] * 8 for c in comps]
-    for y in range(height):
-        for x in range(width):
-            vals = []
-            for ci, comp in enumerate(comps):
-                sx = x * comp["h"] // max_h
-                sy = y * comp["v"] // max_v
-                vals.append(planes[ci][sy * pws[ci] + sx])
-            Y, Cb, Cr = vals
-            r = _clamp8(_round_half_up(Y + 1.402 * (Cr - 128)))
-            g = _clamp8(
-                _round_half_up(Y - 0.344136 * (Cb - 128) - 0.714136 * (Cr - 128))
-            )
-            bl = _clamp8(_round_half_up(Y + 1.772 * (Cb - 128)))
-            o = (y * width + x) * 3
-            out[o : o + 3] = bytes((r, g, bl))
-    return width, height, 3, bytes(out)
-
-
-# -- JPEG arithmetic coding (SOF9) — ITU-T T.81 Annex D/F (r8) --------------
-#
-# The QM-coder: an adaptive binary arithmetic coder whose probability
-# estimate lives in a finite-state machine (Table D.3 below) indexed per
-# context bin.  Statistical models per F.1.4: DC diffs condition on the
-# previous diff's category (zero/small±/large±, bounds L/U from DAC),
-# AC coefficients condition on the zigzag index k (EOB / run / magnitude
-# category decision trees, low/high spectrum split at Kx).  Scope here:
-# extended sequential SOF9, 8-bit, interleaved scans, restart markers.
-# Conformance caveat: no arithmetic-JPEG encoder exists in this sandbox
-# to cross-check against, so the pinned tests are round-trips against
-# the Annex-D *encoder* below plus golden committed bytes — unlike the
-# Huffman modes, which decode independently-generated fixtures.
-#
-# Table D.3: (Qe, next-index-after-LPS, next-index-after-MPS, switch-MPS).
-# Index 113 is the fixed (non-adapting) 50/50 bin used for AC signs.
-
-_QM_TABLE = (
-    (0x5A1D, 1, 1, 1), (0x2586, 14, 2, 0), (0x1114, 16, 3, 0),
-    (0x080B, 18, 4, 0), (0x03D8, 20, 5, 0), (0x01DA, 23, 6, 0),
-    (0x00E5, 25, 7, 0), (0x006F, 28, 8, 0), (0x0036, 30, 9, 0),
-    (0x001A, 33, 10, 0), (0x000D, 35, 11, 0), (0x0006, 9, 12, 0),
-    (0x0003, 10, 13, 0), (0x0001, 12, 13, 0), (0x5A7F, 15, 15, 1),
-    (0x3F25, 36, 16, 0), (0x2CF2, 38, 17, 0), (0x207C, 39, 18, 0),
-    (0x17B9, 40, 19, 0), (0x1182, 42, 20, 0), (0x0CEF, 43, 21, 0),
-    (0x09A1, 45, 22, 0), (0x072F, 46, 23, 0), (0x055C, 48, 24, 0),
-    (0x0406, 49, 25, 0), (0x0303, 51, 26, 0), (0x0240, 52, 27, 0),
-    (0x01B1, 54, 28, 0), (0x0144, 56, 29, 0), (0x00F5, 57, 30, 0),
-    (0x00B7, 59, 31, 0), (0x008A, 60, 32, 0), (0x0068, 62, 33, 0),
-    (0x004E, 63, 34, 0), (0x003B, 32, 35, 0), (0x002C, 33, 9, 0),
-    (0x5AE1, 37, 37, 1), (0x484C, 64, 38, 0), (0x3A0D, 65, 39, 0),
-    (0x2EF1, 67, 40, 0), (0x261F, 68, 41, 0), (0x1F33, 69, 42, 0),
-    (0x19A8, 70, 43, 0), (0x1518, 72, 44, 0), (0x1177, 73, 45, 0),
-    (0x0E74, 74, 46, 0), (0x0BFB, 75, 47, 0), (0x09F8, 77, 48, 0),
-    (0x0861, 78, 49, 0), (0x0706, 79, 50, 0), (0x05CD, 48, 51, 0),
-    (0x04DE, 50, 52, 0), (0x040F, 50, 53, 0), (0x0363, 51, 54, 0),
-    (0x02D4, 52, 55, 0), (0x025C, 53, 56, 0), (0x01F8, 54, 57, 0),
-    (0x01A4, 55, 58, 0), (0x0160, 56, 59, 0), (0x0125, 57, 60, 0),
-    (0x00F6, 58, 61, 0), (0x00CB, 59, 62, 0), (0x00AB, 61, 63, 0),
-    (0x008F, 61, 32, 0), (0x5B12, 65, 65, 1), (0x4D04, 80, 66, 0),
-    (0x412C, 81, 67, 0), (0x37D8, 82, 68, 0), (0x2FE8, 83, 69, 0),
-    (0x293C, 84, 70, 0), (0x2379, 86, 71, 0), (0x1EDF, 87, 72, 0),
-    (0x1AA9, 87, 73, 0), (0x174E, 72, 74, 0), (0x1424, 72, 75, 0),
-    (0x119C, 74, 76, 0), (0x0F6B, 74, 77, 0), (0x0D51, 75, 78, 0),
-    (0x0BB6, 77, 79, 0), (0x0A40, 77, 48, 0), (0x5832, 80, 81, 1),
-    (0x4D1C, 88, 82, 0), (0x438E, 89, 83, 0), (0x3BDD, 90, 84, 0),
-    (0x34EE, 91, 85, 0), (0x2EAE, 92, 86, 0), (0x299A, 93, 87, 0),
-    (0x2516, 86, 71, 0), (0x5570, 88, 89, 1), (0x4CA9, 95, 90, 0),
-    (0x44D9, 96, 91, 0), (0x3E22, 97, 92, 0), (0x3824, 99, 93, 0),
-    (0x32B4, 99, 94, 0), (0x2E17, 93, 86, 0), (0x56A8, 95, 96, 1),
-    (0x4F46, 101, 97, 0), (0x47E5, 102, 98, 0), (0x41CF, 103, 99, 0),
-    (0x3C3D, 104, 100, 0), (0x375E, 99, 93, 0), (0x5231, 105, 102, 0),
-    (0x4C0F, 106, 103, 0), (0x4639, 107, 104, 0), (0x415E, 103, 99, 0),
-    (0x5627, 105, 106, 1), (0x50E7, 108, 107, 0), (0x4B85, 109, 103, 0),
-    (0x5597, 110, 109, 0), (0x504F, 111, 107, 0), (0x5A10, 110, 111, 1),
-    (0x5522, 112, 109, 0), (0x59EB, 112, 111, 1), (0x5A1D, 113, 113, 0),
-)
-
-# A context bin is one byte: bit 7 = current MPS sense, bits 0-6 = the
-# estimator state index (< 128, so it fits).
-
-
-class _QMDecoder:
-    """T.81 Annex D.2 arithmetic decoder over one entropy-coded scan.
-
-    Byte feed follows the JPEG-wide convention: 0xFF 0x00 is a stuffed
-    literal 0xFF; 0xFF followed by anything else is a marker — from
-    there on ZERO bytes are fed (the encoder's FLUSH may drop trailing
-    zero bytes, D.1.8), and ``marker_pos`` records where segment
-    parsing resumes.  Never reads past the buffer (exhaustion counts as
-    a marker), so truncated payloads stay total (fuzzer contract)."""
-
-    def __init__(self, data: bytes, pos: int) -> None:
-        self.data = data
-        self.bp = pos
-        self.marker_pos: int | None = None
-        self._acc = 0  # current byte being drained bitwise
-        self._nbits = 0
-        cx = 0
-        for _ in range(16):  # the code window: floor(F · 2^16)
-            cx = (cx << 1) | self._next_bit()
-        self.cx = cx
-        self.a = 0x10000
-
-    def _next_byte(self) -> int:
-        if self.marker_pos is not None:
-            return 0
-        d = self.data
-        if self.bp >= len(d):
-            self.marker_pos = len(d)
-            return 0
-        byte = d[self.bp]
-        self.bp += 1
-        if byte != 0xFF:
-            return byte
-        ff_at = self.bp - 1
-        while self.bp < len(d) and d[self.bp] == 0xFF:  # fill bytes
-            self.bp += 1
-        if self.bp >= len(d):
-            self.marker_pos = len(d)
-            return 0
-        nxt = d[self.bp]
-        self.bp += 1
-        if nxt == 0x00:
-            return 0xFF  # stuffed zero byte: datum is literal 0xFF
-        self.marker_pos = ff_at  # a real marker ends the data feed
-        return 0
-
-    def _next_bit(self) -> int:
-        if self._nbits == 0:
-            self._acc = self._next_byte()
-            self._nbits = 8
-        self._nbits -= 1
-        return (self._acc >> self._nbits) & 1
-
-    def decode(self, st: bytearray, i: int) -> int:
-        sv = st[i]
-        mps = sv >> 7
-        qe, nlps, nmps, switch = _QM_TABLE[sv & 0x7F]
-        self.a -= qe
-        if self.cx < self.a:
-            if self.a & 0x8000:
-                return mps  # fast path: no renorm, no estimation change
-            # MPS_EXCHANGE (D.2.3)
-            if self.a < qe:
-                d = 1 - mps
-                if switch:
-                    mps = 1 - mps
-                st[i] = (mps << 7) | nlps
-            else:
-                d = mps
-                st[i] = (mps << 7) | nmps
-        else:
-            self.cx -= self.a
-            # LPS_EXCHANGE (D.2.3)
-            if self.a < qe:
-                d = mps
-                st[i] = (mps << 7) | nmps
-            else:
-                d = 1 - mps
-                if switch:
-                    mps = 1 - mps
-                st[i] = (mps << 7) | nlps
-            self.a = qe
-        while self.a < 0x8000:  # RENORMD
-            self.a <<= 1
-            self.cx = (self.cx << 1) | self._next_bit()
-        return d
-
-
-class _QMEncoder:
-    """T.81 Annex D.1 arithmetic encoder (tests/synthesis only, like
-    the other encoders in this module).  Handles carry propagation over
-    stacked 0xFF bytes, zero-byte stuffing after every emitted 0xFF,
-    and trailing-zero suppression at FLUSH (D.1.8)."""
-
-    def __init__(self) -> None:
-        self.a = 0x10000
-        self.c = 0
-        self.ct = 11
-        self.buffer = -1  # no byte pending yet
-        self.sc = 0  # stacked 0xFF-candidate bytes
-        self.zc = 0  # deferred 0x00 bytes (dropped if trailing at flush)
-        self.out = bytearray()
-
-    def _emit(self, byte: int) -> None:
-        self.out.append(byte)
-
-    def _flush_zeros(self) -> None:
-        self.out.extend(b"\x00" * self.zc)
-        self.zc = 0
-
-    def _byteout(self) -> None:
-        t = self.c >> 19
-        if t > 0xFF:
-            # carry ripples into the pending byte; stacked 0xFF bytes
-            # become 0x00 (and join the deferred-zero run)
-            if self.buffer >= 0:
-                self._flush_zeros()
-                self._emit(self.buffer + 1)
-                if self.buffer + 1 == 0xFF:
-                    self._emit(0x00)
-            self.zc += self.sc
-            self.sc = 0
-            self.buffer = t & 0xFF
-        elif t == 0xFF:
-            self.sc += 1  # may still be incremented by a later carry
-        else:
-            if self.buffer == 0:
-                self.zc += 1
-            elif self.buffer >= 0:
-                self._flush_zeros()
-                self._emit(self.buffer)
-            if self.sc:
-                self._flush_zeros()
-                self.out.extend(b"\xff\x00" * self.sc)
-                self.sc = 0
-            self.buffer = t
-        self.c &= 0x7FFFF
-        self.ct = 8
-
-    def encode(self, st: bytearray, i: int, d: int) -> None:
-        sv = st[i]
-        mps = sv >> 7
-        qe, nlps, nmps, switch = _QM_TABLE[sv & 0x7F]
-        self.a -= qe
-        if d != mps:
-            # CODELPS (D.1.4): LPS normally takes the upper subinterval
-            if self.a >= qe:
-                self.c += self.a
-                self.a = qe
-            if switch:
-                mps = 1 - mps
-            st[i] = (mps << 7) | nlps
-        else:
-            # CODEMPS: lower subinterval; renorm (and possible
-            # conditional exchange) only when A dropped below 0x8000
-            if self.a >= 0x8000:
-                return
-            if self.a < qe:
-                self.c += self.a
-                self.a = qe
-            st[i] = (mps << 7) | nmps
-        while True:  # RENORME
-            self.a <<= 1
-            self.c <<= 1
-            self.ct -= 1
-            if self.ct == 0:
-                self._byteout()
-            if self.a >= 0x8000:
-                break
-
-    def flush(self) -> bytes:
-        """D.1.8: pick the in-interval code value with the most trailing
-        zeros, push out the remaining bytes, drop trailing zeros (the
-        decoder re-synthesizes them after the next marker)."""
-        t = (self.a - 1 + self.c) & 0xFFFF0000
-        self.c = t + 0x8000 if t < self.c else t
-        self.c <<= self.ct
-        if self.c & 0xF8000000:
-            # final carry
-            if self.buffer >= 0:
-                self._flush_zeros()
-                self._emit(self.buffer + 1)
-                if self.buffer + 1 == 0xFF:
-                    self._emit(0x00)
-            self.zc += self.sc
-            self.sc = 0
-        else:
-            if self.buffer == 0:
-                self.zc += 1
-            elif self.buffer >= 0:
-                self._flush_zeros()
-                self._emit(self.buffer)
-            if self.sc:
-                self._flush_zeros()
-                self.out.extend(b"\xff\x00" * self.sc)
-                self.sc = 0
-        if self.c & 0x7FFF800:
-            self._flush_zeros()
-            b1 = (self.c >> 19) & 0xFF
-            self._emit(b1)
-            if b1 == 0xFF:
-                self._emit(0x00)
-            if self.c & 0x7F800:
-                b2 = (self.c >> 11) & 0xFF
-                self._emit(b2)
-                if b2 == 0xFF:
-                    self._emit(0x00)
-        return bytes(self.out)
-
-
-# default conditioning (T.81 F.1.4.4.1.2 / F.1.4.4.2: DAC overrides)
-_ARITH_DC_COND = (0, 1)  # (L, U)
-_ARITH_AC_COND = 5  # Kx
-
-
-def _arith_dc_diff(dec, st, ctx, cond) -> tuple[int, int]:
-    """Decode one DC difference (F.2.4.1); returns (diff, next context
-    index for this component)."""
-    if dec.decode(st, ctx) == 0:
-        return 0, 0
-    sign = dec.decode(st, ctx + 1)
-    i = ctx + 2 + sign
-    m = dec.decode(st, i)
-    if m:
-        i = 20  # X1 (Table F.4)
-        while dec.decode(st, i):
-            m <<= 1
-            if m == 0x8000:
-                raise ValueError("JPEG arithmetic DC magnitude overflow")
-            i += 1
-    low, up = cond
-    if m < (1 << low) >> 1:
-        nxt = 0
-    elif m > (1 << up) >> 1:
-        nxt = 12 + 4 * sign
-    else:
-        nxt = 4 + 4 * sign
-    v = m
-    i += 14  # magnitude-bit bin (one shared bin per category position)
-    while m > 1:
-        m >>= 1
-        if dec.decode(st, i):
-            v |= m
-    v += 1
-    return (-v if sign else v), nxt
-
-
-def _arith_ac_block(dec, st, fixed, block, kx) -> None:
-    """Decode AC coefficients 1..63 of one block (F.2.4.2) — the
-    sequential case is exactly the progressive AC-first model over the
-    full band at Al=0 (one shared implementation; the r8 review found
-    the copy-pasted pair and a future context-index fix must not have
-    two places to miss)."""
-    _arith_ac_first_block(dec, st, fixed, block, 1, 63, 0, kx)
-
-def _decode_jpeg_arith_scan(
-    b: bytes,
-    pos: int,
-    state: dict,
-    scan_comps: list,
-    dc_cond: dict,
-    ac_cond: dict,
-    restart_interval: int,
-) -> int:
-    """Decode one SOF9 (extended sequential, arithmetic) scan into the
-    coefficient store; returns the position of the next marker.  Same
-    interleaved MCU walk as the Huffman sequential path; the entropy
-    layer is the QM-coder with the F.1.4 statistical models.  Restart
-    markers reinitialize coder, statistics, DC predictors and contexts
-    (F.1.4.2)."""
-    if len(scan_comps) != len(state["comps"]):
-        raise ValueError(
-            "non-interleaved sequential JPEG scans are not supported"
-        )
-    comps_by_id = {c["cid"]: c for c in state["comps"]}
-    for cid, _td, _ta in scan_comps:
-        if cid not in comps_by_id:
-            raise ValueError(f"scan references unknown component {cid}")
-    state["scanned"] = True
-    dec = _QMDecoder(b, pos)
-    dc_stats: dict[int, bytearray] = {}
-    ac_stats: dict[int, bytearray] = {}
-    fixed = bytearray([113])
-    last_dc = {cid: 0 for cid, _, _ in scan_comps}
-    dc_ctx = {cid: 0 for cid, _, _ in scan_comps}
-
-    def reset_stats() -> None:
-        for arr in dc_stats.values():
-            arr[:] = bytes(len(arr))
-        for arr in ac_stats.values():
-            arr[:] = bytes(len(arr))
-        fixed[0] = 113
-        for cid in last_dc:
-            last_dc[cid] = 0
-            dc_ctx[cid] = 0
-
-    unit = 0
-    for my in range(state["mcus_y"]):
-        for mx in range(state["mcus_x"]):
-            if restart_interval and unit and unit % restart_interval == 0:
-                dec = _QMDecoder(b, _skip_rst(b, dec))
-                reset_stats()
-            unit += 1
-            for cid, td, ta in scan_comps:
-                comp = comps_by_id[cid]
-                dst = dc_stats.setdefault(td, bytearray(64))
-                ast = ac_stats.setdefault(ta, bytearray(256))
-                for by in range(comp["v"]):
-                    for bx in range(comp["h"]):
-                        block = comp["store"][
-                            (my * comp["v"] + by) * comp["blocks_w"]
-                            + mx * comp["h"] + bx
-                        ]
-                        diff, dc_ctx[cid] = _arith_dc_diff(
-                            dec, dst, dc_ctx[cid],
-                            dc_cond.get(td, _ARITH_DC_COND),
-                        )
-                        last_dc[cid] += diff
-                        block[0] = last_dc[cid]
-                        _arith_ac_block(
-                            dec, ast, fixed, block,
-                            ac_cond.get(ta, _ARITH_AC_COND),
-                        )
-    end = dec.marker_pos if dec.marker_pos is not None else dec.bp
-    return _next_marker(b, min(end, len(b)))
-
-
-def _arith_ac_first_block(dec, st, fixed, block, ss, se, al, kx) -> None:
-    """Decode one block of a progressive-arithmetic AC FIRST scan
-    (G.1.3.2): the sequential AC model band-limited to Ss..Se, values
-    point-transformed up by Al."""
-    k = ss
-    while k <= se:
-        i = 3 * (k - 1)
-        if dec.decode(st, i):
-            return  # EOB
-        while dec.decode(st, i + 1) == 0:
-            i += 3
-            k += 1
-            if k > se:
-                raise ValueError("JPEG arithmetic AC run overflow")
-        sign = dec.decode(fixed, 0)
-        i += 2
-        m = dec.decode(st, i)
-        if m and dec.decode(st, i):
-            m = 2
-            i = 189 if k <= kx else 217
-            while dec.decode(st, i):
-                m <<= 1
-                if m == 0x8000:
-                    raise ValueError("JPEG arithmetic AC magnitude overflow")
-                i += 1
-        v = m
-        i += 14
-        while m > 1:
-            m >>= 1
-            if dec.decode(st, i):
-                v |= m
-        v += 1
-        block[_ZIGZAG[k]] = (-v if sign else v) << al
-        k += 1
-
-
-def _arith_ac_refine_block(dec, st, fixed, block, ss, se, al) -> None:
-    """Decode one block of a progressive-arithmetic AC REFINEMENT scan
-    (G.1.3.3): per coefficient, a correction bit (context SC = EOB+2)
-    for history-nonzero positions, a newly-significant flag (+ fixed-bin
-    sign) otherwise; the EOB decision is coded only past EOBx, the last
-    position significant from PRIOR scans."""
-    p1 = 1 << al
-    kex = ss - 1
-    for k in range(se, ss - 1, -1):
-        if block[_ZIGZAG[k]] != 0:
-            kex = k
-            break
-    k = ss
-    while k <= se:
-        i = 3 * (k - 1)
-        if k > kex and dec.decode(st, i):
-            return  # EOB
-        while True:
-            z = _ZIGZAG[k]
-            v = block[z]
-            if v:
-                if dec.decode(st, i + 2):
-                    block[z] = v + (p1 if v > 0 else -p1)
-                break
-            if dec.decode(st, i + 1):
-                block[z] = -p1 if dec.decode(fixed, 0) else p1
-                break
-            i += 3
-            k += 1
-            if k > se:
-                raise ValueError("JPEG arithmetic AC refinement overflow")
-        k += 1
-
-
-def _decode_jpeg_arith_prog_scan(
-    b: bytes,
-    pos: int,
-    state: dict,
-    scan_comps: list,
-    band: tuple,
-    dc_cond: dict,
-    ac_cond: dict,
-    restart_interval: int,
-) -> int:
-    """Decode one SOF10 (progressive, arithmetic) scan into the
-    coefficient store; returns the position of the next marker.  Scan
-    taxonomy matches the Huffman progressive path (T.81 G.1.1): DC
-    first / DC refine (one fixed-bin decision per block) over the MCU
-    or non-interleaved grid, AC first / AC refine single-component.
-    Restart markers reinitialize coder, statistics, DC predictors and
-    contexts."""
-    ss, se, ah, al = band
-    if not (0 <= ss <= se <= 63):
-        raise ValueError(f"bad JPEG spectral band Ss={ss} Se={se}")
-    comps_by_id = {c["cid"]: c for c in state["comps"]}
-    for cid, _td, _ta in scan_comps:
-        if cid not in comps_by_id:
-            raise ValueError(f"scan references unknown component {cid}")
-    state["scanned"] = True
-    dec = _QMDecoder(b, pos)
-    fixed = bytearray([113])
-
-    if ss == 0:
-        if se != 0:
-            raise ValueError("progressive DC scan must have Se=0")
-        dc_stats: dict[int, bytearray] = {}
-        last_dc = {cid: 0 for cid, _, _ in scan_comps}
-        dc_ctx = {cid: 0 for cid, _, _ in scan_comps}
-
-        def handle_dc(cid: int, td: int, block: list) -> None:
-            if ah == 0:
-                st = dc_stats.setdefault(td, bytearray(64))
-                diff, dc_ctx[cid] = _arith_dc_diff(
-                    dec, st, dc_ctx[cid], dc_cond.get(td, _ARITH_DC_COND)
-                )
-                last_dc[cid] += diff
-                block[0] = last_dc[cid] << al
-            elif dec.decode(fixed, 0):
-                block[0] |= 1 << al
-
-        def reset_dc() -> None:
-            nonlocal dec
-            dec = _QMDecoder(b, _skip_rst(b, dec))
-            for arr in dc_stats.values():
-                arr[:] = bytes(len(arr))
-            fixed[0] = 113
-            for cid in last_dc:
-                last_dc[cid] = 0
-                dc_ctx[cid] = 0
-
-        unit = 0
-        if len(scan_comps) > 1:  # interleaved DC scan, MCU order
-            for my in range(state["mcus_y"]):
-                for mx in range(state["mcus_x"]):
-                    if restart_interval and unit and unit % restart_interval == 0:
-                        reset_dc()
-                    unit += 1
-                    for cid, td, _ta in scan_comps:
-                        comp = comps_by_id[cid]
-                        for by in range(comp["v"]):
-                            for bx in range(comp["h"]):
-                                handle_dc(
-                                    cid, td,
-                                    comp["store"][
-                                        (my * comp["v"] + by)
-                                        * comp["blocks_w"]
-                                        + mx * comp["h"] + bx
-                                    ],
-                                )
-        else:
-            cid, td, _ta = scan_comps[0]
-            comp = comps_by_id[cid]
-            for by in range(comp["ni_h"]):
-                for bx in range(comp["ni_w"]):
-                    if restart_interval and unit and unit % restart_interval == 0:
-                        reset_dc()
-                    unit += 1
-                    handle_dc(cid, td, comp["store"][by * comp["blocks_w"] + bx])
-        end = dec.marker_pos if dec.marker_pos is not None else dec.bp
-        return _next_marker(b, min(end, len(b)))
-
-    # AC scan: always a single component (T.81 G.1.1.1)
-    if len(scan_comps) != 1:
-        raise ValueError("progressive AC scan must be single-component")
-    cid, _td, ta = scan_comps[0]
-    comp = comps_by_id[cid]
-    kx = ac_cond.get(ta, _ARITH_AC_COND)
-    st = bytearray(256)
-    unit = 0
-    for by in range(comp["ni_h"]):
-        for bx in range(comp["ni_w"]):
-            if restart_interval and unit and unit % restart_interval == 0:
-                dec = _QMDecoder(b, _skip_rst(b, dec))
-                st[:] = bytes(256)
-                fixed[0] = 113
-            unit += 1
-            block = comp["store"][by * comp["blocks_w"] + bx]
-            if ah == 0:
-                _arith_ac_first_block(dec, st, fixed, block, ss, se, al, kx)
-            else:
-                _arith_ac_refine_block(dec, st, fixed, block, ss, se, al)
-    end = dec.marker_pos if dec.marker_pos is not None else dec.bp
-    return _next_marker(b, min(end, len(b)))
-
-
-def _skip_rst(b: bytes, dec: _QMDecoder) -> int:
-    """Position just past the RSTn marker terminating the current
-    restart interval (the QM decoder stops AT markers, never consumes
-    them)."""
-    p = dec.marker_pos if dec.marker_pos is not None else dec.bp
-    while p + 1 < len(b):
-        if b[p] == 0xFF and b[p + 1] != 0x00:
-            while p + 1 < len(b) and b[p + 1] == 0xFF:
-                p += 1  # T.81 B.1.1.2: 0xFF fill bytes precede a marker
-            if p + 1 >= len(b):
-                break
-            if 0xD0 <= b[p + 1] <= 0xD7:
-                return p + 2
-            raise ValueError(
-                f"expected JPEG restart marker, found 0xff{b[p + 1]:02x}"
-            )
-        p += 1
-    raise ValueError("JPEG scan data ran off the end (no restart marker)")
-
-
-def _arith_encode_dc_diff(enc, st, ctx, diff, cond) -> int:
-    """Encode one DC difference (F.1.4.1); returns the next context."""
-    if diff == 0:
-        enc.encode(st, ctx, 0)
-        return 0
-    enc.encode(st, ctx, 1)
-    sign = 0 if diff > 0 else 1
-    v = abs(diff)
-    enc.encode(st, ctx + 1, sign)
-    i = ctx + 2 + sign
-    m = 0
-    v -= 1
-    if v:
-        enc.encode(st, i, 1)
-        m = 1
-        i = 20
-        v2 = v
-        while v2 > 1:
-            v2 >>= 1
-            enc.encode(st, i, 1)
-            m <<= 1
-            i += 1
-    enc.encode(st, i, 0)
-    low, up = cond
-    if m < (1 << low) >> 1:
-        nxt = 0
-    elif m > (1 << up) >> 1:
-        nxt = 12 + 4 * sign
-    else:
-        nxt = 4 + 4 * sign
-    i += 14
-    while m > 1:
-        m >>= 1
-        enc.encode(st, i, 1 if (m & v) else 0)
-    return nxt
-
-
-def _arith_encode_ac_block(enc, st, fixed, coeffs, kx) -> None:
-    """Encode AC coefficients 1..63 of one block (F.1.4.3) — see
-    :func:`_arith_ac_block`: one shared band implementation."""
-    _arith_encode_ac_first_block(enc, st, fixed, coeffs, 1, 63, 0, kx)
-
-def encode_jpeg_arith(
-    width: int,
-    height: int,
-    components: list[dict],
-    restart_interval: int = 0,
-    dc_cond: tuple[int, int] = _ARITH_DC_COND,
-    ac_cond: int = _ARITH_AC_COND,
-) -> bytes:
-    """A spec-valid SOF9 (extended sequential, arithmetic-coded) JPEG
-    from the same pre-quantized block grids ``encode_jpeg`` takes
-    (tests/synthesis encoder).  Emits an explicit DAC segment so the
-    decoder's conditioning parse is exercised even at the default
-    (L=0, U=1, Kx=5) values."""
-    max_h = max(c["h"] for c in components)
-    max_v = max(c["v"] for c in components)
-    mcus_x = (width + 8 * max_h - 1) // (8 * max_h)
-    mcus_y = (height + 8 * max_v - 1) // (8 * max_v)
-    for c in components:
-        if len(c["blocks"]) != mcus_y * c["v"] or any(
-            len(row) != mcus_x * c["h"] for row in c["blocks"]
-        ):
-            raise ValueError("component block grid does not match MCU grid")
-
-    out = bytearray(b"\xff\xd8")
-
-    def seg(marker: int, payload: bytes) -> None:
-        out.extend(b"\xff" + bytes([marker]))
-        out.extend((len(payload) + 2).to_bytes(2, "big"))
-        out.extend(payload)
-
-    for ti, c in enumerate(components):
-        c["_tq"] = ti if ti < 2 else 1
-        if ti >= 2 and c["qtable"] != components[1]["qtable"]:
-            raise ValueError(
-                "component 3+ reuses quant slot 1: its qtable must equal "
-                "component 2's (this encoder emits at most two DQTs)"
-            )
-    emitted = set()
-    for c in components:
-        tq = c["_tq"]
-        if tq in emitted:
-            continue
-        emitted.add(tq)
-        zz = bytes(c["qtable"][_ZIGZAG[k]] for k in range(64))
-        seg(0xDB, bytes([tq]) + zz)
-    sof = bytearray([8]) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-    sof.append(len(components))
-    for c in components:
-        sof += bytes([c["id"], (c["h"] << 4) | c["v"], c["_tq"]])
-    seg(0xC9, bytes(sof))
-    low, up = dc_cond
-    seg(0xCC, bytes([0x00, (up << 4) | low, 0x10, ac_cond]))
-    if restart_interval:
-        seg(0xDD, restart_interval.to_bytes(2, "big"))
-    sos = bytearray([len(components)])
-    for c in components:
-        sos += bytes([c["id"], 0x00])  # DC table 0, AC table 0
-    sos += bytes([0, 63, 0])
-    seg(0xDA, bytes(sos))
-
-    enc = _QMEncoder()
-    dc_st = bytearray(64)
-    ac_st = bytearray(256)
-    fixed = bytearray([113])
-    preds = [0] * len(components)
-    ctxs = [0] * len(components)
-    rst = 0
-    mcu_count = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if (
-                restart_interval
-                and mcu_count
-                and mcu_count % restart_interval == 0
-            ):
-                out.extend(enc.flush())
-                out.extend(b"\xff" + bytes([0xD0 + rst]))
-                rst = (rst + 1) & 7
-                enc = _QMEncoder()
-                dc_st[:] = bytes(64)
-                ac_st[:] = bytes(256)
-                fixed[0] = 113
-                preds = [0] * len(components)
-                ctxs = [0] * len(components)
-            mcu_count += 1
-            for ci, c in enumerate(components):
-                for by in range(c["v"]):
-                    for bx in range(c["h"]):
-                        coeffs = c["blocks"][my * c["v"] + by][
-                            mx * c["h"] + bx
-                        ]
-                        diff = coeffs[0] - preds[ci]
-                        preds[ci] = coeffs[0]
-                        ctxs[ci] = _arith_encode_dc_diff(
-                            enc, dc_st, ctxs[ci], diff, dc_cond
-                        )
-                        _arith_encode_ac_block(
-                            enc, ac_st, fixed, coeffs, ac_cond
-                        )
-    out.extend(enc.flush())
-    out.extend(b"\xff\xd9")
-    return bytes(out)
-
-
-def _arith_encode_ac_first_block(enc, st, fixed, coeffs, ss, se, al, kx):
-    """Encoder mirror of :func:`_arith_ac_first_block` (toward-zero
-    point transform, G.1.2.2)."""
-    zz = {}
-    ke = ss - 1
-    for k in range(ss, se + 1):
-        v = coeffs[_ZIGZAG[k]]
-        t = abs(v) >> al
-        zz[k] = t if v >= 0 else -t
-        if zz[k]:
-            ke = k
-    k = ss
-    while k <= ke:
-        i = 3 * (k - 1)
-        enc.encode(st, i, 0)  # not EOB yet
-        while zz[k] == 0:
-            enc.encode(st, i + 1, 0)
-            i += 3
-            k += 1
-        enc.encode(st, i + 1, 1)
-        v = zz[k]
-        sign = 0 if v > 0 else 1
-        enc.encode(fixed, 0, sign)
-        v = abs(v)
-        i += 2
-        m = 0
-        v -= 1
-        if v:
-            enc.encode(st, i, 1)
-            m = 1
-            v2 = v
-            if v2 > 1:
-                v2 >>= 1
-                enc.encode(st, i, 1)
-                m = 2
-                i = 189 if k <= kx else 217
-                while v2 > 1:
-                    v2 >>= 1
-                    enc.encode(st, i, 1)
-                    m <<= 1
-                    i += 1
-        enc.encode(st, i, 0)
-        i += 14
-        while m > 1:
-            m >>= 1
-            enc.encode(st, i, 1 if (m & v) else 0)
-        k += 1
-    if k <= se:
-        enc.encode(st, 3 * (k - 1), 1)  # EOB
-
-
-def _arith_encode_ac_refine_block(enc, st, fixed, coeffs, ss, se, al):
-    """Encoder mirror of :func:`_arith_ac_refine_block`."""
-
-    def t_at(k):
-        return abs(coeffs[_ZIGZAG[k]]) >> al
-
-    def prior(k):
-        return abs(coeffs[_ZIGZAG[k]]) >> (al + 1)
-
-    ke = kex = ss - 1
-    for k in range(ss, se + 1):
-        if t_at(k):
-            ke = k
-        if prior(k):
-            kex = k
-    k = ss
-    while k <= ke:
-        i = 3 * (k - 1)
-        if k > kex:
-            enc.encode(st, i, 0)  # not EOB yet
-        while True:
-            t = t_at(k)
-            if prior(k):  # history-nonzero: one correction bit
-                enc.encode(st, i + 2, t & 1)
-                break
-            if t:  # newly significant (t == 1) + fixed-bin sign
-                enc.encode(st, i + 1, 1)
-                enc.encode(fixed, 0, 0 if coeffs[_ZIGZAG[k]] > 0 else 1)
-                break
-            enc.encode(st, i + 1, 0)
-            i += 3
-            k += 1
-        k += 1
-    if k <= se:
-        enc.encode(st, 3 * (k - 1), 1)  # EOB for the remainder
-
-
-def encode_jpeg_arith_progressive(
-    width: int,
-    height: int,
-    components: list[dict],
-    dc_cond: tuple[int, int] = _ARITH_DC_COND,
-    ac_cond: int = _ARITH_AC_COND,
-) -> bytes:
-    """A spec-valid SOF10 (progressive, arithmetic-coded) JPEG from the
-    same pre-quantized block grids (tests/synthesis encoder).  Scan
-    plan mirrors :func:`encode_jpeg_progressive`: interleaved DC first
-    at Al=1, DC refinement to Al=0, then per component an AC first
-    scan of band 1..63 at Al=1 and its refinement to Al=0 — exercising
-    every progressive-arithmetic decision class (G.1.2/G.1.3)."""
-    max_h = max(c["h"] for c in components)
-    max_v = max(c["v"] for c in components)
-    mcus_x = (width + 8 * max_h - 1) // (8 * max_h)
-    mcus_y = (height + 8 * max_v - 1) // (8 * max_v)
-    for c in components:
-        if len(c["blocks"]) != mcus_y * c["v"] or any(
-            len(row) != mcus_x * c["h"] for row in c["blocks"]
-        ):
-            raise ValueError("component block grid does not match MCU grid")
-        comp_w = (width * c["h"] + max_h - 1) // max_h
-        comp_h = (height * c["v"] + max_v - 1) // max_v
-        c["_ni_w"], c["_ni_h"] = (comp_w + 7) // 8, (comp_h + 7) // 8
-
-    out = bytearray(b"\xff\xd8")
-
-    def seg(marker: int, payload: bytes) -> None:
-        out.extend(b"\xff" + bytes([marker]))
-        out.extend((len(payload) + 2).to_bytes(2, "big"))
-        out.extend(payload)
-
-    for ti, c in enumerate(components):
-        c["_tq"] = ti if ti < 2 else 1
-        if ti >= 2 and c["qtable"] != components[1]["qtable"]:
-            raise ValueError(
-                "component 3+ reuses quant slot 1: its qtable must equal "
-                "component 2's (this encoder emits at most two DQTs)"
-            )
-    emitted = set()
-    for c in components:
-        tq = c["_tq"]
-        if tq in emitted:
-            continue
-        emitted.add(tq)
-        seg(0xDB, bytes([tq]) + bytes(c["qtable"][_ZIGZAG[k]] for k in range(64)))
-    sof = bytearray([8]) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-    sof.append(len(components))
-    for c in components:
-        sof += bytes([c["id"], (c["h"] << 4) | c["v"], c["_tq"]])
-    seg(0xCA, bytes(sof))
-    low, up = dc_cond
-    seg(0xCC, bytes([0x00, (up << 4) | low, 0x10, ac_cond]))
-
-    def sos(scan_comps: list[dict], ss: int, se: int, ah: int, al: int) -> None:
-        hdr = bytearray([len(scan_comps)])
-        for c in scan_comps:
-            hdr += bytes([c["id"], 0x00])
-        hdr += bytes([ss, se, (ah << 4) | al])
-        seg(0xDA, bytes(hdr))
-
-    # scan 1: interleaved DC first, Al=1 (diffs in the shifted domain)
-    sos(components, 0, 0, 0, 1)
-    enc = _QMEncoder()
-    dc_st = bytearray(64)
-    fixed = bytearray([113])
-    preds = [0] * len(components)
-    ctxs = [0] * len(components)
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            for ci, c in enumerate(components):
-                for by in range(c["v"]):
-                    for bx in range(c["h"]):
-                        v = c["blocks"][my * c["v"] + by][mx * c["h"] + bx][0] >> 1
-                        diff = v - preds[ci]
-                        preds[ci] = v
-                        ctxs[ci] = _arith_encode_dc_diff(
-                            enc, dc_st, ctxs[ci], diff, dc_cond
-                        )
-    out.extend(enc.flush())
-
-    # scan 2: DC refinement to Al=0 — one fixed-bin decision per block
-    sos(components, 0, 0, 1, 0)
-    enc = _QMEncoder()
-    fixed = bytearray([113])
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            for c in components:
-                for by in range(c["v"]):
-                    for bx in range(c["h"]):
-                        dc = c["blocks"][my * c["v"] + by][mx * c["h"] + bx][0]
-                        enc.encode(fixed, 0, dc & 1)
-    out.extend(enc.flush())
-
-    # per component: AC first (band 1..63, Al=1) then its refinement
-    for c in components:
-        sos([c], 1, 63, 0, 1)
-        enc = _QMEncoder()
-        ac_st = bytearray(256)
-        fixed = bytearray([113])
-        for by in range(c["_ni_h"]):
-            for bx in range(c["_ni_w"]):
-                _arith_encode_ac_first_block(
-                    enc, ac_st, fixed, c["blocks"][by][bx], 1, 63, 1, ac_cond
-                )
-        out.extend(enc.flush())
-
-        sos([c], 1, 63, 1, 0)
-        enc = _QMEncoder()
-        ac_st = bytearray(256)
-        fixed = bytearray([113])
-        for by in range(c["_ni_h"]):
-            for bx in range(c["_ni_w"]):
-                _arith_encode_ac_refine_block(
-                    enc, ac_st, fixed, c["blocks"][by][bx], 1, 63, 0
-                )
-        out.extend(enc.flush())
-
-    out.extend(b"\xff\xd9")
-    return bytes(out)
-
-
-# -- JPEG encoder (tests/synthesis only, same policy as encode_png) ---------
-
-
-class _BitWriter:
-    """MSB-first bit writer with JPEG byte stuffing (0xFF → 0xFF 0x00)."""
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, nbits: int) -> None:
-        for i in range(nbits - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((value >> i) & 1)
-            self.nbits += 1
-            if self.nbits == 8:
-                self.out.append(self.acc)
-                if self.acc == 0xFF:
-                    self.out.append(0x00)
-                self.acc = 0
-                self.nbits = 0
-
-    def flush(self) -> None:
-        """Pad the final partial byte with 1 bits (T.81 F.1.2.3)."""
-        if self.nbits:
-            self.acc = (self.acc << (8 - self.nbits)) | ((1 << (8 - self.nbits)) - 1)
-            self.out.append(self.acc)
-            if self.acc == 0xFF:
-                self.out.append(0x00)
-            self.acc = 0
-            self.nbits = 0
-
-
-def _category(v: int) -> int:
-    return abs(v).bit_length()
-
-
-def _fixed_length_huff(symbols: list[int]) -> tuple[bytes, bytes, dict]:
-    """A valid DHT table assigning every symbol the same code length
-    L = ceil(log2(n+1)) (codes 0..n−1; n < 2^L keeps the all-ones code
-    free as T.81 requires).  Returns (BITS, HUFFVAL, {sym: (code, L)})."""
-    n = len(symbols)
-    length = max(1, (n + 1 - 1).bit_length())  # ceil(log2(n+1))
-    while (1 << length) <= n:
-        length += 1
-    counts = bytearray(16)
-    counts[length - 1] = n
-    codes = {sym: (i, length) for i, sym in enumerate(symbols)}
-    return bytes(counts), bytes(symbols), codes
-
-
-def encode_jpeg(
-    width: int,
-    height: int,
-    components: list[dict],
-    restart_interval: int = 0,
-) -> bytes:
-    """A spec-valid baseline JPEG from pre-quantized block coefficients
-    (tests/synthesis encoder).  Each component dict: ``id``, sampling
-    ``h``/``v``, ``qtable`` (64 ints, natural order) and ``blocks`` — a
-    2-D grid ``blocks[by][bx]`` of 64-coefficient lists (natural order,
-    already divided by the qtable).  Huffman tables are built from the
-    symbols actually emitted (fixed-length canonical codes — valid DHT,
-    exercises the decoder's generic table path, no Annex K dependency)."""
-    max_h = max(c["h"] for c in components)
-    max_v = max(c["v"] for c in components)
-    mcus_x = (width + 8 * max_h - 1) // (8 * max_h)
-    mcus_y = (height + 8 * max_v - 1) // (8 * max_v)
-    for c in components:
-        if len(c["blocks"]) != mcus_y * c["v"] or any(
-            len(row) != mcus_x * c["h"] for row in c["blocks"]
-        ):
-            raise ValueError("component block grid does not match MCU grid")
-
-    # pass 1: the (dc_category, ac_run_size) symbol sets actually used
-    def _ac_symbols(coeffs: list[int]):
-        zz = [coeffs[_ZIGZAG[k]] for k in range(64)]
-        k, run = 1, 0
-        while k < 64:
-            if zz[k] == 0:
-                run += 1
-            else:
-                while run > 15:
-                    yield 0xF0, 0, 0
-                    run -= 16
-                sz = _category(zz[k])
-                yield (run << 4) | sz, zz[k], sz
-                run = 0
-            k += 1
-        if run:
-            yield 0x00, 0, 0
-
-    def _mcu_walk():
-        """Yield (ci, coeffs, dc_diff) in MCU-interleaved emission order,
-        modeling the same predictor resets restart_interval causes — so
-        pass 1 sees exactly the DC categories pass 2 will emit."""
-        preds = [0] * len(components)
-        mcu_count = 0
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                is_restart = (
-                    restart_interval
-                    and mcu_count
-                    and mcu_count % restart_interval == 0
-                )
-                if is_restart:
-                    preds = [0] * len(components)
-                mcu_count += 1
-                for ci, c in enumerate(components):
-                    for by in range(c["v"]):
-                        for bx in range(c["h"]):
-                            coeffs = c["blocks"][my * c["v"] + by][
-                                mx * c["h"] + bx
-                            ]
-                            diff = coeffs[0] - preds[ci]
-                            preds[ci] = coeffs[0]
-                            yield ci, coeffs, diff, is_restart and (
-                                by == 0 and bx == 0 and ci == 0
-                            )
-
-    dc_syms: set[int] = set()
-    ac_syms: set[int] = set()
-    for ci, coeffs, diff, _ in _mcu_walk():
-        dc_syms.add(_category(diff))
-        for sym, _, _ in _ac_symbols(coeffs):
-            ac_syms.add(sym)
-    dc_bits, dc_vals, dc_codes = _fixed_length_huff(sorted(dc_syms))
-    ac_bits, ac_vals, ac_codes = _fixed_length_huff(sorted(ac_syms))
-
-    out = bytearray(b"\xff\xd8")
-
-    def seg(marker: int, payload: bytes) -> None:
-        out.extend(b"\xff" + bytes([marker]))
-        out.extend((len(payload) + 2).to_bytes(2, "big"))
-        out.extend(payload)
-
-    for ti, c in enumerate(components):
-        c["_tq"] = ti if ti < 2 else 1  # ≤2 distinct tables is plenty here
-        if ti >= 2 and c["qtable"] != components[1]["qtable"]:
-            raise ValueError(
-                "component 3+ reuses quant slot 1: its qtable must equal "
-                "component 2's (this encoder emits at most two DQTs)"
-            )
-    emitted = set()
-    for c in components:
-        tq = c["_tq"]
-        if tq in emitted:
-            continue
-        emitted.add(tq)
-        zz = bytes(c["qtable"][_ZIGZAG[k]] for k in range(64))
-        seg(0xDB, bytes([tq]) + zz)
-    sof = bytearray([8]) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-    sof.append(len(components))
-    for c in components:
-        sof += bytes([c["id"], (c["h"] << 4) | c["v"], c["_tq"]])
-    seg(0xC0, bytes(sof))
-    seg(0xC4, bytes([0x00]) + dc_bits + dc_vals)
-    seg(0xC4, bytes([0x10]) + ac_bits + ac_vals)
-    if restart_interval:
-        seg(0xDD, restart_interval.to_bytes(2, "big"))
-    sos = bytearray([len(components)])
-    for c in components:
-        sos += bytes([c["id"], 0x00])  # DC table 0, AC table 0
-    sos += bytes([0, 63, 0])
-    seg(0xDA, bytes(sos))
-
-    w = _BitWriter()
-
-    def _emit_amplitude(v: int, sz: int) -> None:
-        if sz:
-            w.write(v if v >= 0 else v + (1 << sz) - 1, sz)
-
-    rst = 0
-    for ci, coeffs, diff, at_restart in _mcu_walk():
-        if at_restart:
-            w.flush()
-            out.extend(w.out)
-            w.out.clear()
-            out.extend(b"\xff" + bytes([0xD0 + rst]))
-            rst = (rst + 1) & 7
-        sz = _category(diff)
-        code, ln = dc_codes[sz]
-        w.write(code, ln)
-        _emit_amplitude(diff, sz)
-        for sym, val, vsz in _ac_symbols(coeffs):
-            code, ln = ac_codes[sym]
-            w.write(code, ln)
-            _emit_amplitude(val, vsz)
-    w.flush()
-    out.extend(w.out)
-    out.extend(b"\xff\xd9")
-    return bytes(out)
-
-
-def encode_jpeg_progressive(
-    width: int, height: int, components: list[dict]
-) -> bytes:
-    """A spec-valid PROGRESSIVE (SOF2) JPEG from the same pre-quantized
-    block grids ``encode_jpeg`` takes (tests/synthesis encoder).  Scan
-    plan: interleaved DC first at Al=1, DC refinement to Al=0, then per
-    component an AC first scan of band 1..63 at Al=1 and its refinement
-    to Al=0 — exercising EOB runs, ZRL-in-refinement, buffered
-    correction bits, and newly-significant placement (T.81 G.1.2)."""
-    max_h = max(c["h"] for c in components)
-    max_v = max(c["v"] for c in components)
-    mcus_x = (width + 8 * max_h - 1) // (8 * max_h)
-    mcus_y = (height + 8 * max_v - 1) // (8 * max_v)
-    for c in components:
-        if len(c["blocks"]) != mcus_y * c["v"] or any(
-            len(row) != mcus_x * c["h"] for row in c["blocks"]
-        ):
-            raise ValueError("component block grid does not match MCU grid")
-        comp_w = (width * c["h"] + max_h - 1) // max_h
-        comp_h = (height * c["v"] + max_v - 1) // max_v
-        c["_ni_w"], c["_ni_h"] = (comp_w + 7) // 8, (comp_h + 7) // 8
-
-    def dc_first_events(al):
-        preds = {id(c): 0 for c in components}
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                for c in components:
-                    for by in range(c["v"]):
-                        for bx in range(c["h"]):
-                            dc = c["blocks"][my * c["v"] + by][mx * c["h"] + bx][0]
-                            v = dc >> al  # arithmetic shift (T.81 G.1.2.1)
-                            diff = v - preds[id(c)]
-                            preds[id(c)] = v
-                            s = _category(diff)
-                            yield ("dc", s)
-                            if s:
-                                yield (
-                                    "bits",
-                                    diff if diff >= 0 else diff + (1 << s) - 1,
-                                    s,
-                                )
-
-    def dc_refine_events(al):
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                for c in components:
-                    for by in range(c["v"]):
-                        for bx in range(c["h"]):
-                            dc = c["blocks"][my * c["v"] + by][mx * c["h"] + bx][0]
-                            yield ("bits", (dc >> al) & 1, 1)
-
-    def _eob_events(n):
-        r = n.bit_length() - 1
-        yield ("ac", r << 4)
-        if r:
-            yield ("bits", n - (1 << r), r)
-
-    def ac_first_events(c, al):
-        eobrun = 0
-        for by in range(c["_ni_h"]):
-            for bx in range(c["_ni_w"]):
-                coeffs = c["blocks"][by][bx]
-                zz = []
-                for k in range(1, 64):
-                    v = coeffs[_ZIGZAG[k]]
-                    t = (abs(v) >> al)
-                    zz.append(t if v >= 0 else -t)  # toward-zero point transform
-                if not any(zz):
-                    eobrun += 1
-                    if eobrun == 0x7FFF:
-                        yield from _eob_events(eobrun)
-                        eobrun = 0
-                    continue
-                if eobrun:
-                    yield from _eob_events(eobrun)
-                    eobrun = 0
-                r = 0
-                last_nz = max(k for k, t in enumerate(zz) if t)
-                for k, t in enumerate(zz):
-                    if k > last_nz:
-                        eobrun += 1  # trailing zeros → this block EOBs
-                        break
-                    if t == 0:
-                        r += 1
-                        continue
-                    while r > 15:
-                        yield ("ac", 0xF0)
-                        r -= 16
-                    s = _category(t)
-                    yield ("ac", (r << 4) | s)
-                    yield ("bits", t if t >= 0 else t + (1 << s) - 1, s)
-                    r = 0
-                else:
-                    continue
-        if eobrun:
-            yield from _eob_events(eobrun)
-
-    def ac_refine_events(c, al):
-        eobrun = 0
-        buffered: list[int] = []  # correction bits pending a symbol
-
-        def flush_eob():
-            nonlocal eobrun
-            if eobrun:
-                yield from _eob_events(eobrun)
-                eobrun = 0
-            for bit in buffered:
-                yield ("bits", bit, 1)
-            buffered.clear()
-
-        for by in range(c["_ni_h"]):
-            for bx in range(c["_ni_w"]):
-                coeffs = c["blocks"][by][bx]
-                absv = [abs(coeffs[_ZIGZAG[k]]) >> al for k in range(1, 64)]
-                eobpos = -1
-                for k, t in enumerate(absv):
-                    if t == 1:
-                        eobpos = k  # last NEWLY-significant position
-                r = 0
-                block_bits: list[int] = []
-                for k, t in enumerate(absv):
-                    if t == 0:
-                        r += 1
-                        continue
-                    # ZRL check precedes the history branch (jcphuff
-                    # order): a long zero-history run flushes even when
-                    # the triggering coefficient only needs a correction
-                    while r > 15 and k <= eobpos:
-                        yield from flush_eob()
-                        yield ("ac", 0xF0)
-                        r -= 16
-                        for bit in block_bits:
-                            yield ("bits", bit, 1)
-                        block_bits.clear()
-                    if t > 1:  # history-nonzero → buffer a correction bit
-                        block_bits.append(t & 1)
-                        continue
-                    # t == 1: newly significant
-                    yield from flush_eob()
-                    yield ("ac", (r << 4) | 1)
-                    yield ("bits", 1 if coeffs[_ZIGZAG[k + 1]] > 0 else 0, 1)
-                    for bit in block_bits:
-                        yield ("bits", bit, 1)
-                    block_bits.clear()
-                    r = 0
-                if r > 0 or block_bits:
-                    eobrun += 1
-                    buffered.extend(block_bits)
-                    if eobrun == 0x7FFF:
-                        yield from flush_eob()
-        yield from flush_eob()
-
-    # ---- headers ------------------------------------------------------
-    out = bytearray(b"\xff\xd8")
-
-    def seg(marker: int, payload: bytes) -> None:
-        out.extend(b"\xff" + bytes([marker]))
-        out.extend((len(payload) + 2).to_bytes(2, "big"))
-        out.extend(payload)
-
-    for ti, c in enumerate(components):
-        c["_tq"] = ti if ti < 2 else 1
-        if ti >= 2 and c["qtable"] != components[1]["qtable"]:
-            raise ValueError(
-                "component 3+ reuses quant slot 1: its qtable must equal "
-                "component 2's (this encoder emits at most two DQTs)"
-            )
-    emitted = set()
-    for c in components:
-        if c["_tq"] in emitted:
-            continue
-        emitted.add(c["_tq"])
-        zzq = bytes(c["qtable"][_ZIGZAG[k]] for k in range(64))
-        seg(0xDB, bytes([c["_tq"]]) + zzq)
-    sof = bytearray([8]) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-    sof.append(len(components))
-    for c in components:
-        sof += bytes([c["id"], (c["h"] << 4) | c["v"], c["_tq"]])
-    seg(0xC2, bytes(sof))
-
-    def run_scan(events_fn, scan_comps, ss, se, ah, al):
-        events = list(events_fn())
-        syms = sorted({rest[0] for kind, *rest in events if kind in ("dc", "ac")})
-        codes = {}
-        if syms:
-            bits_, vals_, codes = _fixed_length_huff(syms)
-            tc = 0x00 if any(k == "dc" for k, *_ in events) else 0x10
-            seg(0xC4, bytes([tc]) + bits_ + vals_)
-        sos = bytearray([len(scan_comps)])
-        for c in scan_comps:
-            sos += bytes([c["id"], 0x00])
-        sos += bytes([ss, se, (ah << 4) | al])
-        seg(0xDA, bytes(sos))
-        w = _BitWriter()
-        for kind, *rest in events:
-            if kind == "bits":
-                w.write(rest[0], rest[1])
-            else:
-                code, ln = codes[rest[0]]
-                w.write(code, ln)
-        w.flush()
-        out.extend(w.out)
-
-    run_scan(lambda: dc_first_events(1), components, 0, 0, 0, 1)
-    run_scan(lambda: dc_refine_events(0), components, 0, 0, 1, 0)
-    for c in components:
-        run_scan(lambda c=c: ac_first_events(c, 1), [c], 1, 63, 0, 1)
-    for c in components:
-        run_scan(lambda c=c: ac_refine_events(c, 0), [c], 1, 63, 1, 0)
-    out.extend(b"\xff\xd9")
-    return bytes(out)
-
-
-def encode_jpeg_gray_tiles(
-    width: int, height: int, tile_values: list[list[int]],
-    restart_interval: int = 0, progressive: bool = False,
-    arithmetic: bool = False,
-) -> bytes:
-    """Grayscale JPEG whose 8×8 blocks are CONSTANT tiles (value grid
-    ``tile_values[by][bx]``) under an all-ones quant table — every tile
-    decodes back EXACTLY (DC = 8·(v−128), all AC zero) through EITHER
-    entropy coding (the progressive DC split dc>>1 then low-bit refine
-    reassembles losslessly), which is what makes the multimodal facet's
-    oracle expressible in closed form for both frame types."""
-    blocks = [
-        [[8 * (v - 128)] + [0] * 63 for v in row] for row in tile_values
-    ]
-    comps = [{"id": 1, "h": 1, "v": 1, "qtable": [1] * 64, "blocks": blocks}]
-    if progressive and arithmetic:
-        return encode_jpeg_arith_progressive(width, height, comps)
-    if progressive:
-        return encode_jpeg_progressive(width, height, comps)
-    if arithmetic:
-        return encode_jpeg_arith(
-            width, height, comps, restart_interval=restart_interval
-        )
-    return encode_jpeg(width, height, comps, restart_interval=restart_interval)
-
-
-# ---------------------------------------------------------------------------
-# AVI — RIFF container walk for MJPEG video (frame extraction).
-#
-# MJPEG-in-AVI is the one honest video path this container can decode
-# end-to-end: the RIFF walk (same chunk grammar as WAV below) yields the
-# '00dc' compressed-frame chunks, each of which IS a baseline JPEG that
-# decode_jpeg_pixels handles.  Public specs: Microsoft RIFF/AVI
-# (AVIMAINHEADER/AVISTREAMHEADER/BITMAPINFOHEADER), OpenDML.
-
-
-def encode_avi_mjpeg(
-    width: int, height: int, frames: list[bytes], us_per_frame: int = 100_000
-) -> bytes:
-    """A spec-valid minimal MJPEG AVI (tests/synthesis): RIFF('AVI ')
-    with LIST hdrl (avih + one 'vids'/'MJPG' strl) and LIST movi of
-    '00dc' chunks — one per JPEG frame payload."""
-
-    def chunk(cid: bytes, payload: bytes) -> bytes:
-        return cid + struct.pack("<I", len(payload)) + payload + (
-            b"\x00" if len(payload) & 1 else b""
-        )
-
-    def lst(ltype: bytes, payload: bytes) -> bytes:
-        return chunk(b"LIST", ltype + payload)
-
-    max_bytes = max((len(f) for f in frames), default=0)
-    avih = struct.pack(
-        "<IIIIIIIIII4I", us_per_frame, max_bytes * 1_000_000 // max(us_per_frame, 1),
-        0, 0x10, len(frames), 0, 1, max_bytes, width, height, 0, 0, 0, 0,
-    )
-    strh = struct.pack(
-        "<4s4sIHHIIIIIIIi4H", b"vids", b"MJPG", 0, 0, 0, 0,
-        us_per_frame, 1_000_000, 0, len(frames), max_bytes, 0xFFFFFFFF, 0,
-        0, 0, width, height,
-    )
-    strf = struct.pack(
-        "<IiiHHIIiiII", 40, width, height, 1, 24,
-        0x47504A4D,  # 'MJPG' fourcc as little-endian u32
-        width * height * 3, 0, 0, 0, 0,
-    )
-    hdrl = lst(b"hdrl", chunk(b"avih", avih) + lst(
-        b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)
-    ))
-    movi = lst(b"movi", b"".join(chunk(b"00dc", f) for f in frames))
-    return chunk(b"RIFF", b"AVI " + hdrl + movi)
-
-
-def parse_avi(b: bytes) -> dict:
-    """REAL stdlib-only AVI parse → ``{"width", "height",
-    "us_per_frame", "n_frames", "frames"}`` with frames as the raw
-    compressed chunk payloads ('00dc'/'00db' entries of LIST movi, in
-    stream order).  For MJPEG files each frame is a complete baseline
-    JPEG, decodable by :func:`decode_jpeg_pixels`."""
-    if b[:4] != b"RIFF" or b[8:12] != b"AVI ":
-        raise ValueError("not a RIFF/AVI payload")
-    # the RIFF header declares the file extent; anything shorter is a
-    # truncation and must reject rather than silently decode a partial
-    # frame list (r6 review find: a cut leaving 1-7 bytes of a chunk
-    # header used to fall out of the walk loop with frames missing)
-    riff_end = 8 + struct.unpack_from("<I", b, 4)[0]
-    if riff_end > len(b):
-        raise ValueError("truncated RIFF/AVI payload")
-    width = height = us_per_frame = None
-    frames: list[bytes] = []
-
-    def walk(pos: int, end: int) -> None:
-        nonlocal width, height, us_per_frame
-        while pos + 8 <= end:
-            cid = b[pos : pos + 4]
-            size = struct.unpack_from("<I", b, pos + 4)[0]
-            body_start = pos + 8
-            if body_start + size > end:
-                # declared chunk overruns the buffer (r6 property-fuzz
-                # find: a truncated avih raised struct.error instead of
-                # the decoder's own rejection type)
-                raise ValueError("truncated AVI chunk")
-            if cid == b"LIST":
-                if size < 4:
-                    raise ValueError("truncated AVI LIST chunk")
-                walk(body_start + 4, body_start + size)
-            elif cid == b"avih":
-                if size < 40:
-                    raise ValueError("AVI avih header too short")
-                us_per_frame = struct.unpack_from("<I", b, body_start)[0]
-                width, height = struct.unpack_from("<II", b, body_start + 32)
-            elif cid[2:4] in (b"dc", b"db"):
-                frames.append(b[body_start : body_start + size])
-            pos = body_start + size + (size & 1)
-
-    walk(12, riff_end)
-    if width is None:
-        raise ValueError("AVI missing avih header")
-    return {
-        "width": width,
-        "height": height,
-        "us_per_frame": us_per_frame,
-        "n_frames": len(frames),
-        "frames": frames,
-    }
-
-
 # ---------------------------------------------------------------------------
 # WAV — RIFF/WAVE PCM
 
@@ -3046,6 +440,9 @@ def parse_wav(b: bytes) -> dict:
     )
     if audio_format != 1:
         raise ValueError(f"unsupported WAV audio format {audio_format} (PCM only)")
+    if n_channels == 0 or sample_rate == 0:
+        # both are divisors downstream (frame count, duration)
+        raise ValueError("WAV fmt declares zero channels or zero sample rate")
     if bits == 16:
         samples = list(struct.unpack("<%dh" % (len(data) // 2), data[: len(data) & ~1]))
     elif bits == 8:
@@ -3523,81 +920,3 @@ def encode_mp4_metadata(
     moov = _mp4_box(b"moov", mvhd + b"".join(trak_boxes))
     mdat = _mp4_box(b"mdat", bytes(mdat_payload))
     return ftyp + mdat + moov
-
-
-def encode_jpeg_lossless(
-    width: int,
-    height: int,
-    planes: list[list[int]],
-    predictor: int = 1,
-    pt: int = 0,
-) -> bytes:
-    """A spec-valid lossless JPEG (SOF3, T.81 Annex H) from raw sample
-    planes (row-major ints; 1 plane = grayscale, 3 = color stored
-    as-is) — the synthesis/test side of the SOF3 decode path.  Samples
-    must already be downshifted by ``pt`` (the decoder shifts back
-    up).  Huffman table: fixed-length canonical codes over the DIFF
-    categories actually used (same policy as encode_jpeg)."""
-    if len(planes) not in (1, 3):
-        raise ValueError("planes must be 1 (gray) or 3 (color)")
-    if not 1 <= predictor <= 7:
-        raise ValueError(f"invalid lossless JPEG predictor {predictor}")
-    for p in planes:
-        if len(p) != width * height:
-            raise ValueError("plane length != width * height")
-    default = 1 << (8 - pt - 1)
-
-    # pass 1: DIFF per sample (mirrors the decoder's prediction walk)
-    diffs: list[list[int]] = []
-    cats = set()
-    for plane in planes:
-        out = []
-        recon = [0] * (width * height)
-        for y in range(height):
-            for x in range(width):
-                px = _lossless_predict(
-                    recon, x, y, width, predictor, default
-                )
-                v = plane[y * width + x] & 0xFFFF
-                d = v - px
-                # wrap into the signed 16-bit window mod 2^16 (H.1.1)
-                d = ((d + 32768) & 0xFFFF) - 32768
-                out.append(d)
-                recon[y * width + x] = v
-                cats.add(_category(d) if d != -32768 else 16)
-        diffs.append(out)
-
-    bits, vals, codes = _fixed_length_huff(sorted(cats))
-    out = bytearray(b"\xff\xd8")
-
-    def seg(marker: int, payload: bytes) -> None:
-        out.extend(b"\xff" + bytes([marker]))
-        out.extend((len(payload) + 2).to_bytes(2, "big"))
-        out.extend(payload)
-
-    seg(0xC4, bytes([0x00]) + bits + vals)
-    sof = bytearray([8]) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-    sof += bytes([len(planes)])
-    for ci in range(len(planes)):
-        sof += bytes([ci + 1, 0x11, 0])
-    seg(0xC3, bytes(sof))
-    sos = bytearray([len(planes)])
-    for ci in range(len(planes)):
-        sos += bytes([ci + 1, 0x00])
-    sos += bytes([predictor, 0, pt])
-    seg(0xDA, bytes(sos))
-
-    w = _BitWriter()
-    n = width * height
-    for idx in range(n):
-        for plane_diffs in diffs:
-            d = plane_diffs[idx]
-            s = 16 if d == -32768 else _category(d)
-            code, ln = codes[s]
-            w.write(code, ln)
-            if s and s != 16:
-                w.write(d if d >= 0 else d + (1 << s) - 1, s)
-    w.flush()
-    out.extend(w.out)
-    out.extend(b"\xff\xd9")
-    return bytes(out)

@@ -8,50 +8,18 @@ parquet). What is REAL here and what is STUBBED:
   struct, partition-parallel Arrow batching, UDF signatures, output
   schemas, and the deterministic byte-level features (length, header
   bytes, content hash). These are tested and oracle-checked.
-- REAL as of round 3: header decoding. ``image_header_features`` parses
-  PNG/JPEG/GIF/BMP magic numbers and dimensions straight from the bytes
-  (public format specs — see parse_image_header) with no codec library.
-- REAL as of round 4: PNG PIXEL decoding, stdlib-only.
-  ``decode_png_pixels`` inflates the IDAT stream with ``zlib`` and
-  inverts all five PNG scanline filters (None/Sub/Up/Average/Paeth, PNG
-  spec §9) for 8-bit gray/RGB/gray-alpha/RGBA, and
-  ``decode_image_features`` computes true pixel statistics (mean,
-  16-bin histogram) from the recovered samples for any PNG payload.
-- REAL as of round 5: JPEG PIXEL decoding (baseline SOF0/SOF1 AND
-  progressive SOF2 — Huffman, spectral selection + successive
-  approximation, dequant, IDCT, YCbCr→RGB, restart intervals —
-  ``codecs.decode_jpeg_pixels``, stdlib-only), BMP and GIF pixel
-  decoding
-  (``decode_image_features`` routes ``\\xff\\xd8`` / BM / GIF8?a magics
-  through ``operators.codecs``), and FRAME EXTRACTION for two honest
-  video-ish formats (the real path of ``sample_frames``): animated GIF
-  (LZW decode per image descriptor → one RGB frame row each) and
-  MJPEG-in-AVI (RIFF walk → one '00dc' JPEG payload row each, further
-  decodable by ``decode_image_features``).
-- REAL as of round 6: MP4/ISO BMFF CONTAINER METADATA
-  (``codecs.parse_mp4`` box-walks duration/track-count/codecs/
-  dimensions; surfaced by ``pipeline_facets``), BMP BI_BITFIELDS
-  pixel decode, and LOSSLESS JPEG (SOF3 predictor coding, all 7
-  predictors — ``decode_jpeg_pixels`` handles it transparently).
-- REAL as of round 8: arithmetic-coded JPEG, sequential AND
-  progressive (SOF9/SOF10 — the T.81 Annex D QM-coder;
-  ``decode_jpeg_pixels`` handles both transparently).  All REAL JPEG
-  decode is bounded at 1M pixels per frame (a deliberate envelope for
-  a pure-Python fixtures-scale decoder — doubles as the
-  decompression-bomb guard); larger frames reject as ValueError.
-- REAL as of round 13: MP4 SAMPLE EXTRACTION — ``sample_frames``
-  demuxes the first video track's coded access units straight out of
-  mdat at the stbl-resolved offsets (box walk ``codecs.parse_mp4``,
-  layout ``codecs.mp4_samples``; same contract as the MJPEG-AVI path:
-  frame_bytes = the coded sample).
-- STUBBED: BITSTREAM decode of those samples (rasterizing H.264/HEVC,
-  PCM-ing AAC).  This environment has no media libraries, so paths
-  that would need one raise (``ValueError`` from the codecs' honest
-  bounds, or ``NotImplementedError`` from ``sample_frames`` for
-  non-ISO-BMFF/AVI/GIF containers unless ``fake=True``, in which case
-  a DETERMINISTIC FAKE derives plausible features from the payload
-  bytes). The batch shape, schema, and partitioning are exactly what
-  a real codec drops into.
+- REAL: WAV audio decode (``codecs.wav_features``: RIFF chunk walk +
+  PCM samples → deterministic integer features) and MP4/ISO BMFF
+  container decode (``codecs.parse_mp4`` box-walks duration/track-count/
+  codecs/dimensions; ``codecs.mp4_samples`` resolves the stbl tables, so
+  ``sample_frames`` demuxes the first video track's coded access units
+  straight out of mdat).
+- STUBBED: image pixel decode and BITSTREAM decode of the demuxed
+  samples (rasterizing H.264/HEVC, PCM-ing AAC).  This environment has
+  no media libraries, so those paths raise ``NotImplementedError``
+  unless ``fake=True``, in which case a DETERMINISTIC FAKE derives
+  plausible features from the payload bytes. The batch shape, schema,
+  and partitioning are exactly what a real codec drops into.
 
 Scale: ``mapInPandas`` streams Arrow record batches per partition — no
 driver involvement, no shuffle; batch size is bounded by
@@ -63,7 +31,6 @@ payloads via ``spark.sql.files.maxPartitionBytes``.
 from __future__ import annotations
 
 import struct
-import zlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -116,260 +83,20 @@ DECODED_SCHEMA = StructType(
         StructField("height", LongType()),
         StructField("n_channels", LongType()),
         StructField("feature_hash", StringType()),
-        # pixel-level stats — populated by the REAL PNG decode path,
-        # NULL from the fake codec (which never sees actual pixels)
-        StructField("mean_micro", LongType()),
-        StructField("hist16", StringType()),
     ]
 )
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    """Paeth predictor (PNG spec §9.4): the neighbor (left, up, upleft)
-    closest to the linear estimate a + b - c, ties left > up > upleft."""
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    if pb <= pc:
-        return b
-    return c
-
-
-# Adam7 pass layout (PNG spec §8.2): (x0, y0, dx, dy) per pass
-_ADAM7 = (
-    (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-    (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-)
-
-
-def _unpack_scanline(line: bytes, width: int, channels: int, depth: int) -> bytes:
-    """One unfiltered scanline → per-sample bytes.  Sub-byte depths are
-    MSB-first packed (PNG spec §7.2) and scaled... NOT scaled: palette
-    indices and low-depth gray stay raw index/level values (the caller
-    maps palette entries; gray callers get 0..2^depth−1 levels).
-    16-bit samples reduce to their high byte (the spec's own 8-bit
-    reduction; exactness beyond 8 bits is out of scope here)."""
-    n = width * channels
-    if depth == 8:
-        return line[:n]
-    if depth == 16:
-        return line[0 : 2 * n : 2]
-    out = bytearray(n)
-    mask = (1 << depth) - 1
-    per_byte = 8 // depth
-    for i in range(n):
-        byte = line[i // per_byte]
-        shift = 8 - depth * (i % per_byte + 1)
-        out[i] = (byte >> shift) & mask
-    return bytes(out)
-
-
-def _decode_png_image(
-    raw: bytes, width: int, height: int, channels: int, depth: int
-) -> bytearray:
-    """Unfilter + unpack one (sub)image's scanline stream."""
-    bpp = max(1, channels * depth // 8)
-    stride = (width * channels * depth + 7) // 8
-    if len(raw) != height * (1 + stride):
-        raise ValueError(
-            f"PNG pixel data is {len(raw)} bytes, expected "
-            f"{height * (1 + stride)} for {width}x{height}@{depth}x{channels}"
-        )
-    out = bytearray(height * width * channels)
-    prior = bytearray(stride)
-    for y in range(height):
-        off = y * (1 + stride)
-        ftype = raw[off]
-        line = bytearray(raw[off + 1 : off + 1 + stride])
-        if ftype == 0:
-            pass
-        elif ftype == 1:  # Sub
-            for i in range(bpp, stride):
-                line[i] = (line[i] + line[i - bpp]) & 0xFF
-        elif ftype == 2:  # Up
-            for i in range(stride):
-                line[i] = (line[i] + prior[i]) & 0xFF
-        elif ftype == 3:  # Average
-            for i in range(stride):
-                left = line[i - bpp] if i >= bpp else 0
-                line[i] = (line[i] + ((left + prior[i]) >> 1)) & 0xFF
-        elif ftype == 4:  # Paeth
-            for i in range(stride):
-                left = line[i - bpp] if i >= bpp else 0
-                upleft = prior[i - bpp] if i >= bpp else 0
-                line[i] = (line[i] + _paeth(left, prior[i], upleft)) & 0xFF
-        else:
-            raise ValueError(f"unknown PNG filter type {ftype} at row {y}")
-        row = _unpack_scanline(bytes(line), width, channels, depth)
-        out[y * width * channels : (y + 1) * width * channels] = row
-        prior = line
-    return out
-
-
-def decode_png_pixels(b: bytes) -> tuple[int, int, int, bytes]:
-    """REAL stdlib-only PNG pixel decode → (width, height, n_channels,
-    raw samples row-major). Walks the chunk stream, inflates the
-    concatenated IDAT payload with ``zlib``, unfilters every scanline,
-    and supports the FULL still-image lattice (r5): color types
-    0/2/3/4/6 at bit depths 1/2/4/8/16 (as the spec permits per type),
-    paletted images mapped through PLTE to RGB, and Adam7 interlace
-    (seven per-pass sub-images de-passed into place).  16-bit samples
-    reduce to their high byte; tRNS transparency is not applied
-    (documented bound — alpha beyond type 4/6 channels is metadata
-    here)."""
-    import zlib
-
-    if not b.startswith(PNG_SIGNATURE):
-        raise ValueError("not a PNG payload")
-    pos, width = len(PNG_SIGNATURE), None
-    height = channels = None
-    bit_depth = color_type = interlace = None
-    palette: bytes | None = None
-    idat = bytearray()
-    while pos + 8 <= len(b):
-        length = int.from_bytes(b[pos : pos + 4], "big")
-        ctype = b[pos + 4 : pos + 8]
-        data = b[pos + 8 : pos + 8 + length]
-        if len(data) != length:
-            # chunk data cut short (r6 property-fuzz find: a truncated
-            # IHDR indexed out of range) — only a cut confined to the
-            # trailing CRC/IEND region is tolerable, data never is
-            raise ValueError("truncated PNG chunk")
-        if ctype == b"IHDR":
-            if len(data) < 13:
-                # a CORRUPTED length field can declare a short IHDR that
-                # passes the truncation check above yet still indexes
-                # out of range (r8 corruption-fuzz find)
-                raise ValueError("short PNG IHDR chunk")
-            width = int.from_bytes(data[0:4], "big")
-            height = int.from_bytes(data[4:8], "big")
-            bit_depth, color_type, interlace = data[8], data[9], data[12]
-            if color_type not in _PNG_CHANNELS:
-                raise ValueError(f"unsupported PNG color type {color_type}")
-            allowed = {
-                0: (1, 2, 4, 8, 16), 2: (8, 16), 3: (1, 2, 4, 8),
-                4: (8, 16), 6: (8, 16),
-            }[color_type]
-            if bit_depth not in allowed:
-                raise ValueError(
-                    f"PNG bit depth {bit_depth} invalid for color type "
-                    f"{color_type}"
-                )
-            if interlace not in (0, 1):
-                raise ValueError(f"unknown PNG interlace method {interlace}")
-            channels = _PNG_CHANNELS[color_type]
-        elif ctype == b"PLTE":
-            palette = data
-        elif ctype == b"IDAT":
-            idat += data
-        elif ctype == b"IEND":
-            break
-        pos += 12 + length  # length + type + data + CRC
-    if width is None or not idat:
-        raise ValueError("PNG has no IHDR/IDAT")
-    if color_type == 3 and palette is None:
-        raise ValueError("paletted PNG missing PLTE chunk")
-    try:
-        raw = zlib.decompress(bytes(idat))
-    except zlib.error as exc:
-        # a truncated/corrupt IDAT must surface as the decoder's own
-        # rejection type, not a zlib internal (r6 property-fuzz find:
-        # callers contract on ValueError for malformed media)
-        raise ValueError(f"PNG IDAT does not inflate: {exc}") from None
-    if interlace == 0:
-        samples = _decode_png_image(raw, width, height, channels, bit_depth)
-    else:
-        samples = bytearray(width * height * channels)
-        off = 0
-        for x0, y0, dx, dy in _ADAM7:
-            pw = (width - x0 + dx - 1) // dx
-            ph = (height - y0 + dy - 1) // dy
-            if pw == 0 or ph == 0:
-                continue
-            stride = (pw * channels * bit_depth + 7) // 8
-            size = ph * (1 + stride)
-            sub = _decode_png_image(
-                raw[off : off + size], pw, ph, channels, bit_depth
-            )
-            off += size
-            for py in range(ph):
-                for px in range(pw):
-                    src = (py * pw + px) * channels
-                    dst = ((y0 + py * dy) * width + (x0 + px * dx)) * channels
-                    samples[dst : dst + channels] = sub[src : src + channels]
-        if off != len(raw):
-            raise ValueError(
-                f"Adam7 stream has {len(raw)} bytes, consumed {off}"
-            )
-    if color_type == 3:
-        n_colors = len(palette) // 3
-        rgb = bytearray(width * height * 3)
-        for i, idx in enumerate(samples):
-            if idx >= n_colors:
-                raise ValueError(
-                    f"PNG palette index {idx} outside {n_colors}-entry PLTE"
-                )
-            rgb[3 * i : 3 * i + 3] = palette[3 * idx : 3 * idx + 3]
-        return width, height, 3, bytes(rgb)
-    return width, height, channels, bytes(samples)
-
-
-def _pixel_stats(samples: bytes) -> tuple[int, str]:
-    """(mean_micro, hist16) over 8-bit samples: floor(mean·1e6) — the
-    integer sum and /n division are exact-then-deterministic IEEE, same
-    on every engine — and a comma-joined 16-bin histogram of v>>4."""
-    import numpy as np
-
-    arr = np.frombuffer(samples, dtype=np.uint8)
-    mean_micro = int((float(int(arr.sum(dtype=np.int64))) / len(arr)) * 1_000_000)
-    hist = np.bincount(arr >> 4, minlength=16)
-    return mean_micro, ",".join(str(int(c)) for c in hist)
-
-
 def _decode_image_one(b: bytes, fake: bool):
-    """One payload → (byte_len, width, height, channels, mean_micro,
-    hist16): the shared per-payload core of :func:`decode_image_features`
-    and the fused :func:`pipeline_facets` (both must stay numerically
-    identical — asserted in tests)."""
-    from arcane_stream_parquet_spark.operators.codecs import (
-        decode_bmp_pixels,
-        decode_gif_pixels,
-        decode_jpeg_pixels,
-    )
-
-    real = None
-    if b.startswith(PNG_SIGNATURE):
-        real = decode_png_pixels
-    elif b.startswith(b"\xff\xd8"):
-        real = decode_jpeg_pixels
-    elif b[:6] in (b"GIF87a", b"GIF89a"):
-        real = decode_gif_pixels
-    elif b.startswith(b"BM"):
-        real = decode_bmp_pixels
-    if real is not None:
-        try:
-            w, h, ch, samples = real(b)
-        except (ValueError, IndexError, struct.error, zlib.error):
-            # ASCII magics ('BM', 'GIF8?a') can legitimately open a
-            # TEXT payload, and a PNG-magic payload with a corrupt
-            # IDAT fails inflate (zlib.error, r5 ADVICE); under
-            # fake=True the deterministic double must stay total for
-            # such bytes rather than failing the batch on a
-            # magic-number coincidence.  Without fake, malformed
-            # media raises as documented.
-            if not fake:
-                raise
-            real = None
-        else:
-            mean_micro, hist16 = _pixel_stats(samples)
-            return len(b), w, h, ch, mean_micro, hist16
+    """One payload → (byte_len, width, height, channels): the shared
+    per-payload core of :func:`decode_image_features` and the fused
+    :func:`pipeline_facets` (both must stay numerically identical —
+    asserted in tests)."""
     if not fake:
         # STUB: swap in e.g. PIL.Image.open(io.BytesIO(b)) here.
         raise NotImplementedError(
-            "image decode beyond PNG/JPEG/GIF/BMP requires a codec "
-            "library not present in this environment; use fake=True "
-            "for the deterministic test double"
+            "image decode requires a codec library not present in this "
+            "environment; use fake=True for the deterministic test double"
         )
     import hashlib
 
@@ -379,32 +106,19 @@ def _decode_image_one(b: bytes, fake: bool):
         64 + int.from_bytes(d[:2]) % 1024,
         64 + int.from_bytes(d[2:4]) % 1024,
         3,
-        None,
-        None,
     )
 
 
 def decode_image_features(
     df: DataFrame, id_col: str = "doc_id", fake: bool = False
 ) -> DataFrame:
-    """Decode image payloads to (width, height, channels, feature hash,
-    pixel stats) via Arrow-batched mapInPandas.
+    """Decode image payloads to (width, height, channels, feature hash)
+    via Arrow-batched mapInPandas.
 
-    PNG, JPEG (all supported processes), GIF, and BMP payloads take the
-    REAL stdlib-only path regardless of ``fake`` (``decode_png_pixels``
-    here; ``decode_jpeg_pixels`` / ``decode_gif_pixels`` /
-    ``decode_bmp_pixels`` in ``operators.codecs``) and yield true pixel
-    statistics WITHIN the decoders' fixtures-scale envelope — notably
-    JPEG frames past the documented 1M-pixel decompression-bomb bound
-    reject (ValueError), which under ``fake=True`` falls through to the
-    deterministic double like any other malformed payload (r8: the
-    bound is a deliberate limit of a pure-Python decoder, swap in a
-    codec library for real megapixel media).
-    Unrecognized payloads raise NotImplementedError per batch — there is
-    no codec library in this environment for anything else (STUB,
-    clearly marked) — unless ``fake=True``, which derives deterministic
-    pseudo-features from the bytes (NULL pixel stats) so the full
-    distributed path is exercised end-to-end in tests.
+    STUB, clearly marked: there is no image codec library in this
+    environment, so every batch raises NotImplementedError unless
+    ``fake=True``, which derives deterministic pseudo-features from the
+    bytes so the full distributed path is exercised end-to-end.
     """
     cols = df.select(F.col(id_col).alias("doc_id"), F.col(PAYLOAD_COL))
 
@@ -426,425 +140,10 @@ def decode_image_features(
                         hashlib.sha256(bytes(p)).hexdigest()
                         for p in pdf[PAYLOAD_COL]
                     ],
-                    "mean_micro": pd.array(
-                        [d[4] for d in decoded], dtype="Int64"
-                    ),
-                    "hist16": [d[5] for d in decoded],
                 }
             )
 
     return cols.mapInPandas(batches, DECODED_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# REAL image-header decoding (round-2 verdict item 5). Parsing magic
-# numbers + dimensions out of PNG/JPEG/GIF/BMP headers is pure public
-# format knowledge (PNG spec §5.2/§11.2.2: 8-byte signature then the
-# IHDR chunk with big-endian width/height; JPEG/JFIF: marker walk to an
-# SOFn segment holding precision/height/width/components; GIF87a/89a:
-# little-endian logical-screen dims at offset 6; BMP: BITMAPINFOHEADER
-# little-endian dims at offset 18) — no codec library required. (This
-# round-2 comment predates the pixel decoders: PNG/JPEG/GIF/BMP pixel
-# decoding is REAL as of r4-r6 — see the module docstring; header
-# decoding remains the cheap metadata-only path, tested against
-# hand-crafted known-good bytes.)
-
-PNG_SIGNATURE = b"\x89PNG\r\n\x1a\n"
-_PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}  # color type -> channels
-# SOF markers carry frame dims; C4/C8/CC are huffman/arithmetic/reserved
-_JPEG_SOF_MARKERS = {
-    m for m in range(0xC0, 0xD0) if m not in (0xC4, 0xC8, 0xCC)
-}
-
-
-def parse_image_header(b: bytes):
-    """(fmt, width, height, n_channels) parsed from real header bytes;
-    (None, None, None, None) when no known magic number matches."""
-    if b.startswith(PNG_SIGNATURE) and len(b) >= 26 and b[12:16] == b"IHDR":
-        width = int.from_bytes(b[16:20], "big")
-        height = int.from_bytes(b[20:24], "big")
-        color_type = b[25]
-        return "png", width, height, _PNG_CHANNELS.get(color_type)
-    if b.startswith(b"\xff\xd8"):
-        i = 2
-        while i + 4 <= len(b):
-            if b[i] != 0xFF:
-                break
-            marker = b[i + 1]
-            if marker == 0xD9:  # EOI
-                break
-            if 0xD0 <= marker <= 0xD7 or marker == 0x01:  # standalone
-                i += 2
-                continue
-            seg_len = int.from_bytes(b[i + 2 : i + 4], "big")
-            if marker in _JPEG_SOF_MARKERS and i + 9 <= len(b):
-                height = int.from_bytes(b[i + 5 : i + 7], "big")
-                width = int.from_bytes(b[i + 7 : i + 9], "big")
-                n_comp = b[i + 9] if i + 9 < len(b) else None
-                return "jpeg", width, height, n_comp
-            i += 2 + seg_len
-        return "jpeg", None, None, None
-    if b[:6] in (b"GIF87a", b"GIF89a") and len(b) >= 10:
-        return (
-            "gif",
-            int.from_bytes(b[6:8], "little"),
-            int.from_bytes(b[8:10], "little"),
-            None,  # GIF header carries a palette, not channels
-        )
-    if b.startswith(b"BM") and len(b) >= 26:
-        return (
-            "bmp",
-            int.from_bytes(b[18:22], "little", signed=True),
-            abs(int.from_bytes(b[22:26], "little", signed=True)),
-            None,
-        )
-    return None, None, None, None
-
-
-HEADER_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("fmt", StringType()),
-        StructField("width", LongType()),
-        StructField("height", LongType()),
-        StructField("n_channels", LongType()),
-    ]
-)
-
-
-def image_header_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """REAL header decode over Arrow batches: (doc_id, fmt, width,
-    height, n_channels) from the payload's actual magic numbers —
-    unrecognized payloads yield null features rather than failing the
-    batch (media lakes always contain stragglers)."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(PAYLOAD_COL))
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            parsed = [parse_image_header(bytes(p)) for p in pdf[PAYLOAD_COL]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "fmt": [p[0] for p in parsed],
-                    "width": pd.array([p[1] for p in parsed], dtype="Int64"),
-                    "height": pd.array([p[2] for p in parsed], dtype="Int64"),
-                    "n_channels": pd.array([p[3] for p in parsed], dtype="Int64"),
-                }
-            )
-
-    return cols.mapInPandas(batches, HEADER_SCHEMA)
-
-
-def make_png_header(width: int, height: int, color_type: int = 6) -> bytes:
-    """A spec-valid PNG prefix: signature + IHDR chunk (length, type,
-    13-byte payload, CRC32 over type+payload per PNG spec §5.3)."""
-    import struct
-    import zlib
-
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, color_type, 0, 0, 0)
-    chunk = b"IHDR" + ihdr
-    return (
-        PNG_SIGNATURE
-        + struct.pack(">I", len(ihdr))
-        + chunk
-        + struct.pack(">I", zlib.crc32(chunk))
-    )
-
-
-def make_jpeg_header(width: int, height: int, n_components: int = 3) -> bytes:
-    """A spec-valid JPEG prefix: SOI, APP0/JFIF, SOF0 with the frame
-    dimensions, EOI."""
-    import struct
-
-    app0 = b"JFIF\x00\x01\x02\x00\x00\x01\x00\x01\x00\x00"
-    sof_payload = struct.pack(">BHHB", 8, height, width, n_components) + b"".join(
-        struct.pack(">BBB", c + 1, 0x11, 0) for c in range(n_components)
-    )
-    return (
-        b"\xff\xd8"
-        + b"\xff\xe0" + struct.pack(">H", len(app0) + 2) + app0
-        + b"\xff\xc0" + struct.pack(">H", len(sof_payload) + 2) + sof_payload
-        + b"\xff\xd9"
-    )
-
-
-def encode_png(
-    width: int,
-    height: int,
-    samples: bytes,
-    color_type: int = 6,
-    filter_for_row=lambda y: y % 5,
-) -> bytes:
-    """A COMPLETE spec-valid PNG (signature, IHDR, one IDAT, IEND) from
-    raw 8-bit samples, applying a real scanline filter per row
-    (``filter_for_row`` defaults to cycling through all five types, so a
-    decoder must implement every unfilter recurrence to read it back).
-    Test/synthesis encoder — a deliberately small, readable
-    implementation of PNG spec §9's filter definitions."""
-    import struct
-    import zlib
-
-    bpp = _PNG_CHANNELS[color_type]
-    stride = width * bpp
-    if len(samples) != height * stride:
-        raise ValueError("samples length != height * width * channels")
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data))
-        )
-
-    raw = bytearray()
-    prior = bytes(stride)
-    for y in range(height):
-        line = samples[y * stride : (y + 1) * stride]
-        ftype = filter_for_row(y)
-        filt = bytearray(stride)
-        for i in range(stride):
-            left = line[i - bpp] if i >= bpp else 0
-            up = prior[i]
-            upleft = prior[i - bpp] if i >= bpp else 0
-            if ftype == 0:
-                pred = 0
-            elif ftype == 1:
-                pred = left
-            elif ftype == 2:
-                pred = up
-            elif ftype == 3:
-                pred = (left + up) >> 1
-            else:
-                pred = _paeth(left, up, upleft)
-            filt[i] = (line[i] - pred) & 0xFF
-        raw.append(ftype)
-        raw += filt
-        prior = line
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, color_type, 0, 0, 0)
-    return (
-        PNG_SIGNATURE
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
-    )
-
-
-# Closed-form dims/content for the pixel-decode facet: small enough that
-# per-byte Python unfiltering stays cheap per doc, row count ≥ 5 so every
-# filter type occurs, and sample value (doc_id + y + c) % 256 is constant
-# along x — an oracle can state the exact mean and histogram in SQL
-# while the Spark side must round-trip encoder → zlib → unfilter.
-PIX_W = lambda i: 8 + (i * 7) % 56  # noqa: E731
-PIX_H = lambda i: 5 + (i * 13) % 28  # noqa: E731
-
-
-def make_png_image(doc_id: int) -> bytes:
-    """Deterministic full RGBA PNG for ``doc_id`` (see PIX_W/PIX_H)."""
-    w, h = PIX_W(doc_id), PIX_H(doc_id)
-    row_px = [
-        bytes((doc_id + y + c) % 256 for c in range(4)) * w for y in range(h)
-    ]
-    return encode_png(w, h, b"".join(row_px), color_type=6)
-
-
-def synth_png_pixel_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Complete deterministic PNGs (not just headers) per doc — the
-    input side of the REAL pixel-decode path. ``fan_out`` so encode and
-    the downstream per-byte unfilter parallelize even off a single-file
-    scan (no-op on real multi-file tables)."""
-    from arcane_stream_parquet_spark.functions.partitioning import fan_out
-
-    cols = fan_out(df.select(F.col(id_col).alias("doc_id")))
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    PAYLOAD_COL: [make_png_image(int(i)) for i in pdf["doc_id"]],
-                }
-            )
-
-    return cols.mapInPandas(
-        batches,
-        StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField(PAYLOAD_COL, BinaryType()),
-            ]
-        ),
-    )
-
-
-# Closed-form JPEG pixel facet (r5): block-count grids chosen so the
-# oracle can restate mean/histogram in SQL.  Tiles are CONSTANT 8×8
-# blocks under an all-ones quant table, which round-trip EXACTLY through
-# Huffman → dequant → IDCT (DC = 8·(v−128); see codecs.decode_jpeg_pixels
-# determinism notes) — so the facet pins the whole entropy-decode path
-# with integer-exact expectations.
-JPEG_WB = lambda i: 1 + (i * 3) % 7  # noqa: E731  blocks across (1..7)
-JPEG_HB = lambda i: 1 + (i * 5) % 4  # noqa: E731  blocks down (1..4)
-
-
-def make_jpeg_image(doc_id: int) -> bytes:
-    """Deterministic complete grayscale JPEG for ``doc_id``:
-    JPEG_WB×JPEG_HB constant tiles of value (doc_id + by + bx) % 256.
-    Even doc_ids are BASELINE (SOF0), odd are PROGRESSIVE (SOF2) — the
-    constant tiles decode to identical pixels either way, so the
-    driver's closed-form oracle covers BOTH entropy paths end-to-end."""
-    from arcane_stream_parquet_spark.operators.codecs import (
-        encode_jpeg_gray_tiles,
-    )
-
-    wb, hb = JPEG_WB(doc_id), JPEG_HB(doc_id)
-    tiles = [
-        [(doc_id + by + bx) % 256 for bx in range(wb)] for by in range(hb)
-    ]
-    return encode_jpeg_gray_tiles(
-        8 * wb, 8 * hb, tiles, progressive=bool(doc_id % 2)
-    )
-
-
-def synth_jpeg_pixel_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Complete deterministic JPEGs per doc (baseline or progressive by
-    doc_id parity, see make_jpeg_image) — input side of the REAL JPEG
-    pixel-decode path (same shape as synth_png_pixel_payload)."""
-    from arcane_stream_parquet_spark.functions.partitioning import fan_out
-
-    cols = fan_out(df.select(F.col(id_col).alias("doc_id")))
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    PAYLOAD_COL: [make_jpeg_image(int(i)) for i in pdf["doc_id"]],
-                }
-            )
-
-    return cols.mapInPandas(
-        batches,
-        StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField(PAYLOAD_COL, BinaryType()),
-            ]
-        ),
-    )
-
-
-def synth_pixel_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """PNG (doc_id%3==0) or JPEG (doc_id%3==1) COMPLETE payloads in one
-    Arrow pass — the fused input side of the pixel-decode facet (one
-    mapInPandas chain instead of two unioned ones; the per-format
-    synth functions remain the composable API)."""
-    from arcane_stream_parquet_spark.functions.partitioning import fan_out
-
-    cols = fan_out(df.select(F.col(id_col).alias("doc_id")))
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                make_png_image(int(i))
-                if int(i) % 3 == 0
-                else make_jpeg_image(int(i))
-                for i in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], PAYLOAD_COL: payloads})
-
-    return cols.mapInPandas(
-        batches,
-        StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField(PAYLOAD_COL, BinaryType()),
-            ]
-        ),
-    )
-
-
-AVI_N_FRAMES = lambda i: 1 + i % 5  # noqa: E731
-
-
-def make_avi_video(doc_id: int) -> bytes:
-    """Deterministic MJPEG AVI for ``doc_id``: AVI_N_FRAMES 8×8 frames,
-    frame f a constant JPEG of value (doc_id + f) % 256 — frame count
-    AND per-frame decoded content are closed-form in doc_id."""
-    from arcane_stream_parquet_spark.operators.codecs import (
-        encode_avi_mjpeg,
-        encode_jpeg_gray_tiles,
-    )
-
-    frames = [
-        encode_jpeg_gray_tiles(8, 8, [[(doc_id + f) % 256]])
-        for f in range(AVI_N_FRAMES(doc_id))
-    ]
-    return encode_avi_mjpeg(8, 8, frames, us_per_frame=40_000)
-
-
-def synth_avi_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Complete deterministic MJPEG AVIs per doc — input side of the
-    REAL video frame-sampling path."""
-    from arcane_stream_parquet_spark.functions.partitioning import fan_out
-
-    cols = fan_out(df.select(F.col(id_col).alias("doc_id")))
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    PAYLOAD_COL: [make_avi_video(int(i)) for i in pdf["doc_id"]],
-                }
-            )
-
-    return cols.mapInPandas(
-        batches,
-        StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField(PAYLOAD_COL, BinaryType()),
-            ]
-        ),
-    )
-
-
-def make_gif_header(width: int, height: int) -> bytes:
-    """A spec-valid GIF prefix: GIF89a + little-endian logical screen
-    descriptor."""
-    import struct
-
-    return b"GIF89a" + struct.pack("<HH", width, height) + b"\x00\x00\x00"
-
-
-def synth_image_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic REAL-format payloads for testdata (which ships no
-    media): doc_id % 3 picks png/jpeg/gif; dims are closed-form in
-    doc_id (width = 16 + 7·id mod 640, height = 16 + 13·id mod 480) so
-    an oracle can state expected parse results without re-parsing —
-    while the Spark side must round-trip generator → real bytes →
-    real parser to match."""
-    cols = df.select(F.col(id_col).alias("doc_id"))
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        makers = [make_png_header, make_jpeg_header, make_gif_header]
-        for pdf in it:
-            payloads = [
-                makers[int(i) % 3](16 + (int(i) * 7) % 640, 16 + (int(i) * 13) % 480)
-                for i in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], PAYLOAD_COL: payloads})
-
-    return cols.mapInPandas(
-        batches,
-        StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField(PAYLOAD_COL, BinaryType()),
-            ]
-        ),
-    )
 
 
 # Closed-form audio facet (r5): mono 16-bit PCM whose samples are a
@@ -946,47 +245,6 @@ FRAME_SCHEMA = StructType(
     ]
 )
 
-VIDEO_STATS_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("n_frames", LongType()),
-        StructField("vid_mean_sum_micro", LongType()),
-    ]
-)
-
-
-def video_frame_stats(
-    df: DataFrame, id_col: str = "doc_id", every_nth_frame: int = 1
-) -> DataFrame:
-    """Fused video facet: RIFF walk → per-frame JPEG decode → per-doc
-    (frame count, sum of per-frame pixel means) in ONE Arrow pass — no
-    shuffle, no second Python stage.  Numerically identical to the
-    composable ``sample_frames`` → ``decode_image_features`` → groupBy
-    pipeline (asserted in tests); use that form when the intermediate
-    frames themselves are needed downstream."""
-    from arcane_stream_parquet_spark.operators.codecs import (
-        decode_jpeg_pixels,
-        parse_avi,
-    )
-
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(PAYLOAD_COL))
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[PAYLOAD_COL]):
-                frames = parse_avi(bytes(payload))["frames"][::every_nth_frame]
-                total = 0
-                for fb in frames:
-                    samples = decode_jpeg_pixels(fb)[3]
-                    total += _pixel_stats(samples)[0]
-                rows.append((doc_id, len(frames), total))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_frames", "vid_mean_sum_micro"]
-            )
-
-    return cols.mapInPandas(batches, VIDEO_STATS_SCHEMA)
-
 
 def sample_frames(
     df: DataFrame,
@@ -997,20 +255,15 @@ def sample_frames(
 ) -> DataFrame:
     """Video frame sampling: one payload row → N frame rows.
 
-    REAL paths (regardless of ``fake``, same policy as
-    decode_image_features): MJPEG-in-AVI payloads (RIFF magic) emit one
-    row per '00dc' chunk — each ``frame_bytes`` is a complete baseline
-    JPEG, decodable downstream by decode_image_features — and animated
-    GIFs emit one row per image descriptor with the frame's decoded
-    row-major RGB bytes; MP4 (ISO BMFF) payloads emit one row per
-    first-video-track sample, the coded access unit sliced out of
-    mdat at the stbl-resolved offset (r13 — the container demux is
-    fully real; rasterizing an AVC/HEVC bitstream still needs an
-    external codec and remains the honest stub boundary).
-    ``every_nth_frame`` stride-samples all of them.  Other containers
-    (MKV/…) are STUBBED: NotImplementedError unless ``fake=True``,
-    which emits byte-slices as stand-in frames, exercising the same
-    1→N mapInPandas explode shape."""
+    REAL path (regardless of ``fake``): MP4 (ISO BMFF) payloads emit one
+    row per first-video-track sample, the coded access unit sliced out
+    of mdat at the stbl-resolved offset (the container demux is fully
+    real; rasterizing an AVC/HEVC bitstream still needs an external
+    codec and remains the honest stub boundary).  ``every_nth_frame``
+    stride-samples them.  Other containers are STUBBED:
+    NotImplementedError unless ``fake=True``, which emits byte-slices
+    as stand-in frames, exercising the same 1→N mapInPandas explode
+    shape."""
     cols = df.select(F.col(id_col).alias("doc_id"), F.col(PAYLOAD_COL))
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1034,64 +287,48 @@ def _frames_of(
     :func:`sample_frames` and the fused :func:`pipeline_facets`."""
     from arcane_stream_parquet_spark.operators.codecs import (
         mp4_samples,
-        parse_avi,
-        parse_gif,
         parse_mp4,
     )
 
-    is_avi = b[:4] == b"RIFF" and b[8:12] == b"AVI "
-    is_mp4 = len(b) >= 8 and b[4:8] == b"ftyp"
-    if is_avi or is_mp4 or b[:6] in (b"GIF87a", b"GIF89a"):
+    if len(b) >= 8 and b[4:8] == b"ftyp":
         try:
-            if is_avi:
-                return parse_avi(b)["frames"][::every_nth_frame]
-            if is_mp4:
-                # REAL stbl-driven sample extraction (r13, closing the
-                # r12 "MP4 coded payload" stub at the container level,
-                # ISO/IEC 14496-12 §8.5-8.7): the first video track's
-                # coded samples are sliced straight out of mdat at the
-                # stts/stsc/stsz/stco-resolved offsets — the same
-                # contract as the MJPEG-AVI path (frame_bytes = the
-                # coded access unit; for a 'jpeg'-sample-entry track
-                # each is a complete JPEG decodable downstream, while
-                # an AVC/HEVC bitstream still needs an external codec
-                # to rasterize — THAT decode stays the honest stub
-                # boundary, no silent skip: a track is either demuxed
-                # exactly or the parse raises).
-                vide = [
-                    ti
-                    for ti, tr in enumerate(parse_mp4(b)["tracks"], start=1)
-                    if tr.get("handler") == "vide"
-                ]
-                if not vide:
-                    raise ValueError("MP4 has no video track to sample")
-                frames = []
-                for s in mp4_samples(b):
-                    if s["track"] != vide[0]:
-                        continue
-                    off, size = s["offset"], s["size"]
-                    if off + size > len(b):
-                        raise ValueError(
-                            f"sample {s['sample']} overruns mdat "
-                            f"({off}+{size} > {len(b)})"
-                        )
-                    frames.append(b[off : off + size])
-                return frames[::every_nth_frame]
-            return [
-                f["rgb"] for f in parse_gif(b)["frames"]
-            ][::every_nth_frame]
+            # stbl-driven sample extraction (ISO/IEC 14496-12 §8.5-8.7):
+            # the first video track's coded samples are sliced straight
+            # out of mdat at the stts/stsc/stsz/stco-resolved offsets
+            # (frame_bytes = the coded access unit).  Rasterizing an
+            # AVC/HEVC bitstream needs an external codec — THAT decode
+            # stays the honest stub boundary, no silent skip: a track is
+            # either demuxed exactly or the parse raises.
+            vide = [
+                ti
+                for ti, tr in enumerate(parse_mp4(b)["tracks"], start=1)
+                if tr.get("handler") == "vide"
+            ]
+            if not vide:
+                raise ValueError("MP4 has no video track to sample")
+            frames = []
+            for s in mp4_samples(b):
+                if s["track"] != vide[0]:
+                    continue
+                off, size = s["offset"], s["size"]
+                if off + size > len(b):
+                    raise ValueError(
+                        f"sample {s['sample']} overruns mdat "
+                        f"({off}+{size} > {len(b)})"
+                    )
+                frames.append(b[off : off + size])
+            return frames[::every_nth_frame]
         except (ValueError, IndexError, struct.error):
-            # 'GIF8?a' is valid ASCII and 'ftyp' at offset 4 can occur
-            # in binary-ish text: under fake=True the double must stay
-            # total for payloads opening with a media magic; real mode
-            # raises as documented
+            # 'ftyp' at offset 4 can occur in binary-ish text: under
+            # fake=True the double must stay total for such payloads;
+            # real mode raises as documented
             if not fake:
                 raise
     if not fake:
         raise NotImplementedError(
-            "video decode beyond MP4(ISO BMFF)/MJPEG-AVI/GIF requires "
-            "a codec library not present in this environment; use "
-            "fake=True for the deterministic test double"
+            "video decode beyond MP4 (ISO BMFF) requires a codec library "
+            "not present in this environment; use fake=True for the "
+            "deterministic test double"
         )
     return [
         b[off : off + every_n_bytes]
@@ -1233,8 +470,7 @@ def pipeline_facets(
     every_n_bytes: int = 64,
     fake: bool = True,
 ) -> DataFrame:
-    """Fused facet pass for the multimodal curation pipeline (r5 VERDICT
-    #3, the same fusion that took multimodal_image_dims 4.0→1.4 s): ONE
+    """Fused facet pass for the multimodal curation pipeline: ONE
     Arrow pass per payload computes the image-decode facet
     (:func:`_decode_image_one`), the frame-sampling COUNT
     (:func:`_frames_of` — the pipeline only needs the count, so frames
@@ -1267,7 +503,7 @@ def pipeline_facets(
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf[PAYLOAD_COL]):
                 b = bytes(payload)
-                _, w, h, ch, _, _ = _decode_image_one(b, fake)
+                _, w, h, ch = _decode_image_one(b, fake)
                 n_frames = len(_frames_of(b, every_n_bytes, 1, fake))
                 a = wav_features(make_wav_audio(int(doc_id)))
                 m = parse_mp4(make_mp4_video(int(doc_id)))
@@ -1298,73 +534,3 @@ def pipeline_facets(
             yield pd.DataFrame(rows, columns=[f.name for f in PIPELINE_FACETS_SCHEMA])
 
     return cols.mapInPandas(batches, PIPELINE_FACETS_SCHEMA)
-
-
-IMAGE_DIMS_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("fmt", StringType()),
-        StructField("width", LongType()),
-        StructField("height", LongType()),
-        StructField("n_channels", LongType()),
-        StructField("pix_mean_micro", LongType()),
-        StructField("pix_hist16", StringType()),
-        StructField("n_frames", LongType()),
-        StructField("vid_mean_sum_micro", LongType()),
-    ]
-)
-
-
-def image_dims_facets(
-    df: DataFrame, id_col: str = "doc_id", every_nth_frame: int = 1
-) -> DataFrame:
-    """Cross-branch fusion of the image_dims facets (r6, same move as
-    :func:`pipeline_facets`): header synth+parse, pixel synth+real
-    decode (PNG for doc_id%3==0, JPEG for ==1) and video synth+frame
-    stats (AVI for ==2) in ONE Arrow pass — replacing three separate
-    synth→decode mapInPandas chains and two joins with a single scan
-    of (doc_id).  Numerically identical to the composable
-    ``image_header_features(synth_image_payload) ⟕
-    decode_image_features(synth_pixel_payload) ⟕
-    video_frame_stats(synth_avi_payload)`` plan (asserted in tests);
-    use the composable form when intermediate payloads are needed."""
-    from arcane_stream_parquet_spark.functions.partitioning import fan_out
-    from arcane_stream_parquet_spark.operators.codecs import (
-        decode_jpeg_pixels,
-        parse_avi,
-    )
-
-    cols = fan_out(df.select(F.col(id_col).alias("doc_id")))
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        makers = [make_png_header, make_jpeg_header, make_gif_header]
-        for pdf in it:
-            rows = []
-            for raw_id in pdf["doc_id"]:
-                i = int(raw_id)
-                hdr = makers[i % 3](
-                    16 + (i * 7) % 640, 16 + (i * 13) % 480
-                )
-                fmt, w, h, ch = parse_image_header(hdr)
-                mean = hist = nf = vs = None
-                if i % 3 != 2:
-                    payload = (
-                        make_png_image(i) if i % 3 == 0 else make_jpeg_image(i)
-                    )
-                    _, _, _, _, mean, hist = _decode_image_one(
-                        payload, fake=False
-                    )
-                else:
-                    frames = parse_avi(make_avi_video(i))["frames"][
-                        ::every_nth_frame
-                    ]
-                    vs = 0
-                    for fb in frames:
-                        vs += _pixel_stats(decode_jpeg_pixels(fb)[3])[0]
-                    nf = len(frames)
-                rows.append((i, fmt, w, h, ch, mean, hist, nf, vs))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in IMAGE_DIMS_SCHEMA]
-            )
-
-    return cols.mapInPandas(batches, IMAGE_DIMS_SCHEMA)

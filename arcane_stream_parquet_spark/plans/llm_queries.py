@@ -839,8 +839,8 @@ def embedding_neardup_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Multimodal plumbing in one per-doc row: typed metadata over "
     "the opaque binary payload (JVM built-ins), the mapInPandas Arrow "
-    "image-decode path with the DETERMINISTIC FAKE codec (real pixel "
-    "decoding stays pytest-pinned via image_dims_facets), the 1-row→N-frames "
+    "image-decode path with the DETERMINISTIC FAKE codec (no image codec "
+    "library here; fake=False is the stub boundary), the 1-row→N-frames "
     "sampling shape verified by per-doc frame counts, and a REAL AUDIO "
     "facet: every doc gets a complete PCM WAV (zero-free closed-form "
     "samples) whose RIFF chunks are walked and 16-bit PCM decoded "
@@ -871,17 +871,16 @@ def q_multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # (the former ``multimodal_image_dims`` registry row was retired in
-# r12 per the r11 VERDICT's swap guidance: its decode surface — real
-# PNG zlib/unfilter, baseline+progressive JPEG Huffman/IDCT, MJPEG-AVI
-# frame walks via the fused ``image_dims_facets`` Arrow pass — stays
-# fully pinned by known-bytes unit tests (tests/test_codecs.py,
-# tests/test_multimodal.py incl. the fused-vs-composable equivalence
-# check), while the registry's multimodal coverage continues through
-# ``multimodal_pipeline`` (typed metadata, mapInPandas round trip,
-# real WAV PCM decode, real MP4 container walk, frame sampling).  The
-# freed slot under the driver's 50-row cap went to ``duplicate_spans``
-# — the Lee-et-al. exact span dedup, the r11 operator the VERDICT
-# flagged as the only semantics-bearing one outside the oracle gate.)
+# r12, and the image/AVI decoders it exercised have since been deleted:
+# no registry row or pipeline decodes pixels.  The registry's multimodal
+# coverage continues through ``multimodal_pipeline`` (typed metadata,
+# mapInPandas round trip, real WAV PCM decode, real MP4 container walk,
+# frame sampling), whose WAV/MP4 decoders stay pinned by known-bytes and
+# property tests (tests/test_codecs.py, tests/test_codec_properties.py)
+# and whose fused pass is equivalence-tested against the composable
+# chain (tests/test_multimodal.py).  The freed slot under the driver's
+# 50-row cap went to ``duplicate_spans`` — the Lee-et-al. exact span
+# dedup.)
 
 
 IVF_NUM_CENTROIDS = 8

@@ -52,7 +52,6 @@ _SLOW_FILES = {
     "test_merge_durability.py",
     "test_concurrent_soak.py",
     "test_properties.py",
-    "test_codec_properties.py",
     "test_pq_index.py",
     "test_backfill_sharded.py",
     "test_changelog_replication.py",
