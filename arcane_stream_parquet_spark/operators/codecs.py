@@ -1,16 +1,8 @@
 """Pure byte-level media codecs, stdlib-only — no Spark imports.
 
 The two container formats the multimodal curation pipeline decodes for
-real, from the public specs, plus two standalone byte codecs that no
-pipeline calls (kept with their hand-pinned tests, see below):
+real, from the public specs:
 
-- **BMP**: BITMAPINFOHEADER-family pixel decode — uncompressed 24/32-bit
-  (BI_RGB), paletted 1/4/8-bit, RLE8/RLE4, BI_BITFIELDS 16/32-bit with
-  contiguous channel masks (V3+ alpha, bit-replication widening) — and
-  an uncompressed 24-bit encoder. Public spec: Windows BMP file format.
-- **LZW** (GIF flavour): variable-width, LSB-first code packing with
-  clear/end codes, 12-bit cap and the KwKwK case. Public spec: GIF89a
-  appendix F.
 - **WAV**: RIFF/WAVE chunk walk + PCM sample decode (8/16-bit, any
   channel count) with deterministic integer features. Public spec:
   Microsoft/IBM RIFF WAVE.
@@ -24,8 +16,7 @@ pipeline calls (kept with their hand-pinned tests, see below):
 Remaining honest stub: coded SAMPLE decode for MP4-class containers
 (H.264/AAC bitstreams — the container metadata and sample layout are
 real, above).  Image decode in the pipeline is out of scope: no codec
-library in this environment, and no pipeline needs one; BMP and LZW are
-not wired into ``operators.multimodal``.
+library in this environment, and no pipeline needs one.
 
 Each decoder has a matching encoder used ONLY by tests/synthesis, and
 the test suite pins decoders against hand-computed known bytes so an
@@ -35,348 +26,6 @@ encoder/decoder bug pair cannot cancel.
 from __future__ import annotations
 
 import struct
-
-
-# ---------------------------------------------------------------------------
-# BMP
-
-
-def encode_bmp(width: int, height: int, rgb: bytes, top_down: bool = False) -> bytes:
-    """A spec-valid uncompressed 24-bit BMP from row-major RGB samples.
-    Rows are written bottom-up (the format's default) unless
-    ``top_down`` (negative biHeight), and padded to 4-byte multiples."""
-    if len(rgb) != width * height * 3:
-        raise ValueError("rgb length != width * height * 3")
-    stride = width * 3
-    pad = (-stride) % 4
-    rows = []
-    order = range(height) if top_down else range(height - 1, -1, -1)
-    for y in order:
-        row = rgb[y * stride : (y + 1) * stride]
-        # RGB → BGR per pixel
-        bgr = bytearray(row)
-        bgr[0::3], bgr[2::3] = row[2::3], row[0::3]
-        rows.append(bytes(bgr) + b"\x00" * pad)
-    pixel_data = b"".join(rows)
-    bi_height = -height if top_down else height
-    info = struct.pack(
-        "<IiiHHIIiiII", 40, width, bi_height, 1, 24, 0, len(pixel_data), 2835, 2835, 0, 0
-    )
-    offset = 14 + 40
-    header = struct.pack("<2sIHHI", b"BM", offset + len(pixel_data), 0, 0, offset)
-    return header + info + pixel_data
-
-
-def decode_bmp_pixels(b: bytes) -> tuple[int, int, int, bytes]:
-    """REAL stdlib-only BMP pixel decode → (width, height, n_channels,
-    row-major RGB(A) samples, top row first). Supports BITMAPINFOHEADER
-    bitmaps: uncompressed (BI_RGB) 24/32-bit direct color, PALETTED
-    1/4/8-bit (MSB-first packed indices through the BGRA color table —
-    r5), RLE8, and RLE4 (runs — nibble-alternating for RLE4 —
-    end-of-line/bitmap escapes, absolute mode with word padding,
-    position deltas — r5), and BI_BITFIELDS 16/32-bit (r6: contiguous
-    channel masks, V3+ alpha, bit-replication widening); bottom-up
-    (positive biHeight) and top-down (negative). Non-contiguous or
-    zero masks and unknown compressions raise (honest bounds, not
-    silent misreads)."""
-    if not b.startswith(b"BM") or len(b) < 54:
-        raise ValueError("not a BMP payload")
-    offset = struct.unpack_from("<I", b, 10)[0]
-    header_size = struct.unpack_from("<I", b, 14)[0]
-    if header_size < 40:
-        raise ValueError(f"unsupported BMP header size {header_size}")
-    width, bi_height = struct.unpack_from("<ii", b, 18)
-    planes, bpp = struct.unpack_from("<HH", b, 26)
-    compression = struct.unpack_from("<I", b, 30)[0]
-    clr_used = struct.unpack_from("<I", b, 46)[0]
-    top_down = bi_height < 0
-    height = abs(bi_height)
-
-    def palette_rgb() -> list[bytes]:
-        n = clr_used or (1 << bpp)
-        base = 14 + header_size
-        # the color table lives between the info header and the pixel
-        # offset; a smaller gap bounds it (some writers under-declare)
-        n = min(n, max(0, (offset - base)) // 4)
-        if n == 0:
-            raise ValueError("paletted BMP has no color table")
-        table = []
-        for i in range(n):
-            e = b[base + 4 * i : base + 4 * i + 4]  # BGRA entries
-            table.append(bytes((e[2], e[1], e[0])))
-        return table
-
-    if compression in (1, 2):  # BI_RLE8 / BI_RLE4
-        if (compression == 1 and bpp != 8) or (compression == 2 and bpp != 4):
-            raise ValueError(
-                f"BI_RLE{8 if compression == 1 else 4} requires "
-                f"{8 if compression == 1 else 4}-bit depth"
-            )
-        if top_down:
-            raise ValueError("RLE BMPs cannot be top-down")
-        table = palette_rgb()
-        grid = [[0] * width for _ in range(height)]  # bottom-up rows
-        x = y = 0
-        pos = offset
-        rle4 = compression == 2
-        while pos + 1 < len(b):
-            cnt, val = b[pos], b[pos + 1]
-            pos += 2
-            if cnt:
-                if rle4:  # run alternates the byte's two nibbles
-                    pair = (val >> 4, val & 0x0F)
-                    for k in range(cnt):
-                        if x < width and y < height:
-                            grid[y][x] = pair[k & 1]
-                        x += 1
-                else:
-                    for _ in range(cnt):
-                        if x < width and y < height:
-                            grid[y][x] = val
-                        x += 1
-            elif val == 0:  # end of line
-                x, y = 0, y + 1
-            elif val == 1:  # end of bitmap
-                break
-            elif val == 2:  # delta
-                if pos + 2 > len(b):
-                    raise ValueError("BMP RLE delta operands truncated")
-                x += b[pos]
-                y += b[pos + 1]
-                pos += 2
-            else:  # absolute mode, word-aligned
-                nbytes = (val + 1) // 2 if rle4 else val
-                if pos + nbytes > len(b):
-                    raise ValueError("BMP RLE absolute run truncated")
-                for k in range(val):
-                    if rle4:
-                        byte = b[pos + k // 2]
-                        idx = (byte >> 4) if k % 2 == 0 else (byte & 0x0F)
-                    else:
-                        idx = b[pos + k]
-                    if x < width and y < height:
-                        grid[y][x] = idx
-                    x += 1
-                pos += nbytes + (nbytes & 1)
-        out = bytearray(width * height * 3)
-        n_colors = len(table)
-        for yy in range(height):
-            row = grid[height - 1 - yy]
-            for xx in range(width):
-                idx = row[xx]
-                if idx >= n_colors:
-                    raise ValueError(
-                        f"BMP index {idx} outside {n_colors}-color table"
-                    )
-                o = (yy * width + xx) * 3
-                out[o : o + 3] = table[idx]
-        return width, height, 3, bytes(out)
-    if compression == 3:  # BI_BITFIELDS (r6: last BMP compression mode)
-        if bpp not in (16, 32):
-            raise ValueError("BI_BITFIELDS requires 16- or 32-bit depth")
-        # the three RGB DWORD masks sit at absolute offset 54 in BOTH
-        # layouts: appended after a 40-byte BITMAPINFOHEADER, or inside
-        # a V2+ header (whose mask fields start at header offset 40);
-        # an alpha mask exists only for V3+ headers (size >= 56)
-        if len(b) < 14 + 40 + 12 or (header_size >= 56 and len(b) < 70):
-            raise ValueError("BI_BITFIELDS masks truncated")
-        rmask, gmask, bmask = struct.unpack_from("<III", b, 54)
-        amask = (
-            struct.unpack_from("<I", b, 66)[0] if header_size >= 56 else 0
-        )
-
-        def mask_info(mask: int) -> tuple[int, int, int]:
-            if mask == 0:
-                raise ValueError("BI_BITFIELDS color mask is zero")
-            shift = (mask & -mask).bit_length() - 1
-            bits = (mask >> shift).bit_length()
-            if (mask >> shift) != (1 << bits) - 1:
-                raise ValueError(
-                    f"non-contiguous BI_BITFIELDS mask {mask:#010x}"
-                )
-            return mask, shift, bits
-
-        def scale8(x: int, bits: int) -> int:
-            # exact endpoint-preserving channel widening: >8 bits
-            # truncate, <=8 bits bit-replicate (0→0, max→255)
-            if bits >= 8:
-                return x >> (bits - 8)
-            r = x << (8 - bits)
-            filled = bits
-            while filled < 8:
-                r |= r >> filled
-                filled *= 2
-            return r & 0xFF
-
-        has_alpha = amask != 0
-        infos = [mask_info(m) for m in (rmask, gmask, bmask)]
-        if has_alpha:
-            infos.append(mask_info(amask))
-        nch = 4 if has_alpha else 3
-        step = bpp // 8
-        stride = (width * step + 3) & ~3
-        need = offset + stride * height
-        if len(b) < need:
-            raise ValueError(f"BMP pixel data truncated: {len(b)} < {need}")
-        fmt = "<H" if bpp == 16 else "<I"
-        out = bytearray(width * height * nch)
-        for y in range(height):
-            src_row = y if top_down else height - 1 - y
-            src = offset + src_row * stride
-            o = y * width * nch
-            for x in range(width):
-                v = struct.unpack_from(fmt, b, src + x * step)[0]
-                for c, (mask, shift, bits) in enumerate(infos):
-                    out[o + x * nch + c] = scale8((v & mask) >> shift, bits)
-        return width, height, nch, bytes(out)
-    if compression != 0:
-        raise ValueError(f"unsupported BMP compression {compression}")
-    if bpp in (1, 4, 8):  # paletted, uncompressed
-        table = palette_rgb()
-        n_colors = len(table)
-        stride = ((width * bpp + 7) // 8 + 3) & ~3
-        need = offset + stride * height
-        if len(b) < need:
-            raise ValueError(f"BMP pixel data truncated: {len(b)} < {need}")
-        per_byte = 8 // bpp
-        mask = (1 << bpp) - 1
-        out = bytearray(width * height * 3)
-        for y in range(height):
-            src_row = y if top_down else height - 1 - y
-            src = offset + src_row * stride
-            for x in range(width):
-                byte = b[src + x // per_byte]
-                shift = 8 - bpp * (x % per_byte + 1)
-                idx = (byte >> shift) & mask
-                if idx >= n_colors:
-                    raise ValueError(
-                        f"BMP index {idx} outside {n_colors}-color table"
-                    )
-                o = (y * width + x) * 3
-                out[o : o + 3] = table[idx]
-        return width, height, 3, bytes(out)
-    if bpp not in (24, 32):
-        raise ValueError(f"unsupported BMP bit depth {bpp}")
-    nch = bpp // 8
-    stride = (width * nch + 3) & ~3
-    need = offset + stride * height
-    if len(b) < need:
-        raise ValueError(f"BMP pixel data truncated: {len(b)} < {need}")
-    out = bytearray(width * height * nch)
-    for y in range(height):
-        src_row = y if top_down else height - 1 - y
-        src = offset + src_row * stride
-        dst = y * width * nch
-        row = b[src : src + width * nch]
-        # BGR(A) → RGB(A)
-        line = bytearray(row)
-        line[0::nch], line[2::nch] = row[2::nch], row[0::nch]
-        out[dst : dst + width * nch] = line
-    return width, height, nch, bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# LZW — GIF flavour (GIF89a spec appendix; variable code width, LSB-first)
-
-_GIF_MAX_CODE = 4096
-
-
-def lzw_decode(min_code_size: int, data: bytes) -> bytearray:
-    """GIF-flavor LZW decode of a de-sub-blocked code stream: codes are
-    packed LSB-first at a width that starts at ``min_code_size + 1`` and
-    grows to 12 bits as the table fills; ``clear`` resets the table,
-    ``end`` terminates. Implements the KwKwK special case
-    (code == next free slot → prev + prev[0])."""
-    clear = 1 << min_code_size
-    end = clear + 1
-    base = [bytes([i]) for i in range(clear)] + [b"", b""]
-    table = list(base)
-    code_size = min_code_size + 1
-    out = bytearray()
-    prev: bytes | None = None
-    bitpos, nbits = 0, len(data) * 8
-    while bitpos + code_size <= nbits:
-        byte0 = bitpos >> 3
-        window = int.from_bytes(data[byte0 : byte0 + 3], "little")
-        code = (window >> (bitpos & 7)) & ((1 << code_size) - 1)
-        bitpos += code_size
-        if code == clear:
-            table = list(base)
-            code_size = min_code_size + 1
-            prev = None
-            continue
-        if code == end:
-            break
-        if prev is None:
-            if code >= len(table):
-                raise ValueError("corrupt GIF LZW stream (first code)")
-            entry = table[code]
-            out += entry
-            prev = entry
-            continue
-        if code < len(table):
-            entry = table[code]
-        elif code == len(table):
-            entry = prev + prev[:1]  # KwKwK
-        else:
-            raise ValueError("corrupt GIF LZW stream (code gap)")
-        if len(table) < _GIF_MAX_CODE:
-            table.append(prev + entry[:1])
-            if len(table) == (1 << code_size) and code_size < 12:
-                code_size += 1
-        out += entry
-        prev = entry
-    return out
-
-
-def lzw_encode(min_code_size: int, indices: bytes) -> bytes:
-    """GIF-flavor LZW encode (tests/synthesis): emits clear, the code
-    stream with the same width-growth rule the decoder applies, and
-    end; resets the table via clear when it would exceed 12 bits."""
-    clear = 1 << min_code_size
-    end = clear + 1
-    acc = 0
-    acc_bits = 0
-    out = bytearray()
-
-    def reset_dict() -> tuple[dict, int, int]:
-        return ({bytes([i]): i for i in range(clear)}, end + 1, min_code_size + 1)
-
-    table, next_code, code_size = reset_dict()
-
-    def emit(code: int) -> None:
-        nonlocal acc, acc_bits
-        acc |= code << acc_bits
-        acc_bits += code_size
-        while acc_bits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            acc_bits -= 8
-
-    emit(clear)
-    w = b""
-    for k in indices:
-        wk = w + bytes([k])
-        if wk in table:
-            w = wk
-            continue
-        emit(table[w])
-        table[wk] = next_code
-        next_code += 1
-        # mirror of the decoder's growth rule: widen once the table
-        # fills the current code space (cap 12 bits)
-        if next_code == (1 << code_size) + 1 and code_size < 12:
-            code_size += 1
-        w = bytes([k])
-        if next_code >= _GIF_MAX_CODE:
-            emit(clear)
-            table, next_code, code_size = reset_dict()
-    if w:
-        emit(table[w])
-    emit(end)
-    if acc_bits:
-        out.append(acc & 0xFF)
-    return bytes(out)
 
 
 # ---------------------------------------------------------------------------

@@ -1792,7 +1792,7 @@ class ParquetMergeTarget:
         # the match marker must be a non-null literal, NOT the key
         # column — a null-key update matches via eqNullSafe yet leaves
         # the joined key column null
-        upd = self._read_delete_files(dels_v).select(
+        upd = self._read_delete_files(dels_v, schema).select(
             _DEL_KEY_COL, F.lit(True).alias(_CDC_OLD + "present")
         )
         # one delete key per upserted key (winners are key-deduped), and
@@ -1823,16 +1823,14 @@ class ParquetMergeTarget:
         # the live table's — a later rebucket (r11) must not skew the
         # pruning of a historical commit
         nb_v = int(m_new["num_buckets"])
-        kdf = self._read_delete_files(dels_v).select(
+        kdf = self._read_delete_files(dels_v, schema).select(
             F.col(_DEL_KEY_COL).alias(self.key_col)
         ).withColumn(BUCKET_COLUMN, _bucket_expr(self.key_col, nb_v))
-        buckets = sorted({b for d in dels_v for b in self._delete_buckets(d)})
+        buckets = {b for d in dels_v for b in self._delete_buckets(d)}
         files_prev = [
-            f
-            for f in all_files
-            if int(f["v"]) != v and int(f["b"]) in set(buckets)
+            f for f in all_files if int(f["v"]) != v and int(f["b"]) in buckets
         ]
-        touched, _ = self._prune_touched_files(files_prev, kdf, buckets)
+        touched = self._plan_touch(files_prev, kdf)[3]
         deletes_prev = [
             d
             for d in (m_new.get("deletes") or [])
@@ -1961,6 +1959,57 @@ class ParquetMergeTarget:
         )
         return j.select(*out_cols, kind.alias(CHANGE_TYPE_COLUMN))
 
+    def _key_frame(self, keys: "DataFrame | Sequence", schema) -> DataFrame:
+        """The distinct, bucketed key frame of :meth:`lookup`,
+        :meth:`lookup_keys` and :meth:`delete_keys`: a driver-side
+        sequence, or a DataFrame whose ``key_col`` (or single) column
+        holds the keys, cast to the table's key type."""
+        from pyspark.sql.types import StructField, StructType
+
+        key_type = schema[self.key_col].dataType
+        if not isinstance(keys, DataFrame):
+            keys = self.spark.createDataFrame(
+                [(k,) for k in keys],
+                StructType([StructField(self.key_col, key_type)]),
+            )
+        elif self.key_col not in keys.columns:
+            if len(keys.columns) != 1:
+                raise ValueError(
+                    f"keys DataFrame must have a '{self.key_col}' column "
+                    f"or exactly one column, got {keys.columns}"
+                )
+            keys = keys.withColumnRenamed(keys.columns[0], self.key_col)
+        return self._with_bucket(
+            keys.select(F.col(self.key_col).cast(key_type)).distinct()
+        )
+
+    def _lookup_scan(self, keys: "DataFrame | Sequence"):
+        """``(key frame, scan)`` of a point lookup: the MoR-aware scan
+        of the files :meth:`_plan_touch` finds for the keys — or, when
+        no file can hold a key, an empty frame of the ``read()`` schema
+        (the one empty result of :meth:`lookup` and
+        :meth:`lookup_keys`)."""
+        from pyspark.sql.types import StructType
+
+        manifest = self._manifest()
+        schema = self._schema_of(manifest)
+        if schema is None:
+            raise ValueError(f"no schema committed at {self.path}")
+        kdf = touched = None
+        if isinstance(keys, DataFrame) or len(keys):
+            kdf = self._key_frame(keys, schema)
+            touched = self._plan_touch(manifest, kdf)[3]
+        if not touched:
+            return kdf, self.spark.createDataFrame(
+                [],
+                StructType(
+                    [f for f in schema.fields if f.name != BUCKET_COLUMN]
+                ),
+            )
+        return kdf, self._scan_with_deletes(
+            touched, schema, manifest.get("deletes") or []
+        )
+
     def lookup(self, keys: Sequence) -> DataFrame:
         """Point-lookup read: exactly ``read().filter(key IN keys)``
         but served from the manifest — each key prunes to its hash
@@ -1968,35 +2017,15 @@ class ParquetMergeTarget:
         hold it, so a lookup against a 10⁶-file table scans O(#keys)
         data files instead of the table (the key-sorted data files
         ``_write_version`` produces make each file a tight contiguous
-        range).  Pending MoR deletes apply as in any read.  ``keys`` is
-        a small driver-side list — that is the point-lookup contract;
-        for bulk key sets use a join against :meth:`read`."""
-        manifest = self._manifest()
-        schema = self._schema_of(manifest)
-        if schema is None:
-            raise ValueError(f"no schema committed at {self.path}")
-        if not len(keys):
-            return self.spark.createDataFrame([], schema)
-        from pyspark.sql.types import StructField, StructType
-
-        key_type = schema[self.key_col].dataType
-        kdf = self._with_bucket(
-            self.spark.createDataFrame(
-                [(k,) for k in keys],
-                StructType([StructField(self.key_col, key_type)]),
-            )
-        )
-        buckets = [
-            r[BUCKET_COLUMN]
-            for r in kdf.select(BUCKET_COLUMN).distinct().collect()
-        ]
-        files = self._files_of_manifest(manifest)
-        touched, _kept = self._prune_touched_files(files, kdf, buckets)
-        if not touched:
-            return self.spark.createDataFrame([], schema)
-        scan = self._scan_with_deletes(
-            touched, schema, manifest.get("deletes") or []
-        )
+        range).  Only the manifest shards holding a key's bucket are
+        read: planning is one Spark action on an unsharded table and
+        two on a sharded one, whose bucket set must be known before
+        its shards are (:meth:`_plan_touch`).  Pending MoR deletes
+        apply as in any read.  ``keys`` is a small driver-side list —
+        that is the point-lookup contract, and the ``isin`` filter it
+        becomes gives parquet pushdown; for bulk key sets use
+        :meth:`lookup_keys`."""
+        _kdf, scan = self._lookup_scan(keys)
         non_null = [k for k in keys if k is not None]
         pred = (
             F.col(self.key_col).isin(non_null) if non_null else F.lit(False)
@@ -2008,47 +2037,14 @@ class ParquetMergeTarget:
     def lookup_keys(self, keys: DataFrame) -> DataFrame:
         """Bulk point-lookup: ``read()`` semi-joined to a DataFrame of
         keys, served from the manifest with the same bucket + key-range
-        pruning as :meth:`lookup` — only the distinct BUCKET list (≤
-        ``num_buckets`` ints) is collected to the driver, so the key
-        set itself can be arbitrarily large.  ``keys`` is a DataFrame
-        with a ``key_col`` (or single) column.  Scans O(#candidate
-        files of the key set), not the table."""
-        from pyspark.sql.types import StructType
-
-        manifest = self._manifest()
-        schema = self._schema_of(manifest)
-        if schema is None:
-            raise ValueError(f"no schema committed at {self.path}")
-        kdf = keys
-        if self.key_col not in kdf.columns:
-            if len(kdf.columns) != 1:
-                raise ValueError(
-                    f"keys DataFrame must have a '{self.key_col}' column "
-                    f"or exactly one column, got {kdf.columns}"
-                )
-            kdf = kdf.withColumnRenamed(kdf.columns[0], self.key_col)
-        kdf = self._with_bucket(
-            kdf.select(
-                F.col(self.key_col).cast(schema[self.key_col].dataType)
-            ).distinct()
-        )
-        buckets = [
-            r[BUCKET_COLUMN]
-            for r in kdf.select(BUCKET_COLUMN).distinct().collect()
-        ]
-        if not buckets:
-            return self.spark.createDataFrame(
-                [], StructType([f for f in schema.fields if f.name != BUCKET_COLUMN])
-            )
-        files = self._files_of_manifest(manifest)
-        touched, _ = self._prune_touched_files(files, kdf, buckets)
-        if not touched:
-            return self.spark.createDataFrame(
-                [], StructType([f for f in schema.fields if f.name != BUCKET_COLUMN])
-            )
-        scan = self._scan_with_deletes(
-            touched, schema, manifest.get("deletes") or []
-        )
+        pruning as :meth:`lookup` — only (bucket, file-id) pairs come
+        back to the driver, so the key set itself can be arbitrarily
+        large.  ``keys`` is a DataFrame with a ``key_col`` (or single)
+        column.  Scans O(#candidate files of the key set), not the
+        table, and reads only the manifest shards of the keys' buckets
+        (one planning action unsharded, two sharded, as in
+        :meth:`lookup`)."""
+        kdf, scan = self._lookup_scan(keys)
         return scan.join(
             kdf.select(F.col(self.key_col).alias(_DEL_KEY_COL)),
             F.col(self.key_col).eqNullSafe(F.col(_DEL_KEY_COL)),
@@ -2593,18 +2589,35 @@ class ParquetMergeTarget:
         ).write.mode("errorifexists").parquet(self._delete_data_dir(dirname))
         return dirname
 
+    def _delete_stat_aggs(self, matched=None) -> list:
+        """Aggregates ``_bs/_mn/_mx/_hn`` (buckets covered, min/max
+        key, has-null) of the delete-file keys among the aggregated
+        rows — those where ``matched`` holds, or all of them — for
+        :meth:`_delete_entries_from_agg`."""
+
+        def only(c):
+            return c if matched is None else F.when(matched, c)
+
+        k = F.col(self.key_col)
+        return [
+            F.sort_array(F.collect_set(only(F.col(BUCKET_COLUMN)))).alias("_bs"),
+            F.min(only(k.cast("string"))).alias("_mn"),
+            F.max(only(k.cast("string"))).alias("_mx"),
+            F.max(only(k.isNull())).alias("_hn"),
+        ]
+
     def _delete_entries_from_agg(
         self, version: int, dirname: str, srow
     ) -> list[dict]:
-        """Manifest delete entries built from the winners-side
-        aggregate row (r17): the matched rows of a MoR commit ARE the
-        delete-file keys (winners is one row per key), so their bucket
-        set / min / max / has-null were already computed in the same
-        action that counted them — no read-back of the freshly written
-        delete files.  Only valid when the commit wrote ONE delete
-        file (every batch under the 5M-key coalesce bound); the
-        multi-file case needs per-file stats and falls back to
-        :meth:`_collect_delete_stats`."""
+        """Manifest delete entries built from the aggregate row of
+        :meth:`_delete_stat_aggs` (r17): the matched rows of a MoR
+        commit or a ``delete_keys`` ARE the delete-file keys (one row
+        per key), so their bucket set / min / max / has-null were
+        already computed in the same action that counted them — no
+        read-back of the freshly written delete files.  Only valid
+        when the commit wrote ONE delete file (every batch under the
+        5M-key coalesce bound); the multi-file case needs per-file
+        stats and falls back to :meth:`_collect_delete_stats`."""
         ddir = self._delete_data_dir(dirname)
         sizes = {
             name: size
@@ -2698,7 +2711,7 @@ class ParquetMergeTarget:
             return True
         return not (fx < dm or fm > dx)
 
-    def _read_delete_files(self, entries: list[dict]) -> DataFrame:
+    def _read_delete_files(self, entries: list[dict], schema) -> DataFrame:
         """Scan delete entries to (``_DEL_KEY_COL``, ``_DEL_SEQ_COL``)
         rows — the anti-join build side.  A plain entry's seq is its
         commit version (one ``lit`` per dir); a consolidated entry
@@ -2706,13 +2719,24 @@ class ParquetMergeTarget:
         seq as a stored column — required for correctness, because the
         live replacement row of a key may sit in a data file committed
         after the key's delete, and tagging the key with the
-        consolidation version would suppress it."""
+        consolidation version would suppress it.  The files are read
+        with the table ``schema``'s key type (a key written before a
+        legal widening promotes like any old data file), so no footer
+        inference job runs."""
+        from pyspark.sql.types import LongType, StructField, StructType
+
+        key = StructType([schema[self.key_col]])
+        key_seq = StructType(
+            [schema[self.key_col], StructField(_DEL_SEQ_STORE, LongType())]
+        )
         by_seq: dict[int, list[str]] = {}
         parts = []
         for d in entries:
             if d.get("sc"):
                 parts.append(
-                    self.spark.read.parquet(self._delete_path(d)).select(
+                    self.spark.read.schema(key_seq)
+                    .parquet(self._delete_path(d))
+                    .select(
                         F.col(self.key_col).alias(_DEL_KEY_COL),
                         F.col(_DEL_SEQ_STORE).cast("long").alias(_DEL_SEQ_COL),
                     )
@@ -2720,7 +2744,7 @@ class ParquetMergeTarget:
             else:
                 by_seq.setdefault(int(d["seq"]), []).append(self._delete_path(d))
         for seq, paths in sorted(by_seq.items()):
-            part = self.spark.read.parquet(*sorted(paths)).select(
+            part = self.spark.read.schema(key).parquet(*sorted(paths)).select(
                 F.col(self.key_col).alias(_DEL_KEY_COL),
                 F.lit(seq).cast("long").alias(_DEL_SEQ_COL),
             )
@@ -2774,7 +2798,7 @@ class ParquetMergeTarget:
             return self._read_files(files, schema)
         tagged = self._read_files(dirty, schema, tag_version=True)
         used = [deletes[i] for i in sorted(used_deletes)]
-        dels = self._read_delete_files(used)
+        dels = self._read_delete_files(used, schema)
         # the delete set is bounded by keys upserted since the last
         # compact() — in the trickle regime that is megabytes, so
         # broadcast it and the dirty scan never shuffles (measured: the
@@ -2792,56 +2816,6 @@ class ParquetMergeTarget:
         if not clean:
             return survived
         return self._read_files(clean, schema).unionByName(survived)
-
-    def _prune_touched_files(
-        self, files: list[dict], batch_bucketed: DataFrame, buckets: list[int]
-    ) -> tuple[list[dict], list[dict]]:
-        """Split the live files of ``buckets`` into (touched, kept):
-        a file is touched iff some batch key falls inside its recorded
-        [mn, mx] range (``None`` stats → always touched).  The check is
-        one broadcast range-join of the batch's distinct keys against a
-        #files-row range table — driver traffic is O(#files)."""
-        bucket_set = set(buckets)
-        in_scope = [f for f in files if int(f["b"]) in bucket_set]
-        unranged = [f for f in in_scope if f["mn"] is None or f["mx"] is None]
-        ranged = [f for f in in_scope if f["mn"] is not None and f["mx"] is not None]
-        if not ranged:
-            return in_scope, []
-        ranges = self.spark.createDataFrame(
-            [
-                (i, int(f["b"]), str(f["mn"]), str(f["mx"]))
-                for i, f in enumerate(ranged)
-            ],
-            "fid int, fb int, mn string, mx string",
-        )
-        keys = batch_bucketed.select(
-            F.col(self.key_col).cast("string").alias("_k"),
-            F.col(BUCKET_COLUMN).alias("_b"),
-        ).distinct()
-        # A NULL batch key never satisfies a range predicate (NULL >= mn
-        # is NULL), yet a kept file may hold the target's null-key row —
-        # latest-wins dedup groups nulls together, so such a file MUST be
-        # rewritten or the null key ends up with two live rows (r5
-        # ADVICE).  Files of a null-key bucket therefore match
-        # unconditionally; min/max ignore nulls so a file holding ONLY
-        # null keys is unranged (always touched) already.
-        hit_ids = {
-            r["fid"]
-            for r in keys.join(
-                F.broadcast(ranges),
-                (F.col("_b") == F.col("fb"))
-                & (
-                    F.col("_k").isNull()
-                    | ((F.col("_k") >= F.col("mn")) & (F.col("_k") <= F.col("mx")))
-                ),
-            )
-            .select("fid")
-            .distinct()
-            .collect()
-        }
-        touched = unranged + [f for i, f in enumerate(ranged) if i in hit_ids]
-        kept = [f for i, f in enumerate(ranged) if i not in hit_ids]
-        return touched, kept
 
     # -- merge semantics ---------------------------------------------------
 
@@ -2956,47 +2930,47 @@ class ParquetMergeTarget:
         else:
             self._merge_cow(batch)
 
-    def _plan_batch_touch(
-        self, manifest: dict, batch_bucketed: DataFrame
+    def _plan_touch(
+        self, source: "dict | list[dict]", kdf: DataFrame
     ) -> tuple[list[int], list[dict], list[dict] | None, list[dict], list[dict]]:
-        """Driver-side planning for one merge commit: ``(buckets,
-        region, keep, touched, kept_in_scope)``.
+        """THE touch planner of every key-driven operation (merge,
+        lookup, lookup_keys, delete_keys, CDC pre-images): keys → hash
+        buckets → files whose recorded [mn, mx] key range can hold a
+        key.  ``source`` is a manifest, or (CDC) an explicit historical
+        file list; ``kdf`` carries the key column and ``BUCKET_COLUMN``.
+        Returns ``(buckets, region, keep, touched, kept)``: ``region``
+        is every file entry that may belong to a key's bucket, ``keep``
+        the untouched shard descriptors (``None`` unless sharded), and
+        ``touched``/``kept`` split region's files of those buckets by
+        whether some key falls inside their range (``None`` stats →
+        always touched).
 
-        On an UNSHARDED manifest (file list inline — bounded by
-        ``manifest_shard_entries``) bucket discovery and file-range
-        pruning fuse into ONE Spark job: the batch's (key, bucket)
-        pairs range-join the broadcast file-range table and the
-        distinct (bucket, hit-file) pairs come back in one collect
-        (r17 — previously two jobs: a distinct-bucket collect plus the
-        prune join).  Sharded manifests keep the two-step path so
-        metadata IO stays O(touched shards), not O(table)."""
-        files_inline = manifest.get("files")
-        if files_inline is None:
-            # sharded manifest: buckets first, then only intersecting
-            # shards are read
+        The one range-join: the keys' ``(CAST(key AS STRING), bucket)``
+        pairs left-join the broadcast ``fid, fb, mn, mx`` table of the
+        ranged files and the distinct (bucket, hit-file) pairs come back
+        in ONE collect, which yields the bucket set and the hits at
+        once.  A sharded manifest takes TWO actions: a distinct-bucket
+        collect first, so only the shards whose [b0, b1] range holds a
+        key's bucket are read (metadata IO O(touched shards)); fusing
+        it into one action would need every shard's ranges up front."""
+        buckets = None
+        if isinstance(source, list):
+            region, keep = source, None
+        elif source.get("file_shards") is None:
+            region, keep = source["files"], None
+        else:
             buckets = [
                 r[BUCKET_COLUMN]
-                for r in batch_bucketed.select(BUCKET_COLUMN)
-                .distinct()
-                .collect()
+                for r in kdf.select(BUCKET_COLUMN).distinct().collect()
             ]
             if not buckets:
                 return [], [], None, [], []
-            region, keep = self._files_for_buckets(manifest, set(buckets))
-            touched, kept = self._prune_touched_files(
-                region, batch_bucketed, buckets
-            )
-            return buckets, region, keep, touched, kept
+            region, keep = self._files_for_buckets(source, set(buckets))
         ranged = [
-            f
-            for f in files_inline
-            if f["mn"] is not None and f["mx"] is not None
+            f for f in region if f["mn"] is not None and f["mx"] is not None
         ]
-        keys = batch_bucketed.select(
-            F.col(self.key_col).cast("string").alias("_k"),
-            F.col(BUCKET_COLUMN).alias("_b"),
-        )
-        if ranged:
+        hit_ids: set[int] = set()
+        if buckets is None or ranged:
             ranges = self.spark.createDataFrame(
                 [
                     (i, int(f["b"]), str(f["mn"]), str(f["mx"]))
@@ -3004,11 +2978,19 @@ class ParquetMergeTarget:
                 ],
                 "fid int, fb int, mn string, mx string",
             )
-            # NULL batch keys match every ranged file of their bucket
-            # (same rule as _prune_touched_files: the kept file may
-            # hold the target's null-key row)
+            # A NULL key never satisfies a range predicate (NULL >= mn is
+            # NULL), yet a kept file may hold the target's null-key row —
+            # latest-wins dedup groups nulls together, so such a file
+            # MUST be rewritten or the null key ends up with two live
+            # rows (r5 ADVICE).  NULL keys therefore match every ranged
+            # file of their bucket; min/max ignore nulls, so a file
+            # holding ONLY null keys is unranged (always touched).
             rows = (
-                keys.join(
+                kdf.select(
+                    F.col(self.key_col).cast("string").alias("_k"),
+                    F.col(BUCKET_COLUMN).alias("_b"),
+                )
+                .join(
                     F.broadcast(ranges),
                     (F.col("_b") == F.col("fb"))
                     & (
@@ -3024,31 +3006,23 @@ class ParquetMergeTarget:
                 .distinct()
                 .collect()
             )
-        else:
-            rows = [
-                {"_b": r["_b"], "fid": None}
-                for r in keys.select("_b").distinct().collect()
-            ]
-        buckets = sorted({int(r["_b"]) for r in rows})
+            buckets = sorted({int(r["_b"]) for r in rows})
+            hit_ids = {r["fid"] for r in rows if r["fid"] is not None}
         if not buckets:
             return [], [], None, [], []
-        hit_ids = {r["fid"] for r in rows if r["fid"] is not None}
         bucket_set = set(buckets)
-        unranged_in_scope = [
+        touched = [
             f
-            for f in files_inline
+            for f in region
             if int(f["b"]) in bucket_set
             and (f["mn"] is None or f["mx"] is None)
-        ]
-        touched = unranged_in_scope + [
-            f for i, f in enumerate(ranged) if i in hit_ids
-        ]
+        ] + [f for i, f in enumerate(ranged) if i in hit_ids]
         kept = [
             f
             for i, f in enumerate(ranged)
             if int(f["b"]) in bucket_set and i not in hit_ids
         ]
-        return buckets, files_inline, None, touched, kept
+        return buckets, region, keep, touched, kept
 
     def _merge_cow(self, batch: DataFrame) -> None:
         # The batch IS pre-deduped (below) even though max-associativity
@@ -3064,7 +3038,7 @@ class ParquetMergeTarget:
         batch_bucketed = self._with_bucket(batch)
         manifest = self._manifest()
         buckets, region, keep, touched, kept_in_scope = (
-            self._plan_batch_touch(manifest, batch_bucketed)
+            self._plan_touch(manifest, batch_bucketed)
         )
         if not buckets:
             return  # empty batch: no version bump, no manifest churn
@@ -3174,7 +3148,7 @@ class ParquetMergeTarget:
         # plan against the RAW bucketed batch: dedup cannot change the
         # key set, so bucket/file-touch discovery skips the max_by
         # aggregation the batch2 plan carries (r17)
-        buckets, region, keep, touched, _kept = self._plan_batch_touch(
+        buckets, region, keep, touched, _kept = self._plan_touch(
             manifest, self._with_bucket(batch)
         )
         if not buckets:
@@ -3229,24 +3203,10 @@ class ParquetMergeTarget:
                 # replaces the former isEmpty + count + delete-file
                 # read-back trio (r17; winners is post-dedup, one row
                 # per key, so matched rows ARE the delete-file keys)
-                matched_if = lambda c: F.when(  # noqa: E731
-                    F.col(_TGT_V_COL).isNotNull(), c
-                )
                 srow = winners.select(
                     F.count(F.lit(1)).alias("_nw"),
                     F.count(F.col(_TGT_V_COL)).alias("_nm"),
-                    F.sort_array(
-                        F.collect_set(matched_if(F.col(BUCKET_COLUMN)))
-                    ).alias("_bs"),
-                    F.min(
-                        matched_if(F.col(self.key_col).cast("string"))
-                    ).alias("_mn"),
-                    F.max(
-                        matched_if(F.col(self.key_col).cast("string"))
-                    ).alias("_mx"),
-                    F.max(
-                        matched_if(F.col(self.key_col).isNull())
-                    ).alias("_hn"),
+                    *self._delete_stat_aggs(F.col(_TGT_V_COL).isNotNull()),
                 ).first()
                 if not srow["_nw"]:
                     return  # whole batch stale: discarded (ST3), no commit
@@ -3467,7 +3427,12 @@ class ParquetMergeTarget:
         Cost at scale mirrors a MoR upsert: the liveness probe prunes
         to the keys' hash buckets then to files whose [mn, mx] range
         can hold them (O(#keys) files on a key-sorted table), metadata
-        IO is O(touched shards), and no data file is rewritten.  CDC
+        IO is O(touched shards), and no data file is rewritten.
+        Planning is :meth:`_plan_touch`: one Spark action on an
+        unsharded table, two on a sharded one (bucket discovery first,
+        so only the intersecting shards are read).  One aggregate over
+        the matched keys returns the live count and the delete entry's
+        stats, as in a MoR upsert.  CDC
         (:meth:`read_changes`) emits the pre-images as ``delete`` rows
         via the bucket-pruned snapshot diff (the commit is tagged
         ``op="delete"``, which routes to the diff branch)."""
@@ -3477,38 +3442,12 @@ class ParquetMergeTarget:
         schema = self._schema_of(manifest)
         if schema is None:
             raise ValueError(f"no schema committed at {self.path}")
-        if isinstance(keys, DataFrame):
-            kdf = keys
-            if self.key_col not in kdf.columns:
-                if len(kdf.columns) != 1:
-                    raise ValueError(
-                        f"keys DataFrame must have a '{self.key_col}' "
-                        f"column or exactly one column, got {kdf.columns}"
-                    )
-                kdf = kdf.withColumnRenamed(kdf.columns[0], self.key_col)
-            kdf = kdf.select(
-                F.col(self.key_col).cast(schema[self.key_col].dataType)
-            )
-        else:
-            from pyspark.sql.types import StructField, StructType
-
-            if not len(keys):
-                return 0
-            kdf = self.spark.createDataFrame(
-                [(k,) for k in keys],
-                StructType(
-                    [StructField(self.key_col, schema[self.key_col].dataType)]
-                ),
-            )
-        kdf = self._with_bucket(kdf.distinct())
-        buckets = [
-            r[BUCKET_COLUMN]
-            for r in kdf.select(BUCKET_COLUMN).distinct().collect()
-        ]
-        if not buckets:
+        if not isinstance(keys, DataFrame) and not len(keys):
             return 0
-        region, keep = self._files_for_buckets(manifest, set(buckets))
-        touched, _kept = self._prune_touched_files(region, kdf, buckets)
+        kdf = self._key_frame(keys, schema)
+        _buckets, region, keep, touched, _kept = self._plan_touch(
+            manifest, kdf
+        )
         if not touched:
             return 0  # no candidate file can hold any key: nothing live
         from pyspark import StorageLevel
@@ -3525,16 +3464,22 @@ class ParquetMergeTarget:
                 F.col(self.key_col).eqNullSafe(F.col(_DEL_KEY_COL)),
                 "leftsemi",
             )
-            .select(self.key_col)
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         try:
-            n_matched = matched.count()
+            # ONE action: the matched count plus the delete entry's
+            # stats, as in _merge_mor (no read-back of the delete file)
+            srow = matched.select(
+                F.count(F.lit(1)).alias("_nm"), *self._delete_stat_aggs()
+            ).first()
+            n_matched = int(srow["_nm"])
             if not n_matched:
                 return 0
             new_version = manifest["version"] + 1
             del_dir = self._write_deletes(matched, n_matched, new_version)
-            new_deletes = self._collect_delete_stats(new_version, del_dir)
+            new_deletes = self._delete_entries_from_agg(
+                new_version, del_dir, srow
+            )
         finally:
             matched.unpersist()
         manifest["files"] = region
@@ -3991,7 +3936,7 @@ class ParquetMergeTarget:
         new_deletes = deletes
         if do_deletes:
             consolidated = (
-                self._read_delete_files(deletes)
+                self._read_delete_files(deletes, schema)
                 .groupBy(_DEL_KEY_COL)
                 .agg(F.max(_DEL_SEQ_COL).alias(_DEL_SEQ_COL))
                 .select(

@@ -11,6 +11,7 @@ engine's own snapshot manifests.
 from __future__ import annotations
 
 import glob
+import itertools
 import json
 import os
 
@@ -300,3 +301,102 @@ def test_lookup_null_and_empty(spark, tmp_path):
     assert [r["payload"] for r in t.lookup([None]).collect()] == ["nullrow"]
     assert t.lookup([]).count() == 0
     assert t.lookup(["missing"]).count() == 0
+    # an empty result has the read() schema, never the bucket column
+    cols = t.read().columns
+    for keys in ([], ["missing"], ["a"]):
+        assert t.lookup(keys).columns == cols, keys
+
+
+_JOB_GROUPS = itertools.count()
+
+
+def _job_count(spark, fn):
+    """(fn(), Spark jobs fn submitted) — counted through a job group,
+    which works with the UI off."""
+    sc = spark.sparkContext
+    group = f"job-count-{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("shard_entries", [None, 2], ids=["unsharded", "sharded"])
+def test_key_driven_callers_share_the_touch_planner(
+    spark, tmp_path, shard_entries, monkeypatch
+):
+    """lookup, lookup_keys and delete_keys (list and DataFrame forms)
+    against their read() references — NULL, absent and already-deleted
+    keys included — while reading only the manifest shards of the
+    keys' buckets; lookup submits no job beyond its planning, and
+    delete_keys builds its entry from its own aggregate (no read-back
+    of the delete file it just wrote)."""
+    kw = {} if shard_entries is None else {"manifest_shard_entries": shard_entries}
+    t = make_target(spark, tmp_path, **kw)
+    key = F.col("arcane_merge_key")
+    t.merge(
+        df_of(spark, [(f"k{i:03d}", 1, "a") for i in range(200)] + [(None, 1, "n")])
+    )
+    assert t.delete_keys(["k050"]) == 1
+    assert bool(t._manifest().get("file_shards")) == (shard_entries is not None)
+
+    read_shards: list[str] = []
+    orig_read_shard = t._read_shard
+    monkeypatch.setattr(
+        t, "_read_shard", lambda n: read_shards.append(n) or orig_read_shard(n)
+    )
+    monkeypatch.setattr(
+        t,
+        "_collect_delete_stats",
+        lambda *a: pytest.fail("single-file delete commit read its file back"),
+    )
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    keys = ["k003", "k077", None, "k050", "missing"]
+    bucket_of = {
+        r["k"]: r["b"]
+        for r in spark.createDataFrame([(k,) for k in keys + ["k010"]], "k string")
+        .select("k", F.pmod(F.xxhash64("k"), F.lit(t.num_buckets)).alias("b"))
+        .collect()
+    }
+
+    def planned(op, keys):
+        """op(), its job count, and a check that it read only shards
+        whose [b0, b1] range holds one of the keys' buckets."""
+        descs = {s["n"]: s for s in t._manifest().get("file_shards") or []}
+        buckets = {bucket_of[k] for k in keys}
+        read_shards.clear()
+        out, jobs = _job_count(spark, op)
+        for name in read_shards:
+            d = descs[name]
+            assert any(d["b0"] <= b <= d["b1"] for b in buckets), (name, buckets)
+        assert not descs or len(read_shards) < len(descs)
+        return out, jobs
+
+    want = rows(t.read().filter(key.isin(keys[:2]) | key.isNull()))
+    assert [r[0] for r in want] == ["k003", "k077", None]
+    got, lookup_jobs = planned(lambda: t.lookup(keys), keys)
+    assert rows(got) == want
+    kdf = spark.createDataFrame([(k,) for k in keys * 2], "some_key string")
+    assert rows(planned(lambda: t.lookup_keys(kdf), keys)[0]) == want
+    if shard_entries is None:
+        # lookup submits no job beyond the planner's one action
+        schema = t._schema_of(t._manifest())
+        _, planner_jobs = _job_count(
+            spark, lambda: t._plan_touch(t._manifest(), t._key_frame(keys, schema))
+        )
+        assert lookup_jobs <= planner_jobs, (lookup_jobs, planner_jobs)
+
+    # list form: the already-deleted and the absent key count nothing
+    dl = ["k003", "k050", "missing", None]
+    assert planned(lambda: t.delete_keys(dl), dl)[0] == 2
+    # DataFrame form: duplicates and an already-deleted key
+    dk = spark.createDataFrame([("k077",), ("k077",), ("k003",), ("k010",)], "k string")
+    assert planned(lambda: t.delete_keys(dk), ["k077", "k003", "k010"])[0] == 2
+    live = t.read()
+    assert live.filter(key.isin("k003", "k010", "k050", "k077") | key.isNull()).count() == 0
+    assert live.count() == 196

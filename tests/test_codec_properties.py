@@ -1,10 +1,10 @@
 """Property-fuzzing for the WAV and MP4 parsers — the two decoders the
-multimodal registry row runs on every doc — and the unwired BMP codec.
+multimodal registry row runs on every doc.
 
 The decoders are pinned by hand-computed bytes at specific geometries
 (test_codecs.py); these properties sweep RANDOM geometries/contents:
 
-- encode → decode == identity per format (BMP, WAV, MP4 metadata, MP4
+- encode → decode == identity per format (WAV, MP4 metadata, MP4
   sample tables);
 - EVERY payload truncation raises ValueError or returns exactly the
   full decode — never IndexError / struct.error / KeyError;
@@ -22,8 +22,6 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from arcane_stream_parquet_spark.operators.codecs import (
-    decode_bmp_pixels,
-    encode_bmp,
     encode_mp4_metadata,
     encode_wav,
     mp4_samples,
@@ -40,23 +38,6 @@ SETTINGS = dict(
 
 def _rand_bytes(seed: int, n: int) -> bytes:
     return bytes(random.Random(seed).randrange(256) for _ in range(n))
-
-
-@given(
-    w=st.integers(1, 9),
-    h=st.integers(1, 9),
-    top_down=st.booleans(),
-    seed=st.integers(0, 2**31),
-)
-@settings(**SETTINGS)
-def test_bmp_roundtrip_any_geometry(w, h, top_down, seed):
-    rgb = _rand_bytes(seed, w * h * 3)
-    assert decode_bmp_pixels(encode_bmp(w, h, rgb, top_down=top_down)) == (
-        w,
-        h,
-        3,
-        rgb,
-    )
 
 
 @given(
@@ -114,10 +95,7 @@ def test_mp4_roundtrip_any_tracks(duration, timescale, tracks):
 
 def _sample_payloads(seed: int) -> list[tuple[str, bytes, object]]:
     rng = random.Random(seed)
-    w, h = rng.randint(1, 6), rng.randint(1, 6)
-    rgb = bytes(rng.randrange(256) for _ in range(w * h * 3))
     return [
-        ("bmp", encode_bmp(w, h, rgb), decode_bmp_pixels),
         ("wav", encode_wav(8000, 1, [1, -2, 3]), parse_wav),
         (
             "mp4",
@@ -205,20 +183,3 @@ def test_review_finds_truncation_regressions():
     zero_ts[i : i + 4] = b"\x00\x00\x00\x00"
     with pytest.raises(ValueError):
         parse_mp4(bytes(zero_ts))
-
-
-def test_bmp_bitfields_v3_truncated_at_alpha_mask():
-    import struct
-
-    import pytest as _pytest
-
-    from arcane_stream_parquet_spark.operators.codecs import decode_bmp_pixels
-
-    info = struct.pack(
-        "<IiiHHIIiiII", 56, 1, 1, 1, 32, 3, 4, 0, 0, 0, 0
-    ) + struct.pack("<III", 0x00FF0000, 0x0000FF00, 0x000000FF)
-    header = struct.pack("<2sIHHI", b"BM", 70, 0, 0, 70)
-    # 66..69 bytes: masks guard passes but the alpha DWORD is short
-    for n in range(66, 70):
-        with _pytest.raises(ValueError):
-            decode_bmp_pixels((header + info)[:n])

@@ -640,8 +640,9 @@ def test_long_string_stats_truncate_and_stay_correct(spark, tmp_path):
 
 def test_long_key_upsert_and_delete_stay_exact(spark, tmp_path):
     """Merge-key mn/mx truncation must stay invisible to upsert
-    correctness: _prune_touched_files and _delete_applies only widen
-    with truncated stats (more files touched), never lose a row."""
+    correctness: the touch planner (_plan_touch) and _delete_applies
+    only widen with truncated stats (more files touched), never lose a
+    row."""
     from arcane_stream_parquet_spark.operators.merge import (
         ParquetMergeTarget,
     )
