@@ -14,7 +14,6 @@ from arcane_stream_parquet_spark.operators.fingerprint import (
     duplicate_groups,
     exact_dedup,
     with_fingerprint,
-    with_winnowing_fingerprints,
 )
 from arcane_stream_parquet_spark.operators.merge import (
     ParquetMergeTarget,
@@ -33,10 +32,6 @@ from arcane_stream_parquet_spark.operators.multimodal import (
     with_binary_payload,
 )
 from arcane_stream_parquet_spark.operators.chunking import chunk_documents
-from arcane_stream_parquet_spark.operators.pipeline import (
-    compose_stages,
-    run_funnel,
-)
 from arcane_stream_parquet_spark.operators.pq import (
     exact_rerank,
     ivfpq_build,
@@ -83,8 +78,6 @@ __all__ = [
     "asof_join",
     "candidate_pairs",
     "chunk_documents",
-    "compose_stages",
-    "run_funnel",
     "exact_rerank",
     "ivfpq_build",
     "ivfpq_topk",
@@ -124,5 +117,4 @@ __all__ = [
     "tumbling_counts",
     "with_binary_payload",
     "with_fingerprint",
-    "with_winnowing_fingerprints",
 ]

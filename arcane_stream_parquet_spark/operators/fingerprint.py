@@ -77,55 +77,3 @@ def duplicate_groups(
         .filter(F.col("dup_count") > 1)
     )
 
-
-def with_winnowing_fingerprints(
-    df: DataFrame,
-    text_col: str = "text",
-    k: int = 8,
-    window: int = 4,
-    out_col: str = "fps",
-) -> DataFrame:
-    """Winnowing fingerprint set (Schleimer/Wilkerson/Aiken, the MOSS
-    algorithm): k-char gram rolling hashes → per sliding window of
-    ``window`` consecutive gram hashes keep the minimum → distinct
-    selected hashes. Guarantees a shared fingerprint for any common
-    substring of length ≥ k + window - 1 — positional, unlike the
-    bag-of-shingles MinHash.
-
-    Adds ``out_col`` (array<string> of 8-hex-char hashes). The gram-
-    hash array is materialized as its own projection column BEFORE the
-    window-min pass: referencing it lazily from every window slice
-    would let Catalyst inline the whole gram computation per window —
-    O(n²) hashing per document. Two projections keep it O(n).
-
-    The "rolling hash" is realized as a digest slice per gram (same
-    value both engines) rather than a mod-arithmetic Rabin roll —
-    identical selection semantics, engine-portable.
-    """
-    col = F.col(text_col)
-    # hoist the normalization into a real column: referencing the
-    # composite regexp_replace expression from inside the gram lambda
-    # re-evaluates it once PER GRAM — O(len²) regex work per doc (same
-    # pitfall as minhash.char_shingles_from_norm)
-    staged = df.withColumn(
-        "__wg_norm", F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
-    )
-    norm = F.col("__wg_norm")
-    n = F.length(norm)
-    g_upper = F.greatest(n - F.lit(k - 1), F.lit(1))
-    grams = F.transform(
-        F.sequence(F.lit(1), g_upper), lambda i: norm.substr(i, F.lit(k))
-    )
-    hashed = staged.withColumn(
-        "__wg_hashes",
-        F.transform(grams, lambda g: F.substring(F.sha2(g, 256), 1, 8)),
-    ).drop("__wg_norm")
-    hcol = F.col("__wg_hashes")
-    w_upper = F.greatest(F.size(hcol) - F.lit(window - 1), F.lit(1))
-    selected = F.transform(
-        F.sequence(F.lit(1), w_upper),
-        lambda j: F.array_min(F.slice(hcol, j, window)),
-    )
-    return hashed.withColumn(out_col, F.array_distinct(selected)).drop(
-        "__wg_hashes"
-    )

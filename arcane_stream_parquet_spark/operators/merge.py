@@ -1649,7 +1649,6 @@ class ParquetMergeTarget:
         self,
         from_version: int,
         to_version: int | None = None,
-        include_preimages: bool = False,
     ) -> DataFrame:
         """Incremental/CDC changelog: every row-level change committed
         AFTER snapshot ``from_version``, up to and including
@@ -1664,17 +1663,11 @@ class ParquetMergeTarget:
         remember the last version you saw, call
         ``read_changes(last_v)``, advance.
 
-        The stream is post-image-only by default (``delete`` rows carry
-        the final pre-image; they arise from ``delete_keys`` /
-        ``delete_where`` and from ``overwrite()`` dropping keys).  With
-        ``include_preimages=True`` every update additionally emits an
-        ``update_preimage`` row (full Delta CDF change-type set) — the
-        retraction substrate for incremental aggregate maintenance:
-        subtract the pre-image's contribution, add the post-image's
-        (streaming/changelog.maintain_aggregate).  A key changed in
-        several commits of the range yields one (or two) rows per
-        commit; the live row is the max-``_commit_version``
-        non-preimage one.
+        The stream is post-image-only (``delete`` rows carry the final
+        pre-image; they arise from ``delete_keys`` / ``delete_where``
+        and from ``overwrite()`` dropping keys).  A key changed in
+        several commits of the range yields one row per commit; the
+        live row is the max-``_commit_version`` one.
 
         Cost at scale: a ``merge-mor`` commit is read **O(delta)** —
         its appended data files ARE the post-images and its delete file
@@ -1724,13 +1717,9 @@ class ParquetMergeTarget:
                 continue  # pure repack: contents proven unchanged
             part: DataFrame | None
             if op in ("merge-mor", "append"):
-                part = self._changes_from_delta(
-                    m_new, v, schema, cols, include_preimages
-                )
+                part = self._changes_from_delta(m_new, v, schema, cols)
             else:  # merge-cow / overwrite / untagged pre-CDC manifest
-                part = self._changes_from_diff(
-                    m_new, v, schema, cols, avail, include_preimages
-                )
+                part = self._changes_from_diff(m_new, v, schema, cols, avail)
             if part is not None:
                 parts.append(
                     part.withColumn(
@@ -1764,19 +1753,14 @@ class ParquetMergeTarget:
         v: int,
         schema,
         cols: list[str],
-        include_preimages: bool = False,
     ) -> DataFrame | None:
         """O(delta) changelog of one merge-on-read (or initial append)
         commit: the files it added are the post-images; the delete
         file it wrote (keys that HAD a live target row) is exactly the
-        insert/update classifier.  ``include_preimages`` additionally
-        reconstructs the updated keys' pre-images from the PRIOR file
-        set (everything in this manifest except the commit's own
-        additions, with the deletes pending BEFORE it applied) — a
-        key-range-pruned scan of the same candidate files the MoR
-        commit itself probed, so still O(delta), never O(table)."""
-        all_files = self._files_of_manifest(m_new)
-        files_v = [f for f in all_files if int(f["v"]) == v]
+        insert/update classifier."""
+        files_v = [
+            f for f in self._files_of_manifest(m_new) if int(f["v"]) == v
+        ]
         if not files_v:
             return None
         rows = self._read_files(files_v, schema)
@@ -1800,7 +1784,7 @@ class ParquetMergeTarget:
         # scan path uses
         if sum(int(d["sz"]) for d in dels_v) <= self.broadcast_delete_bytes:
             upd = F.broadcast(upd)
-        post = rows.join(
+        return rows.join(
             upd,
             F.col(self.key_col).eqNullSafe(F.col(_DEL_KEY_COL)),
             "left",
@@ -1813,36 +1797,6 @@ class ParquetMergeTarget:
             .otherwise(F.lit("insert"))
             .alias(CHANGE_TYPE_COLUMN),
         )
-        if not include_preimages:
-            return post
-        # pre-images: the updated keys' live rows as of v-1 — prior
-        # file set (everything but this commit's additions), prior
-        # pending deletes (everything but this commit's delete file),
-        # key-range-pruned to the update key set.  The key df buckets
-        # under THIS manifest's numbering (m_new["num_buckets"]), not
-        # the live table's — a later rebucket (r11) must not skew the
-        # pruning of a historical commit
-        nb_v = int(m_new["num_buckets"])
-        kdf = self._read_delete_files(dels_v, schema).select(
-            F.col(_DEL_KEY_COL).alias(self.key_col)
-        ).withColumn(BUCKET_COLUMN, _bucket_expr(self.key_col, nb_v))
-        buckets = {b for d in dels_v for b in self._delete_buckets(d)}
-        files_prev = [
-            f for f in all_files if int(f["v"]) != v and int(f["b"]) in buckets
-        ]
-        touched = self._plan_touch(files_prev, kdf)[3]
-        deletes_prev = [
-            d
-            for d in (m_new.get("deletes") or [])
-            if d.get("sc") or int(d["seq"]) != v
-        ]
-        prev_live = self._scan_with_deletes(touched, schema, deletes_prev)
-        pre = prev_live.join(
-            upd,
-            F.col(self.key_col).eqNullSafe(F.col(_DEL_KEY_COL)),
-            "leftsemi",
-        ).select(*cols, F.lit("update_preimage").alias(CHANGE_TYPE_COLUMN))
-        return post.unionByName(pre)
 
     def _changes_from_diff(
         self,
@@ -1851,15 +1805,11 @@ class ParquetMergeTarget:
         schema,
         cols: list[str],
         avail: set[int],
-        include_preimages: bool = False,
     ) -> DataFrame | None:
         """Changelog of one commit by reconciling its snapshot with the
         previous one, restricted to the buckets the commit touched —
         exact for ANY commit kind (rows a rewrite carried over unchanged
-        compare equal and drop out), partition-pruned on both sides.
-        ``include_preimages`` turns each update into a pre/post pair
-        via a single ``inline`` over 1-or-2-element struct arrays — no
-        second pass over the diff join."""
+        compare equal and drop out), partition-pruned on both sides."""
         changed = {
             int(b) for b, ver in m_new["buckets"].items() if int(ver) == v
         }
@@ -1927,25 +1877,6 @@ class ParquetMergeTarget:
         j = j.filter(
             ~o_present | ~n_present | ~self._rows_equal_pred(schema)
         )
-        if include_preimages:
-
-            def entry(prefix: str, kind_lit: str):
-                return F.struct(
-                    *[F.col(prefix + c).alias(c) for c in cols],
-                    F.lit(kind_lit).alias(CHANGE_TYPE_COLUMN),
-                )
-
-            entries = (
-                F.when(~o_present, F.array(entry(_CDC_NEW, "insert")))
-                .when(~n_present, F.array(entry(_CDC_OLD, "delete")))
-                .otherwise(
-                    F.array(
-                        entry(_CDC_OLD, "update_preimage"),
-                        entry(_CDC_NEW, "update_postimage"),
-                    )
-                )
-            )
-            return j.select(F.inline(entries))
         out_cols = [
             F.when(n_present, F.col(_CDC_NEW + c))
             .otherwise(F.col(_CDC_OLD + c))
@@ -2931,13 +2862,12 @@ class ParquetMergeTarget:
             self._merge_cow(batch)
 
     def _plan_touch(
-        self, source: "dict | list[dict]", kdf: DataFrame
+        self, manifest: dict, kdf: DataFrame
     ) -> tuple[list[int], list[dict], list[dict] | None, list[dict], list[dict]]:
         """THE touch planner of every key-driven operation (merge,
-        lookup, lookup_keys, delete_keys, CDC pre-images): keys → hash
-        buckets → files whose recorded [mn, mx] key range can hold a
-        key.  ``source`` is a manifest, or (CDC) an explicit historical
-        file list; ``kdf`` carries the key column and ``BUCKET_COLUMN``.
+        lookup, lookup_keys, delete_keys): keys → hash buckets → files
+        whose recorded [mn, mx] key range can hold a key.  ``kdf``
+        carries the key column and ``BUCKET_COLUMN``.
         Returns ``(buckets, region, keep, touched, kept)``: ``region``
         is every file entry that may belong to a key's bucket, ``keep``
         the untouched shard descriptors (``None`` unless sharded), and
@@ -2954,10 +2884,8 @@ class ParquetMergeTarget:
         key's bucket are read (metadata IO O(touched shards)); fusing
         it into one action would need every shard's ranges up front."""
         buckets = None
-        if isinstance(source, list):
-            region, keep = source, None
-        elif source.get("file_shards") is None:
-            region, keep = source["files"], None
+        if manifest.get("file_shards") is None:
+            region, keep = manifest["files"], None
         else:
             buckets = [
                 r[BUCKET_COLUMN]
@@ -2965,7 +2893,7 @@ class ParquetMergeTarget:
             ]
             if not buckets:
                 return [], [], None, [], []
-            region, keep = self._files_for_buckets(source, set(buckets))
+            region, keep = self._files_for_buckets(manifest, set(buckets))
         ranged = [
             f for f in region if f["mn"] is not None and f["mx"] is not None
         ]

@@ -50,17 +50,6 @@ def char_shingles_from_norm(norm: Column, k: int = 5) -> Column:
     return F.array_distinct(grams)
 
 
-def char_shingles_column(text_col: str | Column, k: int = 5) -> Column:
-    """Distinct k-character shingles of the normalized (lowercased,
-    trimmed) text — the character-n-gram flavor of the shingle set
-    (robust to word-boundary edits where word shingles are not).
-    Documents shorter than k chars yield themselves as one shingle.
-    Prefer hoisting the normalization and calling
-    :func:`char_shingles_from_norm` in hot paths (see its docstring)."""
-    col = F.col(text_col) if isinstance(text_col, str) else text_col
-    return char_shingles_from_norm(F.lower(F.trim(col)), k)
-
-
 def shingles_from_tokens(toks: Column, k: int = SHINGLE_K) -> Column:
     """Distinct k-word shingles over an ALREADY-tokenized array column.
     Like :func:`char_shingles_from_norm`, ``toks`` should be a plain

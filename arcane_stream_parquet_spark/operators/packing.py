@@ -94,7 +94,7 @@ class _LeftmostFitTree:
     fits — exactly the classic first-fit rule, in O(log bins) instead
     of the r15 linear scan whose O(docs·bins) per stream was the
     100 TB wart (r15 VERDICT item 4; scaling probe in SCALE.md via
-    scripts/probe_ffd_scaling.py)."""
+    scripts/probe_ffd_scaling.py, in git history at 53ada8e)."""
 
     __slots__ = ("_cap", "_tree", "size")
 

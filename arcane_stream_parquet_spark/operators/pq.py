@@ -622,7 +622,6 @@ def ivfpq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     codes_col: str = "pq_codes",
-    probed: DataFrame | None = None,
 ) -> DataFrame:
     """ADC top-k through the coarse quantizer: each query probes its
     ``nprobe`` nearest cells (cosine, the ivf_topk rule), builds one
@@ -630,13 +629,7 @@ def ivfpq_topk(
     scale), and meets the corpus through an EQUI-JOIN on cell — only
     ~nprobe/K of the corpus is scanned per query, each candidate row
     costing m lookups over its code column. (query_id, neighbor_id,
-    adc_l2sq), ascending, ties → lower id.
-
-    ``probed`` short-circuits the query-side cell probe with a
-    precomputed ``_probe_cells`` frame (columns query_id, __v, cell) —
-    the single-probe contract for callers that ALSO need the probed
-    cells (PQVectorIndex.search prunes its manifest with the same
-    frame; ``nprobe`` is ignored then)."""
+    adc_l2sq), ascending, ties → lower id."""
     m = len(codebooks)
     dim = sum(len(book[0]) for book in codebooks)
     _check_geometry(dim, m)
@@ -644,7 +637,7 @@ def ivfpq_topk(
 
     spark = queries.sparkSession
     rdim = unrollable(len(centroids[0][1])) if centroids else None
-    if probed is None and _rowlocal_ok(centroids):
+    if _rowlocal_ok(centroids):
         # r16: probe + per-probed-cell centroid vector in one row-local
         # projection — the query-side residual needs no centroid join
         qres = _probe_cells_rowlocal(
@@ -660,13 +653,9 @@ def ivfpq_topk(
             _residual_expr(F.col("__v"), F.col("__cv"), rdim).alias("__qr"),
         )
     else:
-        qcells = (
-            probed
-            if probed is not None
-            else _probe_cells(
-                queries, centroids, id_col, as_double_array(vec_col),
-                nprobe=nprobe, out_id="query_id",
-            )
+        qcells = _probe_cells(
+            queries, centroids, id_col, as_double_array(vec_col),
+            nprobe=nprobe, out_id="query_id",
         )
         cent = _centroids_df(spark, centroids)
         qres = qcells.join(cent, qcells["cell"] == cent["cid"]).select(

@@ -1412,12 +1412,6 @@ def q_char_ngram_near_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (r13) winnowing_fingerprint retired from the registry in favor of
-# ngram_perplexity below — the 50-row cap trade named by the r12
-# verdict.  The winnowing operator itself stays fully covered:
-# rolling-hash family by the char_ngram_near_duplicates row, byte
-# pins + properties in tests/test_llm_ops.py / test_properties.py.
-
 _PPLX_LAM = 0.7
 _PPLX_REF_MOD = 31
 _PPLX_QUANTIZE = 6
@@ -2565,8 +2559,8 @@ def q_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     # limit=None: the bench times plan EXECUTION only, so both corpus
     # passes must live inside the lazy plan — the auto size-gate (the
     # production default) would run pass 1 untimed at build; its two
-    # plan shapes are pinned in test_llm_ops and probed in
-    # scripts/dup_gate_probe.py
+    # plan shapes are pinned in test_llm_ops and measured in SCALE.md
+    # (scripts/dup_gate_probe.py, in git history at 53ada8e)
     return remove_boilerplate_lines(
         _lined_corpus(docs),
         min_docs=_BOILER_MIN_DOCS,

@@ -1,7 +1,7 @@
 """Event-time window queries (SURVEY.md §2.9 ST4): tumbling, sliding,
 and session windows over the ``events`` table — the batch face of the
-operators in operators/windows.py (the streaming face, with watermarks
-and applyInPandasWithState, is driven by tests/test_streaming_windows*).
+operators in operators/windows.py (the streaming face, with watermarks,
+is driven by tests/test_streaming_windows.py).
 
 Oracle notes: Spark aligns window starts to the epoch in the session
 timezone (UTC here, session.py); DuckDB reproduces tumbling starts with

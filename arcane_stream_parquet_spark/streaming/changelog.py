@@ -229,174 +229,6 @@ def replicate_incremental(
     return n
 
 
-APPLIED_VERSION_COLUMN = "_asp_applied_v"
-ROW_COUNT_MEASURE = "_asp_rows"
-
-
-def maintain_aggregate(
-    src: ParquetMergeTarget,
-    agg: ParquetMergeTarget,
-    cursor_path: str,
-    group_col: str,
-    measures: "dict[str, str]",
-    max_versions_per_poll: int | None = None,
-) -> int:
-    """One tick of EXACTLY-ONCE incremental aggregate-view
-    maintenance: keep ``agg`` equal to
-
-        SELECT group_col, SUM(m) AS m ..., COUNT(*) AS _asp_rows
-        FROM src GROUP BY group_col
-
-    by folding only the changelog delta — the classic retraction
-    pattern pre-images exist for (``read_changes(...,
-    include_preimages=True)``): an insert/update_postimage row ADDS
-    its measure contributions, an update_preimage/delete row SUBTRACTS
-    them, and a group whose row count reaches zero leaves the view.
-    Returns the number of groups touched (0 = no news).
-
-    ``agg`` must be a merge target with ``key_col=group_col`` and
-    ``version_col=APPLIED_VERSION_COLUMN`` (validated — the applied
-    version IS the view row's monotone version, so the upsert's
-    latest-wins rule doubles as the replay tie-break); its rows carry
-    the running sums, ``_asp_rows`` (the COUNT — also the mean's
-    denominator), and ``_asp_applied_v``, the last source commit
-    folded into that group.  ``measures`` maps output column →
-    a SQL expression over the source columns (e.g. ``{"revenue":
-    "price * qty"}``); expressions must be null-free or wrapped in
-    ``coalesce`` (a NULL contribution would poison the running sum).
-
-    Exactly-once is PER ROW, not per tick: each change row is folded
-    iff its ``_commit_version`` exceeds its group's stored
-    ``_asp_applied_v``, so a crash-replayed slice — even one re-polled
-    with a different ``max_versions_per_poll`` boundary — re-applies
-    nothing that already landed.  The guard also makes the two
-    physical commits (upsert + zero-group delete) individually safe to
-    replay.
-
-    Scale shape per tick: the changelog is O(delta); the current group
-    rows load via :meth:`~ParquetMergeTarget.lookup_keys` (pruned to
-    the changed groups' candidate files, never an agg-table scan);
-    the fold is one groupBy over the delta.  Source size and view
-    size never enter a scan."""
-    if agg.key_col != group_col:
-        raise ValueError(
-            f"agg target must have key_col={group_col!r}, "
-            f"got {agg.key_col!r}"
-        )
-    if agg.version_col != APPLIED_VERSION_COLUMN:
-        raise ValueError(
-            f"agg target must have version_col="
-            f"{APPLIED_VERSION_COLUMN!r} (the applied source version "
-            f"is the view row's monotone version), got "
-            f"{agg.version_col!r}"
-        )
-    consumer = ChangelogConsumer(
-        src, cursor_path, max_versions_per_poll=max_versions_per_poll
-    )
-    if not src.exists():
-        return 0
-    frm = consumer.cursor()
-    head = int(src._manifest()["version"])
-    if head <= frm:
-        return 0
-    if max_versions_per_poll is not None:
-        head = min(head, frm + int(max_versions_per_poll))
-    changes = src.read_changes(frm, head, include_preimages=True)
-
-    sign = F.when(
-        F.col(CHANGE_TYPE_COLUMN).isin("insert", "update_postimage"),
-        F.lit(1),
-    ).otherwise(F.lit(-1))
-    contrib = [
-        (F.expr(expr) * sign).alias(name) for name, expr in measures.items()
-    ] + [sign.alias(ROW_COUNT_MEASURE)]
-    rows = changes.select(
-        F.col(group_col),
-        F.col(COMMIT_VERSION_COLUMN),
-        *contrib,
-    ).persist()
-    try:
-        groups = rows.select(group_col).distinct()
-        if agg.exists():
-            cur = agg.lookup_keys(groups).persist()
-        else:
-            cur = None
-        try:
-            if cur is not None:
-                guarded = rows.join(
-                    cur.select(
-                        F.col(group_col).alias("_g"),
-                        F.col(APPLIED_VERSION_COLUMN).alias("_applied"),
-                    ),
-                    F.col(group_col).eqNullSafe(F.col("_g")),
-                    "left",
-                ).filter(
-                    F.col("_applied").isNull()
-                    | (F.col(COMMIT_VERSION_COLUMN) > F.col("_applied"))
-                )
-            else:
-                guarded = rows
-            delta = guarded.groupBy(group_col).agg(
-                *[F.sum(name).alias(name) for name in measures],
-                F.sum(ROW_COUNT_MEASURE).alias(ROW_COUNT_MEASURE),
-            )
-            if cur is not None:
-                joined = delta.join(
-                    cur.select(
-                        F.col(group_col).alias("_g"),
-                        *[
-                            F.col(name).alias(f"_cur_{name}")
-                            for name in measures
-                        ],
-                        F.col(ROW_COUNT_MEASURE).alias("_cur_rows"),
-                    ),
-                    F.col(group_col).eqNullSafe(F.col("_g")),
-                    "left",
-                )
-            else:
-                joined = delta.select(
-                    "*",
-                    *[
-                        F.lit(None).alias(f"_cur_{name}")
-                        for name in measures
-                    ],
-                    F.lit(None).alias("_cur_rows"),
-                )
-            out = joined.select(
-                F.col(group_col),
-                *[
-                    (
-                        F.coalesce(F.col(f"_cur_{name}"), F.lit(0))
-                        + F.col(name)
-                    ).alias(name)
-                    for name in measures
-                ],
-                (
-                    F.coalesce(F.col("_cur_rows"), F.lit(0))
-                    + F.col(ROW_COUNT_MEASURE)
-                ).alias(ROW_COUNT_MEASURE),
-                F.lit(head).cast("long").alias(APPLIED_VERSION_COLUMN),
-            ).persist()
-            n = out.count()
-            if n:
-                live = out.filter(F.col(ROW_COUNT_MEASURE) > 0)
-                if not live.isEmpty():
-                    agg.merge(live)
-                dead = out.filter(F.col(ROW_COUNT_MEASURE) <= 0).select(
-                    group_col
-                )
-                if agg.exists() and not dead.isEmpty():
-                    agg.delete_keys(dead)
-            out.unpersist()
-        finally:
-            if cur is not None:
-                cur.unpersist()
-    finally:
-        rows.unpersist()
-    consumer.commit(head)
-    return n
-
-
 def replicate_full(
     src: ParquetMergeTarget, dst: ParquetMergeTarget, cursor_path: str
 ) -> int:

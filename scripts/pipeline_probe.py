@@ -48,7 +48,7 @@ from arcane_stream_parquet_spark.operators.text import (
 
 
 def heavy_dup_corpus(spark, sf_dir: str, replicas: int):
-    """dup_gate_probe's corpus shape, keeping lang/source metadata:
+    """The dup-gate probe's corpus shape, keeping lang/source metadata:
     each source doc fans out to `replicas` rows; a ~40% prefix stays
     shared (duplicated spans), the tail is salted per-replica."""
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(

@@ -43,16 +43,15 @@ def sf_dir() -> str:
 # - whole lifecycle/soak/replay/property files whose semantics are
 #   pinned elsewhere in seconds: oracle replays (the DRIVER itself runs
 #   every query vs DuckDB as its own gate), crash/kill durability
-#   replays, cross-process soaks, hypothesis property suites, the
-#   PQ-index reindex/churn lifecycle, sharded-backfill kill/resume,
-#   changelog replication chains, multi-batch curation streams;
+#   replays, cross-process soaks, hypothesis property suites,
+#   sharded-backfill kill/resume, changelog replication chains,
+#   multi-batch curation streams;
 # - individually-measured >=9 s tests inside files that stay fast.
 _SLOW_FILES = {
     "test_oracle.py",
     "test_merge_durability.py",
     "test_concurrent_soak.py",
     "test_properties.py",
-    "test_pq_index.py",
     "test_backfill_sharded.py",
     "test_changelog_replication.py",
     "test_curation_stream.py",
@@ -63,7 +62,6 @@ _SLOW_FILES = {
     # (multimodal_pipeline); the full tier runs them all.
     "test_multimodal.py",
     "test_vacuum_retention.py",
-    "test_rollback.py",
     "test_zorder.py",
     "test_bloom_stats.py",
 }
@@ -81,7 +79,6 @@ _SLOW_TESTS = {
     "test_compact_preserves_clustering",
     "test_round_trip_with_merges_between",
     "test_compact_minor_mixed_entries_then_full_compact",
-    "test_cut_bounds_plan_growth_and_preserves_result",
     "test_maintenance_zero_disables_all",
     "test_filters_survive_compact_and_rebucket",
     "test_sharded_adaptive_gate_fires_on_small_files_candidate_reads_only",
@@ -93,7 +90,6 @@ _SLOW_TESTS = {
     "test_training_is_deterministic",
     "test_compaction_recollects_stats",
     "test_compact_minor_consolidates_deletes_and_preserves_contents",
-    "test_vector_index_incremental_search",
     "test_semantics_identical_through_lifecycle",
     "test_streaming_end_to_end_with_merge_on_read",
     "test_count_where_mor_dirty_buckets_stay_exact",
@@ -127,7 +123,6 @@ _SLOW_TESTS = {
     "test_history_metadata_table",
     "test_clustered_merge_parity_with_plain",
     "test_second_dimension_prunes_files",
-    "test_kill_mid_funnel_resume_skips_done_stages",
     "test_precomputed_tree_reused_across_consumers",
     "test_recall_ladder_on_unstructured_embeddings",
     "test_rerank_lifts_unstructured_recall",

@@ -409,39 +409,6 @@ def test_replicate_through_schema_drift(spark, tmp_path):
     assert "note" in dst.read().columns
 
 
-# -- CDC pre-images + incremental aggregate maintenance --------------------
-
-
-def test_read_changes_preimages_both_paths(spark, tmp_path):
-    """CoW (snapshot diff) and MoR (O(delta)) must emit IDENTICAL
-    pre/post pairs for the same history; the default post-image-only
-    stream is unchanged."""
-    per_mode = {}
-    for mode in ("cow", "mor"):
-        t = make_target(spark, tmp_path / mode)
-        t.merge(df_of(spark, [("a", 1, "a1"), ("b", 1, "b1")]))
-        t.merge(df_of(spark, [("a", 2, "a2"), ("c", 2, "c1")]), mode=mode)
-        t.delete_keys(["b"])
-        ch = t.read_changes(0, include_preimages=True)
-        per_mode[mode] = sorted(map(tuple, ch.collect()))
-        assert (
-            t.read_changes(0)
-            .filter(F.col(CHANGE_TYPE_COLUMN) == "update_preimage")
-            .count()
-            == 0
-        )
-    assert per_mode["cow"] == per_mode["mor"]
-    kinds = sorted(
-        (r[0], r[3]) for r in per_mode["mor"]
-    )
-    assert ("a", "update_preimage") in kinds
-    assert ("a", "update_postimage") in kinds
-    assert ("b", "delete") in kinds
-    # the pre-image carries the OLD row verbatim
-    pre = [r for r in per_mode["mor"] if r[3] == "update_preimage"][0]
-    assert pre[:3] == ("a", 1, "a1")
-
-
 def test_lookup_keys_bulk_pruned(spark, tmp_path):
     t = make_target(spark, tmp_path / "t")
     t.merge(df_of(spark, [(f"k{i}", 1, f"p{i}") for i in range(20)]))
@@ -463,128 +430,3 @@ def test_lookup_keys_bulk_pruned(spark, tmp_path):
         ).collect()
     )
     assert got == ref
-
-
-def _agg_fixture(spark, tmp_path):
-    from arcane_stream_parquet_spark.streaming.changelog import (
-        APPLIED_VERSION_COLUMN,
-    )
-
-    src = ParquetMergeTarget(
-        spark=spark, path=str(tmp_path / "src"), num_buckets=8
-    )
-    agg = ParquetMergeTarget(
-        spark=spark,
-        path=str(tmp_path / "agg"),
-        num_buckets=4,
-        key_col="grp",
-        version_col=APPLIED_VERSION_COLUMN,
-    )
-    return src, agg, str(tmp_path / "cur")
-
-
-def _amount_rows(spark, data):
-    return spark.createDataFrame(
-        data,
-        "arcane_merge_key string, createdon bigint, grp string, "
-        "amount bigint",
-    )
-
-
-def _view_matches_truth(src, agg):
-    from arcane_stream_parquet_spark.streaming.changelog import (
-        ROW_COUNT_MEASURE,
-    )
-
-    truth = sorted(
-        map(
-            tuple,
-            src.read()
-            .groupBy("grp")
-            .agg(
-                F.sum("amount").alias("amount"),
-                F.count("*").alias(ROW_COUNT_MEASURE),
-            )
-            .collect(),
-        )
-    )
-    view = sorted(
-        map(
-            tuple,
-            agg.read().select("grp", "amount", ROW_COUNT_MEASURE).collect(),
-        )
-    )
-    assert view == truth, f"view {view} != truth {truth}"
-
-
-def test_maintain_aggregate_tracks_groupby(spark, tmp_path):
-    from arcane_stream_parquet_spark.streaming.changelog import (
-        maintain_aggregate,
-    )
-
-    src, agg, cur = _agg_fixture(spark, tmp_path)
-    src.merge(
-        _amount_rows(
-            spark,
-            [("a", 1, "x", 10), ("b", 1, "x", 5), ("c", 1, "y", 7)],
-        )
-    )
-    assert maintain_aggregate(src, agg, cur, "grp", {"amount": "amount"}) == 2
-    _view_matches_truth(src, agg)
-    # update + insert (MoR), then row-level deletes emptying group y
-    src.merge(
-        _amount_rows(spark, [("a", 2, "x", 20), ("d", 2, "z", 1)]),
-        mode="mor",
-    )
-    src.delete_keys(["b", "c"])
-    maintain_aggregate(src, agg, cur, "grp", {"amount": "amount"})
-    _view_matches_truth(src, agg)
-    assert "y" not in [r["grp"] for r in agg.read().collect()]
-    # a key MOVES groups: pre-image retracts from x, post adds to y
-    src.merge(_amount_rows(spark, [("a", 3, "y", 2)]), mode="mor")
-    maintain_aggregate(src, agg, cur, "grp", {"amount": "amount"})
-    _view_matches_truth(src, agg)
-    # overwrite rewrites the world; the view follows
-    src.overwrite(_amount_rows(spark, [("q", 1, "w", 3)]))
-    maintain_aggregate(src, agg, cur, "grp", {"amount": "amount"})
-    _view_matches_truth(src, agg)
-    # no-news tick
-    assert maintain_aggregate(src, agg, cur, "grp", {"amount": "amount"}) == 0
-
-
-def test_maintain_aggregate_replay_exactly_once(spark, tmp_path):
-    """Rewinding the cursor (crash-before-advance, even with a
-    DIFFERENT slice boundary) must not double-count: the per-row
-    _commit_version > _asp_applied_v guard is the exactly-once
-    mechanism, not slice identity."""
-    from arcane_stream_parquet_spark.streaming.changelog import (
-        maintain_aggregate,
-    )
-
-    src, agg, cur = _agg_fixture(spark, tmp_path)
-    src.merge(_amount_rows(spark, [("a", 1, "x", 10), ("b", 1, "y", 4)]))
-    src.merge(_amount_rows(spark, [("a", 2, "x", 25)]), mode="mor")
-    # consume in two capped ticks
-    maintain_aggregate(
-        src, agg, cur, "grp", {"amount": "amount"}, max_versions_per_poll=1
-    )
-    maintain_aggregate(src, agg, cur, "grp", {"amount": "amount"})
-    _view_matches_truth(src, agg)
-    # rewind to 0 and replay the WHOLE history in one differently-
-    # bounded slice: guard must drop every already-applied row
-    c = VersionCursor(spark, cur)
-    for v in c._versions():
-        c._fio.delete(c._file(v))
-    maintain_aggregate(src, agg, cur, "grp", {"amount": "amount"})
-    _view_matches_truth(src, agg)
-
-
-def test_maintain_aggregate_validates_agg_config(spark, tmp_path):
-    from arcane_stream_parquet_spark.streaming.changelog import (
-        maintain_aggregate,
-    )
-
-    src = make_target(spark, tmp_path / "src")
-    bad = make_target(spark, tmp_path / "bad")  # wrong key/version cols
-    with pytest.raises(ValueError, match="key_col"):
-        maintain_aggregate(src, bad, str(tmp_path / "c"), "grp", {})

@@ -100,50 +100,6 @@ def test_replay_self_match_beats_other_matches(spark, tmp_path):
     assert v[5]["dup_of"] is None  # self-match wins: already present → kept
 
 
-# -- vector index -------------------------------------------------------
-
-
-def test_vector_index_incremental_search(spark, tmp_path, sf_dir):
-    from pyspark.sql import functions as F
-
-    from arcane_stream_parquet_spark.operators.vector_index import VectorIndex
-    from arcane_stream_parquet_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # 2 planes → 4 coarse buckets: guaranteed bucket-mates at this
-    # corpus size (plane count is the recall/speed dial)
-    idx = VectorIndex(
-        spark=spark, path=str(tmp_path / "vidx"), num_planes=2, num_buckets=4
-    )
-
-    # two incremental batches
-    idx.add_batch(emb.filter(F.col("vec_id") < 50), ingest_seq=1)
-    idx.add_batch(
-        emb.filter((F.col("vec_id") >= 50) & (F.col("vec_id") < 100)), ingest_seq=2
-    )
-
-    queries = emb.filter(F.col("vec_id") < 3)
-    hits = idx.search(queries, k=5).collect()
-    assert hits  # buckets shared by construction (query vec ∈ corpus bucket)
-    assert all(r["query_id"] != r["neighbor_id"] for r in hits)
-    # neighbors only come from the indexed 0..99 range
-    assert all(r["neighbor_id"] < 100 for r in hits)
-    # results include both ingest batches' vectors if buckets allow
-    # idempotent re-add: same vec_ids don't duplicate
-    before = idx._table.read().count()
-    idx.add_batch(emb.filter(F.col("vec_id") < 50), ingest_seq=3)
-    assert idx._table.read().count() == before
-
-    # removal (r15): a MoR equality-delete — the removed neighbor
-    # disappears from search, absent ids are idempotent no-ops
-    victim = hits[0]["neighbor_id"]
-    assert idx.remove([victim]) == 1
-    after = idx.search(queries, k=5).collect()
-    assert all(r["neighbor_id"] != victim for r in after)
-    assert idx.remove([victim]) == 0  # already gone: no-op
-    assert idx._table.read().count() == before - 1
-
-
 def test_verdict_pair_is_consistent(spark, tmp_path):
     """ADVICE r2: (dup_of, jaccard) must describe the SAME prior pair —
     dup_of is the smallest matching id and jaccard is THAT pair's

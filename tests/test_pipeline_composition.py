@@ -2,7 +2,10 @@
 pytest twin of scripts/pipeline_probe.py (which measures it at 10x
 sf0.1). Guards the COMPOSITION: operators consuming each other's
 outputs through renames/joins, monotone survivor counts, and the
-lineage-cut boundary keeping the final plan analyzable.
+lineage-cut boundary keeping the final plan analyzable. Also pins why
+the cut is needed: without it the optimized plan grows superlinearly
+per join-back stage (the r13 probe's driver-OOM failure mode, in
+miniature).
 """
 
 from __future__ import annotations
@@ -112,3 +115,45 @@ def test_funnel_composes(spark):
     )
     rows = packed.limit(5).collect()
     assert rows and all(r["n_tokens"] >= 0 for r in rows)
+
+
+def _join_back_stage(i: int):
+    """One funnel-shaped stage: transform the text, then join the
+    metadata back from the SAME input — the input plan is referenced
+    TWICE, so without a lineage cut the logical tree doubles per stage
+    (2^stages — the exact mechanism behind the probe's 1.5 GB plan
+    string; every clean→join-meta stage in a real funnel has this
+    shape)."""
+
+    def stage(df):
+        cleaned = df.select(
+            "id", F.concat_ws(" ", "t", F.lit(f"s{i}")).alias("t")
+        )
+        return cleaned.join(df.select("id", "v"), "id").select(
+            "id", "t", (F.col("v") + F.length("t")).alias("v")
+        )
+
+    return stage
+
+
+def _plan_len(df) -> int:
+    """Optimized-plan text length: the ANALYZED plan is a per-operator
+    DAG print (linear in stages); the blowup lives in the OPTIMIZER'S
+    CollapseProject, which inlines each referenced expression into
+    every use site — multiplicative across stages. That optimized tree
+    is what execution planning and plan printing walk."""
+    return len(df._jdf.queryExecution().optimizedPlan().toString())
+
+
+def test_plan_growth_is_superlinear_without_cut(spark):
+    base = spark.range(10).select(
+        F.col("id"), F.lit("seed").alias("t"), F.lit(0).cast("long").alias("v")
+    )
+    sizes = []
+    df = base
+    for i in range(8):
+        df = _join_back_stage(i)(df)
+        sizes.append(_plan_len(df))
+    # each stage multiplies the plan text, it does not add to it
+    growth = [b / a for a, b in zip(sizes, sizes[1:])]
+    assert min(growth[2:]) > 1.5, sizes

@@ -60,8 +60,7 @@ def cdc_fold(t):
         F.col("_commit_version").desc()
     )
     last = (
-        ch.filter(F.col("_change_type") != "update_preimage")
-        .withColumn("_rn", F.row_number().over(w))
+        ch.withColumn("_rn", F.row_number().over(w))
         .filter("_rn = 1")
         .filter(F.col("_change_type") != "delete")
     )
@@ -705,7 +704,6 @@ def test_soak_trickle_merges_compact_vacuum_converges(spark, tmp_path):
     )
     last = (
         t.read_changes(base_v)
-        .filter(F.col("_change_type") != "update_preimage")
         .withColumn("_rn", F.row_number().over(w))
         .filter("_rn = 1")
     )

@@ -83,8 +83,7 @@ def test_changelog_reports_rollback_as_net_undo(spark, tmp_path):
         F.col("_commit_version").desc()
     )
     live = (
-        ch.filter(F.col("_change_type") != "update_preimage")
-        .withColumn("_rn", F.row_number().over(w))
+        ch.withColumn("_rn", F.row_number().over(w))
         .filter((F.col("_rn") == 1) & (F.col("_change_type") != "delete"))
         .select("arcane_merge_key", "createdon", "payload")
     )

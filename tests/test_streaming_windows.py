@@ -1,7 +1,6 @@
 """Streaming faces of the event-time operators: windowed aggregation
-with watermark (late-data handling, ST3/ST4) and the custom stateful
-operator (applyInPandasWithState, ST5) — state surviving across
-micro-batches and across query restarts via the checkpoint.
+with watermark (late-data handling, ST3/ST4) and watermark-bounded
+streaming dedup.
 """
 
 from __future__ import annotations
@@ -20,7 +19,6 @@ from pyspark.sql.types import (
 )
 
 from arcane_stream_parquet_spark.operators.windows import streaming_windowed_counts
-from arcane_stream_parquet_spark.streaming.stateful import running_aggregate
 
 EVENT_SCHEMA = StructType(
     [
@@ -94,63 +92,6 @@ def test_streaming_window_counts_with_watermark(spark, tmp_path):
     assert got.get(h0) == 2
     assert got.get(h0 + hour_us) == 2
     assert h0 + 2 * hour_us not in got  # un-finalized window not emitted
-
-
-def test_stateful_running_aggregate_across_batches_and_restarts(spark, tmp_path):
-    src = tmp_path / "st_src"
-    src.mkdir()
-    ckpt = str(tmp_path / "st_ckpt")
-    sink = tmp_path / "st_sink"
-
-    def run_once():
-        stream = (
-            spark.readStream.schema(EVENT_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(src))
-        )
-        out = running_aggregate(stream.select("user_id", "value", "version"))
-
-        def sink_batch(df, batch_id):
-            df.write.mode("append").parquet(str(sink))
-
-        q = (
-            out.writeStream.foreachBatch(sink_batch)
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-
-    _write_events(str(src), "a.parquet", [(1, 0, 2.0, 1), (1, 1, 3.0, 2), (2, 2, 5.0, 3)])
-    _write_events(str(src), "b.parquet", [(1, 3, 4.0, 4)])
-    run_once()
-
-    latest = {
-        r["user_id"]: r
-        for r in spark.read.parquet(str(sink))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                __import__("pyspark.sql.window", fromlist=["Window"])
-                .Window.partitionBy("user_id")
-                .orderBy(F.col("n_events").desc())
-            ),
-        )
-        .filter("rn = 1")
-        .collect()
-    }
-    # state accumulated ACROSS the two micro-batches
-    assert latest[1]["n_events"] == 3 and latest[1]["sum_value"] == 9.0
-    assert latest[1]["max_version"] == 4
-    assert latest[2]["n_events"] == 1 and latest[2]["sum_value"] == 5.0
-
-    # restart with a new file: checkpointed state resumes, not resets
-    _write_events(str(src), "c.parquet", [(1, 4, 1.0, 9)])
-    run_once()
-    rows = spark.read.parquet(str(sink)).filter("user_id = 1").collect()
-    assert max(r["n_events"] for r in rows) == 4  # 3 + 1 after restart
-    assert max(r["max_version"] for r in rows) == 9
 
 
 def test_streaming_dedup_within_watermark(spark, tmp_path):
