@@ -42,19 +42,20 @@ refuses any other):
   "coal"}`` with the ``n_files`` / ``size_hist`` summary beside them.
 
 A file entry is ``{"v": commit version, "d": dirname, "b": bucket,
-"n": name, "sz": bytes}`` plus optional stats ``"mn"``/``"mx"`` (key
-range), ``"hn"`` (may hold a null key), ``"rc"`` (row count), ``"cs"``
-(per-column ranges) and ``"bf"`` (bloom filters).  A delete entry is
+"n": name, "sz": bytes, "mn"/"mx": key range (None for an all-null-key
+file), "hn": may hold a null key, "rc": row count}`` plus optional
+``"cs"`` (per-column ranges) and ``"bf"`` (bloom filters).  A delete entry is
 ``{"seq": commit version, "d": dirname, "n": name, "bs": buckets its
 keys hash into, "mn", "mx", "hn", "sz"}``; ``"sc"`` marks a
 consolidated file that stores each key's original seq.
 
 A merge (1) dedups the batch per key (J2 window), (2) reads ONLY the
-affected buckets of the live table (partition pruning on ``__bucket``),
-(3) resolves latest-wins with one partial-aggregated max_by (batch
-beats target on equal version — MERGE's ``s.createdon >=
-t.createdon``), (4) writes the
-merged buckets to a FRESH version directory, and (5) commits by
+affected files of the live table (bucket + key-range pruning), (3)
+resolves latest-wins (batch beats target on equal version — MERGE's
+``s.createdon >= t.createdon``) with the dedup fused into the write's
+one bucket exchange — every target, whatever its inner file order
+(:meth:`ParquetMergeTarget._write_version_latest`), (4) writes the
+merged rows to a FRESH version directory, and (5) commits by
 CREATING ``manifest-v{N+1}.json`` — a file that never pre-exists, so
 the commit is safe even on S3A where rename is copy+delete: a crash
 leaves either no new manifest (old table fully intact) or a complete
@@ -118,6 +119,12 @@ from arcane_stream_parquet_spark.functions.keys import (
 )
 
 BUCKET_COLUMN = "__bucket"
+# MoR read path: the pending-delete build side is broadcast (the dirty
+# scan never shuffles) while the manifest says it is under this many
+# bytes; past it — an overdue compaction — the anti-join falls back to a
+# shuffled join, where AQE's skew handling covers deletes concentrated
+# in few buckets (probe: SCALE.md r8).
+_BROADCAST_DELETE_BYTES = 64 << 20
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -613,15 +620,6 @@ class ParquetMergeTarget:
     # (crd-parquet-stream.yaml:220-224): per-column parquet bloom
     # filters for point-lookup file skipping on non-sort columns.
     bloom_filter_cols: tuple[str, ...] = ()
-    #: Record per-file min/max merge keys in the manifest (one cheap
-    #: key-column read-back per commit) and PRUNE unaffected files on
-    #: merge: inside a touched bucket, files whose key range contains no
-    #: batch key stay live as-is instead of rewriting (r4 VERDICT task
-    #: 6 — narrow upserts rewrite O(touched files), not O(touched
-    #: buckets)).  Keys are uniform sha256, so range pruning only bites
-    #: because files are written KEY-SORTED within each bucket (see
-    #: _write_version), making each file a contiguous key range.
-    file_stats: bool = True
     #: Manifest sharding threshold (Iceberg's manifest-list shape): a
     #: commit whose file list exceeds this many entries writes the list
     #: as immutable ``manifest-vNNNNN-shard-*.json`` files and the root
@@ -650,36 +648,6 @@ class ParquetMergeTarget:
     #:   Trino/Iceberg — docs/crd.md:145-182's maintenance contract
     #:   exists to compact those deletes).
     merge_mode: str = "cow"
-    #: How latest-wins dedup executes inside CoW/initial/overwrite
-    #: version writes (r17):
-    #:
-    #: - ``"sort"`` (default): dedup fuses into the write's own
-    #:   bucket exchange + sort — rows shuffle ONCE and the dedup
-    #:   window's sort is the writer's required order (see
-    #:   :meth:`_write_version_latest`).  Strictly fewer shuffled
-    #:   bytes whenever keys are near-unique per batch (the CDC
-    #:   steady state: the former groupBy(key) partial aggregation
-    #:   had nothing to collapse and its exchange carried every row
-    #:   a second time).
-    #: - ``"agg"``: the pre-r17 max_by aggregate — PARTIAL map-side
-    #:   reduction before a groupBy(key) exchange, then a second
-    #:   exchange on the bucket.  Prefer for duplicate-heavy or
-    #:   pathologically hot-key batches: a hot key collapses to one
-    #:   row per map task before shuffling instead of sorting all its
-    #:   raw rows in one bucket partition (the skew posture of
-    #:   operators/dedup.py; proven in tests/test_merge_skew.py).
-    #:
-    #: Both strategies produce identical table contents (same max_by
-    #: total order; parity pinned in tests/test_dedup_strategy.py).
-    #: ``sorted_by``/``cluster_by`` targets always use "agg" — their
-    #: inner file order is not the key sort the fused window rides.
-    dedup_strategy: str = "sort"
-    #: MoR read path: the pending-delete build side is broadcast (the
-    #: dirty scan never shuffles) while the manifest says it is under
-    #: this many bytes; past it — an overdue compaction — the anti-join
-    #: falls back to a shuffled join, where AQE's skew handling covers
-    #: deletes concentrated in few buckets (probe: SCALE.md r8).
-    broadcast_delete_bytes: int = 64 * 1024 * 1024
     #: Extra columns to record per-file [min, max, has-null] for in the
     #: manifest (beyond the merge key) — the Iceberg data-skipping
     #: shape: :meth:`read_where` prunes files whose recorded interval
@@ -722,12 +690,9 @@ class ParquetMergeTarget:
     #: automatically (no need to repeat them in ``stats_cols``).
     #: Mutually exclusive with ``sorted_by`` (one inner order per
     #: file).  Cost: one extra aggregation pass per write (the
-    #: boundary scan) + ``cluster_bits`` comparisons per row, all
-    #: inside codegen.
+    #: boundary scan) + 7 comparisons per row (2^7 equi-depth codes
+    #: per dimension, ``zvalue_expr``'s default), all inside codegen.
     cluster_by: tuple = ()
-    #: Code resolution per clustered dimension (2^bits equi-depth
-    #: buckets); 7 → 128 codes/dim, 16 384 z-cells at d=2.
-    cluster_bits: int = 7
 
     # -- storage layout ----------------------------------------------------
 
@@ -1782,7 +1747,7 @@ class ParquetMergeTarget:
         # one delete key per upserted key (winners are key-deduped), and
         # the set is O(batch) — broadcast under the same bound the MoR
         # scan path uses
-        if sum(int(d["sz"]) for d in dels_v) <= self.broadcast_delete_bytes:
+        if sum(int(d["sz"]) for d in dels_v) <= _BROADCAST_DELETE_BYTES:
             upd = F.broadcast(upd)
         return rows.join(
             upd,
@@ -2014,9 +1979,33 @@ class ParquetMergeTarget:
         records_cap: int | None = None,
     ) -> None:
         """Write bucketed rows under ``data/<dirname>`` with the
-        table's inner file order (sorted_by / cluster_by / key-sorted),
-        partitioned by the bucket column.  The dir must be fresh —
-        nothing is ever overwritten."""
+        table's inner file order (:meth:`_inner_order`), partitioned by
+        the bucket column.  The dir must be fresh — nothing is ever
+        overwritten."""
+        inner = self._inner_order(df)
+        if inner:
+            # bucket column leads the sort so the partitioned writer's
+            # required ordering is already satisfied and it does not
+            # re-sort (which would destroy the inner sort order)
+            df = df.repartition(F.col(BUCKET_COLUMN)).sortWithinPartitions(
+                BUCKET_COLUMN, *inner
+            )
+        self._write_partitioned(
+            df, dirname, honor_file_cap=honor_file_cap, records_cap=records_cap
+        )
+
+    def _inner_order(self, df: DataFrame) -> list:
+        """The sort order of rows inside each written file: the
+        ``cluster_by`` z-value, else ``sorted_by``, else the merge key.
+        Key-sorted files make each data file a contiguous merge-key
+        range, which is what gives the manifest's per-file min/max its
+        pruning power (keys are uniform sha256); an explicit order wins
+        (``sorted_by`` is the reference knob) and pruning degrades
+        gracefully — ranges are still recorded, just wider.  The key
+        sort is the SAME string cast the stats and the prune comparison
+        use — native numeric order vs string min/max would record
+        ranges that cover everything and silently disable pruning for
+        non-string keys."""
         if self.cluster_by:
             if self.sorted_by:
                 raise ValueError(
@@ -2029,37 +2018,8 @@ class ParquetMergeTarget:
             # drift-era writes may predate a clustered column; cluster
             # on what exists (stats pruning stays conservative either
             # way — absent stats keep the file in the scan)
-            inner_sort = (
-                [zvalue_expr(df, present, bits=self.cluster_bits)]
-                if present
-                else []
-            )
-        else:
-            inner_sort = list(self.sorted_by) or (
-                # key-sorted files make each data file a contiguous
-                # merge-key range, which is what gives the manifest's
-                # per-file min/max its pruning power (file_stats
-                # docstring); an explicit sorted_by wins (reference
-                # knob) and pruning degrades gracefully — ranges are
-                # still recorded, just wider.  The sort key is the
-                # SAME string cast the stats and the prune comparison
-                # use — native numeric order vs string min/max would
-                # record ranges that cover everything and silently
-                # disable pruning for non-string keys.
-                [F.col(self.key_col).cast("string")]
-                if self.file_stats
-                else []
-            )
-        if inner_sort:
-            # bucket column leads the sort so the partitioned writer's
-            # required ordering is already satisfied and it does not
-            # re-sort (which would destroy the inner sort order)
-            df = df.repartition(F.col(BUCKET_COLUMN)).sortWithinPartitions(
-                BUCKET_COLUMN, *inner_sort
-            )
-        self._write_partitioned(
-            df, dirname, honor_file_cap=honor_file_cap, records_cap=records_cap
-        )
+            return [zvalue_expr(df, present)] if present else []
+        return list(self.sorted_by) or [F.col(self.key_col).cast("string")]
 
     def _write_partitioned(
         self,
@@ -2086,18 +2046,6 @@ class ParquetMergeTarget:
         # could mistake for a crash orphan.
         writer.mode("errorifexists").parquet(self._data_dir(dirname))
 
-    def _use_sort_dedup(self) -> bool:
-        """True when latest-wins dedup should fuse into the write's own
-        exchange+sort (``dedup_strategy="sort"``).  ``sorted_by`` /
-        ``cluster_by`` targets need a different inner file order than
-        the key sort the fused window rides, so they keep the aggregate
-        strategy regardless."""
-        return (
-            self.dedup_strategy == "sort"
-            and not self.sorted_by
-            and not self.cluster_by
-        )
-
     def _write_version_latest(
         self,
         unioned: DataFrame,
@@ -2105,14 +2053,16 @@ class ParquetMergeTarget:
         ordering: Sequence[str],
         drop_cols: Sequence[str] = (),
     ) -> tuple[str, "StructType"]:
-        """Latest-wins dedup FUSED into the version write (r17, guide
+        """THE latest-wins version write of every CoW, initial and
+        overwrite commit, with the dedup FUSED into it (r17, guide
         §2.4: remove shuffles outright): rows exchange ONCE on the
         bucket column, and the dedup window's required sort —
         ``(bucket, CAST(key AS STRING), key, ordering-struct DESC)`` —
         is exactly the partitioned writer's required ordering plus the
-        key-sorted inner file order the manifest stats rely on.  The
-        aggregate strategy pays a groupBy(key) exchange AND a
-        repartition(bucket) exchange for the same result.
+        key-sorted inner file order the manifest stats rely on.  A
+        ``sorted_by`` / ``cluster_by`` target re-sorts the deduped rows
+        within their bucket partitions (:meth:`_inner_order`) — one
+        extra sort, never a second exchange.
 
         Survivor parity with :func:`_dedup_latest_df`: the first row of
         a key group under ordering-struct DESC is ``max_by``'s survivor
@@ -2120,11 +2070,9 @@ class ParquetMergeTarget:
         order (field-wise, nulls smallest, NaN greatest).  The native
         key joins the sort keys after its string cast so key groups
         stay contiguous even if two distinct keys share a string form.
-        Trade-off vs the aggregate strategy (kept under
-        ``dedup_strategy="agg"``): no map-side partial reduction, so a
+        Trade-off vs the aggregate: no map-side partial reduction, so a
         pathologically hot key sorts all its raw rows in one bucket
-        partition instead of arriving pre-collapsed — prefer "agg" for
-        duplicate-heavy or hot-key batches (dedup_strategy docstring).
+        partition instead of arriving pre-collapsed.
         """
         from pyspark.sql import Window
 
@@ -2151,6 +2099,12 @@ class ParquetMergeTarget:
             )
             .select(*out_cols)
         )
+        if self.sorted_by or self.cluster_by:
+            # the window's output is already hash-partitioned on the
+            # bucket: sort in place, no repartition (a second exchange)
+            deduped = deduped.sortWithinPartitions(
+                BUCKET_COLUMN, *self._inner_order(deduped)
+            )
         self._write_partitioned(deduped, dirname)
         return dirname, deduped.schema
 
@@ -2289,19 +2243,6 @@ class ParquetMergeTarget:
                     sizes[(b, name)] = size
         if not sizes:
             return []
-        if not self.file_stats:
-            return [
-                {
-                    "v": version,
-                    "d": dirname,
-                    "b": b,
-                    "n": n,
-                    "mn": None,
-                    "mx": None,
-                    "sz": sz,
-                }
-                for (b, n), sz in sorted(sizes.items())
-            ]
         fast = self._footer_file_stats(version, dirname, sizes)
         if fast is not None:
             return fast
@@ -2630,15 +2571,15 @@ class ParquetMergeTarget:
         of data file ``f``?  Callers already checked seq/bucket; this
         is the key-range part.  Missing stats on either side → True
         (never prune on absent evidence); a null-key delete applies to
-        any file that may hold null rows (file ``hn`` missing → stats
-        off, assume it may)."""
+        any file that may hold null rows (file ``hn`` missing → an
+        older writer's stat-less entry, assume it may)."""
         if d.get("hn") and f.get("hn", True):
             return True
         fm, fx, dm, dx = f.get("mn"), f.get("mx"), d.get("mn"), d.get("mx")
         if fm is None or fx is None or dm is None or dx is None:
             # an all-null data file records mn=mx=None; a non-null-key
-            # delete can never hit it, but we cannot distinguish
-            # "all-null" from "stats off" here, so stay conservative
+            # delete can never hit it, but an entry an older writer left
+            # without stats looks the same, so stay conservative
             return True
         return not (fx < dm or fm > dx)
 
@@ -2736,7 +2677,7 @@ class ParquetMergeTarget:
         # SMJ plan cost a 10-commit table 5.4 s/read vs 0.67 clean;
         # sizes come free from the manifest entries).  Past the
         # threshold (overdue compaction) fall back to a shuffled join.
-        if sum(int(d["sz"]) for d in used) <= self.broadcast_delete_bytes:
+        if sum(int(d["sz"]) for d in used) <= _BROADCAST_DELETE_BYTES:
             dels = F.broadcast(dels)
         survived = tagged.join(
             dels,
@@ -2834,7 +2775,10 @@ class ParquetMergeTarget:
         overrides :attr:`merge_mode` for this call — ``"cow"`` rewrites
         touched files, ``"mor"`` appends winners + delete files (see
         the ``merge_mode`` field docstring); both produce the exact
-        same observable table contents."""
+        same observable table contents.  CoW and the first commit write
+        through :meth:`_write_version_latest` for every target —
+        ``sorted_by`` / ``cluster_by`` only change the order rows take
+        inside each file."""
         if self.key_col not in batch.columns:
             raise ValueError(f"batch lacks key column {self.key_col}")
         if self.version_col not in batch.columns:
@@ -2842,11 +2786,6 @@ class ParquetMergeTarget:
         mode = (mode or self.merge_mode).lower()
         if mode not in ("cow", "mor"):
             raise ValueError(f"merge mode must be 'cow' or 'mor', got {mode!r}")
-        if self.dedup_strategy not in ("sort", "agg"):
-            raise ValueError(
-                f"dedup_strategy must be 'sort' or 'agg', got "
-                f"{self.dedup_strategy!r}"
-            )
 
         if not self.exists():
             self._commit_initial(batch)
@@ -2956,7 +2895,7 @@ class ParquetMergeTarget:
         # The batch IS pre-deduped (below) even though max-associativity
         # would let one max_by over the union pick the same survivor
         # whenever the order is total: on an UNDEFINED within-batch tie
-        # — equal (version, tiebreakers) — the fused sort-dedup write
+        # — equal (version, tiebreakers) — the fused dedup write
         # and MoR's max_by would each pick arbitrarily, and a CoW table
         # could diverge from its MoR twin on the same history.  Folding
         # the batch through the SAME _dedup_latest aggregate both modes
@@ -2992,28 +2931,17 @@ class ParquetMergeTarget:
         )
 
         new_version = manifest["version"] + 1
-        if self._use_sort_dedup():
-            # merge_latest_wins' union + max_by, with the dedup fused
-            # into the write's own exchange+sort (one shuffle total)
-            unioned = existing.withColumn(
-                _PRECEDENCE_COL, F.lit(0)
-            ).unionByName(batch_latest.withColumn(_PRECEDENCE_COL, F.lit(1)))
-            new_dir, wschema = self._write_version_latest(
-                unioned,
-                new_version,
-                [self.version_col, _PRECEDENCE_COL, *self.tiebreakers],
-                drop_cols=(_PRECEDENCE_COL,),
-            )
-        else:
-            merged = merge_latest_wins(
-                existing,
-                batch_latest,
-                self.key_col,
-                self.version_col,
-                tiebreakers=self.tiebreakers,
-            )
-            new_dir = self._write_version(merged, new_version)
-            wschema = merged.schema
+        # merge_latest_wins' union + max_by, with the dedup fused into
+        # the write's own exchange+sort (one shuffle total)
+        unioned = existing.withColumn(_PRECEDENCE_COL, F.lit(0)).unionByName(
+            batch_latest.withColumn(_PRECEDENCE_COL, F.lit(1))
+        )
+        new_dir, wschema = self._write_version_latest(
+            unioned,
+            new_version,
+            [self.version_col, _PRECEDENCE_COL, *self.tiebreakers],
+            drop_cols=(_PRECEDENCE_COL,),
+        )
         # schema + file map commit in ONE create-only manifest write:
         # a crash before it leaves the old table (and old schema) fully
         # intact — clean rollback, no half-visible drift
@@ -3183,16 +3111,9 @@ class ParquetMergeTarget:
         # contract holds: an empty batch writes no data files, so no
         # manifest is committed and the target stays nonexistent (the
         # empty staging dir is a vacuum-class orphan).
-        if self._use_sort_dedup():
-            new_dir, schema = self._write_version_latest(
-                self._with_bucket(batch),
-                1,
-                [self.version_col, *self.tiebreakers],
-            )
-        else:
-            bucketed = self._with_bucket(self._dedup_latest(batch))
-            new_dir = self._write_version(bucketed, 1)
-            schema = bucketed.schema
+        new_dir, schema = self._write_version_latest(
+            self._with_bucket(batch), 1, [self.version_col, *self.tiebreakers]
+        )
         files = self._collect_file_stats(1, new_dir)
         if not files:
             return
@@ -3218,16 +3139,11 @@ class ParquetMergeTarget:
         # one-pass rule as _commit_initial); an empty source writes no
         # files and commits the zero-bucket TRUNCATE manifest (carrying
         # the schema), which reads back as zero rows (_read_raw)
-        if self._use_sort_dedup():
-            new_dir, schema = self._write_version_latest(
-                self._with_bucket(df),
-                new_version,
-                [self.version_col, *self.tiebreakers],
-            )
-        else:
-            snapshot = self._with_bucket(self._dedup_latest(df))
-            new_dir = self._write_version(snapshot, new_version)
-            schema = snapshot.schema
+        new_dir, schema = self._write_version_latest(
+            self._with_bucket(df),
+            new_version,
+            [self.version_col, *self.tiebreakers],
+        )
         files = self._collect_file_stats(new_version, new_dir)
         self._commit_manifest(
             {

@@ -217,23 +217,21 @@ def test_narrow_upsert_keeps_unaffected_files(spark, tmp_path):
 
 
 def test_pruned_bytes_smaller_than_bucket_rewrite(spark, tmp_path):
-    """The measurable claim: bytes written by a narrow upsert with file
-    stats on are a fraction of the full-bucket rewrite with them off."""
-    def bytes_written(file_stats: bool) -> int:
-        path = str(tmp_path / f"t_{file_stats}")
-        t = ParquetMergeTarget(
-            spark=spark, path=path, num_buckets=2,
-            max_records_per_file=50, file_stats=file_stats,
-        )
-        t.merge(df_of(spark, [(f"k{i:05d}", 1, "x" * 50) for i in range(1000)]))
-        t.merge(df_of(spark, [("k00500", 2, "y")]))
-        m = t._manifest()
-        return sum(
-            f["sz"] for f in m["files"] if int(f["v"]) == m["version"]
-        )
-
-    pruned = bytes_written(True)
-    full = bytes_written(False)
+    """The measurable claim: bytes written by a narrow upsert are a
+    fraction of a full rewrite of the touched bucket's files."""
+    t = ParquetMergeTarget(
+        spark=spark, path=str(tmp_path / "t"), num_buckets=2,
+        max_records_per_file=50,
+    )
+    t.merge(df_of(spark, [(f"k{i:05d}", 1, "x" * 50) for i in range(1000)]))
+    v1 = t._manifest()["files"]
+    t.merge(df_of(spark, [("k00500", 2, "y")]))
+    m = t._manifest()
+    new = [f for f in m["files"] if int(f["v"]) == m["version"]]
+    assert len({int(f["b"]) for f in new}) == 1
+    bucket = int(new[0]["b"])
+    pruned = sum(f["sz"] for f in new)
+    full = sum(f["sz"] for f in v1 if int(f["b"]) == bucket)
     assert pruned < full / 3, (pruned, full)
 
 

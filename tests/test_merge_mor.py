@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import Row
 
 from arcane_stream_parquet_spark.fsio import fs_join
+from arcane_stream_parquet_spark.operators import merge as merge_module
 from arcane_stream_parquet_spark.operators.merge import ParquetMergeTarget
 
 
@@ -237,7 +238,9 @@ def test_compact_minor_coalesces_small_files(spark, tmp_path):
     assert contents(t) == EXPECTED
 
 
-def test_mor_skewed_deletes_broadcast_and_shuffle_paths(spark, tmp_path):
+def test_mor_skewed_deletes_broadcast_and_shuffle_paths(
+    spark, tmp_path, monkeypatch
+):
     """r7 VERDICT item 5: pending deletes concentrated in ONE bucket.
     Under the byte threshold the delete build side is BROADCAST — the
     dirty scan never shuffles, so build-side concentration cannot
@@ -279,7 +282,7 @@ def test_mor_skewed_deletes_broadcast_and_shuffle_paths(spark, tmp_path):
     # tiny delete files and would re-broadcast from size stats, so pin
     # the genuinely shuffled shape by disabling auto-broadcast — this
     # is what the plan looks like when the pending set is really big
-    t.broadcast_delete_bytes = 0
+    monkeypatch.setattr(merge_module, "_BROADCAST_DELETE_BYTES", 0)
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -42,7 +42,6 @@ def rows_df(spark, n, ver=1, seed=0):
 def make_target(spark, path, **kw) -> ParquetMergeTarget:
     kw.setdefault("num_buckets", 4)
     kw.setdefault("cluster_by", ("x", "y"))
-    kw.setdefault("cluster_bits", 5)
     kw.setdefault("max_records_per_file", 100)
     return ParquetMergeTarget(spark=spark, path=str(path), **kw)
 
