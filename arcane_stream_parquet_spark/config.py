@@ -277,6 +277,9 @@ def build_pipeline(spark, spec: StreamSpec, warehouse_root: str, checkpoint_root
     from arcane_stream_parquet_spark.sources.blob import BlobParquetSource
     from arcane_stream_parquet_spark.streaming.runner import StreamRunner
 
+    # the spec's S3 block (endpoint, path style, region) reaches the
+    # session's fs.s3a.* confs before any source or target path is read
+    apply_s3_options(spark, spec.s3_options)
     mode, fields, essential = spec.field_selection
     selection = (
         FieldSelectionRule(mode=mode, fields=fields, essential_fields=tuple(essential))

@@ -33,8 +33,11 @@ from __future__ import annotations
 
 import uuid
 from dataclasses import dataclass
+from typing import TYPE_CHECKING
 
-from pyspark.sql import SparkSession
+if TYPE_CHECKING:  # the metadata log (operators/manifest.py) imports
+    # fs_join without pyspark
+    from pyspark.sql import SparkSession
 
 _TMP_SUFFIX = ".tmp"
 

@@ -13,41 +13,15 @@ storage layer for Iceberg's ``MERGE INTO`` is a config change):
 
 **Bucketed merge-by-rewrite with a versioned manifest (mini-Iceberg).**
 
-Layout (every metadata file IMMUTABLE — create-only, round-4 redesign
-closing the round-3 S3A mutable-commit findings)::
+Layout::
 
     <path>/data/vNNNNN-<nonce>/__bucket=N/*.parquet  immutable version dirs
-                                               (nonce per write attempt;
-                                               file entries record the
-                                               dirname)
+                                               (nonce per write attempt)
     <path>/deletes/vNNNNN-<nonce>/*.parquet    MoR equality-delete files
-    <path>/_asp_meta/manifest-vNNNNN.json      one root per commit; the
-                                               CURRENT manifest is the
-                                               max version
-    <path>/_asp_meta/manifest-vNNNNN-shard-NNNNN.json  file-entry shards
-                                               of large roots
-    <path>/_asp_meta/watermark-<20-digits>.json  stream watermark (ST2);
-                                               current = max in listing
-                                               (filename IS the value)
-
-The root manifest (one format; :meth:`ParquetMergeTarget._read_manifest`
-refuses any other):
-
-- ``version``, ``committed_at``, ``op`` (commit kind), ``schema`` (the
-  authoritative table schema), ``num_buckets``, ``buckets``
-  ({bucket -> version that last changed it}, the CDC diff scope) and
-  ``deletes`` (pending delete entries);
-- the live file entries, EITHER inline as ``files`` OR sharded as
-  ``file_shards`` descriptors ``{"n", "b0", "b1", "nf", "hist",
-  "coal"}`` with the ``n_files`` / ``size_hist`` summary beside them.
-
-A file entry is ``{"v": commit version, "d": dirname, "b": bucket,
-"n": name, "sz": bytes, "mn"/"mx": key range (None for an all-null-key
-file), "hn": may hold a null key, "rc": row count}`` plus optional
-``"cs"`` (per-column ranges) and ``"bf"`` (bloom filters).  A delete entry is
-``{"seq": commit version, "d": dirname, "n": name, "bs": buckets its
-keys hash into, "mn", "mx", "hn", "sz"}``; ``"sc"`` marks a
-consolidated file that stores each key's original seq.
+    <path>/_asp_meta/                          the metadata log
+                                               (``operators/manifest.py``:
+                                               roots, shards, watermark,
+                                               tags, rebucket markers)
 
 A merge (1) dedups the batch per key (J2 window), (2) reads ONLY the
 affected files of the live table (bucket + key-range pruning), (3)
@@ -55,30 +29,13 @@ resolves latest-wins (batch beats target on equal version — MERGE's
 ``s.createdon >= t.createdon``) with the dedup fused into the write's
 one bucket exchange — every target, whatever its inner file order
 (:meth:`ParquetMergeTarget._write_version_latest`), (4) writes the
-merged rows to a FRESH version directory, and (5) commits by
-CREATING ``manifest-v{N+1}.json`` — a file that never pre-exists, so
-the commit is safe even on S3A where rename is copy+delete: a crash
-leaves either no new manifest (old table fully intact) or a complete
-one. Nothing in the protocol ever deletes-then-recreates a live
-metadata file, so there is no read-side crash window to heal.
-
-All metadata IO goes through :class:`HadoopFileIO` (fsio.py) — one code
-path for ``file://``, ``hdfs://`` and ``s3a://`` alike, matching the
-reference's object-store-only deployment (``targetPath: s3a://...``,
-reference docs/crd.md:53-54).
-
-Durability (round-1 ADVICE findings closed by the versioned design;
-round-3 ADVICE/S3A findings closed by making every metadata commit
-create-only):
-- No session-global ``partitionOverwriteMode`` mutation — every write
-  lands in a brand-new directory; nothing is ever overwritten in place.
-- The unified schema is EMBEDDED in the manifest, so schema and bucket
-  map commit in one atomic step: a crash before the commit rolls back
-  cleanly (old schema, old data — no half-visible drift).
-- A crash anywhere before the manifest commit leaves the previous
-  manifest as the listing max — the old table fully intact; the
-  half-written version dir is an orphan that ``vacuum()`` removes. The
-  commit point is the creation of one never-pre-existing file.
+merged rows to a FRESH version directory, and (5) commits through the
+metadata log's create-only root (:meth:`MetaLog.commit`): a crash
+before it leaves the old table, schema included, fully intact and the
+half-written version dir an orphan ``vacuum()`` removes.  Nothing is
+ever overwritten in place, and all file IO goes through
+:class:`HadoopFileIO` — one code path for ``file://``, ``hdfs://`` and
+``s3a://`` (the reference deploys on an object store, docs/crd.md:53-54).
 
 Honest cost model (100 TB posture): the merge key is a uniform sha256,
 so a batch with k distinct keys touches ~min(k, B) of B buckets; the
@@ -112,6 +69,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from arcane_stream_parquet_spark.fsio import HadoopFileIO, fs_join
+from arcane_stream_parquet_spark.operators import manifest as manifest_log
+from arcane_stream_parquet_spark.operators.manifest import (
+    ConcurrentWriteError,
+    MetaLog,
+)
 
 from arcane_stream_parquet_spark.functions.keys import (
     MERGE_KEY_COLUMN,
@@ -125,13 +87,6 @@ BUCKET_COLUMN = "__bucket"
 # shuffled join, where AQE's skew handling covers deletes concentrated
 # in few buckets (probe: SCALE.md r8).
 _BROADCAST_DELETE_BYTES = 64 << 20
-
-
-class ConcurrentWriteError(RuntimeError):
-    """Another writer committed this target version first.  The losing
-    commit touched nothing the winner references; retrying the whole
-    operation (which re-reads the manifest) converges.  See the
-    single-writer contract in :meth:`ParquetMergeTarget._manifest`."""
 
 
 def _strip_nullability(dt):
@@ -193,7 +148,6 @@ def _widen_type(a, b):
     return None
 _PRECEDENCE_COL = "__asp_precedence"
 _ROW_STRUCT_COL = "__asp_row"
-_META_DIR = "_asp_meta"
 # merge-on-read plumbing columns (never persisted to data files; the
 # delete files persist ONLY the merge-key column + the bucket partition)
 _FILE_V_COL = "__asp_file_v"
@@ -620,15 +574,6 @@ class ParquetMergeTarget:
     # (crd-parquet-stream.yaml:220-224): per-column parquet bloom
     # filters for point-lookup file skipping on non-sort columns.
     bloom_filter_cols: tuple[str, ...] = ()
-    #: Manifest sharding threshold (Iceberg's manifest-list shape): a
-    #: commit whose file list exceeds this many entries writes the list
-    #: as immutable ``manifest-vNNNNN-shard-*.json`` files and the root
-    #: manifest carries only their names — the commit point stays the
-    #: single create-only root write, and a 10⁶-file table no longer
-    #: concentrates ~120 MB of JSON in one object.  Shards of an
-    #: uncommitted version can only be crash orphans and are replaced
-    #: on retry, exactly like orphan version dirs.
-    manifest_shard_entries: int = 100_000
     #: Default write strategy for :meth:`merge` (per-call override via
     #: ``merge(batch, mode=...)``):
     #:
@@ -701,45 +646,9 @@ class ParquetMergeTarget:
         return HadoopFileIO(self.spark)
 
     @property
-    def _meta_path(self) -> str:
-        return fs_join(self.path, _META_DIR)
-
-    def _manifest_file(self, version: int) -> str:
-        return fs_join(self._meta_path, f"manifest-v{version:05d}.json")
-
-    def _read_manifest(self, version: int) -> dict:
-        """THE manifest loader: every root manifest read goes through
-        here, and one root-only check (never a shard read) refuses any
-        layout but the one this class writes (module docstring) — a
-        table whose manifests predate it is refused, not upgraded,
-        exactly as an Iceberg reader refuses an unknown
-        ``format-version``.  Raises FileNotFoundError when the root
-        does not exist."""
-        m = json.loads(self._fio.read_text(self._manifest_file(version)))
-        shards = m.get("file_shards")
-        deletes = m.get("deletes") or []
-        missing = [
-            name
-            for name, ok in (
-                ("num_buckets", "num_buckets" in m),
-                ("files or file_shards", "files" in m or shards is not None),
-                (
-                    "file_shards descriptors",
-                    not shards or isinstance(shards[0], dict),
-                ),
-                ("n_files", shards is None or "n_files" in m),
-                ("size_hist", shards is None or "size_hist" in m),
-                ("delete entry bs", not deletes or "bs" in deletes[0]),
-            )
-            if not ok
-        ]
-        if missing:
-            raise ValueError(
-                f"manifest v{version} at {self.path} predates the current "
-                f"manifest format (missing: {', '.join(missing)}); such "
-                f"tables are refused, not upgraded"
-            )
-        return m
+    def _log(self) -> MetaLog:
+        """The table's metadata log (``operators/manifest.py``)."""
+        return MetaLog(self._fio, self.path)
 
     # -- nonce-namespaced staging ------------------------------------------
     #
@@ -768,284 +677,35 @@ class ParquetMergeTarget:
     def exists(self) -> bool:
         """True iff at least one committed manifest exists. Create-only
         protocol: a crash can never leave a table that ``exists()``
-        misses but a read would find (the round-3 ADVICE scenario —
-        exists() ignoring a tmp fallback and re-initializing over a
-        committed table — is structurally impossible now: nothing ever
-        deletes the committed manifest set)."""
-        return bool(self.snapshot_versions())
+        misses but a read would find (nothing ever deletes the
+        committed manifest set)."""
+        return bool(self._log.listing().roots)
 
-    def _manifest(self) -> dict:
-        """The CURRENT manifest = the max committed ``manifest-vN``.
-        Walks the listing newest-first so a concurrent ``vacuum()`` in
-        another process (deleting old snapshots between our list and
-        read) degrades to the next-newest committed value instead of an
-        error.
+    def _manifest(self, listing: manifest_log.Listing | None = None) -> dict:
+        """The CURRENT manifest (:meth:`MetaLog.current`; pass the
+        operation's ``listing`` so the directory is listed once).
 
-        Concurrency contract: SINGLE WRITER per target — exactly the
-        reference's model (one stream job owns one target table). The
-        create-only commit makes crashes safe, not concurrent writers;
-        multi-writer coordination is the job of a real table format's
-        catalog (swap in Iceberg for that).  The create-only root does
-        act as a best-effort CAS fence (r9): a writer that raced a
-        stale manifest read LOSES cleanly with
-        :class:`ConcurrentWriteError` at the root create, and a plain
-        retry (which re-reads the manifest) converges.  Since r10 every
-        write attempt stages into a fresh nonce-named dir recorded in
-        the manifest entries (``"d"``), so two IN-FLIGHT writers can
-        interleave arbitrarily without touching each other's files —
-        the loser's staging becomes an unreferenced orphan that
-        :meth:`vacuum` reclaims; no torn state remains even without a
-        catalog.  The residual out-of-contract surface is
-        :meth:`vacuum` racing an in-flight writer (vacuum reclaims any
-        dir the current manifest doesn't reference, including a
-        not-yet-committed attempt) — run maintenance from the single
-        stream owner, as the reference does (docs/crd.md:134-136,
-        235-296)."""
-        versions = self.snapshot_versions()
-        for v in reversed(versions):
-            try:
-                m = self._read_manifest(v)
-            except FileNotFoundError:
-                continue
-            # the manifest is the authority on the bucket count (online
-            # rebucketing): the constructor value only seeds a new table
-            self.num_buckets = int(m["num_buckets"])
-            return m
-        raise FileNotFoundError(f"no committed manifest under {self._meta_path}")
+        Concurrency contract: SINGLE WRITER per target — the reference's
+        model (one stream job owns one target table); multi-writer
+        coordination is a real table format's catalog's job.  The
+        create-only root is still a best-effort CAS fence: a writer that
+        raced a stale manifest read loses cleanly with
+        :class:`ConcurrentWriteError`, its nonce-named staging becomes
+        an orphan :meth:`vacuum` reclaims, and a plain retry converges.
+        Out of contract: :meth:`vacuum` racing an in-flight writer (it
+        reclaims any dir no manifest references) — run maintenance from
+        the stream owner, as the reference does (docs/crd.md:134-136)."""
+        m = self._log.current(listing)
+        # the manifest is the authority on the bucket count (online
+        # rebucketing): the constructor value only seeds a new table
+        self.num_buckets = int(m["num_buckets"])
+        return m
 
-    def _shard_name(self, version: int, i: int) -> str:
-        return f"manifest-v{version:05d}-shard-{i:05d}.json"
-
-    # -- bucket-ranged reusable manifest shards ----------------------------
-    #
-    # A sharded manifest's root carries DESCRIPTORS
-    # ``{"n": name, "b0"/"b1": bucket range, "nf": entry count,
-    # "hist": size histogram, "coal": cumulative coalescable-small-file
-    # histogram}``.  Entries are bucket-sorted and shards cut only at
-    # bucket boundaries, so a shard's [b0, b1] range decides by pure
-    # root metadata whether a commit touching bucket set B can involve
-    # it.  Untouched shards are REUSED verbatim by name in the next
-    # root (Iceberg's manifest-reuse shape): a narrow merge on a
-    # 10^6-file table reads and rewrites O(touched shards) of metadata,
-    # not the full ~100 MB shard set, and the adaptive maintenance gate
-    # answers its coalescable-small-file question exactly from ~40 ints
-    # per shard descriptor (closing the r8 "delete-pressure-only at
-    # sharded scale" honesty hole, VERDICT r8 item 1).
-
-    @staticmethod
-    def _shard_names(manifest: dict) -> list[str]:
-        return [s["n"] for s in manifest.get("file_shards") or []]
-
-    def _read_shard(self, name: str) -> list[dict]:
-        return json.loads(self._fio.read_text(fs_join(self._meta_path, name)))
-
-    @staticmethod
-    def _size_class_at(small_file_bytes: int) -> int:
-        """Largest power-of-two size class k whose whole range
-        [2^(k-1), 2^k - 1] fits under the threshold — the same
-        conservative (≤2×) rounding the root size histogram uses."""
-        return (int(small_file_bytes) + 1).bit_length() - 1
-
-    @staticmethod
-    def _step_at(step: dict, k: int) -> int:
-        """Evaluate a {str(class): value} cumulative step function at
-        class k: the value recorded at the largest class ≤ k."""
-        best, bk = 0, -1
-        for ks, v in step.items():
-            ki = int(ks)
-            if bk < ki <= k:
-                bk, best = ki, int(v)
-        return best
-
-    @staticmethod
-    def _shard_summary(entries: list[dict]) -> tuple[dict, dict]:
-        """(size histogram, coalescable histogram) of one shard, both
-        keyed by ``str(bit_length(sz))``.  ``coal[k]`` = files of size
-        class ≤ k sharing a bucket (within this shard) with ≥ 2 such
-        files — a cumulative step function stored at its change
-        points, so any threshold resolves without reading the shard.
-        Buckets never straddle shards at creation; a bucket split
-        across a kept and a new shard by later reuse under-counts here
-        (the safe direction for a trigger: a futile minor compaction
-        is never bought), and the reshard-on-fragmentation bound in
-        :meth:`_commit_manifest` keeps such splits transient."""
-        hist: dict[str, int] = {}
-        per_bucket: dict[int, dict[int, int]] = {}
-        for f in entries:
-            k = int(f["sz"]).bit_length()
-            hist[str(k)] = hist.get(str(k), 0) + 1
-            bb = per_bucket.setdefault(int(f["b"]), {})
-            bb[k] = bb.get(k, 0) + 1
-        coal: dict[str, int] = {}
-        cum = dict.fromkeys(per_bucket, 0)
-        for k in sorted(int(x) for x in hist):
-            for b, bb in per_bucket.items():
-                cum[b] += bb.get(k, 0)
-            coal[str(k)] = sum(c for c in cum.values() if c >= 2)
-        return hist, coal
-
-    def _split_shards(self, entries: list[dict]) -> list[list[dict]]:
-        """Bucket-sorted entry groups of ~``manifest_shard_entries``
-        each, cut ONLY between buckets so every group covers a disjoint
-        bucket range (a single pathologically huge bucket yields one
-        oversized shard rather than a straddle)."""
-        entries = sorted(entries, key=lambda f: (int(f["b"]), f["n"]))
-        out: list[list[dict]] = []
-        cur: list[dict] = []
-        prev_b = None
-        for f in entries:
-            b = int(f["b"])
-            if cur and b != prev_b and len(cur) >= self.manifest_shard_entries:
-                out.append(cur)
-                cur = []
-            cur.append(f)
-            prev_b = b
-        if cur:
-            out.append(cur)
-        return out
-
-    def _files_for_buckets(
-        self, manifest: dict, buckets: set[int]
-    ) -> tuple[list[dict], list[dict] | None]:
-        """(region, keep) for a commit touching ``buckets``: ``region``
-        is every live file entry that could belong to a touched bucket
-        (the inline list, or only the shards whose bucket range
-        intersects); ``keep`` is the descriptors of shards provably
-        untouched — reusable verbatim in the next root WITHOUT being
-        read.  ``keep is None`` means the caller must commit a full
-        file list (inline root)."""
-        shards = manifest.get("file_shards")
-        if shards is None:
-            return manifest["files"], None
-        region: list[dict] = []
-        keep: list[dict] = []
-        for s in shards:
-            b0, b1 = int(s["b0"]), int(s["b1"])
-            if any(b0 <= b <= b1 for b in buckets):
-                region.extend(self._read_shard(s["n"]))
-            else:
-                keep.append(s)
-        return region, keep
-
-    def _commit_manifest(self, manifest: dict) -> None:
-        """THE commit point: CREATE ``manifest-v{version}.json`` — a
-        never-pre-existing destination, so the commit is atomic-enough
-        on every Hadoop FS including S3A (fsio.py module docstring).
-        The manifest embeds the table schema, so schema and bucket map
-        commit in the same atomic step. Each commit doubles as its own
-        snapshot for time-travel reads, valid until ``vacuum()``
-        reclaims the data dirs (Iceberg snapshot/expire_snapshots
-        semantics).
-
-        Large file lists shard out first (``manifest_shard_entries``):
-        the shards are written BEFORE the root, so a crash leaves either
-        no new root (old table intact, shards are orphans cleaned by
-        vacuum/retry) or a complete committed set — the atomicity story
-        is unchanged because only the root creation is the commit.
-
-        Callers may pass ``manifest["keep_shards"]`` (descriptors from
-        :meth:`_files_for_buckets`) alongside a ``files`` list holding
-        only the CHANGED region: kept shards are referenced by name in
-        the new root without being read or rewritten, so a narrow
-        commit's metadata IO is O(touched shards).  A fragmentation
-        bound triggers a full reshard when reuse has accumulated more
-        than ~2× the ideal shard count, keeping lookup and range
-        overlap transient."""
-        manifest = dict(manifest)
-        # wall-clock commit stamp: drives time-based snapshot retention
-        # (vacuum older_than_seconds — the reference's expire_snapshots
-        # retention_threshold, docs/crd.md:150-182) and history();
-        # never used for ordering (versions do that)
-        manifest["committed_at"] = round(time.time(), 3)
-        # every commit records its bucket count: rollback across a
-        # rebucket restores the old numbering from the snapshot itself,
-        # and a reader constructed with a stale num_buckets is
-        # corrected at the first _manifest() read
-        manifest.setdefault("num_buckets", self.num_buckets)
-        keep = manifest.pop("keep_shards", None) or []
-        manifest.pop("file_shards", None)  # never carry a stale list over
-        manifest.pop("n_files", None)
-        manifest.pop("size_hist", None)
-        files = list(manifest.get("files") or [])
-        version = manifest["version"]
-        # CAS fence (r9): if this root already exists another writer
-        # won the race from the same base version — lose cleanly
-        # BEFORE replacing any shard the winner's root may reference
-        self._raise_if_version_committed(version)
-        total = len(files) + sum(int(s["nf"]) for s in keep)
-        ideal = total // self.manifest_shard_entries + 1
-        if keep and total <= self.manifest_shard_entries:
-            # table shrank under the threshold: fold kept shards back
-            # inline (bounded read — total is at most one shard's worth)
-            for s in keep:
-                files.extend(self._read_shard(s["n"]))
-            keep = []
-        if total > self.manifest_shard_entries:
-            groups = self._split_shards(files) if files else []
-            if keep and len(keep) + len(groups) > 2 * ideal:
-                # reshard-on-fragmentation: amortized O(1) per commit,
-                # bounds shard count (and any bucket straddling that
-                # reuse introduced) at ~2× ideal
-                for s in keep:
-                    files.extend(self._read_shard(s["n"]))
-                keep = []
-                groups = self._split_shards(files)
-            new_descs = []
-            for i, g in enumerate(groups):
-                name = self._shard_name(version, i)
-                path = fs_join(self._meta_path, name)
-                # a shard for an uncommitted version can only be a crash
-                # orphan from a previous attempt (the root's creation is
-                # the commit and it does not exist yet) — replace it
-                if self._fio.exists(path):
-                    self._fio.delete(path)
-                self._fio.create_text(path, json.dumps(g))
-                hist, coal = self._shard_summary(g)
-                new_descs.append(
-                    {
-                        "n": name,
-                        "b0": int(g[0]["b"]),
-                        "b1": int(g[-1]["b"]),
-                        "nf": len(g),
-                        "hist": hist,
-                        "coal": coal,
-                    }
-                )
-            descs = sorted(keep + new_descs, key=lambda s: (int(s["b0"]), s["n"]))
-            # root summary: per-batch maintenance polling answers from
-            # the root alone (file count + power-of-two size histogram
-            # + per-shard coalescable steps) — never reads shard bodies
-            hist_sum: dict[str, int] = {}
-            for s in descs:
-                for k, c in s["hist"].items():
-                    hist_sum[k] = hist_sum.get(k, 0) + int(c)
-            manifest["n_files"] = total
-            manifest["size_hist"] = hist_sum
-            manifest["file_shards"] = descs
-            manifest.pop("files", None)
-        else:
-            manifest["files"] = files
-        try:
-            self._fio.create_text(
-                self._manifest_file(version), json.dumps(manifest)
-            )
-        except FileExistsError:
-            raise ConcurrentWriteError(
-                f"manifest v{version} was committed by another writer "
-                f"between this commit's fence check and its root create "
-                f"at {self.path}; retry the operation"
-            ) from None
-
-    def _raise_if_version_committed(self, version: int) -> None:
-        """CAS-fence helper: a root manifest for ``version`` on disk
-        means another writer already committed it — everything this
-        writer was about to clear as a "crash orphan" is actually live.
-        One cheap existence probe per write/commit step."""
-        if self._fio.exists(self._manifest_file(version)):
-            raise ConcurrentWriteError(
-                f"manifest v{version} already committed by another "
-                f"writer at {self.path}; retry the operation"
-            )
+    def _current(self) -> dict | None:
+        """The current manifest, or None before the first commit — one
+        listing and one root read."""
+        listing = self._log.listing()
+        return self._manifest(listing) if listing.roots else None
 
     # -- schema ------------------------------------------------------------
 
@@ -1066,19 +726,12 @@ class ParquetMergeTarget:
         """Committed manifest versions available for time travel; the
         max entry is the live table (non-max entries valid until
         vacuum)."""
-        names = self._fio.list_names(self._meta_path)
-        return sorted(
-            int(n[len("manifest-v") : -len(".json")])
-            for n in names
-            if n.startswith("manifest-v")
-            and n.endswith(".json")
-            and "-shard-" not in n
-        )
+        return list(self._log.listing().roots)
 
     # -- snapshot tags (r11, Iceberg named-references shape) ----------------
     #
     # A tag is a named, immutable pointer to a snapshot version (a
-    # create-only ``tag-<name>.json`` under the metadata dir — same
+    # create-only ``tag-<name>.json`` in the metadata log — same
     # crash-safety protocol as every other metadata file).  Tags make
     # a snapshot an OPERATIONAL artifact: "training run X read exactly
     # this state" survives any amount of subsequent churn because
@@ -1087,35 +740,22 @@ class ParquetMergeTarget:
     # refs the same way).  Dropping the tag releases the snapshot to
     # the normal retention rules at the next vacuum.
 
-    def _tag_path(self, name: str) -> str:
-        return fs_join(self._meta_path, f"tag-{name}.json")
-
-    @staticmethod
-    def _validate_tag_name(name: str) -> str:
-        if not name or not all(c.isalnum() or c in "-_." for c in name):
-            raise ValueError(
-                f"tag name must be non-empty [alnum-_.] only: {name!r}"
-            )
-        return name
-
     def create_tag(self, name: str, version: int | None = None) -> int:
         """Tag ``version`` (default: the live version) with ``name``.
         Create-only — retagging an existing name raises (drop first);
         the tagged snapshot must currently exist.  Returns the tagged
         version."""
-        self._validate_tag_name(name)
+        manifest_log.tag_name(name)  # validates
+        listing = self._log.listing()
         if version is None:
-            version = int(self._manifest()["version"])
-        elif version not in self.snapshot_versions():
+            version = int(self._manifest(listing)["version"])
+        elif version not in listing.roots:
             raise ValueError(
                 f"no snapshot v{version} to tag; available: "
-                f"{self.snapshot_versions()}"
+                f"{list(listing.roots)}"
             )
         try:
-            self._fio.create_text(
-                self._tag_path(name),
-                json.dumps({"name": name, "version": int(version)}),
-            )
+            self._log.create_tag(name, version)
         except FileExistsError:
             raise ValueError(
                 f"tag {name!r} already exists (drop_tag first; tags "
@@ -1125,46 +765,29 @@ class ParquetMergeTarget:
 
     def tags(self) -> dict[str, int]:
         """All tags as ``{name: version}`` (one metadata listing)."""
-        out: dict[str, int] = {}
-        for n in self._fio.list_names(self._meta_path):
-            if n.startswith("tag-") and n.endswith(".json"):
-                try:
-                    t = json.loads(
-                        self._fio.read_text(fs_join(self._meta_path, n))
-                    )
-                except FileNotFoundError:
-                    continue  # concurrent drop
-                out[t["name"]] = int(t["version"])
-        return out
+        return self._log.tags()
 
     def drop_tag(self, name: str) -> bool:
         """Remove a tag (the snapshot returns to normal retention at
         the next vacuum).  Returns False if the tag did not exist."""
-        self._validate_tag_name(name)
-        path = self._tag_path(name)
-        if not self._fio.exists(path):
-            return False
-        self._fio.delete(path)
-        return True
+        return self._log.drop_tag(name)
 
     def _resolve_tag(self, name: str) -> int:
         try:
-            t = json.loads(self._fio.read_text(self._tag_path(name)))
+            return self._log.read_tag(name)
         except FileNotFoundError:
             raise ValueError(
                 f"no tag {name!r}; available: {sorted(self.tags())}"
             ) from None
-        return int(t["version"])
 
     def history(self) -> DataFrame:
         """Snapshot history as a DataFrame (Iceberg ``snapshots``
         metadata table / Delta ``DESCRIBE HISTORY`` shape): one row
         per retained snapshot — version, commit kind (the CDC ``op``
         tag), wall-clock commit time, live file count/bytes and
-        pending MoR delete entries.  Driver cost: one root-manifest
-        JSON read per retained snapshot; shard bodies are never read
-        (sharded roots carry their file-count summary; their byte
-        total reports null rather than an estimate)."""
+        pending MoR delete entries.  Driver cost: one listing and one
+        root read per snapshot, never a shard (:func:`manifest.summary`:
+        a sharded root's byte total reports null, not an estimate)."""
         from pyspark.sql.types import (
             DoubleType,
             LongType,
@@ -1174,21 +797,20 @@ class ParquetMergeTarget:
         )
 
         rows = []
-        for v in self.snapshot_versions():
-            m = self._manifest_at(v)
-            if "file_shards" in m:
-                n_files, n_bytes = int(m["n_files"]), None
-            else:
-                n_files = len(m["files"])
-                n_bytes = sum(int(f["sz"]) for f in m["files"])
+        for v in self._log.listing().roots:
+            try:
+                m = self._log.read_root(v)
+            except FileNotFoundError:
+                continue  # expired by a concurrent vacuum
+            summary = manifest_log.summary(m)
             ts = m.get("committed_at")
             rows.append(
                 (
                     int(v),
                     m.get("op"),
                     float(ts) if ts is not None else None,
-                    n_files,
-                    n_bytes,
+                    summary["file_count"],
+                    summary["total_bytes"],
                     len(m.get("deletes") or []),
                     int(m["num_buckets"]),
                 )
@@ -1213,18 +835,12 @@ class ParquetMergeTarget:
             "committed_at", F.timestamp_seconds(F.col("committed_at_epoch"))
         ).drop("committed_at_epoch")
 
-    def _read_raw(self, at_version: int | None = None) -> DataFrame:
-        """Live table contents including the bucket partition column:
-        per-version scans filtered to the buckets the manifest assigns
-        to that version (partition pruning), unioned. ``at_version``
-        reads that snapshot manifest instead (time travel; snapshots
-        are read with the CURRENT schema — post-drift columns appear
-        null-filled in history, the same forward-compatible rule as
-        live reads of pre-drift files)."""
-        current = self._manifest()
-        schema = self._schema_of(current)
-        manifest = self._manifest_at(at_version, current=current)
-        files = self._files_of_manifest(manifest)
+    def _scan_root(self, manifest: dict, schema) -> DataFrame:
+        """Contents of one snapshot, bucket column included, with its
+        pending deletes applied — read with the CURRENT ``schema``
+        (post-drift columns null-filled in history, as pre-drift files
+        are in live reads)."""
+        files = self._log.region(manifest)[0]
         if not files:
             # empty table (e.g. overwrite() from an empty source):
             # readable as zero rows with the authoritative schema
@@ -1250,7 +866,10 @@ class ParquetMergeTarget:
         at that instant, or ``at_tag`` for a named reference
         (vacuum-proof: tagged snapshots never expire)."""
         at_version = self._resolve_at(at_version, at_timestamp, at_tag)
-        return self._read_raw(at_version).drop(BUCKET_COLUMN)
+        current = self._manifest()
+        return self._scan_root(
+            self._log.at(at_version, current), self._schema_of(current)
+        ).drop(BUCKET_COLUMN)
 
     def _resolve_at(
         self, at_version, at_timestamp, at_tag=None
@@ -1288,10 +907,11 @@ class ParquetMergeTarget:
             ts = at_timestamp.timestamp()
         else:
             ts = float(at_timestamp)
-        current = self._manifest()
+        listing = self._log.listing()
+        current = self._manifest(listing)
         best = None
-        for v in self.snapshot_versions():
-            m = self._manifest_at(v, current=current)
+        for v in listing.roots:
+            m = self._log.at(v, current, listing)
             if float(m.get("committed_at") or 0.0) <= ts:
                 best = v
         if best is None:
@@ -1301,21 +921,6 @@ class ParquetMergeTarget:
                 f"been vacuumed"
             )
         return best
-
-    def _manifest_at(
-        self, at_version: int | None, current: dict | None = None
-    ) -> dict:
-        if current is None:
-            current = self._manifest()
-        if at_version is None or at_version == current["version"]:
-            return current
-        try:
-            return self._read_manifest(at_version)
-        except FileNotFoundError:
-            raise ValueError(
-                f"no snapshot v{at_version}; available: "
-                f"{self.snapshot_versions()}"
-            ) from None
 
     def read_where(
         self,
@@ -1352,13 +957,17 @@ class ParquetMergeTarget:
         stats for them and are never pruned on such conjuncts)."""
         at_version = self._resolve_at(at_version, at_timestamp, at_tag)
         current = self._manifest()
-        manifest = self._manifest_at(at_version, current=current)
-        schema = self._schema_of(current)
+        return self._read_where(
+            self._log.at(at_version, current), self._schema_of(current), preds
+        )
+
+    def _read_where(self, manifest: dict, schema, preds) -> DataFrame:
+        """:meth:`read_where` on an already-read snapshot ``manifest``
+        under the current ``schema``."""
         if schema is None:
             raise ValueError(f"no schema committed at {self.path}")
         parsed, residual = self._parse_predicates(schema, preds)
-        files = self._files_of_manifest(manifest)
-        pruned = self._may_match_files(files, parsed)
+        pruned = self._may_match_files(self._log.region(manifest)[0], parsed)
         if not pruned:
             from pyspark.sql.types import StructType
 
@@ -1402,8 +1011,6 @@ class ParquetMergeTarget:
                     f"op {op!r} needs a non-null value "
                     f"(use 'is_null' for null tests): {p!r}"
                 )
-            import datetime as _dt
-
             v = p[2]
             dtype = schema[col].dataType.simpleString()
 
@@ -1560,12 +1167,12 @@ class ParquetMergeTarget:
         (same rule as :meth:`read_where`)."""
         at_version = self._resolve_at(at_version, at_timestamp, at_tag)
         current = self._manifest()
-        manifest = self._manifest_at(at_version, current=current)
+        manifest = self._log.at(at_version, current)
         schema = self._schema_of(current)
         if schema is None:
             raise ValueError(f"no schema committed at {self.path}")
         parsed, residual = self._parse_predicates(schema, preds)
-        files = self._files_of_manifest(manifest)
+        files = self._log.region(manifest)[0]
         deletes = manifest.get("deletes") or []
         dirty = {
             int(b) for d in deletes for b in self._delete_buckets(d)
@@ -1645,8 +1252,11 @@ class ParquetMergeTarget:
         the manifest ``op`` tag.  Snapshots must still exist:
         :meth:`vacuum` reclaims history, so a consumer that falls
         behind the vacuum horizon must resume from a full ``read()``
-        (Iceberg incremental-scan-after-expire_snapshots contract)."""
-        current = self._manifest()
+        (Iceberg incremental-scan-after-expire_snapshots contract).
+        Metadata cost: one listing and one read of each root in the
+        range (plus its diff base)."""
+        listing = self._log.listing()
+        current = self._manifest(listing)
         cur_v = int(current["version"])
         if to_version is None:
             to_version = cur_v
@@ -1658,7 +1268,8 @@ class ParquetMergeTarget:
         schema = self._schema_of(current)
         if schema is None:
             raise ValueError(f"no schema committed at {self.path}")
-        avail = set(self.snapshot_versions())
+        avail = set(listing.roots)
+        root = self._log.reader(current, listing)
         # v_from itself need not exist (only its BOUNDARY matters) —
         # except as the old side of a snapshot diff, checked per-commit
         missing = sorted(
@@ -1673,10 +1284,9 @@ class ParquetMergeTarget:
         # lookup() — it is a pure function of the key, so dropping it
         # loses nothing and keeps the changelog schema == read() schema
         cols = [f.name for f in schema.fields if f.name != BUCKET_COLUMN]
-        ct = F.col(CHANGE_TYPE_COLUMN)
         parts: list[DataFrame] = []
         for v in range(from_version + 1, to_version + 1):
-            m_new = self._read_manifest(v)
+            m_new = root(v)
             op = m_new.get("op")
             if op in ("compact", "compact-minor", "rebucket"):
                 continue  # pure repack: contents proven unchanged
@@ -1684,7 +1294,9 @@ class ParquetMergeTarget:
             if op in ("merge-mor", "append"):
                 part = self._changes_from_delta(m_new, v, schema, cols)
             else:  # merge-cow / overwrite / untagged pre-CDC manifest
-                part = self._changes_from_diff(m_new, v, schema, cols, avail)
+                part = self._changes_from_diff(
+                    m_new, v, schema, cols, avail, root
+                )
             if part is not None:
                 parts.append(
                     part.withColumn(
@@ -1723,9 +1335,7 @@ class ParquetMergeTarget:
         commit: the files it added are the post-images; the delete
         file it wrote (keys that HAD a live target row) is exactly the
         insert/update classifier."""
-        files_v = [
-            f for f in self._files_of_manifest(m_new) if int(f["v"]) == v
-        ]
+        files_v = [f for f in self._log.region(m_new)[0] if int(f["v"]) == v]
         if not files_v:
             return None
         rows = self._read_files(files_v, schema)
@@ -1770,11 +1380,13 @@ class ParquetMergeTarget:
         schema,
         cols: list[str],
         avail: set[int],
+        root,
     ) -> DataFrame | None:
         """Changelog of one commit by reconciling its snapshot with the
         previous one, restricted to the buckets the commit touched —
         exact for ANY commit kind (rows a rewrite carried over unchanged
-        compare equal and drop out), partition-pruned on both sides."""
+        compare equal and drop out), partition-pruned on both sides.
+        ``root`` is :meth:`read_changes`' :meth:`MetaLog.reader`."""
         changed = {
             int(b) for b, ver in m_new["buckets"].items() if int(ver) == v
         }
@@ -1791,7 +1403,7 @@ class ParquetMergeTarget:
                     f"snapshot v{prev} (diff base for v{v}) already "
                     f"vacuumed — resume from a full read() instead"
                 )
-            m_old = self._read_manifest(prev)
+            m_old = root(prev)
             if m_old["num_buckets"] != m_new["num_buckets"]:
                 # the commit changed the bucket numbering (rollback
                 # across a rebucket is the one diff-branch commit that
@@ -1809,10 +1421,10 @@ class ParquetMergeTarget:
                         int(bb) for bb in m_new.get("buckets", {})
                     }
                 )
-            old = self._read_raw(at_version=prev)
+            old = self._scan_root(m_old, schema)
         if changed is not None and not changed:
             return None
-        new = self._read_raw(at_version=v)
+        new = self._scan_root(m_new, schema)
         if changed is not None:
             bucket_list = sorted(changed)
             new = new.filter(F.col(BUCKET_COLUMN).isin(bucket_list))
@@ -1913,10 +1525,7 @@ class ParquetMergeTarget:
         hold it, so a lookup against a 10⁶-file table scans O(#keys)
         data files instead of the table (the key-sorted data files
         ``_write_version`` produces make each file a tight contiguous
-        range).  Only the manifest shards holding a key's bucket are
-        read: planning is one Spark action on an unsharded table and
-        two on a sharded one, whose bucket set must be known before
-        its shards are (:meth:`_plan_touch`).  Pending MoR deletes
+        range; planning is :meth:`_plan_touch`).  Pending MoR deletes
         apply as in any read.  ``keys`` is a small driver-side list —
         that is the point-lookup contract, and the ``isin`` filter it
         becomes gives parquet pushdown; for bulk key sets use
@@ -1937,9 +1546,7 @@ class ParquetMergeTarget:
         back to the driver, so the key set itself can be arbitrarily
         large.  ``keys`` is a DataFrame with a ``key_col`` (or single)
         column.  Scans O(#candidate files of the key set), not the
-        table, and reads only the manifest shards of the keys' buckets
-        (one planning action unsharded, two sharded, as in
-        :meth:`lookup`)."""
+        table."""
         kdf, scan = self._lookup_scan(keys)
         return scan.join(
             kdf.select(F.col(self.key_col).alias(_DEL_KEY_COL)),
@@ -1964,7 +1571,7 @@ class ParquetMergeTarget:
         rewrite_data_files having its own target size)."""
         # fail fast (cheap probe) if a concurrent winner already
         # committed this version
-        self._raise_if_version_committed(version)
+        self._log.raise_if_committed(version)
         dirname = self._new_dirname(version)
         self._write_df(
             df, dirname, honor_file_cap=honor_file_cap, records_cap=records_cap
@@ -2076,7 +1683,7 @@ class ParquetMergeTarget:
         """
         from pyspark.sql import Window
 
-        self._raise_if_version_committed(version)
+        self._log.raise_if_committed(version)
         dirname = self._new_dirname(version)
         ord_struct = F.struct(*[F.col(c) for c in ordering])
         w = Window.partitionBy(F.col(BUCKET_COLUMN)).orderBy(
@@ -2387,14 +1994,8 @@ class ParquetMergeTarget:
         return sorted(out, key=lambda e: (e["b"], e["n"]))
 
     def _files_of_manifest(self, manifest: dict) -> list[dict]:
-        """The manifest's live-file entries — inline, or concatenated
-        from its immutable manifest shards (``manifest_shard_entries``)."""
-        if manifest.get("file_shards") is not None:
-            out: list[dict] = []
-            for name in self._shard_names(manifest):
-                out.extend(self._read_shard(name))
-            return out
-        return manifest["files"]
+        """The manifest's live-file entries (:meth:`MetaLog.region`)."""
+        return self._log.region(manifest)[0]
 
     def _read_files(
         self, entries: list[dict], schema, tag_version: bool = False
@@ -2454,7 +2055,7 @@ class ParquetMergeTarget:
         nonce-named dir (returned; same r10 no-clear staging rule as
         _write_version). Coalesced to one file per ~5M keys — one file
         for every realistic micro-batch."""
-        self._raise_if_version_committed(version)
+        self._log.raise_if_committed(version)
         dirname = self._new_dirname(version)
         keys_df.select(self.key_col).coalesce(
             max(1, n_keys // 5_000_000 + (1 if n_keys % 5_000_000 else 0))
@@ -2787,29 +2388,28 @@ class ParquetMergeTarget:
         if mode not in ("cow", "mor"):
             raise ValueError(f"merge mode must be 'cow' or 'mor', got {mode!r}")
 
-        if not self.exists():
-            self._commit_initial(batch)
-            return
-        # sync num_buckets from the live manifest BEFORE any bucket
+        # reading the live manifest syncs num_buckets BEFORE any bucket
         # expression is built: a writer constructed with a stale count
         # against a rebucketed table (r11) would otherwise bucket the
         # batch under the wrong numbering
-        self._manifest()
-        if mode == "mor":
-            self._merge_mor(batch)
+        manifest = self._current()
+        if manifest is None:
+            self._commit_initial(batch)
+        elif mode == "mor":
+            self._merge_mor(batch, manifest)
         else:
-            self._merge_cow(batch)
+            self._merge_cow(batch, manifest)
 
     def _plan_touch(
         self, manifest: dict, kdf: DataFrame
-    ) -> tuple[list[int], list[dict], list[dict] | None, list[dict], list[dict]]:
+    ) -> tuple[list[int], list[dict], list[dict], list[dict], list[dict]]:
         """THE touch planner of every key-driven operation (merge,
         lookup, lookup_keys, delete_keys): keys → hash buckets → files
         whose recorded [mn, mx] key range can hold a key.  ``kdf``
         carries the key column and ``BUCKET_COLUMN``.
         Returns ``(buckets, region, keep, touched, kept)``: ``region``
         is every file entry that may belong to a key's bucket, ``keep``
-        the untouched shard descriptors (``None`` unless sharded), and
+        the untouched shard descriptors (:meth:`MetaLog.region`), and
         ``touched``/``kept`` split region's files of those buckets by
         whether some key falls inside their range (``None`` stats →
         always touched).
@@ -2823,16 +2423,16 @@ class ParquetMergeTarget:
         key's bucket are read (metadata IO O(touched shards)); fusing
         it into one action would need every shard's ranges up front."""
         buckets = None
-        if manifest.get("file_shards") is None:
-            region, keep = manifest["files"], None
-        else:
+        if manifest_log.is_sharded(manifest):
             buckets = [
                 r[BUCKET_COLUMN]
                 for r in kdf.select(BUCKET_COLUMN).distinct().collect()
             ]
             if not buckets:
-                return [], [], None, [], []
-            region, keep = self._files_for_buckets(manifest, set(buckets))
+                return [], [], [], [], []
+        region, keep = self._log.region(
+            manifest, None if buckets is None else set(buckets)
+        )
         ranged = [
             f for f in region if f["mn"] is not None and f["mx"] is not None
         ]
@@ -2876,7 +2476,7 @@ class ParquetMergeTarget:
             buckets = sorted({int(r["_b"]) for r in rows})
             hit_ids = {r["fid"] for r in rows if r["fid"] is not None}
         if not buckets:
-            return [], [], None, [], []
+            return [], [], [], [], []
         bucket_set = set(buckets)
         touched = [
             f
@@ -2891,7 +2491,7 @@ class ParquetMergeTarget:
         ]
         return buckets, region, keep, touched, kept
 
-    def _merge_cow(self, batch: DataFrame) -> None:
+    def _merge_cow(self, batch: DataFrame, manifest: dict) -> None:
         # The batch IS pre-deduped (below) even though max-associativity
         # would let one max_by over the union pick the same survivor
         # whenever the order is total: on an UNDEFINED within-batch tie
@@ -2903,7 +2503,6 @@ class ParquetMergeTarget:
         # test_stream_mor_e2e_matches_cow_with_adaptive_maintenance);
         # planning still reads the RAW batch (same key set, no fold).
         batch_bucketed = self._with_bucket(batch)
-        manifest = self._manifest()
         buckets, region, keep, touched, kept_in_scope = (
             self._plan_touch(manifest, batch_bucketed)
         )
@@ -2945,19 +2544,15 @@ class ParquetMergeTarget:
         # schema + file map commit in ONE create-only manifest write:
         # a crash before it leaves the old table (and old schema) fully
         # intact — clean rollback, no half-visible drift
-        manifest["files"] = surviving + self._collect_file_stats(
-            new_version, new_dir
-        )
-        if keep is not None:
-            manifest["keep_shards"] = keep
+        new_files = self._collect_file_stats(new_version, new_dir)
         for b in buckets:
             manifest["buckets"][str(b)] = new_version
         manifest["version"] = new_version
         manifest["schema"] = wschema.jsonValue()
         manifest["op"] = "merge-cow"  # commit kind: read_changes contract
-        self._commit_manifest(manifest)
+        self._log.commit(manifest, surviving + new_files, keep)
 
-    def _merge_mor(self, batch: DataFrame) -> None:
+    def _merge_mor(self, batch: DataFrame, manifest: dict) -> None:
         """Merge-on-read upsert: append the batch's WINNING rows as new
         data files and write a key-delete file suppressing their
         superseded target rows — commit cost is O(batch), untouched
@@ -2980,7 +2575,6 @@ class ParquetMergeTarget:
         (old files cannot change type without a rewrite); column-only
         drift is append-friendly — the manifest schema grows and old
         files null-fill the new columns at read, exactly like CoW."""
-        manifest = self._manifest()
         schema = self._schema_of(manifest)
 
         batch_latest = self._with_bucket(self._dedup_latest(batch))
@@ -2993,7 +2587,7 @@ class ParquetMergeTarget:
                 != _strip_nullability(schema[f.name].dataType)
                 for f in ex2.schema.fields
             ):
-                self._merge_cow(batch)
+                self._merge_cow(batch, manifest)
                 return
             new_schema = ex2.schema
             batch2 = batch2.select(*[f.name for f in new_schema.fields])
@@ -3090,18 +2684,14 @@ class ParquetMergeTarget:
             # no candidate file can hold any batch key: pure insert
             new_dir = self._write_version(batch2, new_version)
 
-        manifest["files"] = region + self._collect_file_stats(
-            new_version, new_dir
-        )
-        if keep is not None:
-            manifest["keep_shards"] = keep
+        new_files = self._collect_file_stats(new_version, new_dir)
         manifest["deletes"] = (manifest.get("deletes") or []) + new_deletes
         for b in buckets:
             manifest["buckets"][str(b)] = new_version
         manifest["version"] = new_version
         manifest["schema"] = new_schema.jsonValue()
         manifest["op"] = "merge-mor"  # enables the O(delta) CDC fast path
-        self._commit_manifest(manifest)
+        self._log.commit(manifest, region + new_files, keep)
 
     def _commit_initial(self, batch: DataFrame) -> None:
         # Write FIRST, derive the bucket map from the written files
@@ -3117,14 +2707,15 @@ class ParquetMergeTarget:
         files = self._collect_file_stats(1, new_dir)
         if not files:
             return
-        self._commit_manifest(
+        self._log.commit(
             {
                 "version": 1,
+                "num_buckets": self.num_buckets,
                 "buckets": {str(int(e["b"])): 1 for e in files},
                 "schema": schema.jsonValue(),
-                "files": files,
                 "op": "append",  # CDC: initial commit = pure inserts
-            }
+            },
+            files,
         )
 
     def overwrite(self, df: DataFrame) -> None:
@@ -3134,25 +2725,27 @@ class ParquetMergeTarget:
         every bucket."""
         # sync num_buckets from the live manifest BEFORE the bucket
         # expression is built (same stale-writer rule as merge(), r11)
-        new_version = (self._manifest()["version"] + 1) if self.exists() else 1
+        current = self._current()
+        new_version = current["version"] + 1 if current is not None else 1
         # write first, buckets from the written entries (r17 — same
         # one-pass rule as _commit_initial); an empty source writes no
         # files and commits the zero-bucket TRUNCATE manifest (carrying
-        # the schema), which reads back as zero rows (_read_raw)
+        # the schema), which reads back as zero rows (_scan_root)
         new_dir, schema = self._write_version_latest(
             self._with_bucket(df),
             new_version,
             [self.version_col, *self.tiebreakers],
         )
         files = self._collect_file_stats(new_version, new_dir)
-        self._commit_manifest(
+        self._log.commit(
             {
                 "version": new_version,
+                "num_buckets": self.num_buckets,
                 "buckets": {str(int(e["b"])): new_version for e in files},
                 "schema": schema.jsonValue(),
-                "files": files,
                 "op": "overwrite",  # CDC: snapshot diff, deletes possible
-            }
+            },
+            files,
         )
 
     def rollback(
@@ -3184,18 +2777,18 @@ class ParquetMergeTarget:
             to_version = self._resolve_tag(to_tag)
         if to_version is None:
             raise ValueError("rollback needs to_version or to_tag")
-        versions = self.snapshot_versions()
-        if to_version not in versions:
+        listing = self._log.listing()
+        if to_version not in listing.roots:
             raise ValueError(
                 f"no snapshot v{to_version} (vacuumed or never "
-                f"committed); available: {versions}"
+                f"committed); available: {list(listing.roots)}"
             )
-        cur = self._manifest()
+        cur = self._manifest(listing)
         if to_version == cur["version"]:
             return to_version  # already there — no empty commit
-        old = self._manifest_at(to_version)
-        old_files = self._files_of_manifest(old)
-        cur_files = self._files_of_manifest(cur)
+        old = self._log.at(to_version, cur, listing)
+        old_files = self._log.region(old)[0]
+        cur_files = self._log.region(cur)[0]
         new_version = cur["version"] + 1
 
         # buckets whose visible state differs: data file set, or the
@@ -3236,20 +2829,15 @@ class ParquetMergeTarget:
             } | {b for b in set(odb) | set(cdb) if odb.get(b) != cdb.get(b)}
 
         m = dict(old)
-        if old.get("file_shards"):
-            # immutable shards of the retained old snapshot: reference
-            # by name (r9 shard-reuse machinery) instead of rewriting
-            m["files"] = []
-            m["keep_shards"] = list(old["file_shards"])
-        else:
-            m["files"] = list(old_files)
         buckets = {str(k): int(v) for k, v in (old.get("buckets") or {}).items()}
         for b in changed:
             buckets[str(b)] = new_version
         m["buckets"] = buckets
         m["version"] = new_version
         m["op"] = "rollback"
-        self._commit_manifest(m)
+        # a region touching no bucket: an old snapshot's immutable
+        # shards are referenced by name (r9 shard reuse), not rewritten
+        self._log.commit(m, *self._log.region(old, set()))
         # the restore re-commits the target snapshot's bucket count
         # (carried in m via dict(old)); resync the writer immediately
         self.num_buckets = int(old["num_buckets"])
@@ -3268,21 +2856,20 @@ class ParquetMergeTarget:
         no-op, so redelivery is idempotent (the changelog-replication
         contract, streaming/changelog.py).
 
-        Cost at scale mirrors a MoR upsert: the liveness probe prunes
-        to the keys' hash buckets then to files whose [mn, mx] range
-        can hold them (O(#keys) files on a key-sorted table), metadata
-        IO is O(touched shards), and no data file is rewritten.
-        Planning is :meth:`_plan_touch`: one Spark action on an
-        unsharded table, two on a sharded one (bucket discovery first,
-        so only the intersecting shards are read).  One aggregate over
-        the matched keys returns the live count and the delete entry's
-        stats, as in a MoR upsert.  CDC
-        (:meth:`read_changes`) emits the pre-images as ``delete`` rows
-        via the bucket-pruned snapshot diff (the commit is tagged
-        ``op="delete"``, which routes to the diff branch)."""
-        if not self.exists():
+        Cost mirrors a MoR upsert: :meth:`_plan_touch` prunes to the
+        keys' buckets and key ranges, one aggregate over the matched
+        keys returns the live count and the delete entry's stats, and
+        no data file is rewritten.  CDC (:meth:`read_changes`) emits the
+        pre-images as ``delete`` rows via the bucket-pruned snapshot
+        diff (the commit is tagged ``op="delete"``)."""
+        manifest = self._current()
+        if manifest is None:
             return 0
-        manifest = self._manifest()
+        return self._delete_keys(manifest, keys)
+
+    def _delete_keys(self, manifest: dict, keys: "DataFrame | Sequence") -> int:
+        """:meth:`delete_keys` against the already-read current
+        ``manifest``."""
         schema = self._schema_of(manifest)
         if schema is None:
             raise ValueError(f"no schema committed at {self.path}")
@@ -3326,9 +2913,6 @@ class ParquetMergeTarget:
             )
         finally:
             matched.unpersist()
-        manifest["files"] = region
-        if keep is not None:
-            manifest["keep_shards"] = keep
         manifest["deletes"] = (manifest.get("deletes") or []) + new_deletes
         # bucket→version map intentionally NOT bumped: the commit
         # writes no data dir; CDC finds the touched buckets through the
@@ -3336,7 +2920,7 @@ class ParquetMergeTarget:
         manifest["version"] = new_version
         manifest["schema"] = schema.jsonValue()
         manifest["op"] = "delete"  # CDC: snapshot diff, deletes certain
-        self._commit_manifest(manifest)
+        self._log.commit(manifest, region, keep)
         return n_matched
 
     def delete_where(self, condition, *more_preds) -> int:
@@ -3353,9 +2937,13 @@ class ParquetMergeTarget:
         scan (the Iceberg delete-with-predicate planning shape: a
         date-ranged delete on a date-clustered 100 TB table scans
         O(matching files), not O(table)).  For pure key predicates
-        prefer :meth:`delete_keys` directly, which skips the scan."""
-        if not self.exists():
+        prefer :meth:`delete_keys` directly, which skips the scan.
+        The qualifying scan and the delete commit share one read of the
+        current manifest."""
+        manifest = self._current()
+        if manifest is None:
             return 0
+        schema = self._schema_of(manifest)
         if isinstance(condition, (tuple, list)):
             # ANY tuple/list routes to the predicate path so a typo'd
             # op gets _parse_predicates' "op not in ..." error, never
@@ -3365,7 +2953,7 @@ class ParquetMergeTarget:
                 preds = (*condition, *more_preds)
             else:
                 preds = (condition, *more_preds)
-            qualifying = self.read_where(*preds)
+            qualifying = self._read_where(manifest, schema, preds)
         elif more_preds:
             raise ValueError(
                 "extra predicates are only valid when every argument "
@@ -3377,27 +2965,15 @@ class ParquetMergeTarget:
                 if isinstance(condition, str)
                 else condition
             )
-            qualifying = self.read().filter(cond)
-        return self.delete_keys(qualifying.select(self.key_col))
+            qualifying = (
+                self._scan_root(manifest, schema)
+                .drop(BUCKET_COLUMN)
+                .filter(cond)
+            )
+        return self._delete_keys(manifest, qualifying.select(self.key_col))
 
     # -- maintenance (reference ST8: OPTIMIZE / remove_orphan_files /
     #    ANALYZE — main.scala:46,117, crd-parquet-stream.yaml:235-296) --
-
-    def _live_files(
-        self, manifest: dict | None = None
-    ) -> dict[int, list[tuple[str, int]]]:
-        """bucket -> live (path, bytes) data files, straight from the
-        manifest's file entries (pure metadata — no FS listing at all,
-        exactly Iceberg's manifest read).  Pass an already-read
-        ``manifest`` to avoid a second metadata round-trip."""
-        if manifest is None:
-            manifest = self._manifest()
-        out: dict[int, list[tuple[str, int]]] = {}
-        for f in self._files_of_manifest(manifest):
-            out.setdefault(int(f["b"]), []).append(
-                (self._file_path(f), int(f["sz"]))
-            )
-        return out
 
     def compact(
         self,
@@ -3423,7 +2999,7 @@ class ParquetMergeTarget:
         so ``read_where`` still has multiple ranges per bucket to
         prune after maintenance."""
         manifest = self._manifest()
-        files = self._files_of_manifest(manifest)
+        files = self._log.region(manifest)[0]
         deletes = manifest.get("deletes") or []
         per_bucket: dict[int, int] = {}
         for f in files:
@@ -3455,9 +3031,7 @@ class ParquetMergeTarget:
             # their files vacuumed) — spend them with a metadata-only
             # commit instead of crashing on an empty scan
             new_files = []
-        manifest["files"] = [
-            f for f in files if int(f["b"]) not in frag_set
-        ] + new_files
+        kept = [f for f in files if int(f["b"]) not in frag_set]
         # every delete entry is spent: frag_set includes ALL delete
         # buckets by construction, and the rewritten files' version is
         # newer than every delete sequence
@@ -3466,91 +3040,32 @@ class ParquetMergeTarget:
             manifest["buckets"][str(b)] = new_version
         manifest["version"] = new_version
         manifest["op"] = "compact"  # CDC: logically empty, skipped
-        self._commit_manifest(manifest)  # schema unchanged: carried over
+        self._log.commit(manifest, kept + new_files)  # schema carried over
         return len(frag_set)
 
     def maintenance_metrics(self, small_file_bytes: int = 8 << 20) -> dict:
-        """Metadata-only maintenance signals (no data scan, no FS
-        walk beyond the ROOT manifest read): live/small data file
-        counts and pending MoR delete volume.  This is what an
-        adaptive maintenance trigger should poll per batch — the
-        counter-only cadence reacts to time, these react to the actual
-        read-path pressure (r7 VERDICT item 1; reference batches
-        maintenance the same way but on a real table format where the
-        engine reads the snapshot summary, docs/crd.md:150-182).
-
-        Sharded manifests answer from the root's ``n_files`` +
-        ``size_hist`` summary (written at commit) — per-batch polling
-        of a 10^6-file table must not re-read ~100 MB of shard JSON.
-        The histogram is power-of-two bucketed, so the small-file count
-        is the exact count of files whose size bucket fits entirely
-        under the threshold (a ≤2× conservative rounding, fine for a
-        trigger)."""
-        # one listing serves both the current-manifest walk and the
-        # snapshot-pressure signal (every commit strands a root until
-        # vacuum; the count is the vacuum-debt meter, r9 review)
-        versions = self.snapshot_versions()
-        manifest = None
-        for v in reversed(versions):
-            try:
-                manifest = self._read_manifest(v)
-                break
-            except FileNotFoundError:
-                continue
-        if manifest is None:
-            raise FileNotFoundError(
-                f"no committed manifest under {self._meta_path}"
-            )
+        """Metadata-only maintenance signals from one listing and one
+        root read — what an adaptive maintenance trigger polls per batch
+        (reference: the engine reads the snapshot summary,
+        docs/crd.md:150-182).  File counts come from
+        :func:`manifest.summary`, which never reads a shard; gating on
+        ``coalescable_small_files`` (small files sharing a bucket) rather
+        than all small files is what makes the adaptive loop convergent.
+        ``snapshot_count`` is the vacuum-debt meter: every commit
+        strands a root until vacuum."""
+        listing = self._log.listing()
+        manifest = self._manifest(listing)
         deletes = manifest.get("deletes") or []
-        out = {
+        summary = manifest_log.summary(manifest, small_file_bytes)
+        return {
             "version": int(manifest["version"]),
-            "snapshot_count": len(versions),
+            "snapshot_count": len(listing.roots),
             "delete_file_count": len(deletes),
             "delete_bytes": sum(int(d["sz"]) for d in deletes),
+            "file_count": summary["file_count"],
+            "small_file_count": summary["small_file_count"],
+            "coalescable_small_files": summary["coalescable_small_files"],
         }
-        shards = manifest.get("file_shards")
-        if shards is not None:
-            out["file_count"] = int(manifest["n_files"])
-            out["small_file_count"] = sum(
-                int(c)
-                for k, c in manifest["size_hist"].items()
-                if (1 << int(k)) - 1 <= small_file_bytes
-            )
-            # exact per-shard coalescable counts (files of a fully-
-            # under-threshold size class sharing a bucket with ≥2 such
-            # files), summed from the descriptors' cumulative step
-            # functions — still zero shard reads
-            k = self._size_class_at(small_file_bytes)
-            out["coalescable_small_files"] = sum(
-                self._step_at(s["coal"], k) for s in shards
-            )
-            return out
-        files = manifest["files"]
-        out["file_count"] = len(files)
-        # ONE definition of "small" across layouts (r9 review): a file
-        # whose power-of-two size class fits entirely under the
-        # threshold — the only rule a sharded root's histogram can
-        # answer, so the inline path uses it too (otherwise a table
-        # crossing the shard threshold silently narrows the criterion
-        # by up to 2x)
-        k = self._size_class_at(small_file_bytes)
-        out["small_file_count"] = sum(
-            1 for f in files if int(f["sz"]).bit_length() <= k
-        )
-        # small files compact_minor can actually merge: those sharing a
-        # bucket with another small file.  Gating on THIS count (not
-        # the raw small count) is what makes the adaptive loop
-        # convergent — a table of many 1-per-bucket small files is just
-        # a small table, and a trigger minor compaction cannot satisfy
-        # would otherwise fire forever (r8 review find)
-        per_bucket: dict[int, int] = {}
-        for f in files:
-            if int(f["sz"]).bit_length() <= k:
-                per_bucket[int(f["b"])] = per_bucket.get(int(f["b"]), 0) + 1
-        out["coalescable_small_files"] = sum(
-            n for n in per_bucket.values() if n >= 2
-        )
-        return out
 
     def suggest_num_buckets(
         self, target_bucket_bytes: int = 1 << 30
@@ -3565,21 +3080,15 @@ class ParquetMergeTarget:
         suggestion is always legal for :meth:`rebucket`.
 
         Cost: one root manifest read.  On a sharded root total bytes
-        come from the power-of-two size histogram's upper bound (≤2×
-        over, never under — a conservative advisor over-splits rather
-        than under-splits).  Hysteresis is built in: no suggestion
+        come from the power-of-two size histogram's upper bound
+        (:func:`manifest.summary`'s ``bytes_bound``: ≤2× over, never
+        under — a conservative advisor over-splits rather than
+        under-splits).  Hysteresis is built in: no suggestion
         moves unless the mean is ≥2× off target, so a borderline table
         never oscillates."""
-        manifest = self._manifest()
+        summary = manifest_log.summary(self._manifest())
         n = int(self.num_buckets)
-        approx = "file_shards" in manifest
-        if approx:
-            total = sum(
-                int(c) * (1 << int(k))
-                for k, c in manifest["size_hist"].items()
-            )
-        else:
-            total = sum(int(f["sz"]) for f in manifest["files"])
+        total = summary["bytes_bound"]
         avg = total / n if n else 0.0
         suggested = n
         if avg >= 2 * target_bucket_bytes:
@@ -3601,7 +3110,7 @@ class ParquetMergeTarget:
             "total_bytes": int(total),
             "avg_bucket_bytes": int(avg),
             "target_bucket_bytes": int(target_bucket_bytes),
-            "approx": approx,
+            "approx": summary["total_bytes"] is None,
         }
 
     def run_adaptive_maintenance(
@@ -3663,9 +3172,10 @@ class ParquetMergeTarget:
             or on_snapshots
         ):
             return {"ran": False, "escalated": False}
-        if not self.exists():
+        try:
+            m0 = self.maintenance_metrics(small_file_bytes)
+        except FileNotFoundError:  # nothing committed yet
             return {"ran": False, "escalated": False}
-        m0 = self.maintenance_metrics(small_file_bytes)
         vacuum_due = bool(
             on_snapshots and m0["snapshot_count"] >= on_snapshots
         )
@@ -3722,28 +3232,12 @@ class ParquetMergeTarget:
 
         Both land in one version + one atomic manifest flip.  Cost is
         O(small files + delete files), not O(table) — the full
-        ``compact()`` remains the deep-clean.  On a (r9) bucket-ranged
-        sharded manifest that bound extends to the METADATA too: only
-        shards whose root descriptor shows a coalescable small file are
-        read; the rest are reused by name, so the minor pass stays
-        O(debris) in the 10^6-file regime.  Returns counts."""
+        ``compact()`` remains the deep-clean.  The bound holds for the
+        metadata too: only shards whose descriptor shows a coalescable
+        small file are read (:meth:`MetaLog.coalescable_region`).
+        Returns counts."""
         manifest = self._manifest()
-        shards = manifest.get("file_shards")
-        keep: list[dict] | None = None
-        if shards is not None:
-            k = self._size_class_at(small_file_bytes)
-            cand_names = {
-                s["n"] for s in shards if self._step_at(s["coal"], k) > 0
-            }
-            files = []
-            keep = []
-            for s in shards:
-                if s["n"] in cand_names:
-                    files.extend(self._read_shard(s["n"]))
-                else:
-                    keep.append(s)
-        else:
-            files = manifest["files"]
+        files, keep = self._log.coalescable_region(manifest, small_file_bytes)
         deletes = manifest.get("deletes") or []
         schema = self._schema_of(manifest)
 
@@ -3751,7 +3245,7 @@ class ParquetMergeTarget:
         # rule the metrics and the sharded candidate filter use (r9
         # review: a raw-threshold rewrite criterion here would silently
         # narrow by up to 2x the moment a table's manifest shards)
-        k_small = self._size_class_at(small_file_bytes)
+        k_small = manifest_log.size_class_at(small_file_bytes)
         per_bucket: dict[int, list[dict]] = {}
         for f in files:
             if int(f["sz"]).bit_length() <= k_small:
@@ -3790,7 +3284,7 @@ class ParquetMergeTarget:
             )
             # nonce-namespaced (r10): fresh dir per attempt, no clear
             # of anything a concurrent winner might reference
-            self._raise_if_version_committed(new_version)
+            self._log.raise_if_committed(new_version)
             del_dirname = self._new_dirname(new_version)
             # size the file count from pending bytes (consolidation
             # only shrinks) — no extra count() action
@@ -3806,19 +3300,17 @@ class ParquetMergeTarget:
             ]
 
         small_set = {(int(f["v"]), int(f["b"]), f["n"]) for f in small}
-        manifest["files"] = [
+        kept = [
             f
             for f in files
             if (int(f["v"]), int(f["b"]), f["n"]) not in small_set
-        ] + new_files
-        if keep is not None:
-            manifest["keep_shards"] = keep
+        ]
         manifest["deletes"] = new_deletes
         for f in new_files:
             manifest["buckets"][str(int(f["b"]))] = new_version
         manifest["version"] = new_version
         manifest["op"] = "compact-minor"  # CDC: logically empty, skipped
-        self._commit_manifest(manifest)  # schema unchanged: carried over
+        self._log.commit(manifest, kept + new_files, keep)  # schema kept
         return {
             "delete_files_merged": len(deletes) if do_deletes else 0,
             "small_files_rewritten": len(small),
@@ -3863,70 +3355,35 @@ class ParquetMergeTarget:
     # * :meth:`vacuum` treats marker-referenced staging dirs as live;
     #   :meth:`rebucket_abort` reclaims an abandoned migration.
 
-    def _rebucket_marker_path(self, nb: int, u: int) -> str:
-        return fs_join(
-            self._meta_path, f"rebucket-to{int(nb)}-u{int(u):07d}.json"
-        )
-
-    def _rebucket_marker_names(self) -> list[str]:
-        try:
-            names = self._fio.list_names(self._meta_path)
-        except FileNotFoundError:
-            return []
-        return sorted(n for n in names if n.startswith("rebucket-"))
-
-    def _rebucket_read_marker(self, nb: int, u: int) -> dict | None:
-        try:
-            return json.loads(
-                self._fio.read_text(self._rebucket_marker_path(nb, u))
-            )
-        except FileNotFoundError:
-            return None
-
     def _rebucket_clear_markers(
-        self, manifest: dict | None, only_nb: int | None = None
+        self,
+        live_files: list[dict],
+        listing: manifest_log.Listing | None = None,
+        only_nb: int | None = None,
     ) -> int:
-        """Delete rebucket markers, reclaiming each staging dir the
-        given manifest does NOT reference (r11 review find #3): spent
-        markers of a just-flipped migration point at now-live data, so
-        only the marker file goes; non-live staging dirs drop with
-        their marker — no silent vacuum debt.  Returns markers removed.
+        """Delete the rebucket markers in ``listing`` (None: list now),
+        reclaiming each staging dir no entry of ``live_files`` (the
+        committed table's file list) lives in (spent markers of a just-flipped migration point at live data,
+        so only the marker goes).  Returns markers removed.
 
-        ``only_nb`` scopes the sweep to markers targeting that bucket
-        count.  The already-flipped early return in :meth:`rebucket`
-        MUST pass the current count (r12 advice, race): a
-        different-count migration may be in flight from the very
-        manifest version we just read, and the early return performs
-        no commit — nothing fences that writer's upcoming CAS, so
-        deleting its staging dirs (or even just its marker files,
-        which are what shields the dirs from :meth:`vacuum`) lets it
-        commit a manifest referencing deleted data.  Same-count
-        markers are always safe to reclaim once the table IS at that
-        count: any writer still staging toward it began from an older
-        version (a reader of the current version early-returns before
-        staging), and the flip's version bump guarantees that writer's
-        commit fails CAS.  Unscoped sweeps remain correct where a
-        fence exists: after a successful flip (the bump itself) and in
-        the explicit :meth:`rebucket_abort` (documented to abandon ALL
-        in-progress migrations)."""
-        live_dirs: set[str] = set()
-        if manifest is not None:
-            live_dirs = {
-                self._dirname_of(f) for f in self._files_of_manifest(manifest)
-            }
+        ``only_nb`` scopes the sweep to one target count.  The
+        already-flipped early return in :meth:`rebucket` MUST pass it: a
+        different-count migration may be in flight from the very version
+        just read, and with no commit to fence its CAS, deleting its
+        staging (or the markers shielding it from :meth:`vacuum`) would
+        let it commit references to deleted data.  Same-count markers
+        are safe once the table IS at that count (the flip's version
+        bump fails any such writer's CAS), and unscoped sweeps are safe
+        after a flip and in :meth:`rebucket_abort`."""
+        live_dirs = {self._dirname_of(f) for f in live_files}
         count = 0
-        for name in self._rebucket_marker_names():
-            mpath = fs_join(self._meta_path, name)
-            try:
-                m = json.loads(self._fio.read_text(mpath))
-            except FileNotFoundError:
-                continue
+        for name, m in self._log.markers(listing):
             if only_nb is not None and int(m.get("nb", -1)) != int(only_nb):
                 continue
             d = m.get("d")
             if d and d not in live_dirs:
                 self._fio.delete(self._data_dir(d), recursive=True)
-            self._fio.delete(mpath)
+            self._log.drop(name)
             count += 1
         return count
 
@@ -3975,11 +3432,10 @@ class ParquetMergeTarget:
         staging dir and persist its marker.  Self-owned stale attempts
         (fingerprint no longer matching) are reclaimed first — never
         another writer's files."""
-        path = self._rebucket_marker_path(nb, u)
         if stale is not None:
             if stale.get("d"):
                 self._fio.delete(self._data_dir(stale["d"]), recursive=True)
-            self._fio.delete(path)
+            self._log.drop(manifest_log.marker_name(nb, u))
         unit_files = [f for f in files if int(f["b"]) in old_buckets]
         if unit_files:
             rows = self._scan_with_deletes(unit_files, schema, deletes)
@@ -3998,7 +3454,7 @@ class ParquetMergeTarget:
             "d": dirname,
             "files": entries,
         }
-        self._fio.create_text(path, json.dumps(marker))
+        self._log.write_marker(marker)
         return marker
 
     def rebucket(
@@ -4027,7 +3483,8 @@ class ParquetMergeTarget:
         if nb < 1:
             raise ValueError(f"new_num_buckets must be >= 1, got {nb}")
         for _attempt in range(max(1, int(commit_retries))):
-            manifest = self._manifest()  # syncs self.num_buckets
+            listing = self._log.listing()
+            manifest = self._manifest(listing)  # syncs self.num_buckets
             n = int(self.num_buckets)
             if n == nb:
                 # already flipped (possibly by a prior call that
@@ -4039,7 +3496,9 @@ class ParquetMergeTarget:
                 # concurrent migration in flight from this very
                 # version has nothing fencing it — reclaiming it
                 # belongs to rebucket_abort()/its own completion.
-                self._rebucket_clear_markers(manifest, only_nb=nb)
+                self._rebucket_clear_markers(
+                    self._log.region(manifest)[0], listing, only_nb=nb
+                )
                 return {
                     "done": True,
                     "version": int(manifest["version"]),
@@ -4055,7 +3514,7 @@ class ParquetMergeTarget:
             schema = self._schema_of(manifest)
             if schema is None:
                 raise ValueError(f"no schema committed at {self.path}")
-            files = self._files_of_manifest(manifest)
+            files = self._log.region(manifest)[0]
             deletes = manifest.get("deletes") or []
             units = min(n, nb)
             markers: dict[int, dict] = {}
@@ -4063,7 +3522,7 @@ class ParquetMergeTarget:
             for u in range(units):
                 old_buckets = self._rebucket_unit_buckets(n, nb, u)
                 fp = self._rebucket_fingerprint(files, deletes, old_buckets)
-                m = self._rebucket_read_marker(nb, u)
+                m = self._log.read_marker(nb, u)
                 if m is not None and m.get("fp") == fp:
                     markers[u] = m
                 else:
@@ -4098,22 +3557,20 @@ class ParquetMergeTarget:
                     e["v"] = new_version
                     entries.append(e)
             m_new = dict(manifest)
-            m_new["files"] = entries
-            m_new.pop("keep_shards", None)
             m_new["deletes"] = []  # folded into the staged rewrites
             m_new["buckets"] = {str(b): new_version for b in range(nb)}
             m_new["version"] = new_version
             m_new["num_buckets"] = nb
             m_new["op"] = "rebucket"  # CDC: logically empty, skipped
             try:
-                self._commit_manifest(m_new)
+                self._log.commit(m_new, entries)
             except ConcurrentWriteError:
                 continue  # re-read, re-validate markers, retry
             self.num_buckets = nb
-            # m_new references this migration's staging dirs (live
-            # now); any abandoned different-count migration's staging
+            # the committed entries live in this migration's staging
+            # dirs; any abandoned different-count migration's staging
             # is reclaimed along with its markers
-            self._rebucket_clear_markers(m_new)
+            self._rebucket_clear_markers(entries)
             return {"done": True, "version": new_version, "staged": staged}
         raise ConcurrentWriteError(
             f"rebucket lost the commit race {commit_retries} times at "
@@ -4125,8 +3582,9 @@ class ParquetMergeTarget:
         marker and its staging dir (skipping dirs the live manifest
         references — markers left by a crash AFTER a successful flip
         point at live data).  Returns the number of markers removed."""
-        manifest = self._manifest() if self.exists() else None
-        return self._rebucket_clear_markers(manifest)
+        listing = self._log.listing()
+        live = self._log.region(self._manifest(listing))[0] if listing.roots else []
+        return self._rebucket_clear_markers(live, listing)
 
     def vacuum(
         self,
@@ -4140,58 +3598,44 @@ class ParquetMergeTarget:
         superseded versions) and the expired snapshot manifests
         themselves — history is reclaimed, the live table untouched.
 
-        Retention mirrors Iceberg ``expire_snapshots`` (the
-        reference's streaming maintenance calls exactly that with a
-        ``retention_threshold``, docs/crd.md:150-182): the newest
-        ``keep_last`` snapshots ALWAYS survive, and with
-        ``older_than_seconds`` every snapshot committed inside that
-        window additionally survives — so time travel
-        (``read(at_version=...)``) and the CDC changelog
-        (``read_changes(since)``) keep working across the retained
-        window.  The default (1, None) reclaims all history (the
-        original contract).  A version dir can be PARTIALLY live (kept
-        files ride alongside superseded ones), so reclamation is
-        per-file inside referenced dirs and per-dir otherwise.  Returns
-        removed entries; ``dry_run=True`` returns exactly what a real run would remove
-        without touching anything (audit before reclaiming a 100 TB
-        table's history).
+        Retention mirrors Iceberg ``expire_snapshots`` (the reference
+        calls it with a ``retention_threshold``, docs/crd.md:150-182):
+        the newest ``keep_last`` snapshots, every tagged one and, with
+        ``older_than_seconds``, every one committed inside that window
+        survive, so time travel and :meth:`read_changes` keep working
+        across them.  Reclamation is per-file inside partially live
+        version dirs and per-dir otherwise.  Returns removed entries;
+        ``dry_run=True`` returns them without touching anything.
 
         ``orphan_grace_seconds`` is the ``remove_orphan_files
-        older_than`` guard (Iceberg defaults it to 3 DAYS for exactly
-        this reason): files referenced by NO manifest at all — not
-        even an expiring one — are indistinguishable from a CONCURRENT
-        writer's mid-commit staging (data files land before the
-        manifest/marker that references them), so orphans newer than
-        the grace are left alone.  Snapshot-EXPIRED files are
-        metadata-known dead and reclaim immediately regardless.  The
-        default 0.0 keeps the single-writer contract (a stream's own
-        maintenance loop, the reference's deployment shape) where
-        immediate crash-leftover reclaim is correct; raise it whenever
-        another writer might be mid-commit during vacuum."""
+        older_than`` guard: files no manifest references at all are
+        indistinguishable from a CONCURRENT writer's mid-commit staging,
+        so orphans newer than the grace are left alone; snapshot-EXPIRED
+        files reclaim immediately regardless.  The default 0.0 suits the
+        single-writer contract; raise it whenever another writer might
+        be mid-commit during vacuum."""
         if keep_last < 1:
             raise ValueError(f"keep_last must be >= 1, got {keep_last}")
-        manifest = self._manifest()
+        log = self._log
+        listing = log.listing()
+        manifest = self._manifest(listing)
         current = manifest["version"]
-        versions = self.snapshot_versions()
-        committed = [v for v in versions if v <= current]
+        root = log.reader(manifest, listing)  # each root read once
+        committed = [v for v in listing.roots if v <= current]
         retained_vs = committed[-keep_last:]
         # tagged snapshots NEVER expire (Iceberg refs): a tag is the
         # user's statement that this exact state is load-bearing
         tagged = [
-            v for v in set(self.tags().values()) if v in set(committed)
+            v for v in set(log.tags(listing).values()) if v in set(committed)
         ]
         retained_vs = sorted(set(retained_vs) | set(tagged))
         if older_than_seconds is not None:
             cutoff = time.time() - older_than_seconds
             for v in committed[:-keep_last]:
-                m = self._manifest_at(v)
-                if float(m.get("committed_at") or 0) >= cutoff:
+                if float(root(v).get("committed_at") or 0) >= cutoff:
                     retained_vs.append(v)
             retained_vs = sorted(set(retained_vs))
-        manifests = [
-            manifest if v == current else self._manifest_at(v)
-            for v in retained_vs
-        ]
+        manifests = [root(v) for v in retained_vs]
         data_root = fs_join(self.path, "data")
         deletes_root = fs_join(self.path, "deletes")
         fio = self._fio
@@ -4217,15 +3661,12 @@ class ParquetMergeTarget:
             for v in committed:
                 if v in set(retained_vs):
                     continue
-                try:
-                    m = self._manifest_at(v, current=manifest)
-                except FileNotFoundError:
-                    continue
+                m = root(v)
                 expired_data_dirs |= {
-                    self._dirname_of(f) for f in self._files_of_manifest(m)
+                    self._dirname_of(f) for f in log.region(m)[0]
                 }
                 expired_del_dirs |= {d["d"] for d in m.get("deletes") or []}
-                expired_shards |= set(self._shard_names(m))
+                expired_shards |= set(manifest_log.shard_names(m))
 
         def young_orphan(path: str) -> bool:
             if grace_ms <= 0:
@@ -4243,27 +3684,20 @@ class ParquetMergeTarget:
         live_del: dict[str, set[str]] = {}
         live_shards: set[str] = set()
         for m in manifests:
-            for f in self._files_of_manifest(m):
+            for f in log.region(m)[0]:
                 live_data.setdefault(self._dirname_of(f), set()).add(
                     (int(f["b"]), f["n"])
                 )
             for d in m.get("deletes") or []:
                 live_del.setdefault(d["d"], set()).add(d["n"])
-            live_shards |= set(self._shard_names(m))
+            live_shards |= set(manifest_log.shard_names(m))
 
         # staged-but-uncommitted rebucket dirs are referenced only by
         # their marker files: an in-progress migration must survive
         # routine maintenance (staging a 100 TB table runs for days
         # alongside regular vacuums).  Abandoned migrations are
         # reclaimed by rebucket_abort(), never here.
-        marker_dirs: set[str] = set()
-        for name in self._rebucket_marker_names():
-            try:
-                m = json.loads(fio.read_text(fs_join(self._meta_path, name)))
-            except FileNotFoundError:
-                continue
-            if m.get("d"):
-                marker_dirs.add(m["d"])
+        marker_dirs = {m["d"] for _, m in log.markers(listing) if m.get("d")}
 
         # data dirs: nonce-named attempt dirs never referenced by any
         # retained manifest — crashed, concurrency-losing, or expired
@@ -4314,12 +3748,12 @@ class ParquetMergeTarget:
                     removed.append(f"deletes/{name}/{fname}")
 
         retained_set = set(retained_vs)
-        for v in versions:
+        for v in listing.roots:
             # never touch versions beyond the snapshot this run loaded:
             # a concurrent writer may have just committed them (their
             # expiry belongs to a vacuum that SEES them as history)
             if v not in retained_set and v <= current:
-                reclaim(self._manifest_file(v))
+                reclaim(log.path(manifest_log.root_name(v)))
         # shard files belong to the roots that reference them: drop
         # every shard not referenced by a RETAINED manifest — expired
         # snapshots' shards immediately, unreferenced orphans subject
@@ -4327,16 +3761,12 @@ class ParquetMergeTarget:
         # its shards BEFORE the root CAS that references them).  Shard
         # reuse (r9) means live shard names can carry OLDER versions
         # than their root; membership is by name, not version.
-        for name in fio.list_names(self._meta_path):
-            if (
-                name.startswith("manifest-v")
-                and "-shard-" in name
-                and name not in live_shards
+        for name in listing.shards:
+            path = log.path(name)
+            if name not in live_shards and (
+                name in expired_shards or not young_orphan(path)
             ):
-                if name in expired_shards or not young_orphan(
-                    fs_join(self._meta_path, name)
-                ):
-                    reclaim(fs_join(self._meta_path, name))
+                reclaim(path)
         return removed
 
     def stats(self, with_row_count: bool = True) -> dict:
@@ -4346,62 +3776,26 @@ class ParquetMergeTarget:
         pass ``with_row_count=False`` for the pure-metadata variant in
         hot maintenance loops."""
         manifest = self._manifest()
-        files = self._live_files(manifest)
-        entries = [e for fs in files.values() for e in fs]
+        files = self._log.region(manifest)[0]
         deletes = manifest.get("deletes") or []
         return {
-            "row_count": self.read().count() if with_row_count else None,
-            "bucket_count": len(files),
-            "file_count": len(entries),
-            "total_bytes": sum(size for _, size in entries),
+            "row_count": (
+                self._scan_root(manifest, self._schema_of(manifest)).count()
+                if with_row_count
+                else None
+            ),
+            "bucket_count": len({int(f["b"]) for f in files}),
+            "file_count": len(files),
+            "total_bytes": sum(int(f["sz"]) for f in files),
             "delete_file_count": len(deletes),
             "delete_bytes": sum(int(d["sz"]) for d in deletes),
         }
 
-    # -- watermark (reference ST2) ----------------------------------------
-    #
-    # Create-only protocol: each commit CREATES
-    # ``watermark-<20-digit-zero-padded-value>.json``; the current
-    # watermark is the MAX such name in a listing. Readers never open
-    # the file (the name IS the value), so there is no window in which
-    # a reader can observe a deleted-but-not-yet-replaced watermark —
-    # the round-3 S3A caveat is gone by construction. Older files are
-    # pruned immediately after a successful commit (safe: any listing
-    # taken before the prune still contains the new max).
-
-    _WM_PREFIX = "watermark-"
-
-    def _watermark_versions(self) -> list[int]:
-        names = self._fio.list_names(self._meta_path)
-        p, s = self._WM_PREFIX, ".json"
-        return sorted(
-            int(n[len(p) : -len(s)])
-            for n in names
-            if n.startswith(p) and n.endswith(s) and n[len(p) : -len(s)].isdigit()
-        )
+    # -- watermark (reference ST2; protocol in operators/manifest.py) --------
 
     def watermark(self) -> int | None:
         """Last committed MAX(version) (reference BlobSourceWatermark)."""
-        versions = self._watermark_versions()
-        return versions[-1] if versions else None
-
-    def _watermark_file(self, version: int) -> str:
-        return fs_join(self._meta_path, f"{self._WM_PREFIX}{version:020d}.json")
+        return self._log.watermark()
 
     def commit_watermark(self, version: int | None) -> None:
-        if version is None:
-            return
-        version = int(version)
-        if version < 0:
-            raise ValueError(
-                f"watermark must be non-negative (blob createdOn / version "
-                f"timestamps), got {version}"
-            )
-        stale = self._watermark_versions()
-        if stale and version <= stale[-1]:
-            return  # monotonic
-        self._fio.create_text(
-            self._watermark_file(version), json.dumps({"version": version})
-        )
-        for v in stale:  # prune superseded values (readers are list-max)
-            self._fio.delete(self._watermark_file(v))
+        self._log.commit_watermark(version)

@@ -63,7 +63,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from arcane_stream_parquet_spark.fsio import HadoopFileIO, fs_join
+from arcane_stream_parquet_spark.fsio import HadoopFileIO
+from arcane_stream_parquet_spark.operators.manifest import MetaLog
 from arcane_stream_parquet_spark.functions.keys import (
     MERGE_KEY_COLUMN,
     VERSION_COLUMN,
@@ -398,36 +399,13 @@ class _SqlMergeTargetBase:
             out["row_count"] = self.spark.table(self.table).count()
         return out
 
-    # -- watermark: same create-only fsio protocol as ParquetMergeTarget ---
-
-    @property
-    def _meta_path(self) -> str:
-        return fs_join(self.path, "_asp_meta")
-
-    def _watermark_versions(self) -> list[int]:
-        try:
-            names = self._fio.list_names(self._meta_path)
-        except FileNotFoundError:
-            return []
-        out = []
-        for n in names:
-            if n.startswith("watermark-v") and n.endswith(".json"):
-                out.append(int(n[len("watermark-v"):-len(".json")]))
-        return sorted(out)
+    # -- watermark: ParquetMergeTarget's create-only metadata log ---------
 
     def watermark(self) -> int | None:
-        versions = self._watermark_versions()
-        return versions[-1] if versions else None
+        return MetaLog(self._fio, self.path).watermark()
 
     def commit_watermark(self, version: int | None) -> None:
-        if version is None:
-            return
-        current = self.watermark()
-        if current is not None and version <= current:
-            return
-        self._fio.create_text(
-            fs_join(self._meta_path, f"watermark-v{version:020d}.json"), "{}"
-        )
+        MetaLog(self._fio, self.path).commit_watermark(version)
 
 
 @dataclass

@@ -119,11 +119,10 @@ class BlobParquetSource:
         self,
         spark: SparkSession,
         max_files_per_trigger: int | None = None,
-        max_bytes_per_trigger: str | None = None,
     ) -> DataFrame:
         """Change-capture scan (reference E1). The file-source checkpoint
-        provides the new-file watermark; trigger caps are the
-        throughput-shaper equivalent (reference ST6)."""
+        provides the new-file watermark; the per-trigger file cap is
+        the throughput-shaper equivalent (reference ST6)."""
         configure_session(spark)
         schema = self.schema if self.schema is not None else self.sniff_schema(spark)
         reader = spark.readStream.schema(schema).options(**self.extra_read_options)
@@ -134,8 +133,6 @@ class BlobParquetSource:
         # filter only gates first-contact old files (reference P3).
         if max_files_per_trigger is not None:
             reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-        if max_bytes_per_trigger is not None:
-            reader = reader.option("maxBytesPerTrigger", max_bytes_per_trigger)
         out = self._enrich(reader.format(self.format).load(self.path))
         if self.modified_after:
             cutoff_us = int(

@@ -46,8 +46,8 @@ class StreamRunner:
     ``change_capture_interval_seconds`` mirrors the reference's poll
     cadence (default 300 s, crd-parquet-stream.yaml:126-134; jitter is
     an accepted deviation — Spark's trigger is fixed-rate).
-    ``max_files_per_trigger`` / ``max_bytes_per_trigger`` are the
-    throughput-shaper equivalents (ST6).
+    ``max_files_per_trigger`` is the throughput-shaper equivalent
+    (ST6).
     """
 
     source: BlobParquetSource
@@ -55,7 +55,6 @@ class StreamRunner:
     checkpoint_dir: str
     change_capture_interval_seconds: float = 300.0
     max_files_per_trigger: int | None = None
-    max_bytes_per_trigger: str | None = None
     on_batch: list = field(default_factory=list)  # hooks: fn(batch_id, df)
     # ST8 maintenance cadence (reference TargetMaintenanceProcessor,
     # main.scala:46,117: OPTIMIZE/expire/remove_orphans/ANALYZE every
@@ -141,7 +140,6 @@ class StreamRunner:
         stream = self.source.read_stream(
             spark,
             max_files_per_trigger=self.max_files_per_trigger,
-            max_bytes_per_trigger=self.max_bytes_per_trigger,
         )
         writer = (
             stream.writeStream.foreachBatch(self._merge_batch)

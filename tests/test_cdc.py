@@ -19,6 +19,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from arcane_stream_parquet_spark.operators import manifest as manifest_log
 from arcane_stream_parquet_spark.operators.merge import (
     CHANGE_TYPE_COLUMN,
     COMMIT_VERSION_COLUMN,
@@ -333,8 +334,9 @@ def test_key_driven_callers_share_the_touch_planner(
     keys' buckets; lookup submits no job beyond its planning, and
     delete_keys builds its entry from its own aggregate (no read-back
     of the delete file it just wrote)."""
-    kw = {} if shard_entries is None else {"manifest_shard_entries": shard_entries}
-    t = make_target(spark, tmp_path, **kw)
+    if shard_entries is not None:
+        monkeypatch.setattr(manifest_log, "SHARD_ENTRIES", shard_entries)
+    t = make_target(spark, tmp_path)
     key = F.col("arcane_merge_key")
     t.merge(
         df_of(spark, [(f"k{i:03d}", 1, "a") for i in range(200)] + [(None, 1, "n")])
@@ -343,9 +345,11 @@ def test_key_driven_callers_share_the_touch_planner(
     assert bool(t._manifest().get("file_shards")) == (shard_entries is not None)
 
     read_shards: list[str] = []
-    orig_read_shard = t._read_shard
+    orig_read_shard = manifest_log.MetaLog.read_shard
     monkeypatch.setattr(
-        t, "_read_shard", lambda n: read_shards.append(n) or orig_read_shard(n)
+        manifest_log.MetaLog,
+        "read_shard",
+        lambda log, n: read_shards.append(n) or orig_read_shard(log, n),
     )
     monkeypatch.setattr(
         t,

@@ -289,3 +289,24 @@ def test_streaming_end_to_end_with_merge_on_read(spark, tmp_path):
         )
     assert results["cow"] == results["mor"]
     assert len(results["cow"]) == N_KEYS
+
+
+def test_spec_s3_block_reaches_hadoop_conf(spark, tmp_path):
+    """build_pipeline applies source.configuration.s3 to the session's
+    fs.s3a.* confs (endpoint, path style, region)."""
+    raw = example_spec(str(tmp_path / "landing"))
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    keys = ("fs.s3a.endpoint", "fs.s3a.path.style.access", "fs.s3a.endpoint.region")
+    try:
+        build_pipeline(
+            spark,
+            StreamSpec.from_json(json.dumps(raw)),
+            warehouse_root=str(tmp_path / "wh"),
+            checkpoint_root=str(tmp_path / "ck"),
+        )
+        assert hconf.get("fs.s3a.endpoint") == "http://localhost:9000"
+        assert hconf.get("fs.s3a.path.style.access") == "true"
+        assert hconf.get("fs.s3a.endpoint.region") == "us-east-1"
+    finally:
+        for k in keys:
+            hconf.unset(k)

@@ -9,7 +9,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from arcane_stream_parquet_spark.fsio import fs_join
+from arcane_stream_parquet_spark.operators import manifest as manifest_log
 from arcane_stream_parquet_spark.operators.merge import ParquetMergeTarget
 
 
@@ -264,11 +264,11 @@ def test_null_merge_key_stays_single_row_under_pruning(spark, tmp_path):
 
 def _bare_name_shards(t, m):
     files = m.pop("files")
-    name = t._shard_name(m["version"] + 1, 0)
-    t._fio.create_text(fs_join(t._meta_path, name), json.dumps(files))
+    name = manifest_log.shard_name(m["version"] + 1, 0)
+    t._fio.create_text(t._log.path(name), json.dumps(files))
     m["file_shards"] = [name]
     m["n_files"] = len(files)
-    m["size_hist"] = t._shard_summary(files)[0]
+    m["size_hist"] = manifest_log.shard_summary(files)[0]
 
 
 def _per_bucket_deletes(t, m):
@@ -312,7 +312,9 @@ def test_old_manifest_format_refused(spark, tmp_path, mor_table_dir, shape):
     m = t._manifest()
     downgrade(t, m)
     m["version"] += 1
-    t._fio.create_text(t._manifest_file(m["version"]), json.dumps(m))
+    t._fio.create_text(
+        t._log.path(manifest_log.root_name(m["version"])), json.dumps(m)
+    )
     before = sorted(p.relative_to(path) for p in path.rglob("*"))
     msg = rf"manifest v{m['version']} .*\(missing: {re.escape(field)}\)"
     for call in (
@@ -378,21 +380,21 @@ def test_pruning_works_for_numeric_keys(spark, tmp_path):
 # r5: manifest sharding (manifest-list shape)
 
 
-def _sharded_target(spark, tmp_path, **kw):
+def _sharded_target(spark, tmp_path, monkeypatch, **kw):
     kw.setdefault("num_buckets", 4)
     kw.setdefault("max_records_per_file", 10)
-    kw.setdefault("manifest_shard_entries", 3)  # tiny: force sharding
+    monkeypatch.setattr(manifest_log, "SHARD_ENTRIES", 3)  # force sharding
     return ParquetMergeTarget(spark=spark, path=str(tmp_path / "t"), **kw)
 
 
-def test_manifest_shards_roundtrip_and_prune(spark, tmp_path):
+def test_manifest_shards_roundtrip_and_prune(spark, tmp_path, monkeypatch):
     """A file list over the threshold lands as immutable shard files +
     a root carrying only their names; reads, merges (incl. pruning
     bookkeeping), time travel, and snapshot listing all behave as with
     the inline list."""
     import json
 
-    t = _sharded_target(spark, tmp_path)
+    t = _sharded_target(spark, tmp_path, monkeypatch)
     t.merge(df_of(spark, [(f"k{i:03d}", 1, f"p{i}") for i in range(60)]))
     m = t._manifest()
     assert "files" not in m and len(m["file_shards"]) >= 2
@@ -406,7 +408,7 @@ def test_manifest_shards_roundtrip_and_prune(spark, tmp_path):
     )
     assert sum(s["nf"] for s in m["file_shards"]) == m["n_files"] == len(files)
     # shards on disk are immutable commits named for their version
-    names = t._fio.list_names(t._meta_path)
+    names = t._fio.list_names(t._log.dir)
     assert all(s["n"] in names for s in m["file_shards"])
     # snapshot listing must not trip over shard names
     assert t.snapshot_versions() == [1]
@@ -422,13 +424,13 @@ def test_manifest_shards_roundtrip_and_prune(spark, tmp_path):
     assert t.read(at_version=1).count() == 60
 
 
-def test_manifest_shard_crash_retry_and_vacuum(spark, tmp_path):
+def test_manifest_shard_crash_retry_and_vacuum(spark, tmp_path, monkeypatch):
     """A crash between shard writes and the root commit leaves orphan
     shards: the old table is intact, a retry replaces them, and vacuum
     drops shards of expired snapshots."""
     import pytest as _pytest
 
-    t = _sharded_target(spark, tmp_path)
+    t = _sharded_target(spark, tmp_path, monkeypatch)
     t.merge(df_of(spark, [(f"k{i:03d}", 1, f"p{i}") for i in range(60)]))
     before = sorted(map(tuple, t.read().collect()))
 
@@ -456,10 +458,8 @@ def test_manifest_shard_crash_retry_and_vacuum(spark, tmp_path):
     ] == "new"
     # vacuum: only the current version's shards survive
     t.vacuum()
-    live = set(t._shard_names(t._manifest()))
-    on_disk = {
-        n for n in t._fio.list_names(t._meta_path) if "-shard-" in n
-    }
+    live = set(manifest_log.shard_names(t._manifest()))
+    on_disk = set(t._log.listing().shards)
     assert on_disk == live and live
     # and the table still reads
     assert t.read().count() == 60
@@ -490,21 +490,25 @@ def _shard_reads(fio_cls):
     return ctx()
 
 
-def test_sharded_manifest_shard_reuse_on_narrow_merge(spark, tmp_path):
+def test_sharded_manifest_shard_reuse_on_narrow_merge(
+    spark, tmp_path, monkeypatch
+):
     """A narrow upsert on a bucket-ranged sharded manifest reads ONLY
     the shards whose bucket range intersects the touched buckets and
     reuses every other shard by name — commit metadata IO is O(touched
     shards), not O(table)."""
-    t = _sharded_target(spark, tmp_path, num_buckets=8, max_records_per_file=4)
+    t = _sharded_target(
+        spark, tmp_path, monkeypatch, num_buckets=8, max_records_per_file=4
+    )
     t.merge(df_of(spark, [(f"k{i:03d}", 1, f"p{i}") for i in range(80)]))
     m1 = t._manifest()
-    names1 = set(t._shard_names(m1))
+    names1 = set(manifest_log.shard_names(m1))
     assert len(names1) >= 4, "need several shards for a reuse story"
 
     with _shard_reads(t._fio.__class__) as reads:
         t.merge(df_of(spark, [("k000", 2, "updated")]))
     m2 = t._manifest()
-    names2 = set(t._shard_names(m2))
+    names2 = set(manifest_log.shard_names(m2))
     # the touched bucket lives in few shards: most v1 shards are reused
     # by NAME (no rewrite), and only intersecting shards were read
     reused = names1 & names2
@@ -521,7 +525,7 @@ def test_sharded_manifest_shard_reuse_on_narrow_merge(spark, tmp_path):
 
 
 def test_sharded_adaptive_gate_fires_on_small_files_candidate_reads_only(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """The r8 honesty hole, closed: on a sharded manifest the adaptive
     gate sees the EXACT coalescable small-file count from the root
@@ -531,7 +535,7 @@ def test_sharded_adaptive_gate_fires_on_small_files_candidate_reads_only(
     # NOT coalescable, so the base table is clean — debris then lands
     # only where the MoR trickle appends it
     t = _sharded_target(
-        spark, tmp_path, num_buckets=8, max_records_per_file=None
+        spark, tmp_path, monkeypatch, num_buckets=8, max_records_per_file=None
     )
     t.merge(df_of(spark, [(f"k{i:03d}", 1, f"p{i}") for i in range(80)]))
     # MoR trickle upserts: same key → same bucket accumulates 1-row
@@ -551,7 +555,7 @@ def test_sharded_adaptive_gate_fires_on_small_files_candidate_reads_only(
     per_bucket: dict = {}
     for f in files:
         per_bucket.setdefault(f["b"], []).append(f)
-    k = t._size_class_at(8 << 20)
+    k = manifest_log.size_class_at(8 << 20)
     expect = sum(
         len([f for f in fs if int(f["sz"]).bit_length() <= k])
         for fs in per_bucket.values()
@@ -564,7 +568,7 @@ def test_sharded_adaptive_gate_fires_on_small_files_candidate_reads_only(
     cand = {
         s["n"]
         for s in shards_before
-        if t._step_at(s["coal"], t._size_class_at(8 << 20)) > 0
+        if manifest_log.step_at(s["coal"], k) > 0
     }
     assert cand and len(cand) < len(shards_before), (
         "debris must be localized for the probe to mean anything"
@@ -584,17 +588,21 @@ def test_sharded_adaptive_gate_fires_on_small_files_candidate_reads_only(
     assert sorted(map(tuple, t.read().collect())) == before
 
 
-def test_sharded_manifest_fragmentation_bound_reshards(spark, tmp_path):
+def test_sharded_manifest_fragmentation_bound_reshards(
+    spark, tmp_path, monkeypatch
+):
     """Shard reuse cannot fragment the root without bound: once kept +
     new shards exceed ~2x the ideal count, the commit reshards the
     whole list (amortized O(1) per commit)."""
-    t = _sharded_target(spark, tmp_path, num_buckets=8, max_records_per_file=4)
+    t = _sharded_target(
+        spark, tmp_path, monkeypatch, num_buckets=8, max_records_per_file=4
+    )
     t.merge(df_of(spark, [(f"k{i:03d}", 1, f"p{i}") for i in range(80)]))
     for v in range(2, 30):  # many narrow commits across buckets
         t.merge(df_of(spark, [(f"k{v:03d}", v, f"x{v}")]))
         m = t._manifest()
         files = t._files_of_manifest(m)
-        ideal = len(files) // t.manifest_shard_entries + 1
+        ideal = len(files) // manifest_log.SHARD_ENTRIES + 1
         assert len(m["file_shards"]) <= 2 * ideal + 1, (
             f"shard count must stay bounded, got {len(m['file_shards'])} "
             f"vs ideal {ideal} at v{m['version']}"

@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import Row
 
 from arcane_stream_parquet_spark.fsio import fs_join
+from arcane_stream_parquet_spark.operators import manifest as manifest_log
 from arcane_stream_parquet_spark.operators import merge as merge_module
 from arcane_stream_parquet_spark.operators.merge import ParquetMergeTarget
 
@@ -323,9 +324,9 @@ def test_compact_minor_crash_before_manifest_flip_loses_nothing(
 
     boom = RuntimeError("simulated crash at commit point")
     monkeypatch.setattr(
-        ParquetMergeTarget,
-        "_commit_manifest",
-        lambda self, m: (_ for _ in ()).throw(boom),
+        manifest_log.MetaLog,
+        "commit",
+        lambda *a: (_ for _ in ()).throw(boom),
     )
     with pytest.raises(RuntimeError, match="simulated crash"):
         t.compact_minor(small_file_bytes=1 << 20)
@@ -423,7 +424,9 @@ def test_adaptive_maintenance_ignores_uncoalescable_smalls(spark, tmp_path):
     assert r == {"ran": False, "escalated": False}
 
 
-def test_maintenance_metrics_from_sharded_manifest_summary(spark, tmp_path):
+def test_maintenance_metrics_from_sharded_manifest_summary(
+    spark, tmp_path, monkeypatch
+):
     """A sharded manifest answers maintenance polling from the root's
     n_files + power-of-two size histogram — per-batch metrics must not
     depend on reading the shard files (10^6-entry tables poll after
@@ -434,8 +437,8 @@ def test_maintenance_metrics_from_sharded_manifest_summary(spark, tmp_path):
         merge_mode="mor",
         num_buckets=4,
         max_records_per_file=1,
-        manifest_shard_entries=4,  # force sharding at toy scale
     )
+    monkeypatch.setattr(manifest_log, "SHARD_ENTRIES", 4)  # toy-scale shards
     run_batches(t)
     manifest = t._manifest()
     assert manifest.get("file_shards"), "expected a sharded manifest"
@@ -475,15 +478,14 @@ def test_mor_crash_before_manifest_flip_loses_nothing(
     t.merge(df_of(spark, [("k1", 1, "a"), ("k2", 1, "b")]))
 
     boom = RuntimeError("crash before commit")
-    real = ParquetMergeTarget._commit_manifest
 
-    def crash(self, manifest):
+    def crash(*args):
         raise boom
 
-    monkeypatch.setattr(ParquetMergeTarget, "_commit_manifest", crash)
+    monkeypatch.setattr(manifest_log.MetaLog, "commit", crash)
     with pytest.raises(RuntimeError):
         t.merge(df_of(spark, [("k1", 2, "a2")]))
-    monkeypatch.setattr(ParquetMergeTarget, "_commit_manifest", real)
+    monkeypatch.undo()
     assert contents(t) == [("k1", 1, "a"), ("k2", 1, "b")]
     # vacuum clears the orphan delta/delete dirs; retry commits cleanly
     t.vacuum()

@@ -18,6 +18,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from arcane_stream_parquet_spark.fsio import fs_join
+from arcane_stream_parquet_spark.operators import manifest as manifest_log
 from arcane_stream_parquet_spark.operators.merge import ParquetMergeTarget
 
 
@@ -111,7 +112,7 @@ def test_split_identity_layout_and_metadata(spark, tmp_path):
         ]
         assert all(by_key[k] == int(f["b"]) for k in keys)
     # no markers left behind
-    assert t._rebucket_marker_names() == []
+    assert list(t._log.listing().markers) == []
 
 
 def test_coarsen_identity(spark, tmp_path):
@@ -237,7 +238,7 @@ def test_incremental_staging_resumes_and_flips(spark, tmp_path):
     before = snap(t)
     r1 = t.rebucket(16, max_units=1)
     assert r1 == {"done": False, "staged": 1, "pending": 3}
-    assert len(t._rebucket_marker_names()) == 1
+    assert len(t._log.listing().markers) == 1
     # status probe stages nothing
     assert t.rebucket(16, max_units=0) == {
         "done": False,
@@ -261,8 +262,8 @@ def test_interleaved_merge_restages_only_touched_units(spark, tmp_path):
     dirs_before = {
         m["u"]: m["d"]
         for m in (
-            json.loads(t._fio.read_text(fs_join(t._meta_path, n)))
-            for n in t._rebucket_marker_names()
+            json.loads(t._fio.read_text(t._log.path(n)))
+            for n in t._log.listing().markers
         )
     }
     # touch exactly one key -> exactly one old bucket
@@ -291,8 +292,8 @@ def test_vacuum_preserves_inflight_staging(spark, tmp_path):
     t = seeded(spark, tmp_path)
     t.rebucket(16, max_units=2)
     staged_dirs = [
-        json.loads(t._fio.read_text(fs_join(t._meta_path, n)))["d"]
-        for n in t._rebucket_marker_names()
+        json.loads(t._fio.read_text(t._log.path(n)))["d"]
+        for n in t._log.listing().markers
     ]
     t.vacuum(keep_last=1)
     for d in staged_dirs:
@@ -309,11 +310,11 @@ def test_abort_reclaims_staging_but_never_live_data(spark, tmp_path):
     before = snap(t)
     t.rebucket(16, max_units=2)
     staged_dirs = [
-        json.loads(t._fio.read_text(fs_join(t._meta_path, n)))["d"]
-        for n in t._rebucket_marker_names()
+        json.loads(t._fio.read_text(t._log.path(n)))["d"]
+        for n in t._log.listing().markers
     ]
     assert t.rebucket_abort() == 2
-    assert t._rebucket_marker_names() == []
+    assert list(t._log.listing().markers) == []
     for d in staged_dirs:
         assert not t._fio.exists(fs_join(str(tmp_path / "t"), "data", d))
     assert snap(t) == before
@@ -341,7 +342,7 @@ def test_crash_at_marker_create_resumes(spark, tmp_path, monkeypatch):
     monkeypatch.undo()
     # table untouched; one marker persisted; resume completes
     assert snap(t) == before
-    assert len(t._rebucket_marker_names()) == 1
+    assert len(t._log.listing().markers) == 1
     res = make(spark, tmp_path).rebucket(16)
     assert res["done"]
     t3 = make(spark, tmp_path)
@@ -368,11 +369,11 @@ def test_crash_after_flip_is_already_done(spark, tmp_path, monkeypatch):
     # (num_buckets syncs from the manifest at the first read)
     t2 = make(spark, tmp_path)
     assert snap(t2) == before and t2.num_buckets == 16
-    assert len(t2._rebucket_marker_names()) == 4  # leftovers
+    assert len(t2._log.listing().markers) == 4  # leftovers
     # next call is a pure cleanup no-op commit-wise
     v = t2._manifest()["version"]
     assert t2.rebucket(16) == {"done": True, "version": v, "staged": 0}
-    assert t2._rebucket_marker_names() == []
+    assert list(t2._log.listing().markers) == []
     # abort after flip: markers point at LIVE dirs — must not delete
     assert snap(make(spark, tmp_path)) == before
 
@@ -428,19 +429,19 @@ def test_flip_loses_commit_race_and_retry_converges(spark, tmp_path):
     the unit the competitor touched) and flips at the next version."""
     t = seeded(spark, tmp_path)
     t2 = make(spark, tmp_path)
-    real_commit = type(t)._commit_manifest
+    real_commit = manifest_log.MetaLog.commit
     fired = {"n": 0}
 
-    def racy(self, manifest):
+    def racy(log, manifest, *args):
         if manifest.get("op") == "rebucket" and fired["n"] == 0:
             fired["n"] += 1
             # the competitor lands a merge at the SAME version first
             t2.merge(df_of(spark, [("k0000", 7, "raced")]))
-        return real_commit(self, manifest)
+        return real_commit(log, manifest, *args)
 
     import unittest.mock as mock
 
-    with mock.patch.object(type(t), "_commit_manifest", racy):
+    with mock.patch.object(manifest_log.MetaLog, "commit", racy):
         res = t.rebucket(16)
     assert res["done"] and fired["n"] == 1
     assert t.num_buckets == 16
@@ -514,18 +515,18 @@ def test_status_probe_never_flips_when_fully_staged(spark, tmp_path):
 
     t = seeded(spark, tmp_path)
     v0 = t._manifest()["version"]
-    real = type(t)._commit_manifest
+    real = manifest_log.MetaLog.commit
 
-    def boom(self, manifest):
+    def boom(log, manifest, *args):
         if manifest.get("op") == "rebucket":
             raise RuntimeError("simulated crash before the flip")
-        return real(self, manifest)
+        return real(log, manifest, *args)
 
-    with mock.patch.object(type(t), "_commit_manifest", boom):
+    with mock.patch.object(manifest_log.MetaLog, "commit", boom):
         with pytest.raises(RuntimeError, match="before the flip"):
             t.rebucket(16)
     # all units staged, table not flipped
-    assert len(t._rebucket_marker_names()) == 4
+    assert len(t._log.listing().markers) == 4
     assert t._manifest()["version"] == v0
     # the probe reports and does NOT flip
     assert t.rebucket(16, max_units=0) == {
@@ -554,15 +555,15 @@ def test_flip_reclaims_abandoned_migration_staging(spark, tmp_path):
     r8 = t.rebucket(8, max_units=1)
     assert not r8["done"] and r8["staged"] == 1
     stale_dirs = [
-        json.loads(t._fio.read_text(fs_join(t._meta_path, name)))["d"]
-        for name in t._rebucket_marker_names()
+        json.loads(t._fio.read_text(t._log.path(name)))["d"]
+        for name in t._log.listing().markers
     ]
     assert stale_dirs and all(d for d in stale_dirs)
     done = t.rebucket(16)
     assert done["done"]
     # markers gone AND the abandoned migration's staging dirs gone —
     # not left for vacuum
-    assert t._rebucket_marker_names() == []
+    assert list(t._log.listing().markers) == []
     for d in stale_dirs:
         assert not t._fio.exists(t._data_dir(d))
     assert snap(t) == before
@@ -587,16 +588,16 @@ def test_already_flipped_return_leaves_inflight_migration_alone(spark, tmp_path)
     assert t.rebucket(8)["done"]
     r16 = t.rebucket(16, max_units=1)
     assert not r16["done"] and r16["staged"] == 1
-    names_before = t._rebucket_marker_names()
+    names_before = list(t._log.listing().markers)
     stale_dirs = [
-        json.loads(t._fio.read_text(fs_join(t._meta_path, name)))["d"]
+        json.loads(t._fio.read_text(t._log.path(name)))["d"]
         for name in names_before
     ]
     assert stale_dirs and all(d for d in stale_dirs)
     res = t.rebucket(8)  # already at 8: early return, no commit
     assert res["done"] and res["staged"] == 0
     # the 8->16 migration's markers AND staging dirs survive ...
-    assert t._rebucket_marker_names() == names_before
+    assert list(t._log.listing().markers) == names_before
     for d in stale_dirs:
         assert t._fio.exists(t._data_dir(d))
     # ... they stay vacuum-protected ...
@@ -607,7 +608,7 @@ def test_already_flipped_return_leaves_inflight_migration_alone(spark, tmp_path)
     # units (min(8, 16)), the staged one reused — not from scratch
     done = t.rebucket(16)
     assert done["done"] and done["staged"] == 7
-    assert t._rebucket_marker_names() == []
+    assert list(t._log.listing().markers) == []
     assert snap(t) == before
 
 
@@ -629,13 +630,13 @@ def test_already_flipped_return_reclaims_same_count_stragglers(spark, tmp_path):
         fs_join(t._data_dir(orphan), "part-00000.parquet"), "stale"
     )
     t._fio.create_text(
-        t._rebucket_marker_path(8, 1),
+        t._log.path(manifest_log.marker_name(8, 1)),
         json.dumps({"nb": 8, "u": 1, "fp": "stale", "d": orphan,
                     "files": []}),
     )
     res = t.rebucket(8)  # early return sweeps same-count debt
     assert res["done"] and res["staged"] == 0
-    assert t._rebucket_marker_names() == []
+    assert list(t._log.listing().markers) == []
     assert not t._fio.exists(t._data_dir(orphan))
     assert snap(t) == before
 
@@ -721,4 +722,4 @@ def test_soak_trickle_merges_compact_vacuum_converges(spark, tmp_path):
     ents = entries_of(t)
     assert ents and all(0 <= int(f["b"]) < 8 for f in ents)
     # post-flip maintenance debris is reclaimable and markers are gone
-    assert t._rebucket_marker_names() == []
+    assert list(t._log.listing().markers) == []

@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from arcane_stream_parquet_spark.operators import manifest as manifest_log
 from arcane_stream_parquet_spark.operators.merge import ParquetMergeTarget
 
 
@@ -127,15 +128,18 @@ def test_rollback_restores_mor_pending_deletes(spark, tmp_path):
     assert got == {"b"}
 
 
-def test_rollback_of_sharded_manifest_reuses_shards(spark, tmp_path):
-    t = make(spark, tmp_path, manifest_shard_entries=2)
+def test_rollback_of_sharded_manifest_reuses_shards(
+    spark, tmp_path, monkeypatch
+):
+    monkeypatch.setattr(manifest_log, "SHARD_ENTRIES", 2)
+    t = make(spark, tmp_path)
     t.merge(df_of(spark, [(f"k{i}", 1, "a") for i in range(40)]))
     v1 = t._manifest()["version"]
-    old_shards = {s["n"] for s in t._manifest().get("file_shards") or []}
+    old_shards = set(manifest_log.shard_names(t._manifest()))
     assert old_shards  # geometry forced sharding
     t.merge(df_of(spark, [(f"k{i}", 2, "b") for i in range(40)]))
     t.rollback(v1)
-    new_shards = {s["n"] for s in t._manifest().get("file_shards") or []}
+    new_shards = set(manifest_log.shard_names(t._manifest()))
     assert new_shards == old_shards  # referenced by name, not rewritten
     assert {r["payload"] for r in t.read().collect()} == {"a"}
 

@@ -352,3 +352,29 @@ def test_golden_schema_migration_delta_same_contract(spark):
     assert _delta(spark).render_schema_migration(target, batch) == [
         "ALTER TABLE `cat`.`db`.`events` ADD COLUMNS (`v2` bigint)"
     ]
+
+
+@pytest.mark.parametrize("fmt_cls", [IcebergMergeTarget, DeltaMergeTarget])
+def test_real_format_watermark_is_the_metadata_log_protocol(
+    spark, tmp_path, fmt_cls
+):
+    """The catalog targets keep their stream watermark in the same
+    create-only log as ParquetMergeTarget: ``watermark-<20 digits>.json``,
+    monotonic, superseded files pruned, negative values refused.  Needs
+    no format runtime (render-only construction)."""
+    from arcane_stream_parquet_spark.operators.manifest import (
+        MetaLog,
+        watermark_name,
+    )
+
+    t = fmt_cls(
+        spark=spark, table="cat.db.events", path=str(tmp_path), render_only=True
+    )
+    assert t.watermark() is None
+    for v in (2, 7, 5):
+        t.commit_watermark(v)
+    assert t.watermark() == 7
+    log = MetaLog(t._fio, t.path)
+    assert t._fio.list_names(log.dir) == [watermark_name(7)]
+    with pytest.raises(ValueError, match="non-negative"):
+        t.commit_watermark(-1)

@@ -230,11 +230,11 @@ def test_orphan_grace_spares_young_orphans_until_aged(spark, tmp_path):
     # plant an orphan manifest shard (mid-commit writer stages shards
     # before the root CAS references them)
     shard = "manifest-v00099-shard-00000-deadbeef.json"
-    t._fio.create_text(fs_join(t._meta_path, shard), "[]")
+    t._fio.create_text(t._log.path(shard), "[]")
 
     removed = t.vacuum(keep_last=1, orphan_grace_seconds=3600)
     assert t._fio.exists(orphan)
-    assert t._fio.exists(fs_join(t._meta_path, shard))
+    assert t._fio.exists(t._log.path(shard))
     assert "v99999-deadbeef" not in removed
     # ... while snapshot-EXPIRED data reclaimed immediately (keep_last=1
     # expired v1's superseded files despite the grace)
@@ -245,11 +245,11 @@ def test_orphan_grace_spares_young_orphans_until_aged(spark, tmp_path):
     old_ms = 1_000_000  # 1970-ish
     t._fio.set_mtime(fs_join(orphan, "part-0.parquet"), old_ms)
     t._fio.set_mtime(orphan, old_ms)
-    t._fio.set_mtime(fs_join(t._meta_path, shard), old_ms)
+    t._fio.set_mtime(t._log.path(shard), old_ms)
     removed = t.vacuum(keep_last=1, orphan_grace_seconds=3600)
     assert "v99999-deadbeef" in removed
     assert not t._fio.exists(orphan)
-    assert not t._fio.exists(fs_join(t._meta_path, shard))
+    assert not t._fio.exists(t._log.path(shard))
     assert {tuple(r) for r in t.read().collect()} == before
 
 
@@ -271,15 +271,16 @@ def test_vacuum_never_expires_versions_beyond_loaded_snapshot(spark, tmp_path):
     """A manifest with a version ABOVE the snapshot this vacuum loaded
     (a concurrent writer's just-landed commit) must never be expired —
     its history belongs to a vacuum that sees it as current."""
-    from arcane_stream_parquet_spark.fsio import fs_join
     import json
+
+    from arcane_stream_parquet_spark.operators.manifest import root_name
 
     t = build_history(spark, tmp_path, n=2)
     cur = t._manifest()
     future_v = int(cur["version"]) + 1
     fut = dict(cur)
     fut["version"] = future_v
-    path = t._manifest_file(future_v)
+    path = t._log.path(root_name(future_v))
     t._fio.create_text(path, json.dumps(fut))
     try:
         t.vacuum(keep_last=1)
