@@ -13,7 +13,6 @@ rewritten in place.  Layout::
     <path>/_asp_meta/watermark-<20-digits>.json  stream watermark (ST2);
                                                current = max in listing
                                                (filename IS the value)
-    <path>/_asp_meta/tag-<name>.json           named snapshot pointers
     <path>/_asp_meta/rebucket-to<nb>-u<unit>.json  staged rebucket units
 
 The root manifest (one format; :meth:`MetaLog.read_root` refuses any
@@ -92,12 +91,6 @@ def watermark_name(value: int) -> str:
     return f"watermark-{int(value):020d}.json"
 
 
-def tag_name(name: str) -> str:
-    if not name or not all(c.isalnum() or c in "-_." for c in name):
-        raise ValueError(f"tag name must be non-empty [alnum-_.] only: {name!r}")
-    return f"tag-{name}.json"
-
-
 def marker_name(nb: int, u: int) -> str:
     return f"rebucket-to{int(nb)}-u{int(u):07d}.json"
 
@@ -106,8 +99,7 @@ def marker_name(nb: int, u: int) -> str:
 # checksum side-files, junk — is ignored); one group per file kind
 _NAME = re.compile(
     r"manifest-v(?P<roots>\d+)\.json|(?P<shards>manifest-v\d+-shard-.*\.json)"
-    r"|watermark-(?P<watermarks>\d+)\.json|(?P<tags>tag-.+\.json)"
-    r"|(?P<markers>rebucket-.*\.json)",
+    r"|watermark-(?P<watermarks>\d+)\.json|(?P<markers>rebucket-.*\.json)",
     re.ASCII,
 )
 
@@ -119,7 +111,6 @@ class Listing:
     roots: tuple[int, ...] = ()  # committed root versions, ascending
     shards: tuple[str, ...] = ()  # shard file names
     watermarks: tuple[int, ...] = ()  # committed watermark values, ascending
-    tags: tuple[str, ...] = ()  # tag file names
     markers: tuple[str, ...] = ()  # rebucket marker file names
 
 
@@ -230,24 +221,18 @@ def summary(manifest: dict, small_file_bytes: int = 8 << 20) -> dict:
       entirely under ``small_file_bytes``;
     - ``coalescable_small_files``: those small files sharing a bucket
       with another small file — what a minor compaction can merge;
-    - ``total_bytes``: exact for an inline root, None for a sharded one;
-    - ``bytes_bound``: ``total_bytes`` where known, else the size
-      histogram's upper bound (≤2× over, never under)."""
+    - ``total_bytes``: exact for an inline root, None for a sharded one."""
     k = size_class_at(small_file_bytes)
     descs = _descriptors(manifest)
     hist = {int(c): n for c, n in _hist_sum(descs).items()}
-    exact = (
-        None
-        if is_sharded(manifest)
-        else sum(int(f["sz"]) for f in manifest["files"])
-    )
     return {
         "file_count": sum(int(d["nf"]) for d in descs),
         "small_file_count": sum(n for c, n in hist.items() if c <= k),
         "coalescable_small_files": sum(step_at(d["coal"], k) for d in descs),
-        "total_bytes": exact,
-        "bytes_bound": (
-            exact if exact is not None else sum(n << c for c, n in hist.items())
+        "total_bytes": (
+            None
+            if is_sharded(manifest)
+            else sum(int(f["sz"]) for f in manifest["files"])
         ),
     }
 
@@ -396,15 +381,6 @@ class MetaLog:
 
     # -- commit ------------------------------------------------------------
 
-    def raise_if_committed(self, version: int) -> None:
-        """CAS fence: a root for ``version`` on disk means another
-        writer already committed it — one cheap existence probe."""
-        if self.io.exists(self.path(root_name(version))):
-            raise ConcurrentWriteError(
-                f"manifest v{version} already committed by another "
-                f"writer at {self.table_path}; retry the operation"
-            )
-
     def commit(
         self, manifest: dict, files: list[dict], keep: list[dict] = ()
     ) -> None:
@@ -425,9 +401,13 @@ class MetaLog:
         # ordering (versions do that)
         root["committed_at"] = round(time.time(), 3)
         version = root["version"]
-        # lose a race cleanly BEFORE replacing any shard a winner's
-        # root may reference
-        self.raise_if_committed(version)
+        # the CAS fence: lose a race cleanly BEFORE replacing any shard
+        # a winner's root may reference
+        if self.io.exists(self.path(root_name(version))):
+            raise ConcurrentWriteError(
+                f"manifest v{version} already committed by another "
+                f"writer at {self.table_path}; retry the operation"
+            )
         files, keep = list(files), list(keep)
         total = len(files) + sum(int(s["nf"]) for s in keep)
         sharded = total > SHARD_ENTRIES
@@ -505,31 +485,6 @@ class MetaLog:
         )
         for v in stale:  # prune superseded values (readers are list-max)
             self.drop(watermark_name(v))
-
-    # -- tags --------------------------------------------------------------
-
-    def tags(self, listing: Listing | None = None) -> dict[str, int]:
-        """All tags as ``{name: version}``."""
-        tags = self._read_each((listing or self.listing()).tags)
-        return {t["name"]: int(t["version"]) for _, t in tags}
-
-    def create_tag(self, name: str, version: int) -> None:
-        """Raises FileExistsError when the tag exists."""
-        self.io.create_text(
-            self.path(tag_name(name)),
-            json.dumps({"name": name, "version": int(version)}),
-        )
-
-    def read_tag(self, name: str) -> int:
-        """Raises FileNotFoundError when there is no such tag."""
-        return int(self._read_json(tag_name(name))["version"])
-
-    def drop_tag(self, name: str) -> bool:
-        path = self.path(tag_name(name))
-        if not self.io.exists(path):
-            return False
-        self.io.delete(path)
-        return True
 
     # -- rebucket markers --------------------------------------------------
 

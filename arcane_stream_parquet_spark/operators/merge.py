@@ -21,7 +21,7 @@ Layout::
     <path>/_asp_meta/                          the metadata log
                                                (``operators/manifest.py``:
                                                roots, shards, watermark,
-                                               tags, rebucket markers)
+                                               rebucket markers)
 
 A merge (1) dedups the batch per key (J2 window), (2) reads ONLY the
 affected files of the live table (bucket + key-range pruning), (3)
@@ -728,58 +728,6 @@ class ParquetMergeTarget:
         vacuum)."""
         return list(self._log.listing().roots)
 
-    # -- snapshot tags (r11, Iceberg named-references shape) ----------------
-    #
-    # A tag is a named, immutable pointer to a snapshot version (a
-    # create-only ``tag-<name>.json`` in the metadata log — same
-    # crash-safety protocol as every other metadata file).  Tags make
-    # a snapshot an OPERATIONAL artifact: "training run X read exactly
-    # this state" survives any amount of subsequent churn because
-    # :meth:`vacuum` retains every TAGGED snapshot in addition to the
-    # keep_last/older_than window (Iceberg expire_snapshots honors
-    # refs the same way).  Dropping the tag releases the snapshot to
-    # the normal retention rules at the next vacuum.
-
-    def create_tag(self, name: str, version: int | None = None) -> int:
-        """Tag ``version`` (default: the live version) with ``name``.
-        Create-only — retagging an existing name raises (drop first);
-        the tagged snapshot must currently exist.  Returns the tagged
-        version."""
-        manifest_log.tag_name(name)  # validates
-        listing = self._log.listing()
-        if version is None:
-            version = int(self._manifest(listing)["version"])
-        elif version not in listing.roots:
-            raise ValueError(
-                f"no snapshot v{version} to tag; available: "
-                f"{list(listing.roots)}"
-            )
-        try:
-            self._log.create_tag(name, version)
-        except FileExistsError:
-            raise ValueError(
-                f"tag {name!r} already exists (drop_tag first; tags "
-                f"are immutable pointers)"
-            ) from None
-        return int(version)
-
-    def tags(self) -> dict[str, int]:
-        """All tags as ``{name: version}`` (one metadata listing)."""
-        return self._log.tags()
-
-    def drop_tag(self, name: str) -> bool:
-        """Remove a tag (the snapshot returns to normal retention at
-        the next vacuum).  Returns False if the tag did not exist."""
-        return self._log.drop_tag(name)
-
-    def _resolve_tag(self, name: str) -> int:
-        try:
-            return self._log.read_tag(name)
-        except FileNotFoundError:
-            raise ValueError(
-                f"no tag {name!r}; available: {sorted(self.tags())}"
-            ) from None
-
     def history(self) -> DataFrame:
         """Snapshot history as a DataFrame (Iceberg ``snapshots``
         metadata table / Delta ``DESCRIBE HISTORY`` shape): one row
@@ -853,82 +801,15 @@ class ParquetMergeTarget:
             files, schema, manifest.get("deletes") or []
         )
 
-    def read(
-        self,
-        at_version: int | None = None,
-        at_timestamp=None,
-        at_tag: str | None = None,
-    ) -> DataFrame:
+    def read(self, at_version: int | None = None) -> DataFrame:
         """Current table contents (bucket column dropped); pass
-        ``at_version`` for a time-travel read of an archived snapshot,
-        ``at_timestamp`` (epoch seconds or a tz-aware datetime —
-        Iceberg ``TIMESTAMP AS OF``) for the snapshot that was current
-        at that instant, or ``at_tag`` for a named reference
-        (vacuum-proof: tagged snapshots never expire)."""
-        at_version = self._resolve_at(at_version, at_timestamp, at_tag)
+        ``at_version`` for a time-travel read of an archived snapshot."""
         current = self._manifest()
         return self._scan_root(
             self._log.at(at_version, current), self._schema_of(current)
         ).drop(BUCKET_COLUMN)
 
-    def _resolve_at(
-        self, at_version, at_timestamp, at_tag=None
-    ) -> int | None:
-        given = [
-            x
-            for x in (at_version, at_timestamp, at_tag)
-            if x is not None
-        ]
-        if len(given) > 1:
-            raise ValueError(
-                "at_version, at_timestamp and at_tag are mutually "
-                "exclusive"
-            )
-        if at_tag is not None:
-            return self._resolve_tag(at_tag)
-        if at_timestamp is not None:
-            return self.version_at(at_timestamp)
-        return at_version
-
-    def version_at(self, at_timestamp) -> int:
-        """The snapshot version that was current at ``at_timestamp``
-        (epoch seconds, or a tz-aware datetime; a NAIVE datetime is
-        rejected as ambiguous): the newest committed version whose
-        ``committed_at`` stamp is <= the instant.  Pre-stamp manifests
-        count as infinitely old, mirroring :meth:`vacuum` retention.
-        Raises when the instant predates the first retained snapshot
-        (vacuumed history is not silently substituted)."""
-        if isinstance(at_timestamp, _dt.datetime):
-            if at_timestamp.tzinfo is None:
-                raise ValueError(
-                    "naive datetime is ambiguous — pass a tz-aware "
-                    "datetime or epoch seconds"
-                )
-            ts = at_timestamp.timestamp()
-        else:
-            ts = float(at_timestamp)
-        listing = self._log.listing()
-        current = self._manifest(listing)
-        best = None
-        for v in listing.roots:
-            m = self._log.at(v, current, listing)
-            if float(m.get("committed_at") or 0.0) <= ts:
-                best = v
-        if best is None:
-            raise ValueError(
-                f"no retained snapshot at or before {ts} "
-                f"(epoch seconds) at {self.path} — history may have "
-                f"been vacuumed"
-            )
-        return best
-
-    def read_where(
-        self,
-        *preds,
-        at_version: int | None = None,
-        at_timestamp=None,
-        at_tag: str | None = None,
-    ) -> DataFrame:
+    def read_where(self, *preds, at_version: int | None = None) -> DataFrame:
         """Predicate read with manifest-level data skipping: exactly
         ``read(at_version).filter(AND of preds)``, but files whose
         recorded per-column [min, max, has-null] interval
@@ -955,15 +836,9 @@ class ParquetMergeTarget:
         stays exactly ``read(at_version=v).filter(...)`` under schema
         drift (post-drift columns null-filled; pre-drift files have no
         stats for them and are never pruned on such conjuncts)."""
-        at_version = self._resolve_at(at_version, at_timestamp, at_tag)
         current = self._manifest()
-        return self._read_where(
-            self._log.at(at_version, current), self._schema_of(current), preds
-        )
-
-    def _read_where(self, manifest: dict, schema, preds) -> DataFrame:
-        """:meth:`read_where` on an already-read snapshot ``manifest``
-        under the current ``schema``."""
+        manifest = self._log.at(at_version, current)
+        schema = self._schema_of(current)
         if schema is None:
             raise ValueError(f"no schema committed at {self.path}")
         parsed, residual = self._parse_predicates(schema, preds)
@@ -1146,13 +1021,7 @@ class ParquetMergeTarget:
             for col, op, _, nv in parsed
         )
 
-    def count_where(
-        self,
-        *preds,
-        at_version: int | None = None,
-        at_timestamp=None,
-        at_tag: str | None = None,
-    ) -> int:
+    def count_where(self, *preds, at_version: int | None = None) -> int:
         """Metadata-accelerated ``read_where(*preds).count()`` (the
         Iceberg metadata-count shape): files whose recorded interval
         PROVES every row satisfies ALL conjuncts contribute their
@@ -1165,7 +1034,6 @@ class ParquetMergeTarget:
         ``read_where(*preds).count()`` (pinned in tests).  Predicates
         resolve against the CURRENT schema even with ``at_version``
         (same rule as :meth:`read_where`)."""
-        at_version = self._resolve_at(at_version, at_timestamp, at_tag)
         current = self._manifest()
         manifest = self._log.at(at_version, current)
         schema = self._schema_of(current)
@@ -1236,8 +1104,8 @@ class ParquetMergeTarget:
         ``read_changes(last_v)``, advance.
 
         The stream is post-image-only (``delete`` rows carry the final
-        pre-image; they arise from ``delete_keys`` / ``delete_where``
-        and from ``overwrite()`` dropping keys).  A key changed in
+        pre-image; they arise from ``delete_keys`` and from
+        ``overwrite()`` dropping keys).  A key changed in
         several commits of the range yields one row per commit; the
         live row is the max-``_commit_version`` one.
 
@@ -1396,7 +1264,7 @@ class ParquetMergeTarget:
             if not d.get("sc") and int(d["seq"]) == v:
                 changed.update(self._delete_buckets(d))
         prev = v - 1
-        old: DataFrame | None = None
+        m_old: dict | None = None
         if prev >= 1:
             if prev not in avail:
                 raise ValueError(
@@ -1404,36 +1272,22 @@ class ParquetMergeTarget:
                     f"vacuumed — resume from a full read() instead"
                 )
             m_old = root(prev)
-            if m_old["num_buckets"] != m_new["num_buckets"]:
-                # the commit changed the bucket numbering (rollback
-                # across a rebucket is the one diff-branch commit that
-                # can): bucket ids are not comparable across the two
-                # snapshots, so pruning is off — full key-join diff,
-                # still exact
-                changed = None
-            else:
-                # overwrite()/truncate can DROP buckets: their rows are
-                # deletes, so the old side must still scan them
-                changed.update(
-                    int(b)
-                    for b in m_old.get("buckets", {})
-                    if int(b) not in {
-                        int(bb) for bb in m_new.get("buckets", {})
-                    }
-                )
-            old = self._scan_root(m_old, schema)
-        if changed is not None and not changed:
+            # overwrite()/truncate can DROP buckets: their rows are
+            # deletes, so the old side must still scan them
+            changed.update(
+                int(b)
+                for b in m_old.get("buckets", {})
+                if int(b) not in {int(bb) for bb in m_new.get("buckets", {})}
+            )
+        if not changed:
             return None
-        new = self._scan_root(m_new, schema)
-        if changed is not None:
-            bucket_list = sorted(changed)
-            new = new.filter(F.col(BUCKET_COLUMN).isin(bucket_list))
-        if old is None:
+        in_changed = F.col(BUCKET_COLUMN).isin(sorted(changed))
+        new = self._scan_root(m_new, schema).filter(in_changed)
+        if m_old is None:
             return new.select(
                 *cols, F.lit("insert").alias(CHANGE_TYPE_COLUMN)
             )
-        if changed is not None:
-            old = old.filter(F.col(BUCKET_COLUMN).isin(bucket_list))
+        old = self._scan_root(m_old, schema).filter(in_changed)
         o = old.select(
             *[F.col(c).alias(_CDC_OLD + c) for c in cols],
             F.lit(True).alias(_CDC_OLD + "present"),
@@ -1468,10 +1322,10 @@ class ParquetMergeTarget:
         return j.select(*out_cols, kind.alias(CHANGE_TYPE_COLUMN))
 
     def _key_frame(self, keys: "DataFrame | Sequence", schema) -> DataFrame:
-        """The distinct, bucketed key frame of :meth:`lookup`,
-        :meth:`lookup_keys` and :meth:`delete_keys`: a driver-side
-        sequence, or a DataFrame whose ``key_col`` (or single) column
-        holds the keys, cast to the table's key type."""
+        """The distinct, bucketed key frame of :meth:`lookup` and
+        :meth:`delete_keys`: a driver-side sequence, or a DataFrame
+        whose ``key_col`` (or single) column holds the keys, cast to
+        the table's key type."""
         from pyspark.sql.types import StructField, StructType
 
         key_type = schema[self.key_col].dataType
@@ -1491,33 +1345,6 @@ class ParquetMergeTarget:
             keys.select(F.col(self.key_col).cast(key_type)).distinct()
         )
 
-    def _lookup_scan(self, keys: "DataFrame | Sequence"):
-        """``(key frame, scan)`` of a point lookup: the MoR-aware scan
-        of the files :meth:`_plan_touch` finds for the keys — or, when
-        no file can hold a key, an empty frame of the ``read()`` schema
-        (the one empty result of :meth:`lookup` and
-        :meth:`lookup_keys`)."""
-        from pyspark.sql.types import StructType
-
-        manifest = self._manifest()
-        schema = self._schema_of(manifest)
-        if schema is None:
-            raise ValueError(f"no schema committed at {self.path}")
-        kdf = touched = None
-        if isinstance(keys, DataFrame) or len(keys):
-            kdf = self._key_frame(keys, schema)
-            touched = self._plan_touch(manifest, kdf)[3]
-        if not touched:
-            return kdf, self.spark.createDataFrame(
-                [],
-                StructType(
-                    [f for f in schema.fields if f.name != BUCKET_COLUMN]
-                ),
-            )
-        return kdf, self._scan_with_deletes(
-            touched, schema, manifest.get("deletes") or []
-        )
-
     def lookup(self, keys: Sequence) -> DataFrame:
         """Point-lookup read: exactly ``read().filter(key IN keys)``
         but served from the manifest — each key prunes to its hash
@@ -1528,31 +1355,38 @@ class ParquetMergeTarget:
         range; planning is :meth:`_plan_touch`).  Pending MoR deletes
         apply as in any read.  ``keys`` is a small driver-side list —
         that is the point-lookup contract, and the ``isin`` filter it
-        becomes gives parquet pushdown; for bulk key sets use
-        :meth:`lookup_keys`."""
-        _kdf, scan = self._lookup_scan(keys)
+        becomes gives parquet pushdown."""
+        from pyspark.sql.types import StructType
+
+        manifest = self._manifest()
+        schema = self._schema_of(manifest)
+        if schema is None:
+            raise ValueError(f"no schema committed at {self.path}")
+        touched = (
+            self._plan_touch(manifest, self._key_frame(keys, schema))[3]
+            if len(keys)
+            else []
+        )
+        if not touched:
+            return self.spark.createDataFrame(
+                [],
+                StructType(
+                    [f for f in schema.fields if f.name != BUCKET_COLUMN]
+                ),
+            )
         non_null = [k for k in keys if k is not None]
         pred = (
             F.col(self.key_col).isin(non_null) if non_null else F.lit(False)
         )
         if any(k is None for k in keys):
             pred = pred | F.col(self.key_col).isNull()
-        return scan.filter(pred).drop(BUCKET_COLUMN)
-
-    def lookup_keys(self, keys: DataFrame) -> DataFrame:
-        """Bulk point-lookup: ``read()`` semi-joined to a DataFrame of
-        keys, served from the manifest with the same bucket + key-range
-        pruning as :meth:`lookup` — only (bucket, file-id) pairs come
-        back to the driver, so the key set itself can be arbitrarily
-        large.  ``keys`` is a DataFrame with a ``key_col`` (or single)
-        column.  Scans O(#candidate files of the key set), not the
-        table."""
-        kdf, scan = self._lookup_scan(keys)
-        return scan.join(
-            kdf.select(F.col(self.key_col).alias(_DEL_KEY_COL)),
-            F.col(self.key_col).eqNullSafe(F.col(_DEL_KEY_COL)),
-            "leftsemi",
-        ).drop(BUCKET_COLUMN)
+        return (
+            self._scan_with_deletes(
+                touched, schema, manifest.get("deletes") or []
+            )
+            .filter(pred)
+            .drop(BUCKET_COLUMN)
+        )
 
     # -- write path --------------------------------------------------------
 
@@ -1569,9 +1403,6 @@ class ParquetMergeTarget:
         compaction path: it packs per-bucket regardless of the
         streaming ``max_records_per_file`` policy (mirroring Iceberg's
         rewrite_data_files having its own target size)."""
-        # fail fast (cheap probe) if a concurrent winner already
-        # committed this version
-        self._log.raise_if_committed(version)
         dirname = self._new_dirname(version)
         self._write_df(
             df, dirname, honor_file_cap=honor_file_cap, records_cap=records_cap
@@ -1683,7 +1514,6 @@ class ParquetMergeTarget:
         """
         from pyspark.sql import Window
 
-        self._log.raise_if_committed(version)
         dirname = self._new_dirname(version)
         ord_struct = F.struct(*[F.col(c) for c in ordering])
         w = Window.partitionBy(F.col(BUCKET_COLUMN)).orderBy(
@@ -2055,7 +1885,6 @@ class ParquetMergeTarget:
         nonce-named dir (returned; same r10 no-clear staging rule as
         _write_version). Coalesced to one file per ~5M keys — one file
         for every realistic micro-batch."""
-        self._log.raise_if_committed(version)
         dirname = self._new_dirname(version)
         keys_df.select(self.key_col).coalesce(
             max(1, n_keys // 5_000_000 + (1 if n_keys % 5_000_000 else 0))
@@ -2404,7 +2233,7 @@ class ParquetMergeTarget:
         self, manifest: dict, kdf: DataFrame
     ) -> tuple[list[int], list[dict], list[dict], list[dict], list[dict]]:
         """THE touch planner of every key-driven operation (merge,
-        lookup, lookup_keys, delete_keys): keys → hash buckets → files
+        lookup, delete_keys): keys → hash buckets → files
         whose recorded [mn, mx] key range can hold a key.  ``kdf``
         carries the key column and ``BUCKET_COLUMN``.
         Returns ``(buckets, region, keep, touched, kept)``: ``region``
@@ -2748,101 +2577,6 @@ class ParquetMergeTarget:
             files,
         )
 
-    def rollback(
-        self, to_version: int | None = None, to_tag: str | None = None
-    ) -> int:
-        """Metadata-only restore (Iceberg ``rollback_to_snapshot``):
-        commit a NEW snapshot whose content is exactly retained
-        snapshot ``to_version`` — no data is read or written; the new
-        root references the old snapshot's data files, delete files,
-        and (when sharded) its immutable manifest shards BY NAME, so a
-        10⁶-file rollback costs one root write.  History stays linear:
-        the bad commits remain time-travelable until retention expires
-        them, and :meth:`read_changes` reports the restore as one
-        snapshot-diff commit (the net undo), keeping every downstream
-        changelog consumer consistent without a reset.
-
-        Schema rolls back with the data (a drift commit can be
-        undone).  The SOURCE watermark does not move — rolling back
-        the table does not un-process upstream blobs; pair with the
-        backfill path to re-ingest.  Returns the new version.
-        ``to_tag`` restores a TAGGED snapshot by name (tags pin their
-        snapshot past vacuum, so a tagged restore target always
-        exists)."""
-        if to_tag is not None:
-            if to_version is not None:
-                raise ValueError(
-                    "to_version and to_tag are mutually exclusive"
-                )
-            to_version = self._resolve_tag(to_tag)
-        if to_version is None:
-            raise ValueError("rollback needs to_version or to_tag")
-        listing = self._log.listing()
-        if to_version not in listing.roots:
-            raise ValueError(
-                f"no snapshot v{to_version} (vacuumed or never "
-                f"committed); available: {list(listing.roots)}"
-            )
-        cur = self._manifest(listing)
-        if to_version == cur["version"]:
-            return to_version  # already there — no empty commit
-        old = self._log.at(to_version, cur, listing)
-        old_files = self._log.region(old)[0]
-        cur_files = self._log.region(cur)[0]
-        new_version = cur["version"] + 1
-
-        # buckets whose visible state differs: data file set, or the
-        # pending delete entries covering them.  These get their bucket
-        # pointer stamped to the NEW version so the CDC snapshot-diff
-        # path (_changes_from_diff keys "touched" off pointer == v)
-        # scans exactly them — identical rows drop out of the diff.
-        def files_by_bucket(entries: list[dict]) -> dict:
-            out: dict[int, set] = {}
-            for f in entries:
-                out.setdefault(int(f["b"]), set()).add(
-                    (self._dirname_of(f), f["n"])
-                )
-            return out
-
-        def deletes_by_bucket(man: dict) -> dict:
-            out: dict[int, set] = {}
-            for d in man.get("deletes") or []:
-                key = (d["d"], d["n"], int(d["seq"]))
-                for b in self._delete_buckets(d):
-                    out.setdefault(int(b), set()).add(key)
-            return out
-
-        ofb, cfb = files_by_bucket(old_files), files_by_bucket(cur_files)
-        odb, cdb = deletes_by_bucket(old), deletes_by_bucket(cur)
-        if old["num_buckets"] != cur["num_buckets"]:
-            # rolling back across a rebucket (r11): the restore changes
-            # the bucket NUMBERING, so per-bucket diffs are meaningless
-            # — stamp every target bucket changed (the CDC diff branch
-            # independently detects the numbering change and runs
-            # unpruned).  The restored manifest carries the target
-            # snapshot's own num_buckets (copied below), putting the
-            # table back under the old numbering atomically.
-            changed = {int(f["b"]) for f in old_files}
-        else:
-            changed = {
-                b for b in set(ofb) | set(cfb) if ofb.get(b) != cfb.get(b)
-            } | {b for b in set(odb) | set(cdb) if odb.get(b) != cdb.get(b)}
-
-        m = dict(old)
-        buckets = {str(k): int(v) for k, v in (old.get("buckets") or {}).items()}
-        for b in changed:
-            buckets[str(b)] = new_version
-        m["buckets"] = buckets
-        m["version"] = new_version
-        m["op"] = "rollback"
-        # a region touching no bucket: an old snapshot's immutable
-        # shards are referenced by name (r9 shard reuse), not rewritten
-        self._log.commit(m, *self._log.region(old, set()))
-        # the restore re-commits the target snapshot's bucket count
-        # (carried in m via dict(old)); resync the writer immediately
-        self.num_buckets = int(old["num_buckets"])
-        return new_version
-
     def delete_keys(self, keys: "DataFrame | Sequence") -> int:
         """Row-level DELETE by merge key without rewriting any data
         file: one equality-delete file + one manifest flip (the
@@ -2865,11 +2599,6 @@ class ParquetMergeTarget:
         manifest = self._current()
         if manifest is None:
             return 0
-        return self._delete_keys(manifest, keys)
-
-    def _delete_keys(self, manifest: dict, keys: "DataFrame | Sequence") -> int:
-        """:meth:`delete_keys` against the already-read current
-        ``manifest``."""
         schema = self._schema_of(manifest)
         if schema is None:
             raise ValueError(f"no schema committed at {self.path}")
@@ -2922,55 +2651,6 @@ class ParquetMergeTarget:
         manifest["op"] = "delete"  # CDC: snapshot diff, deletes certain
         self._log.commit(manifest, region, keep)
         return n_matched
-
-    def delete_where(self, condition, *more_preds) -> int:
-        """DELETE WHERE: row-level delete of every live row matching
-        ``condition``, as one equality-delete commit via
-        :meth:`delete_keys`.
-
-        ``condition`` is a Column or SQL string (the qualifying scan
-        is a normal pruned read — parquet predicate pushdown applies),
-        OR a ``(col, op[, value])`` predicate tuple — optionally
-        followed by more tuples, AND-ed — in which case the qualifying
-        scan goes through :meth:`read_where` and MANIFEST-level stats
-        pruning drops provably-unaffected files before Spark plans the
-        scan (the Iceberg delete-with-predicate planning shape: a
-        date-ranged delete on a date-clustered 100 TB table scans
-        O(matching files), not O(table)).  For pure key predicates
-        prefer :meth:`delete_keys` directly, which skips the scan.
-        The qualifying scan and the delete commit share one read of the
-        current manifest."""
-        manifest = self._current()
-        if manifest is None:
-            return 0
-        schema = self._schema_of(manifest)
-        if isinstance(condition, (tuple, list)):
-            # ANY tuple/list routes to the predicate path so a typo'd
-            # op gets _parse_predicates' "op not in ..." error, never
-            # pyspark's opaque "condition should be string or Column";
-            # a list OF tuples is accepted as the AND-ed set directly
-            if condition and isinstance(condition[0], (tuple, list)):
-                preds = (*condition, *more_preds)
-            else:
-                preds = (condition, *more_preds)
-            qualifying = self._read_where(manifest, schema, preds)
-        elif more_preds:
-            raise ValueError(
-                "extra predicates are only valid when every argument "
-                "is a (col, op[, value]) tuple"
-            )
-        else:
-            cond = (
-                F.expr(condition)
-                if isinstance(condition, str)
-                else condition
-            )
-            qualifying = (
-                self._scan_root(manifest, schema)
-                .drop(BUCKET_COLUMN)
-                .filter(cond)
-            )
-        return self._delete_keys(manifest, qualifying.select(self.key_col))
 
     # -- maintenance (reference ST8: OPTIMIZE / remove_orphan_files /
     #    ANALYZE — main.scala:46,117, crd-parquet-stream.yaml:235-296) --
@@ -3065,52 +2745,6 @@ class ParquetMergeTarget:
             "file_count": summary["file_count"],
             "small_file_count": summary["small_file_count"],
             "coalescable_small_files": summary["coalescable_small_files"],
-        }
-
-    def suggest_num_buckets(
-        self, target_bucket_bytes: int = 1 << 30
-    ) -> dict:
-        """Metadata-only :meth:`rebucket` advisor: compare the table's
-        mean bucket size against ``target_bucket_bytes`` (the intended
-        single-task unit of merge rewrite / compaction work — ~1 GiB
-        keeps an executor core busy without risking memory pressure)
-        and suggest the nearest VALID count.  Splits suggest a
-        power-of-two multiple (always divisible); coarsenings only the
-        largest power-of-two divisor that reaches the target, so the
-        suggestion is always legal for :meth:`rebucket`.
-
-        Cost: one root manifest read.  On a sharded root total bytes
-        come from the power-of-two size histogram's upper bound
-        (:func:`manifest.summary`'s ``bytes_bound``: ≤2× over, never
-        under — a conservative advisor over-splits rather than
-        under-splits).  Hysteresis is built in: no suggestion
-        moves unless the mean is ≥2× off target, so a borderline table
-        never oscillates."""
-        summary = manifest_log.summary(self._manifest())
-        n = int(self.num_buckets)
-        total = summary["bytes_bound"]
-        avg = total / n if n else 0.0
-        suggested = n
-        if avg >= 2 * target_bucket_bytes:
-            f = 1
-            while avg / (f * 2) >= target_bucket_bytes:
-                f *= 2
-            suggested = n * f * 2
-        elif avg and avg * 4 <= target_bucket_bytes:
-            f = 1
-            while (
-                n % (f * 2) == 0
-                and avg * f * 2 * 2 <= target_bucket_bytes
-            ):
-                f *= 2
-            suggested = max(1, n // f) if f > 1 else n
-        return {
-            "num_buckets": n,
-            "suggested_num_buckets": suggested,
-            "total_bytes": int(total),
-            "avg_bucket_bytes": int(avg),
-            "target_bucket_bytes": int(target_bucket_bytes),
-            "approx": summary["total_bytes"] is None,
         }
 
     def run_adaptive_maintenance(
@@ -3284,7 +2918,6 @@ class ParquetMergeTarget:
             )
             # nonce-namespaced (r10): fresh dir per attempt, no clear
             # of anything a concurrent winner might reference
-            self._log.raise_if_committed(new_version)
             del_dirname = self._new_dirname(new_version)
             # size the file count from pending bytes (consolidation
             # only shrinks) — no extra count() action
@@ -3350,8 +2983,7 @@ class ParquetMergeTarget:
     #   never see mixed numbering — until the flip the table is
     #   untouched; after it every live file sits under the new count.
     #   ``read_changes`` skips the commit (contents logically
-    #   unchanged, like compact); rollback across it restores the old
-    #   numbering from the snapshot's own recorded count.
+    #   unchanged, like compact).
     # * :meth:`vacuum` treats marker-referenced staging dirs as live;
     #   :meth:`rebucket_abort` reclaims an abandoned migration.
 
@@ -3600,7 +3232,7 @@ class ParquetMergeTarget:
 
         Retention mirrors Iceberg ``expire_snapshots`` (the reference
         calls it with a ``retention_threshold``, docs/crd.md:150-182):
-        the newest ``keep_last`` snapshots, every tagged one and, with
+        the newest ``keep_last`` snapshots and, with
         ``older_than_seconds``, every one committed inside that window
         survive, so time travel and :meth:`read_changes` keep working
         across them.  Reclamation is per-file inside partially live
@@ -3623,12 +3255,6 @@ class ParquetMergeTarget:
         root = log.reader(manifest, listing)  # each root read once
         committed = [v for v in listing.roots if v <= current]
         retained_vs = committed[-keep_last:]
-        # tagged snapshots NEVER expire (Iceberg refs): a tag is the
-        # user's statement that this exact state is load-bearing
-        tagged = [
-            v for v in set(log.tags(listing).values()) if v in set(committed)
-        ]
-        retained_vs = sorted(set(retained_vs) | set(tagged))
         if older_than_seconds is not None:
             cutoff = time.time() - older_than_seconds
             for v in committed[:-keep_last]:

@@ -6,7 +6,7 @@ The invariants under test, in pruning-soundness order:
 1. NO FALSE NEGATIVES — every value actually present in a file passes
    that file's bloom (unit-level over every manifest entry, plus a
    hypothesis sweep over adversarial value shapes).
-2. Semantics unchanged — read_where/count_where/delete_where stay
+2. Semantics unchanged — read_where/count_where stay
    ≡ the full-scan forms under `=`/`in` probes, present or absent.
 3. The skipping bites — an absent-value probe plans ZERO files on a
    column where intervals alone prune nothing.
@@ -306,15 +306,3 @@ def test_filters_survive_compact_and_rebucket(spark, tmp_path):
     assert all("bf" in e for e in entries)
     assert t.read_where(("uid", "=", "absent")).inputFiles() == []
     assert t.read_where(("uid", "=", uid(123))).count() == 1
-
-
-def test_delete_where_point_lookup_dirties_only_matching_files(spark, tmp_path):
-    t = make_target(spark, tmp_path / "t")
-    t.merge(rows_df(spark, 0, 200))
-    n = t.delete_where(("uid", "=", "absent-value"))
-    assert n == 0
-    assert t.read().count() == 200
-    n = t.delete_where(("uid", "=", uid(77)))
-    assert n == 1
-    assert t.read().count() == 199
-    assert t.read().filter(F.col("uid") == uid(77)).count() == 0

@@ -328,10 +328,10 @@ def _job_count(spark, fn):
 def test_key_driven_callers_share_the_touch_planner(
     spark, tmp_path, shard_entries, monkeypatch
 ):
-    """lookup, lookup_keys and delete_keys (list and DataFrame forms)
-    against their read() references — NULL, absent and already-deleted
-    keys included — while reading only the manifest shards of the
-    keys' buckets; lookup submits no job beyond its planning, and
+    """lookup and delete_keys (list and DataFrame forms) against
+    their read() references — NULL, absent and already-deleted keys
+    included — while reading only the manifest shards of the keys'
+    buckets; lookup submits no job beyond its planning, and
     delete_keys builds its entry from its own aggregate (no read-back
     of the delete file it just wrote)."""
     if shard_entries is not None:
@@ -385,8 +385,6 @@ def test_key_driven_callers_share_the_touch_planner(
     assert [r[0] for r in want] == ["k003", "k077", None]
     got, lookup_jobs = planned(lambda: t.lookup(keys), keys)
     assert rows(got) == want
-    kdf = spark.createDataFrame([(k,) for k in keys * 2], "some_key string")
-    assert rows(planned(lambda: t.lookup_keys(kdf), keys)[0]) == want
     if shard_entries is None:
         # lookup submits no job beyond the planner's one action
         schema = t._schema_of(t._manifest())

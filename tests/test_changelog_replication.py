@@ -302,80 +302,6 @@ def test_replicate_chained_two_hops(spark, tmp_path):
     assert_mirrors(a, c)
 
 
-def test_delete_where_predicate(spark, tmp_path):
-    t = make_target(spark, tmp_path / "t")
-    t.merge(df_of(spark, [(f"k{i}", i, f"p{i}") for i in range(10)]))
-    # SQL-string predicate over non-key columns
-    assert t.delete_where("createdon >= 7") == 3
-    assert t.delete_where("payload = 'p0'") == 1
-    # Column predicate; nothing matches → no commit
-    v = t._manifest()["version"]
-    assert t.delete_where(F.col("createdon") > 100) == 0
-    assert t._manifest()["version"] == v
-    assert contents(t) == sorted(
-        (f"k{i}", i, f"p{i}") for i in range(1, 7)
-    )
-
-
-def test_delete_where_tuple_predicates_prune(spark, tmp_path):
-    """r12: (col, op, value) tuples route the qualifying scan through
-    read_where — manifest stats prune provably-unaffected files before
-    Spark plans the delete's scan, and results match the Column path."""
-    from arcane_stream_parquet_spark.operators.merge import (
-        ParquetMergeTarget,
-    )
-
-    t = ParquetMergeTarget(
-        spark=spark,
-        path=str(tmp_path / "tp"),
-        num_buckets=1,
-        stats_cols=("createdon",),
-        sorted_by=("createdon",),
-        max_records_per_file=10,
-    )
-    t.merge(df_of(spark, [(f"k{i:03d}", i, f"p{i}") for i in range(60)]))
-    # the pruned qualifying scan plans fewer files than the table holds
-    from arcane_stream_parquet_spark.operators.merge import (
-        _file_may_match,
-    )
-
-    m = t._manifest()
-    files = t._files_of_manifest(m)
-    parsed, _ = t._parse_predicates(
-        t._schema_of(m), (("createdon", ">=", 50),)
-    )
-    may = [
-        f
-        for f in files
-        if all(_file_may_match(f, c, o, nv) for c, o, _, nv in parsed)
-    ]
-    assert len(may) < len(files)
-    assert t.delete_where(("createdon", ">=", 50)) == 10
-    # AND-ed tuples and the like_prefix op compose
-    assert t.delete_where(
-        ("createdon", ">=", 40), ("payload", "like_prefix", "p4")
-    ) == 10
-    assert contents(t) == sorted(
-        (f"k{i:03d}", i, f"p{i}") for i in range(40)
-    )
-    # mixing tuple mode with extra preds on a Column arg is rejected
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        t.delete_where(F.col("createdon") > 0, ("createdon", "<", 5))
-    # a typo'd op inside a tuple surfaces the predicate-validation
-    # error (op list), never pyspark's opaque condition TypeError
-    with _pytest.raises(ValueError, match="not in"):
-        t.delete_where(("createdon", ">==", 5))
-    # a LIST of AND-ed tuples is accepted directly
-    assert t.delete_where(
-        [("createdon", ">=", 38), ("createdon", "<", 40)]
-    ) == 2
-    assert contents(t) == sorted(
-        (f"k{i:03d}", i, f"p{i}") for i in range(38)
-    )
-
-
 def test_consumer_lag_gauge(spark, tmp_path):
     src = make_target(spark, tmp_path / "src")
     cons = ChangelogConsumer(src, str(tmp_path / "cur"))
@@ -407,26 +333,3 @@ def test_replicate_through_schema_drift(spark, tmp_path):
         map(tuple, src.read().collect())
     )
     assert "note" in dst.read().columns
-
-
-def test_lookup_keys_bulk_pruned(spark, tmp_path):
-    t = make_target(spark, tmp_path / "t")
-    t.merge(df_of(spark, [(f"k{i}", 1, f"p{i}") for i in range(20)]))
-    t.delete_keys(["k3"])
-    keys = spark.createDataFrame(
-        [("k1",), ("k3",), (None,), ("ghost",)], "k string"
-    )
-    got = sorted(
-        (r["arcane_merge_key"], r["payload"])
-        for r in t.lookup_keys(keys).collect()
-    )
-    assert got == [("k1", "p1")]  # k3 deleted, null/ghost absent
-    # matches the read().semi-join contract exactly
-    full = t.read()
-    ref = sorted(
-        (r["arcane_merge_key"], r["payload"])
-        for r in full.join(
-            keys, full["arcane_merge_key"].eqNullSafe(keys["k"]), "leftsemi"
-        ).collect()
-    )
-    assert got == ref

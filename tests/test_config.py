@@ -28,6 +28,27 @@ from arcane_stream_parquet_spark.config import (
 
 from tests.test_streaming import N_KEYS, write_fixture_file
 
+# the Hadoop keys build_pipeline sets from example_spec's s3 block
+_S3A_KEYS = ("fs.s3a.endpoint", "fs.s3a.path.style.access", "fs.s3a.endpoint.region")
+
+
+@pytest.fixture(autouse=True)
+def _restore_s3a_conf(request):
+    """Put the shared session's ``fs.s3a.*`` keys back after each test
+    that builds a pipeline, so no later test reads this spec's
+    endpoint."""
+    if "spark" not in request.fixturenames:
+        yield
+        return
+    hconf = request.getfixturevalue("spark").sparkContext._jsc.hadoopConfiguration()
+    saved = {k: hconf.get(k) for k in _S3A_KEYS}
+    yield
+    for k, v in saved.items():
+        if v is None:
+            hconf.unset(k)
+        else:
+            hconf.set(k, v)
+
 
 def example_spec(source_path: str) -> dict:
     """The reference's serialized context shape, verbatim field names
@@ -296,17 +317,12 @@ def test_spec_s3_block_reaches_hadoop_conf(spark, tmp_path):
     fs.s3a.* confs (endpoint, path style, region)."""
     raw = example_spec(str(tmp_path / "landing"))
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    keys = ("fs.s3a.endpoint", "fs.s3a.path.style.access", "fs.s3a.endpoint.region")
-    try:
-        build_pipeline(
-            spark,
-            StreamSpec.from_json(json.dumps(raw)),
-            warehouse_root=str(tmp_path / "wh"),
-            checkpoint_root=str(tmp_path / "ck"),
-        )
-        assert hconf.get("fs.s3a.endpoint") == "http://localhost:9000"
-        assert hconf.get("fs.s3a.path.style.access") == "true"
-        assert hconf.get("fs.s3a.endpoint.region") == "us-east-1"
-    finally:
-        for k in keys:
-            hconf.unset(k)
+    build_pipeline(
+        spark,
+        StreamSpec.from_json(json.dumps(raw)),
+        warehouse_root=str(tmp_path / "wh"),
+        checkpoint_root=str(tmp_path / "ck"),
+    )
+    assert hconf.get("fs.s3a.endpoint") == "http://localhost:9000"
+    assert hconf.get("fs.s3a.path.style.access") == "true"
+    assert hconf.get("fs.s3a.endpoint.region") == "us-east-1"

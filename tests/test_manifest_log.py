@@ -114,9 +114,9 @@ def test_name_grammar_roundtrip_and_junk_ignored():
         "manifest-v00099-shard-00000-deadbeef.json",  # any shard suffix
         ml.watermark_name(7),
         ml.watermark_name(12),
-        ml.tag_name("gold"),
         ml.marker_name(8, 1),
         # junk the parse must skip
+        "tag-gold.json",
         ml.root_name(11) + ".1a2b3c4d5e6f.tmp",
         ".manifest-v00003.json.crc",
         "manifest-vabc.json",
@@ -133,11 +133,8 @@ def test_name_grammar_roundtrip_and_junk_ignored():
         "manifest-v00099-shard-00000-deadbeef.json",
     )
     assert got.watermarks == (7, 12)
-    assert got.tags == ("tag-gold.json",)
     assert got.markers == ("rebucket-to8-u0000001.json",)
     assert ml.parse_listing([]) == ml.Listing()
-    with pytest.raises(ValueError, match="tag name"):
-        ml.tag_name("no/slashes")
 
 
 def test_listing_is_one_list_names_call():
@@ -258,9 +255,7 @@ def test_summary_parity_inline_vs_sharded(shards_of):
         )
     exact = sum(f["sz"] for f in files)
     assert ml.summary(inline)["total_bytes"] == exact
-    assert ml.summary(inline)["bytes_bound"] == exact
     assert ml.summary(sharded)["total_bytes"] is None
-    assert exact <= ml.summary(sharded)["bytes_bound"] <= 2 * exact
 
 
 # -- crash-point matrix ---------------------------------------------------------

@@ -698,8 +698,10 @@ def test_concurrent_minor_compaction_never_wipes_winner_deletes(
     spark, tmp_path
 ):
     """r9 review find: a stale maintenance run whose only pressure is
-    DELETE files must not clear the winner's committed delete dir —
-    the fence fires before the first FS mutation of that path."""
+    DELETE files must not clear the winner's committed delete dir.
+    The loser stages its consolidated delete file in a fresh
+    nonce-named dir, the fence fires at its commit, and that staging
+    is an orphan vacuum reclaims."""
     import copy
 
     from arcane_stream_parquet_spark.operators.merge import (
@@ -728,6 +730,9 @@ def test_concurrent_minor_compaction_never_wipes_winner_deletes(
     with pytest.raises(ConcurrentWriteError):
         b.compact_minor(small_file_bytes=0, min_delete_files=2)
     # the winner's table reads intact, including its delete semantics
+    assert sorted(map(tuple, a.read().collect())) == winner_rows
+    # the loser's staged delete dir is unreferenced garbage
+    assert any(r.startswith("deletes/") for r in a.vacuum())
     assert sorted(map(tuple, a.read().collect())) == winner_rows
 
 

@@ -1,8 +1,9 @@
 """Metadata IO budget per public operation: each lists the table's
-``_asp_meta`` directory once, and a merge or an idle maintenance poll
-reads the current root manifest once.  On an object store every LIST
-and GET is a round trip, so these counts are the steady-state cost of a
-micro-batch before any data IO."""
+``_asp_meta`` directory once, a merge or an idle maintenance poll
+reads the current root manifest once, and a merge probes its next root
+at most twice (the commit fence and the create-only check).  On an
+object store every LIST, GET and HEAD is a round trip, so these counts
+are the steady-state cost of a micro-batch before any data IO."""
 
 from __future__ import annotations
 
@@ -23,10 +24,11 @@ def df_of(spark, rows):
 
 @contextlib.contextmanager
 def meta_calls(monkeypatch):
-    """Count ``list_names`` of ``_asp_meta`` and reads of root
-    manifests made inside the block."""
-    seen = {"list": 0, "root_read": 0}
+    """Count ``list_names`` of ``_asp_meta`` and reads and ``exists``
+    probes of root manifests made inside the block."""
+    seen = {"list": 0, "root_read": 0, "root_exists": 0}
     real_list, real_read = HadoopFileIO.list_names, HadoopFileIO.read_text
+    real_exists = HadoopFileIO.exists
 
     def list_names(self, dir_path):
         if dir_path.rstrip("/").endswith("/_asp_meta"):
@@ -38,9 +40,15 @@ def meta_calls(monkeypatch):
             seen["root_read"] += 1
         return real_read(self, path)
 
+    def exists(self, path):
+        if _ROOT.search(path):
+            seen["root_exists"] += 1
+        return real_exists(self, path)
+
     with monkeypatch.context() as m:
         m.setattr(HadoopFileIO, "list_names", list_names)
         m.setattr(HadoopFileIO, "read_text", read_text)
+        m.setattr(HadoopFileIO, "exists", exists)
         yield seen
 
 
@@ -55,11 +63,12 @@ def test_one_listing_per_operation(spark, tmp_path, monkeypatch):
         batch = df_of(spark, [(f"k{i:03d}", 4, mode) for i in range(0, 200, 11)])
         with meta_calls(monkeypatch) as seen:
             t.merge(batch, mode=mode)
-        assert seen == {"list": 1, "root_read": 1}, mode
+        assert (seen["list"], seen["root_read"]) == (1, 1), mode
+        assert seen["root_exists"] <= 2, mode
 
     with meta_calls(monkeypatch) as seen:
         assert t.run_adaptive_maintenance() == {"ran": False, "escalated": False}
-    assert seen == {"list": 1, "root_read": 1}
+    assert seen == {"list": 1, "root_read": 1, "root_exists": 0}
 
     with meta_calls(monkeypatch) as seen:
         t.commit_watermark(4)

@@ -150,67 +150,6 @@ def test_vacuum_dry_run_reports_without_removing(spark, tmp_path):
     assert snap(t) == want
 
 
-# -- snapshot tags (r11, Iceberg named references) -----------------------------
-
-
-def test_tags_pin_snapshots_across_vacuum(spark, tmp_path):
-    t = build_history(spark, tmp_path, n=4)
-    vs = t.snapshot_versions()
-    t.create_tag("train-run-7", vs[1])
-    assert t.tags() == {"train-run-7": vs[1]}
-    t.vacuum(keep_last=1)
-    # the tagged snapshot survived expiry; its neighbors did not
-    assert t.snapshot_versions() == [vs[1], vs[-1]]
-    tagged = t.read(at_tag="train-run-7")
-    assert {r["payload"] for r in tagged.collect()} == {"p2"}
-    assert {
-        tuple(r) for r in t.read_where(("payload", "=", "p2"), at_tag="train-run-7").collect()
-    } == {tuple(r) for r in tagged.collect()}
-    assert t.count_where(("payload", "=", "p2"), at_tag="train-run-7") == 8
-    # dropping the tag releases it to normal retention
-    assert t.drop_tag("train-run-7") is True
-    assert t.drop_tag("train-run-7") is False
-    t.vacuum(keep_last=1)
-    assert t.snapshot_versions() == [vs[-1]]
-    with pytest.raises(ValueError, match="no tag"):
-        t.read(at_tag="train-run-7")
-
-
-def test_tag_validation_and_immutability(spark, tmp_path):
-    t = build_history(spark, tmp_path, n=2)
-    v = t.create_tag("gold")  # defaults to the live version
-    assert v == t.snapshot_versions()[-1]
-    with pytest.raises(ValueError, match="already exists"):
-        t.create_tag("gold")
-    with pytest.raises(ValueError, match="no snapshot"):
-        t.create_tag("bad", version=999)
-    with pytest.raises(ValueError, match="alnum"):
-        t.create_tag("no/slashes")
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        t.read(at_version=1, at_tag="gold")
-    # a tag keeps meaning the same contents even after new commits
-    before = {tuple(r) for r in t.read(at_tag="gold").collect()}
-    t.merge(df_of(spark, [("k0", 99, "new")]))
-    assert {tuple(r) for r in t.read(at_tag="gold").collect()} == before
-
-
-def test_rollback_to_tag(spark, tmp_path):
-    t = build_history(spark, tmp_path, n=3)
-    vs = t.snapshot_versions()
-    t.create_tag("good", vs[0])
-    t.vacuum(keep_last=1)  # the tag keeps vs[0] restorable
-    new_v = t.rollback(to_tag="good")
-    assert new_v > vs[-1]
-    assert {r["payload"] for r in t.read().collect()} == {"p1"}
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        t.rollback(to_version=vs[0], to_tag="good")
-    with pytest.raises(ValueError, match="needs to_version or to_tag"):
-        t.rollback()
-    # history() surfaces each snapshot's bucket count
-    hist = {r["version"]: r["num_buckets"] for r in t.history().collect()}
-    assert set(hist.values()) == {4}
-
-
 # -- orphan age guard (r13: Iceberg remove_orphan_files older_than) ------------
 
 
