@@ -209,7 +209,8 @@ class StreamSpec:
     @property
     def maintenance_batch_threshold(self) -> int:
         """Smallest of the four reference maintenance cadences — the
-        stand-in target runs compact+vacuum+stats together."""
+        stream runner runs compact + vacuum together at it (no
+        ANALYZE/stats step)."""
         ms = self.raw.get("sink", {}).get("maintenanceSettings", {})
         thresholds = [
             s.get("batchThreshold")

@@ -64,6 +64,11 @@ META_DIR = "_asp_meta"
 #: longer concentrates ~120 MB of JSON in one object.
 SHARD_ENTRIES = 100_000
 
+#: Small-file bound of the maintenance policy: a data file whose
+#: power-of-two size class fits under it counts as small, and two or
+#: more small files in one bucket are what a minor compaction merges.
+SMALL_FILE_BYTES = 8 << 20
+
 # the keys of a root that hold (or summarise) its file list: a commit
 # rebuilds them from the files and kept shards it is given
 _FILE_LIST_KEYS = ("files", "file_shards", "n_files", "size_hist")
@@ -212,17 +217,20 @@ def _descriptors(manifest: dict) -> list[dict]:
     return [{"nf": len(manifest["files"]), "hist": hist, "coal": coal}]
 
 
-def summary(manifest: dict, small_file_bytes: int = 8 << 20) -> dict:
+def summary(manifest: dict, small_file_bytes: int | None = None) -> dict:
     """Metadata-only file summary of one root, the same rules for both
     shapes (no shard is read):
 
     - ``file_count``;
     - ``small_file_count``: files whose power-of-two size class fits
-      entirely under ``small_file_bytes``;
+      entirely under ``small_file_bytes`` (default
+      :data:`SMALL_FILE_BYTES`);
     - ``coalescable_small_files``: those small files sharing a bucket
       with another small file — what a minor compaction can merge;
     - ``total_bytes``: exact for an inline root, None for a sharded one."""
-    k = size_class_at(small_file_bytes)
+    k = size_class_at(
+        SMALL_FILE_BYTES if small_file_bytes is None else small_file_bytes
+    )
     descs = _descriptors(manifest)
     hist = {int(c): n for c, n in _hist_sum(descs).items()}
     return {
@@ -372,11 +380,11 @@ class MetaLog:
         )
 
     def coalescable_region(
-        self, manifest: dict, small_file_bytes: int
+        self, manifest: dict
     ) -> tuple[list[dict], list[dict]]:
         """``(files, keep)`` for a minor compaction: only the shards
         whose descriptor shows a coalescable small file are read."""
-        k = size_class_at(small_file_bytes)
+        k = size_class_at(SMALL_FILE_BYTES)
         return self._split(manifest, lambda s: step_at(s["coal"], k) > 0)
 
     # -- commit ------------------------------------------------------------

@@ -87,6 +87,14 @@ BUCKET_COLUMN = "__bucket"
 # shuffled join, where AQE's skew handling covers deletes concentrated
 # in few buckets (probe: SCALE.md r8).
 _BROADCAST_DELETE_BYTES = 64 << 20
+# The adaptive maintenance gate (run_adaptive_maintenance): a minor
+# compaction fires at this many pending delete files, this many pending
+# delete bytes, or this many coalescable small files (small = under
+# manifest.SMALL_FILE_BYTES); a vacuum fires at this many snapshots.
+_MAINT_DELETE_FILES = 16
+_MAINT_DELETE_BYTES = 256 << 20
+_MAINT_SMALL_FILES = 512
+_MAINT_SNAPSHOTS = 64
 
 
 def _strip_nullability(dt):
@@ -315,7 +323,7 @@ def _bloom_canon(v) -> str | None:
     return None
 
 
-def _bloom_positions(canon: str, m: int) -> list[int]:
+def _bloom_positions(canon: str, m: int, k: int = _BLOOM_K) -> list[int]:
     """The k bit positions of a canonical value: independent probes
     from sha256('j|value') (first 48 bits, mod m) — exactly what the
     write side computes in Spark SQL (_bloom_pos_col)."""
@@ -323,7 +331,7 @@ def _bloom_positions(canon: str, m: int) -> list[int]:
 
     return [
         int(hashlib.sha256(f"{j}|{canon}".encode()).hexdigest()[:12], 16) % m
-        for j in range(_BLOOM_K)
+        for j in range(k)
     ]
 
 
@@ -362,18 +370,14 @@ def _bloom_may_contain(entry: dict, col: str, value) -> bool:
     spec = (entry.get("bf") or {}).get(col)
     if spec is None:
         return True
-    m, k, b64 = int(spec[0]), int(spec[1]), spec[2]
     canon = _bloom_canon(value)
     if canon is None:
         return True
-    import hashlib
-
-    bits = base64.b64decode(b64)
-    for j in range(k):
-        p = int(hashlib.sha256(f"{j}|{canon}".encode()).hexdigest()[:12], 16) % m
-        if not (bits[p >> 3] >> (p & 7)) & 1:
-            return False
-    return True
+    bits = base64.b64decode(spec[2])
+    return all(
+        (bits[p >> 3] >> (p & 7)) & 1
+        for p in _bloom_positions(canon, int(spec[0]), int(spec[1]))
+    )
 
 
 def _session_zoneinfo(spark):
@@ -2655,21 +2659,17 @@ class ParquetMergeTarget:
     # -- maintenance (reference ST8: OPTIMIZE / remove_orphan_files /
     #    ANALYZE — main.scala:46,117, crd-parquet-stream.yaml:235-296) --
 
-    def compact(
-        self,
-        min_files_per_bucket: int = 2,
-        target_records_per_file: int | None = None,
-    ) -> int:
-        """OPTIMIZE equivalent: rewrite buckets fragmented into ≥
-        ``min_files_per_bucket`` files — and every bucket with pending
-        MoR delete entries, folding the deletes back into plain data
-        files — to a single new version, one atomic manifest flip.
+    def compact(self, target_records_per_file: int | None = None) -> int:
+        """OPTIMIZE equivalent: rewrite buckets fragmented into ≥ 2
+        files — and every bucket with pending MoR delete entries,
+        folding the deletes back into plain data files — to a single
+        new version, one atomic manifest flip.
         Returns number of buckets compacted.  Contents are unchanged
         (pure repack; proven in tests).  This is the pressure valve for
         both the small files narrow upserts append and the delete files
         MoR commits accumulate — run it batch-gated like the
         reference's OPTIMIZE (ST8; Iceberg pairs rewrite_data_files
-        with rewrite_position_delete_files the same way).
+        with its position-delete rewrite procedure the same way).
 
         ``target_records_per_file`` caps rewritten file size (Iceberg
         ``rewrite_data_files`` target-file-size): default ``None``
@@ -2684,11 +2684,9 @@ class ParquetMergeTarget:
         per_bucket: dict[int, int] = {}
         for f in files:
             per_bucket[int(f["b"])] = per_bucket.get(int(f["b"]), 0) + 1
-        frag_set = {
-            b
-            for b, n in per_bucket.items()
-            if n >= max(min_files_per_bucket, 2)
-        } | {b for d in deletes for b in self._delete_buckets(d)}
+        frag_set = {b for b, n in per_bucket.items() if n >= 2} | {
+            b for d in deletes for b in self._delete_buckets(d)
+        }
         if not frag_set:
             return 0
         in_scope = [f for f in files if int(f["b"]) in frag_set]
@@ -2723,7 +2721,7 @@ class ParquetMergeTarget:
         self._log.commit(manifest, kept + new_files)  # schema carried over
         return len(frag_set)
 
-    def maintenance_metrics(self, small_file_bytes: int = 8 << 20) -> dict:
+    def maintenance_metrics(self) -> dict:
         """Metadata-only maintenance signals from one listing and one
         root read — what an adaptive maintenance trigger polls per batch
         (reference: the engine reads the snapshot summary,
@@ -2736,7 +2734,7 @@ class ParquetMergeTarget:
         listing = self._log.listing()
         manifest = self._manifest(listing)
         deletes = manifest.get("deletes") or []
-        summary = manifest_log.summary(manifest, small_file_bytes)
+        summary = manifest_log.summary(manifest)
         return {
             "version": int(manifest["version"]),
             "snapshot_count": len(listing.roots),
@@ -2747,15 +2745,7 @@ class ParquetMergeTarget:
             "coalescable_small_files": summary["coalescable_small_files"],
         }
 
-    def run_adaptive_maintenance(
-        self,
-        small_file_bytes: int = 8 << 20,
-        on_delete_files: int | None = 16,
-        on_delete_bytes: int | None = 256 * 1024 * 1024,
-        on_small_files: int | None = 512,
-        on_snapshots: int | None = 64,
-        orphan_grace_seconds: float = 0.0,
-    ) -> dict:
+    def run_adaptive_maintenance(self, orphan_grace_seconds: float = 0.0) -> dict:
         """THE metric-driven maintenance gate (shared by the stream
         runner and the curation pipeline — one implementation, r8
         review find): poll :meth:`maintenance_metrics` (one root
@@ -2772,60 +2762,45 @@ class ParquetMergeTarget:
         pending deletes.  The small-file dimension gates on the
         COALESCABLE count — small files sharing a bucket — so a table
         of 1-per-bucket small files (which no compaction can shrink)
-        never triggers.  ``None`` disables a dimension; returns what
-        ran.
+        never triggers.  The thresholds are the module's ``_MAINT_*``
+        constants; returns what ran.
 
-        ``on_snapshots`` is the vacuum-debt dimension (r9 review):
+        The snapshot count is the vacuum-debt dimension (r9 review):
         every commit strands one expired root manifest (plus any
         superseded data/shards) until :meth:`vacuum` — which is
         O(table) and therefore must not ride every minor fire.  When
         the stranded-snapshot count crosses the bound, the gate runs a
         vacuum (with or without any compaction), so reclamation is
-        amortized 1/``on_snapshots`` per commit even in adaptive-only
+        amortized 1/``_MAINT_SNAPSHOTS`` per commit even in adaptive-only
         deployments where the counter-gated deep clean never runs.
         Vacuum drives the count back to 1 — convergent like the rest."""
         def delete_due(m: dict) -> bool:
-            return bool(
-                (
-                    on_delete_files
-                    and m["delete_file_count"] >= on_delete_files
-                )
-                or (on_delete_bytes and m["delete_bytes"] >= on_delete_bytes)
+            return (
+                m["delete_file_count"] >= _MAINT_DELETE_FILES
+                or m["delete_bytes"] >= _MAINT_DELETE_BYTES
             )
 
-        def due(m: dict) -> bool:
-            return delete_due(m) or bool(
-                on_small_files
-                and m["coalescable_small_files"] >= on_small_files
-            )
-
-        if not (
-            on_delete_files
-            or on_delete_bytes
-            or on_small_files
-            or on_snapshots
-        ):
-            return {"ran": False, "escalated": False}
         try:
-            m0 = self.maintenance_metrics(small_file_bytes)
+            m0 = self.maintenance_metrics()
         except FileNotFoundError:  # nothing committed yet
             return {"ran": False, "escalated": False}
-        vacuum_due = bool(
-            on_snapshots and m0["snapshot_count"] >= on_snapshots
-        )
-        if not due(m0):
+        vacuum_due = m0["snapshot_count"] >= _MAINT_SNAPSHOTS
+        if not (
+            delete_due(m0)
+            or m0["coalescable_small_files"] >= _MAINT_SMALL_FILES
+        ):
             if vacuum_due:
                 self.vacuum(orphan_grace_seconds=orphan_grace_seconds)
                 return {"ran": True, "escalated": False}
             return {"ran": False, "escalated": False}
-        self.compact_minor(small_file_bytes=small_file_bytes)
+        self.compact_minor()
         escalated = False
         # escalate ONLY on surviving DELETE pressure: the full compact
         # provably clears all pending deletes, so the escalation always
         # makes progress; it has no such guarantee for small files
         # (1-per-bucket layouts survive it), so a surviving small-file
         # reading must never buy an O(table) rewrite (r8 second review)
-        if delete_due(self.maintenance_metrics(small_file_bytes)):
+        if delete_due(self.maintenance_metrics()):
             self.compact()
             escalated = True
         if escalated or vacuum_due:
@@ -2836,17 +2811,12 @@ class ParquetMergeTarget:
             self.vacuum(orphan_grace_seconds=orphan_grace_seconds)
         return {"ran": True, "escalated": escalated}
 
-    def compact_minor(
-        self,
-        small_file_bytes: int = 8 << 20,
-        min_delete_files: int = 2,
-        min_small_files_per_bucket: int = 2,
-    ) -> dict:
+    def compact_minor(self) -> dict:
         """Cheap maintenance pass bounding MoR read-path degradation
-        without rewriting full buckets (r7 VERDICT item 4; the
-        `rewrite_position_delete_files` + small-file-only
-        `rewrite_data_files` analogue of Iceberg's maintenance pair the
-        reference schedules, docs/crd.md:150-182):
+        without rewriting full buckets (r7 VERDICT item 4; the analogue
+        of Iceberg's position-delete rewrite + small-file-only
+        `rewrite_data_files`, the maintenance pair the reference
+        schedules, docs/crd.md:150-182):
 
         - **Delete consolidation**: fold all pending delete files into
           ONE file of (key, original seq) rows, deduped to MAX(seq) per
@@ -2854,15 +2824,14 @@ class ParquetMergeTarget:
           ``v < large``, and the larger seq's delete listed the key
           too).  Read-side anti-join build cost drops from #commits
           file opens to one.
-        - **Small-file coalescing**: buckets holding ≥
-          ``min_small_files_per_bucket`` data files under
-          ``small_file_bytes`` get those files (and only those — the
-          large base files are untouched) rewritten into one file per
-          bucket, with pending deletes applied during the rewrite
-          (sound: applying a delete early is idempotent — the rewritten
-          file's version exceeds every pending seq, so the entries
-          simply stop matching it; they stay live for the files not
-          rewritten).
+        - **Small-file coalescing**: buckets holding ≥ 2 data files
+          under ``manifest.SMALL_FILE_BYTES`` get those files (and only
+          those — the large base files are untouched) rewritten into
+          one file per bucket, with pending deletes applied during the
+          rewrite (sound: applying a delete early is idempotent — the
+          rewritten file's version exceeds every pending seq, so the
+          entries simply stop matching it; they stay live for the files
+          not rewritten).
 
         Both land in one version + one atomic manifest flip.  Cost is
         O(small files + delete files), not O(table) — the full
@@ -2871,7 +2840,7 @@ class ParquetMergeTarget:
         small file are read (:meth:`MetaLog.coalescable_region`).
         Returns counts."""
         manifest = self._manifest()
-        files, keep = self._log.coalescable_region(manifest, small_file_bytes)
+        files, keep = self._log.coalescable_region(manifest)
         deletes = manifest.get("deletes") or []
         schema = self._schema_of(manifest)
 
@@ -2879,18 +2848,13 @@ class ParquetMergeTarget:
         # rule the metrics and the sharded candidate filter use (r9
         # review: a raw-threshold rewrite criterion here would silently
         # narrow by up to 2x the moment a table's manifest shards)
-        k_small = manifest_log.size_class_at(small_file_bytes)
+        k_small = manifest_log.size_class_at(manifest_log.SMALL_FILE_BYTES)
         per_bucket: dict[int, list[dict]] = {}
         for f in files:
             if int(f["sz"]).bit_length() <= k_small:
                 per_bucket.setdefault(int(f["b"]), []).append(f)
-        small = [
-            f
-            for fs in per_bucket.values()
-            if len(fs) >= max(min_small_files_per_bucket, 2)
-            for f in fs
-        ]
-        do_deletes = len(deletes) >= max(min_delete_files, 2)
+        small = [f for fs in per_bucket.values() if len(fs) >= 2 for f in fs]
+        do_deletes = len(deletes) >= 2
         if not small and not do_deletes:
             return {"delete_files_merged": 0, "small_files_rewritten": 0}
 

@@ -52,18 +52,6 @@ class StreamingCurationPipeline:
     # harnesses shrink it — at tiny scale per-file overhead dominates,
     # 64 buckets × tables × batches of near-empty parquet files).
     num_buckets: int = 64
-    # Adaptive maintenance for the per-batch merge targets (the shared
-    # ParquetMergeTarget.run_adaptive_maintenance gate, same thresholds
-    # semantics as the stream runner's): a long-running curation stream
-    # appends corpus/audit fragments every micro-batch; when a target's
-    # manifest-only metrics cross a threshold the cheap compact_minor +
-    # vacuum pass runs, ESCALATING once to a full compact() if delete
-    # pressure survives it (a latency cliff to size thresholds around).
-    # None disables a dimension.
-    compact_on_delete_files: int | None = 16
-    compact_on_small_files: int | None = 512
-    vacuum_on_snapshots: int | None = 64  # vacuum-debt bound (r9)
-    minor_small_file_bytes: int = 8 * 1024 * 1024
     corpus: ParquetMergeTarget = field(init=False)
     audit: ParquetMergeTarget = field(init=False)
     index: LshDedupIndex = field(init=False)
@@ -134,16 +122,13 @@ class StreamingCurationPipeline:
         self.corpus.merge(accepted)
         self.audit.merge(audit_rows)
         # the shared convergent maintenance gate (merge.py
-        # run_adaptive_maintenance — same implementation as the stream
-        # runner's, r8 review find: no divergent second copy)
+        # run_adaptive_maintenance — same implementation and thresholds
+        # as the stream runner's, r8 review find: no divergent second
+        # copy): a long-running curation stream appends corpus/audit
+        # fragments every micro-batch, and the gate's minor pass keeps
+        # them bounded
         for target in (self.corpus, self.audit):
-            target.run_adaptive_maintenance(
-                small_file_bytes=self.minor_small_file_bytes,
-                on_delete_files=self.compact_on_delete_files,
-                on_delete_bytes=None,
-                on_small_files=self.compact_on_small_files,
-                on_snapshots=self.vacuum_on_snapshots,
-            )
+            target.run_adaptive_maintenance()
 
     # -- stream assembly -----------------------------------------------------
 

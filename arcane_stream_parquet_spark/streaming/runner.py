@@ -59,26 +59,13 @@ class StreamRunner:
     # ST8 maintenance cadence (reference TargetMaintenanceProcessor,
     # main.scala:46,117: OPTIMIZE/expire/remove_orphans/ANALYZE every
     # batchThreshold batches, defaults 60/60/60/180,
-    # crd-parquet-stream.yaml:235-296). 0 disables ALL maintenance,
-    # including the adaptive gate below (full opt-out contract).
+    # crd-parquet-stream.yaml:235-296): every N batches the runner runs
+    # the target's compact() + vacuum() — OPTIMIZE, expire and orphan
+    # removal; it runs no ANALYZE/stats step.  The other batches poll
+    # the target's adaptive gate (run_adaptive_maintenance, fixed
+    # thresholds in operators/merge.py).  0 disables ALL maintenance,
+    # the adaptive gate included (full opt-out contract).
     maintenance_every_n_batches: int = 60
-    # Adaptive (metric-driven) maintenance: after each batch, poll the
-    # target's manifest-only maintenance_metrics() and run the cheap
-    # compact_minor() pass — delete-file consolidation + small-file
-    # coalescing — when actual read-path pressure crosses a threshold,
-    # instead of waiting out the batch counter.  MoR read latency grows
-    # with pending delete files and per-commit data fragments (measured
-    # 0.79 s clean -> ~3 s after 10 trickle commits, SCALE.md), so the
-    # trigger watches exactly those: pending delete file count, pending
-    # delete bytes, and live sub-threshold data file count.  None
-    # disables a dimension; all-None disables adaptive maintenance.
-    compact_on_delete_files: int | None = 16
-    compact_on_delete_bytes: int | None = 256 * 1024 * 1024
-    compact_on_small_files: int | None = 512
-    # vacuum-debt dimension (r9): reclaim expired snapshots/orphans
-    # when this many roots have accumulated — amortized O(table)/N
-    # even when the counter-gated deep clean never runs
-    vacuum_on_snapshots: int | None = 64
     # orphan age guard passed through to every maintenance vacuum
     # (merge.py vacuum(orphan_grace_seconds=...), r13): 0 = the
     # single-writer default (this stream is the table's only writer,
@@ -87,7 +74,6 @@ class StreamRunner:
     # a rebucket operator, a second stream) may be mid-commit while
     # this stream's maintenance runs
     vacuum_orphan_grace_seconds: float = 0.0
-    minor_small_file_bytes: int = 8 * 1024 * 1024
     # reference S6 queryRetry*: in-process merge retry with backoff +
     # retryable-message matching (streaming/retry.py); default "never"
     retry_policy: QueryRetryPolicy = field(default_factory=QueryRetryPolicy)
@@ -126,12 +112,7 @@ class StreamRunner:
             # one manifest read when idle; minor pass + one-shot full-
             # compact escalation when read-path pressure crosses a bound
             self.target.run_adaptive_maintenance(
-                small_file_bytes=self.minor_small_file_bytes,
-                on_delete_files=self.compact_on_delete_files,
-                on_delete_bytes=self.compact_on_delete_bytes,
-                on_small_files=self.compact_on_small_files,
-                on_snapshots=self.vacuum_on_snapshots,
-                orphan_grace_seconds=self.vacuum_orphan_grace_seconds,
+                orphan_grace_seconds=self.vacuum_orphan_grace_seconds
             )
         for hook in self.on_batch:
             hook(batch_id, batch)

@@ -109,10 +109,7 @@ def worker(path: str, wid: int, rounds: int) -> None:
 
         if r % 3 == 2:
             if wid == 0:
-                with_retry(
-                    lambda: t.compact_minor(small_file_bytes=1 << 20),
-                    f"compact_minor r{r}",
-                )
+                with_retry(t.compact_minor, f"compact_minor r{r}")
             else:
                 # the other writer IS mid-commit sometimes: the positive
                 # grace is what keeps its staged-but-unreferenced files

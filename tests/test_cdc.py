@@ -138,7 +138,7 @@ def test_maintenance_commits_are_silent(spark, tmp_path, mode):
     for b in BATCHES:
         t.merge(df_of(spark, b))
     before = changelog(t)
-    assert t.compact(min_files_per_bucket=1) > 0
+    assert t.compact() > 0
     v_compact = t._manifest()["version"]
     assert v_compact == 4
     # the compact version contributes nothing; earlier history intact
@@ -146,12 +146,13 @@ def test_maintenance_commits_are_silent(spark, tmp_path, mode):
     assert t.read_changes(3, 4).count() == 0
 
 
-def test_minor_compaction_silent_mor(spark, tmp_path):
+def test_minor_compaction_silent_mor(spark, tmp_path, monkeypatch):
     t = make_target(spark, tmp_path, merge_mode="mor")
     for b in BATCHES:
         t.merge(df_of(spark, b))
     before = changelog(t)
-    r = t.compact_minor(small_file_bytes=1 << 30, min_delete_files=1)
+    monkeypatch.setattr(manifest_log, "SMALL_FILE_BYTES", 1 << 30)
+    r = t.compact_minor()
     assert r["delete_files_merged"] or r["small_files_rewritten"]
     assert changelog(t) == before
     assert t.read_changes(3).count() == 0

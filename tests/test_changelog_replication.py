@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from arcane_stream_parquet_spark.operators import manifest as manifest_log
 from arcane_stream_parquet_spark.operators.merge import (
     CHANGE_TYPE_COLUMN,
     COMMIT_VERSION_COLUMN,
@@ -109,11 +110,12 @@ def test_delete_keys_time_travel_and_reinsert(spark, tmp_path):
     assert contents(t) == [("a", 1, "reborn")]
 
 
-def test_delete_keys_survives_compaction(spark, tmp_path):
+def test_delete_keys_survives_compaction(spark, tmp_path, monkeypatch):
     t = make_target(spark, tmp_path / "t", max_records_per_file=2)
     t.merge(df_of(spark, [(f"k{i}", 1, f"p{i}") for i in range(12)]))
     t.delete_keys([f"k{i}" for i in range(0, 12, 2)])
-    t.compact_minor(small_file_bytes=1 << 30)
+    monkeypatch.setattr(manifest_log, "SMALL_FILE_BYTES", 1 << 30)
+    t.compact_minor()
     t.compact()
     assert contents(t) == sorted(
         (f"k{i}", 1, f"p{i}") for i in range(1, 12, 2)

@@ -12,6 +12,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from arcane_stream_parquet_spark.operators import manifest as manifest_log
+from arcane_stream_parquet_spark.operators import merge as merge_module
 from arcane_stream_parquet_spark.streaming.curation import (
     StreamingCurationPipeline,
 )
@@ -125,7 +127,7 @@ def test_replayed_batch_converges_after_index_commit_crash(pipeline):
     }
 
 
-def test_adaptive_minor_maintenance_bounds_fragments(spark, tmp_path):
+def test_adaptive_minor_maintenance_bounds_fragments(spark, tmp_path, monkeypatch):
     """r8: the curation stream's per-batch corpus/audit appends must not
     accumulate unbounded fragments — with aggressive thresholds the
     metric-driven compact_minor pass keeps the live file count bounded
@@ -147,9 +149,9 @@ def test_adaptive_minor_maintenance_bounds_fragments(spark, tmp_path):
         work_path=str(tmp_path / "work"),
         checkpoint_dir=str(tmp_path / "ckpt"),
         num_buckets=8,
-        compact_on_small_files=6,  # fire the minor pass mid-stream
-        minor_small_file_bytes=1 << 20,
     )
+    monkeypatch.setattr(merge_module, "_MAINT_SMALL_FILES", 6)  # fire mid-stream
+    monkeypatch.setattr(manifest_log, "SMALL_FILE_BYTES", 1 << 20)
     p.run_available_now(max_files_per_trigger=1)  # 12 micro-batches
 
     kept = {r["doc_id"] for r in p.corpus.read().collect()}
@@ -158,5 +160,5 @@ def test_adaptive_minor_maintenance_bounds_fragments(spark, tmp_path):
     assert all(s == "kept" for s in audit.values()) and len(audit) == 12
     # maintenance actually ran and bounded the debris: far fewer live
     # files than the 12-commits-x-per-batch-fragments unmaintained pile
-    m = p.corpus.maintenance_metrics(small_file_bytes=1 << 20)
+    m = p.corpus.maintenance_metrics()
     assert m["file_count"] <= 12, m

@@ -276,7 +276,7 @@ def test_merge_target_full_lifecycle_on_file_uri(spark, tmp_path):
     assert v1["k0"] == "a"
 
     # maintenance ops
-    t.compact(min_files_per_bucket=2)
+    t.compact()
     assert {r["arcane_merge_key"] for r in t.read().collect()} == set(rows)
     removed = t.vacuum()
     assert isinstance(removed, list)

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from arcane_stream_parquet_spark.operators import manifest as manifest_log
+from arcane_stream_parquet_spark.operators import merge as merge_module
 from arcane_stream_parquet_spark.operators.merge import ParquetMergeTarget
 
 
@@ -555,7 +556,7 @@ def test_sharded_adaptive_gate_fires_on_small_files_candidate_reads_only(
     per_bucket: dict = {}
     for f in files:
         per_bucket.setdefault(f["b"], []).append(f)
-    k = manifest_log.size_class_at(8 << 20)
+    k = manifest_log.size_class_at(manifest_log.SMALL_FILE_BYTES)
     expect = sum(
         len([f for f in fs if int(f["sz"]).bit_length() <= k])
         for fs in per_bucket.values()
@@ -573,10 +574,11 @@ def test_sharded_adaptive_gate_fires_on_small_files_candidate_reads_only(
     assert cand and len(cand) < len(shards_before), (
         "debris must be localized for the probe to mean anything"
     )
+    for name in ("_MAINT_DELETE_FILES", "_MAINT_DELETE_BYTES"):
+        monkeypatch.setattr(merge_module, name, 1 << 62)  # never reached
+    monkeypatch.setattr(merge_module, "_MAINT_SMALL_FILES", 2)
     with _shard_reads(t._fio.__class__) as reads:
-        ran = t.run_adaptive_maintenance(
-            on_small_files=2, on_delete_files=None, on_delete_bytes=None
-        )
+        ran = t.run_adaptive_maintenance()
     assert ran["ran"] and not ran["escalated"]
     # the minor pass read ONLY candidate shards; the follow-up metrics
     # poll reads none, and a minor-only fire never vacuums (vacuum is

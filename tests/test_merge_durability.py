@@ -13,6 +13,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from arcane_stream_parquet_spark.operators import manifest as manifest_log
+from arcane_stream_parquet_spark.operators import merge as merge_module
 from arcane_stream_parquet_spark.operators.merge import ParquetMergeTarget
 
 
@@ -182,7 +183,7 @@ def test_compact_reduces_files_preserves_contents(spark, tmp_path):
     before = sorted(map(tuple, t.read().collect()))
     files_before = len(t._files_of_manifest(t._manifest()))
 
-    n = t.compact(min_files_per_bucket=2)
+    n = t.compact()
     assert n > 0
     files_after = len(t._files_of_manifest(t._manifest()))
     assert files_after < files_before
@@ -440,6 +441,7 @@ def test_crash_replay_state_machine_fuzz(
     too.  Set ASP_FUZZ_EXAMPLES to scale the run (CI default 12; the
     round-9 probe ran 200 green)."""
     monkeypatch.setattr(manifest_log, "SHARD_ENTRIES", 5)
+    monkeypatch.setattr(manifest_log, "SMALL_FILE_BYTES", 1 << 20)
     base = tmp_path_factory.mktemp("crashfuzz")
     t = ParquetMergeTarget(
         spark=spark,
@@ -469,7 +471,7 @@ def test_crash_replay_state_machine_fuzz(
             elif kind == "minor":
                 if t.exists():
                     with _crash_at(create_n=op[1]):
-                        t.compact_minor(small_file_bytes=1 << 20)
+                        t.compact_minor()
             elif kind == "vacuum":
                 if t.exists():
                     with _crash_at(delete_n=op[1]):
@@ -519,7 +521,7 @@ def test_crash_replay_state_machine_fuzz(
     assert actual == _model_fold(committed)
     assert t.watermark() == expected_wm
     # final uncrashed maintenance converges and preserves contents
-    t.compact_minor(small_file_bytes=1 << 20)
+    t.compact_minor()
     t.vacuum()
     actual2 = sorted(
         ((r[0], r[1], r[2]) for r in t.read().collect()),
@@ -686,16 +688,16 @@ def test_concurrent_compaction_race_loses_cleanly(spark, tmp_path):
     winner_rows = sorted(map(tuple, a.read().collect()))
 
     with pytest.raises(ConcurrentWriteError):
-        b.compact(min_files_per_bucket=2)
+        b.compact()
     assert sorted(map(tuple, a.read().collect())) == winner_rows
 
     del b.__dict__["_manifest"]
-    assert b.compact(min_files_per_bucket=2) >= 0  # clean retry
+    assert b.compact() >= 0  # clean retry
     assert sorted(map(tuple, a.read().collect())) == winner_rows
 
 
 def test_concurrent_minor_compaction_never_wipes_winner_deletes(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """r9 review find: a stale maintenance run whose only pressure is
     DELETE files must not clear the winner's committed delete dir.
@@ -724,11 +726,11 @@ def test_concurrent_minor_compaction_never_wipes_winner_deletes(
     assert a._manifest()["deletes"], "winner must have live delete files"
 
     # loser: pure delete-pressure minor pass from the stale manifest
-    # (min thresholds force the consolidation branch, no small files
-    # involved at huge small_file_bytes... they are all small at toy
-    # scale, so force deletes-only by making smalls uncoalescable)
+    # (every toy file is small, so a zero small-file bound is what
+    # makes it deletes-only)
+    monkeypatch.setattr(manifest_log, "SMALL_FILE_BYTES", 0)
     with pytest.raises(ConcurrentWriteError):
-        b.compact_minor(small_file_bytes=0, min_delete_files=2)
+        b.compact_minor()
     # the winner's table reads intact, including its delete semantics
     assert sorted(map(tuple, a.read().collect())) == winner_rows
     # the loser's staged delete dir is unreferenced garbage
@@ -736,10 +738,10 @@ def test_concurrent_minor_compaction_never_wipes_winner_deletes(
     assert sorted(map(tuple, a.read().collect())) == winner_rows
 
 
-def test_adaptive_vacuum_on_snapshot_debt(spark, tmp_path):
+def test_adaptive_vacuum_on_snapshot_debt(spark, tmp_path, monkeypatch):
     """r9 review find: in an adaptive-only deployment (counter path
     never reached) vacuum must still run once stranded snapshots cross
-    ``on_snapshots`` — otherwise roots and superseded files accumulate
+    the snapshot bound — otherwise roots and superseded files accumulate
     forever.  The gate fires a vacuum-only pass, drops the snapshot
     count back to 1, and leaves contents untouched."""
     t = make_target(spark, tmp_path)
@@ -747,24 +749,19 @@ def test_adaptive_vacuum_on_snapshot_debt(spark, tmp_path):
         t.merge(df_of(spark, [("k1", v, f"p{v}")]))
     before = sorted(map(tuple, t.read().collect()))
     assert len(t.snapshot_versions()) >= 6
+    for name in ("_MAINT_DELETE_FILES", "_MAINT_DELETE_BYTES", "_MAINT_SMALL_FILES"):
+        monkeypatch.setattr(merge_module, name, 1 << 62)  # never reached
     # below the bound: nothing runs
-    r = t.run_adaptive_maintenance(
-        on_delete_files=None, on_delete_bytes=None, on_small_files=None,
-        on_snapshots=100,
-    )
+    monkeypatch.setattr(merge_module, "_MAINT_SNAPSHOTS", 100)
+    r = t.run_adaptive_maintenance()
     assert r == {"ran": False, "escalated": False}
     assert len(t.snapshot_versions()) >= 6
     # at the bound: vacuum-only pass reclaims
-    r = t.run_adaptive_maintenance(
-        on_delete_files=None, on_delete_bytes=None, on_small_files=None,
-        on_snapshots=5,
-    )
+    monkeypatch.setattr(merge_module, "_MAINT_SNAPSHOTS", 5)
+    r = t.run_adaptive_maintenance()
     assert r == {"ran": True, "escalated": False}
     assert len(t.snapshot_versions()) == 1
     assert sorted(map(tuple, t.read().collect())) == before
     # converged: a second poll is idle
-    r = t.run_adaptive_maintenance(
-        on_delete_files=None, on_delete_bytes=None, on_small_files=None,
-        on_snapshots=5,
-    )
+    r = t.run_adaptive_maintenance()
     assert r == {"ran": False, "escalated": False}

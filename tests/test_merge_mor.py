@@ -152,7 +152,7 @@ def test_compact_folds_deletes_and_preserves_contents(spark, tmp_path):
     run_batches(t)
     assert t._manifest()["deletes"]
     before = contents(t)
-    assert t.compact(min_files_per_bucket=2) >= 1
+    assert t.compact() >= 1
     assert t._manifest().get("deletes", []) == []
     assert contents(t) == before == EXPECTED
     s = t.stats()
@@ -160,7 +160,7 @@ def test_compact_folds_deletes_and_preserves_contents(spark, tmp_path):
 
 
 def test_compact_minor_consolidates_deletes_and_preserves_contents(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """Minor compaction (r7 VERDICT item 4): all pending delete files
     fold into ONE (key, original-seq) file; table contents must be
@@ -172,7 +172,8 @@ def test_compact_minor_consolidates_deletes_and_preserves_contents(
     run_batches(t)
     before = t._manifest()["deletes"]
     assert len(before) >= 2
-    out = t.compact_minor(small_file_bytes=0)  # deletes-only pass
+    monkeypatch.setattr(manifest_log, "SMALL_FILE_BYTES", 0)
+    out = t.compact_minor()  # deletes-only pass
     assert out["delete_files_merged"] == len(before)
     assert out["small_files_rewritten"] == 0
     after = t._manifest()["deletes"]
@@ -180,14 +181,17 @@ def test_compact_minor_consolidates_deletes_and_preserves_contents(
     assert contents(t) == EXPECTED
 
 
-def test_compact_minor_mixed_entries_then_full_compact(spark, tmp_path):
+def test_compact_minor_mixed_entries_then_full_compact(
+    spark, tmp_path, monkeypatch
+):
     """After minor compaction the live delete set mixes a consolidated
     (sc) entry with plain per-commit entries from later merges; reads,
     a second minor pass (max-seq-per-key subsumption across both entry
     kinds), and the full compact() must all stay exact."""
     t = make_target(spark, tmp_path / "t", merge_mode="mor")
     run_batches(t)
-    t.compact_minor(small_file_bytes=0)
+    monkeypatch.setattr(manifest_log, "SMALL_FILE_BYTES", 0)  # deletes only
+    t.compact_minor()
     # k1 re-deleted: its consolidated seq (2) must be subsumed by the
     # new one; k5 is a pure insert
     t.merge(df_of(spark, [("k1", 9, "a9"), ("k5", 1, "e")]))
@@ -205,7 +209,7 @@ def test_compact_minor_mixed_entries_then_full_compact(spark, tmp_path):
     dels = t._manifest()["deletes"]
     assert any(d.get("sc") for d in dels) and any(not d.get("sc") for d in dels)
     assert contents(t) == expected
-    t.compact_minor(small_file_bytes=0)  # consolidate the mix again
+    t.compact_minor()  # consolidate the mix again
     assert len(t._manifest()["deletes"]) == 1
     assert contents(t) == expected
     assert t.compact() >= 1
@@ -213,7 +217,7 @@ def test_compact_minor_mixed_entries_then_full_compact(spark, tmp_path):
     assert contents(t) == expected
 
 
-def test_compact_minor_coalesces_small_files(spark, tmp_path):
+def test_compact_minor_coalesces_small_files(spark, tmp_path, monkeypatch):
     """Small-file pass: fragmented buckets collapse to one file per
     bucket (large-file entries would be untouched), pending deletes are
     applied during the rewrite, and a vacuum afterwards reclaims the
@@ -226,11 +230,12 @@ def test_compact_minor_coalesces_small_files(spark, tmp_path):
         max_records_per_file=2,
     )
     run_batches(t)
-    m_before = t.maintenance_metrics(small_file_bytes=1 << 20)
+    monkeypatch.setattr(manifest_log, "SMALL_FILE_BYTES", 1 << 20)
+    m_before = t.maintenance_metrics()
     assert m_before["small_file_count"] == m_before["file_count"]  # all tiny
-    out = t.compact_minor(small_file_bytes=1 << 20)
+    out = t.compact_minor()
     assert out["small_files_rewritten"] >= 2
-    m_after = t.maintenance_metrics(small_file_bytes=1 << 20)
+    m_after = t.maintenance_metrics()
     assert m_after["file_count"] <= 2  # ≤ one per bucket
     assert m_after["file_count"] < m_before["file_count"]
     assert m_after["delete_file_count"] <= 1
@@ -296,11 +301,12 @@ def test_mor_skewed_deletes_broadcast_and_shuffle_paths(
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
-def test_compact_minor_noop_below_thresholds(spark, tmp_path):
+def test_compact_minor_noop_below_thresholds(spark, tmp_path, monkeypatch):
     t = make_target(spark, tmp_path / "t")  # CoW: no deletes ever
     t.merge(df_of(spark, BATCHES[0]))
     v = t._manifest()["version"]
-    out = t.compact_minor(small_file_bytes=1)  # nothing qualifies
+    monkeypatch.setattr(manifest_log, "SMALL_FILE_BYTES", 1)
+    out = t.compact_minor()  # nothing qualifies
     assert out == {"delete_files_merged": 0, "small_files_rewritten": 0}
     assert t._manifest()["version"] == v  # no commit, no version bump
 
@@ -323,25 +329,27 @@ def test_compact_minor_crash_before_manifest_flip_loses_nothing(
     dels_before = t._manifest()["deletes"]
 
     boom = RuntimeError("simulated crash at commit point")
+    monkeypatch.setattr(manifest_log, "SMALL_FILE_BYTES", 1 << 20)
     monkeypatch.setattr(
         manifest_log.MetaLog,
         "commit",
         lambda *a: (_ for _ in ()).throw(boom),
     )
     with pytest.raises(RuntimeError, match="simulated crash"):
-        t.compact_minor(small_file_bytes=1 << 20)
+        t.compact_minor()
     monkeypatch.undo()
 
     assert contents(t) == before == EXPECTED
     assert t._manifest()["deletes"] == dels_before  # old deletes live
-    out = t.compact_minor(small_file_bytes=1 << 20)  # bare retry
+    monkeypatch.setattr(manifest_log, "SMALL_FILE_BYTES", 1 << 20)
+    out = t.compact_minor()  # bare retry
     assert out["delete_files_merged"] == len(dels_before)
     assert contents(t) == EXPECTED
     t.vacuum()
     assert contents(t) == EXPECTED
 
 
-def test_compact_minor_after_column_drift(spark, tmp_path):
+def test_compact_minor_after_column_drift(spark, tmp_path, monkeypatch):
     """Minor compaction over a table whose older files miss columns
     added later (MoR column drift): the rewrite reads with the
     manifest's unified schema (null-filling), so coalesced files carry
@@ -359,7 +367,8 @@ def test_compact_minor_after_column_drift(spark, tmp_path):
     before = sorted(
         map(tuple, t.read().collect()), key=lambda r: ("" if r[0] is None else r[0])
     )
-    t.compact_minor(small_file_bytes=1 << 20)
+    monkeypatch.setattr(manifest_log, "SMALL_FILE_BYTES", 1 << 20)
+    t.compact_minor()
     after = sorted(
         map(tuple, t.read().collect()), key=lambda r: ("" if r[0] is None else r[0])
     )
@@ -367,11 +376,12 @@ def test_compact_minor_after_column_drift(spark, tmp_path):
     assert "extra" in t.read().columns
 
 
-def test_maintenance_metrics_match_manifest(spark, tmp_path):
+def test_maintenance_metrics_match_manifest(spark, tmp_path, monkeypatch):
     t = make_target(spark, tmp_path / "t", merge_mode="mor")
     run_batches(t)
     manifest = t._manifest()
-    m = t.maintenance_metrics(small_file_bytes=1 << 20)
+    monkeypatch.setattr(manifest_log, "SMALL_FILE_BYTES", 1 << 20)
+    m = t.maintenance_metrics()
     assert m["version"] == manifest["version"]
     assert m["file_count"] == len(manifest["files"])
     assert m["delete_file_count"] == len(manifest["deletes"])
@@ -379,7 +389,9 @@ def test_maintenance_metrics_match_manifest(spark, tmp_path):
     assert m["small_file_count"] == m["file_count"]
 
 
-def test_adaptive_maintenance_escalates_and_converges(spark, tmp_path):
+def test_adaptive_maintenance_escalates_and_converges(
+    spark, tmp_path, monkeypatch
+):
     """The r8 review's stuck-gate scenario #1: pressure minor
     compaction cannot relieve (a delete-bytes bound even one
     consolidated file exceeds) must escalate ONCE to the full compact —
@@ -387,40 +399,36 @@ def test_adaptive_maintenance_escalates_and_converges(spark, tmp_path):
     t = make_target(spark, tmp_path / "t", merge_mode="mor")
     run_batches(t)
     assert len(t._manifest()["deletes"]) >= 2
-    r = t.run_adaptive_maintenance(
-        small_file_bytes=0,
-        on_delete_files=None,
-        on_delete_bytes=1,  # unsatisfiable by consolidation alone
-        on_small_files=None,
-    )
+    monkeypatch.setattr(manifest_log, "SMALL_FILE_BYTES", 0)
+    for name in ("_MAINT_DELETE_FILES", "_MAINT_SMALL_FILES"):
+        monkeypatch.setattr(merge_module, name, 1 << 62)  # never reached
+    # unsatisfiable by consolidation alone
+    monkeypatch.setattr(merge_module, "_MAINT_DELETE_BYTES", 1)
+    r = t.run_adaptive_maintenance()
     assert r == {"ran": True, "escalated": True}
     m = t.maintenance_metrics()
     assert m["delete_file_count"] == 0 and m["delete_bytes"] == 0
     assert contents(t) == EXPECTED
-    r2 = t.run_adaptive_maintenance(
-        small_file_bytes=0,
-        on_delete_files=None,
-        on_delete_bytes=1,
-        on_small_files=None,
-    )
+    r2 = t.run_adaptive_maintenance()
     assert r2 == {"ran": False, "escalated": False}  # converged
 
 
-def test_adaptive_maintenance_ignores_uncoalescable_smalls(spark, tmp_path):
+def test_adaptive_maintenance_ignores_uncoalescable_smalls(
+    spark, tmp_path, monkeypatch
+):
     """Stuck-gate scenario #2: one small file per bucket is just a
     small table — no compaction can merge anything, so the small-file
     trigger (which gates on the COALESCABLE count) must not fire."""
     t = make_target(spark, tmp_path / "t", num_buckets=8)
     t.merge(df_of(spark, [(f"k{i}", 1, "p") for i in range(64)]))
-    m = t.maintenance_metrics(small_file_bytes=1 << 20)
+    monkeypatch.setattr(manifest_log, "SMALL_FILE_BYTES", 1 << 20)
+    m = t.maintenance_metrics()
     assert m["small_file_count"] >= 1
     assert m["coalescable_small_files"] == 0
-    r = t.run_adaptive_maintenance(
-        small_file_bytes=1 << 20,
-        on_delete_files=None,
-        on_delete_bytes=None,
-        on_small_files=1,
-    )
+    for name in ("_MAINT_DELETE_FILES", "_MAINT_DELETE_BYTES"):
+        monkeypatch.setattr(merge_module, name, 1 << 62)  # never reached
+    monkeypatch.setattr(merge_module, "_MAINT_SMALL_FILES", 1)
+    r = t.run_adaptive_maintenance()
     assert r == {"ran": False, "escalated": False}
 
 
@@ -439,20 +447,21 @@ def test_maintenance_metrics_from_sharded_manifest_summary(
         max_records_per_file=1,
     )
     monkeypatch.setattr(manifest_log, "SHARD_ENTRIES", 4)  # toy-scale shards
+    monkeypatch.setattr(manifest_log, "SMALL_FILE_BYTES", 1 << 20)
     run_batches(t)
     manifest = t._manifest()
     assert manifest.get("file_shards"), "expected a sharded manifest"
     assert "files" not in manifest
     assert manifest["n_files"] == len(t._files_of_manifest(manifest))
     assert sum(manifest["size_hist"].values()) == manifest["n_files"]
-    m = t.maintenance_metrics(small_file_bytes=1 << 20)
+    m = t.maintenance_metrics()
     assert m["file_count"] == manifest["n_files"]
     # every toy file is tiny: all of them sit in buckets under 1 MB
     assert m["small_file_count"] == m["file_count"]
     assert m["delete_file_count"] == len(manifest["deletes"])
     # metrics stay correct after a minor pass rewrites the layout
-    t.compact_minor(small_file_bytes=1 << 20)
-    m2 = t.maintenance_metrics(small_file_bytes=1 << 20)
+    t.compact_minor()
+    m2 = t.maintenance_metrics()
     assert m2["file_count"] < m["file_count"]
     assert m2["delete_file_count"] <= 1
     assert contents(t) == EXPECTED

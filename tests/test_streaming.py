@@ -18,6 +18,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from arcane_stream_parquet_spark.functions.selection import FieldSelectionRule
+from arcane_stream_parquet_spark.operators import manifest as manifest_log
+from arcane_stream_parquet_spark.operators import merge as merge_module
 from arcane_stream_parquet_spark.operators.merge import ParquetMergeTarget
 from arcane_stream_parquet_spark.sources.blob import BlobParquetSource
 from arcane_stream_parquet_spark.streaming.runner import StreamRunner, run_backfill
@@ -193,7 +195,7 @@ def test_maintenance_gated_every_n_batches(spark, tmp_path, fixture_dir):
 
 
 def test_stream_mor_e2e_matches_cow_with_adaptive_maintenance(
-    spark, tmp_path, fixture_dir
+    spark, tmp_path, fixture_dir, monkeypatch
 ):
     """r7 VERDICT items 1+3: the FULL pipeline (readStream → foreachBatch
     merge → watermark) in merge-on-read mode, multi-batch, with BOTH
@@ -221,12 +223,12 @@ def test_stream_mor_e2e_matches_cow_with_adaptive_maintenance(
         return target
 
     cow = run("cow")
+    # the adaptive minor pass fires mid-stream too
+    monkeypatch.setattr(merge_module, "_MAINT_DELETE_FILES", 2)
+    monkeypatch.setattr(merge_module, "_MAINT_SMALL_FILES", 8)
+    monkeypatch.setattr(manifest_log, "SMALL_FILE_BYTES", 1 << 20)
     mor = run(
-        "mor",
-        maintenance_every_n_batches=3,  # full compact fires mid-stream
-        compact_on_delete_files=2,  # adaptive minor pass fires too
-        compact_on_small_files=8,
-        minor_small_file_bytes=1 << 20,
+        "mor", maintenance_every_n_batches=3  # full compact fires mid-stream
     )
     assert sorted(map(tuple, cow.read().collect())) == sorted(
         map(tuple, mor.read().collect())
@@ -237,7 +239,7 @@ def test_stream_mor_e2e_matches_cow_with_adaptive_maintenance(
     # the batch-3 full compact) would each leave a pending delete file
     # and batch 2's fragments would persist; minor maintenance keeps
     # the pending set consolidated
-    m = mor.maintenance_metrics(small_file_bytes=1 << 20)
+    m = mor.maintenance_metrics()
     assert m["delete_file_count"] <= 1
     assert m["file_count"] <= 8  # ≤ ~1-2 per bucket, not 5 commits' worth
 
@@ -287,7 +289,7 @@ def test_csv_and_json_sources_stream_and_merge(spark, tmp_path):
         ).read_batch(spark)
 
 
-def test_maintenance_zero_disables_all(spark, tmp_path, fixture_dir):
+def test_maintenance_zero_disables_all(spark, tmp_path, fixture_dir, monkeypatch):
     """maintenance_every_n_batches=0 is a FULL opt-out (r8 ADVICE): the
     adaptive gate must not run either, even with thresholds that would
     trivially fire — existing deployments that disabled maintenance
@@ -308,10 +310,11 @@ def test_maintenance_zero_disables_all(spark, tmp_path, fixture_dir):
         checkpoint_dir=str(tmp_path / "ckpt_z"),
         max_files_per_trigger=2,
         maintenance_every_n_batches=0,
-        compact_on_delete_files=1,  # would fire on the first poll
-        compact_on_small_files=1,
-        minor_small_file_bytes=1 << 30,
     )
+    # thresholds that would fire on the first poll
+    monkeypatch.setattr(merge_module, "_MAINT_DELETE_FILES", 1)
+    monkeypatch.setattr(merge_module, "_MAINT_SMALL_FILES", 1)
+    monkeypatch.setattr(manifest_log, "SMALL_FILE_BYTES", 1 << 30)
     with (
         mock.patch.object(
             ParquetMergeTarget, "run_adaptive_maintenance"

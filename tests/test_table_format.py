@@ -378,3 +378,41 @@ def test_real_format_watermark_is_the_metadata_log_protocol(
     assert t._fio.list_names(log.dir) == [watermark_name(7)]
     with pytest.raises(ValueError, match="non-negative"):
         t.commit_watermark(-1)
+
+
+@pytest.mark.parametrize("fmt_cls", [IcebergMergeTarget, DeltaMergeTarget])
+def test_stream_runner_drives_real_format_maintenance(
+    spark, tmp_path, monkeypatch, fmt_cls
+):
+    """``StreamRunner`` makes the same maintenance calls on any target
+    ``make_merge_target`` returns: the adaptive poll after an ordinary
+    batch (a no-op on a real format, whose engine sizes its own files)
+    and ``compact`` + ``vacuum(orphan_grace_seconds=)`` every N batches,
+    which run the format's native statements.  No format runtime here:
+    ``merge`` is stubbed and ``spark.sql`` is recorded, not run."""
+    from arcane_stream_parquet_spark.streaming.runner import StreamRunner
+
+    t = fmt_cls(
+        spark=spark, table="cat.db.events", path=str(tmp_path / "t"),
+        version_col="version", render_only=True,
+    )
+    merged = []
+    monkeypatch.setattr(t, "merge", merged.append)
+    runner = StreamRunner(
+        source=None, target=t, checkpoint_dir=str(tmp_path / "ckpt"),
+        maintenance_every_n_batches=2,
+    )
+    batch = _mk_rows(spark, [("k1", 3, "a")])
+    stmts = []
+    empty = spark.range(0)
+    monkeypatch.setattr(spark, "sql", lambda q: stmts.append(q) or empty)
+    runner._merge_batch(batch, 0)  # adaptive branch
+    assert stmts == []
+    runner._merge_batch(batch, 1)  # counter branch
+    m = t.render_maintenance()
+    native = {
+        IcebergMergeTarget: ("optimize", "expire_snapshots", "remove_orphan_files"),
+        DeltaMergeTarget: ("optimize", "vacuum"),
+    }[fmt_cls]
+    assert stmts == [m[k] for k in native]
+    assert len(merged) == 2 and t.watermark() == 3
