@@ -49,8 +49,6 @@ _DURATION_UNITS = {
     "days": 86400.0,
 }
 
-_SIZE_UNITS = {"B": 1, "KB": 1 << 10, "MB": 1 << 20, "GB": 1 << 30, "TB": 1 << 40}
-
 
 def parse_duration_seconds(text: str) -> float:
     """'100 millisecond' | '5 second' | '6h' → seconds (CRD duration
@@ -59,14 +57,6 @@ def parse_duration_seconds(text: str) -> float:
     if not m or m.group(2).lower() not in _DURATION_UNITS:
         raise ValueError(f"unparseable duration literal: {text!r}")
     return float(m.group(1)) * _DURATION_UNITS[m.group(2).lower()]
-
-
-def parse_size_bytes(text: str) -> int:
-    """'512MB' → bytes (crd-parquet-stream.yaml:273-276)."""
-    m = re.fullmatch(r"\s*(\d+)\s*([KMGT]?B)\s*", text, re.IGNORECASE)
-    if not m:
-        raise ValueError(f"unparseable size literal: {text!r}")
-    return int(m.group(1)) * _SIZE_UNITS[m.group(2).upper()]
 
 
 @dataclass(frozen=True)

@@ -7,7 +7,6 @@ from arcane_stream_parquet_spark.functions.names import (
 from arcane_stream_parquet_spark.functions.keys import (
     merge_key_column,
     with_merge_key,
-    with_version,
     MERGE_KEY_COLUMN,
     VERSION_COLUMN,
 )
@@ -21,7 +20,6 @@ __all__ = [
     "normalize_column_names",
     "merge_key_column",
     "with_merge_key",
-    "with_version",
     "MERGE_KEY_COLUMN",
     "VERSION_COLUMN",
     "FieldSelectionRule",

@@ -46,19 +46,3 @@ def with_merge_key(
     """Append the deterministic merge-key column."""
     return df.withColumn(key_col, merge_key_column(primary_keys))
 
-
-def with_version(
-    df: DataFrame,
-    version: Column | None = None,
-    version_col: str = VERSION_COLUMN,
-) -> DataFrame:
-    """Append the row-version column.
-
-    ``version`` defaults to the scan's file modification time as epoch
-    micros BIGINT (``_metadata.file_modification_time``) — only valid on
-    a DataFrame that is still a file scan. Pass an explicit Column for
-    anything else (e.g. an event-time column).
-    """
-    if version is None:
-        version = F.unix_micros(F.col("_metadata.file_modification_time"))
-    return df.withColumn(version_col, version.cast("long"))

@@ -38,22 +38,6 @@ from arcane_stream_parquet_spark.functions.keys import VERSION_COLUMN
 _ROW_STRUCT_COL = "__asp_row"
 
 
-def latest_row_agg(
-    columns: Sequence[str],
-    version_col: str,
-    tiebreakers: Sequence[str | Column] = (),
-) -> Column:
-    """The ``max_by(struct(columns), struct(version, tiebreakers...))``
-    aggregate expression shared by :func:`latest_by_key` and the merge
-    path (operators/merge.py)."""
-    ordering_fields: list[Column] = [F.col(version_col)]
-    for tb in tiebreakers:
-        ordering_fields.append(F.col(tb) if isinstance(tb, str) else tb)
-    return F.max_by(
-        F.struct(*[F.col(c) for c in columns]), F.struct(*ordering_fields)
-    )
-
-
 def latest_by_key(
     df: DataFrame,
     keys: Sequence[str],
@@ -61,7 +45,8 @@ def latest_by_key(
     tiebreakers: Sequence[str | Column] = (),
 ) -> DataFrame:
     """Keep the single latest row per key (module docstring has the
-    ordering and skew rationale).
+    ordering and skew rationale). Every merge target dedups its batch
+    through this one aggregate (operators/merge.py, table_format.py).
 
     Pass enough ``tiebreakers`` to make the order total, or the
     surviving row among exact version ties is undefined (matches the
@@ -70,8 +55,14 @@ def latest_by_key(
     """
     if not keys:
         raise ValueError("keys must be non-empty")
+    ordering = [F.col(version_col)] + [
+        F.col(tb) if isinstance(tb, str) else tb for tb in tiebreakers
+    ]
+    latest_row = F.max_by(
+        F.struct(*[F.col(c) for c in df.columns]), F.struct(*ordering)
+    )
     agg = df.groupBy(*[F.col(k) for k in keys]).agg(
-        latest_row_agg(df.columns, version_col, tiebreakers).alias(_ROW_STRUCT_COL)
+        latest_row.alias(_ROW_STRUCT_COL)
     )
     return agg.select(
         *[F.col(_ROW_STRUCT_COL).getField(c).alias(c) for c in df.columns]

@@ -69,6 +69,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from arcane_stream_parquet_spark.fsio import HadoopFileIO, fs_join
+from arcane_stream_parquet_spark.operators.dedup import latest_by_key
 from arcane_stream_parquet_spark.operators import manifest as manifest_log
 from arcane_stream_parquet_spark.operators.manifest import (
     ConcurrentWriteError,
@@ -155,7 +156,6 @@ def _widen_type(a, b):
         return a if a.precision >= b.precision else b
     return None
 _PRECEDENCE_COL = "__asp_precedence"
-_ROW_STRUCT_COL = "__asp_row"
 # merge-on-read plumbing columns (never persisted to data files; the
 # delete files persist ONLY the merge-key column + the bucket partition)
 _FILE_V_COL = "__asp_file_v"
@@ -487,35 +487,6 @@ def _bucket_expr(key_col: str, num_buckets: int):
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(num_buckets)).cast("int")
 
 
-def _dedup_latest_df(
-    df: DataFrame,
-    key_col: str,
-    version_col: str,
-    batch_beats_target: bool = False,
-    tiebreakers: Sequence[str] = (),
-) -> DataFrame:
-    """max_by(whole-row struct, ordering struct) per key — PARTIAL
-    aggregation, so a hot merge key reduces map-side instead of piling
-    every row onto one reducer (skew posture: operators/dedup.py
-    docstring; proven in tests/test_merge_skew.py). Ordering:
-    version desc, then batch-over-target precedence, then explicit
-    tiebreakers → deterministic survivor for exact (key, version)
-    duplicates within one batch (ADVICE round 1; same total-order rule
-    as operators/dedup.py)."""
-    from arcane_stream_parquet_spark.operators.dedup import latest_row_agg
-
-    ordering = [version_col]
-    if batch_beats_target:
-        ordering.append(_PRECEDENCE_COL)
-    ordering.extend(tiebreakers)
-    agg = df.groupBy(key_col).agg(
-        latest_row_agg(df.columns, ordering[0], ordering[1:]).alias(_ROW_STRUCT_COL)
-    )
-    return agg.select(
-        *[F.col(_ROW_STRUCT_COL).getField(c).alias(c) for c in df.columns]
-    )
-
-
 def merge_latest_wins(
     target: DataFrame,
     batch: DataFrame,
@@ -532,18 +503,14 @@ def merge_latest_wins(
 
     One shuffle (hash-partitioned by key), with PARTIAL aggregation
     before it — hot keys reduce map-side (skew posture, see
-    _dedup_latest_df); Catalyst plans the union scan-side, no driver
+    operators/dedup.py); Catalyst plans the union scan-side, no driver
     involvement.
     """
     unioned = target.withColumn(_PRECEDENCE_COL, F.lit(0)).unionByName(
         batch.withColumn(_PRECEDENCE_COL, F.lit(1))
     )
-    return _dedup_latest_df(
-        unioned,
-        key_col,
-        version_col,
-        batch_beats_target=True,
-        tiebreakers=tiebreakers,
+    return latest_by_key(
+        unioned, [key_col], version_col, [_PRECEDENCE_COL, *tiebreakers]
     ).drop(_PRECEDENCE_COL)
 
 
@@ -1506,7 +1473,7 @@ class ParquetMergeTarget:
         within their bucket partitions (:meth:`_inner_order`) — one
         extra sort, never a second exchange.
 
-        Survivor parity with :func:`_dedup_latest_df`: the first row of
+        Survivor parity with :func:`dedup.latest_by_key`: the first row of
         a key group under ordering-struct DESC is ``max_by``'s survivor
         — Spark sorts and max_by compare structs with the same total
         order (field-wise, nulls smallest, NaN greatest).  The native
@@ -1920,79 +1887,33 @@ class ParquetMergeTarget:
         commit or a ``delete_keys`` ARE the delete-file keys (one row
         per key), so their bucket set / min / max / has-null were
         already computed in the same action that counted them — no
-        read-back of the freshly written delete files.  Only valid
-        when the commit wrote ONE delete file (every batch under the
-        5M-key coalesce bound); the multi-file case needs per-file
-        stats and falls back to :meth:`_collect_delete_stats`."""
-        ddir = self._delete_data_dir(dirname)
-        sizes = {
-            name: size
-            for name, size in self._fio.list_files(ddir)
-            if name.endswith(".parquet")
-        }
-        if len(sizes) != 1:
-            return self._collect_delete_stats(version, dirname)
-        name, sz = next(iter(sizes.items()))
-        return [
+        read-back of the freshly written delete files."""
+        return self._delete_entries(
+            version,
+            dirname,
             {
-                "seq": version,
-                "d": dirname,
-                "n": name,
                 "bs": [int(b) for b in srow["_bs"]],
                 "mn": _trunc_stat_min(srow["_mn"]),
                 "mx": _trunc_stat_max(srow["_mx"]),
                 "hn": bool(srow["_hn"]),
-                "sz": sz,
-            }
-        ]
-
-    def _collect_delete_stats(self, version: int, dirname: str) -> list[dict]:
-        """Manifest delete entries for a freshly written delete dir —
-        same one column-pruned distributed read-back as data-file
-        stats; delete files are batch-key-sized, so this is cheap.
-        ``bs`` records the buckets each file's keys hash into (the
-        applicability substrate, since the layout is not
-        bucket-partitioned)."""
-        ddir = self._delete_data_dir(dirname)
-        sizes = {
-            name: size
-            for name, size in self._fio.list_files(ddir)
-            if name.endswith(".parquet")
-        }
-        if not sizes:
-            return []
-        rows = (
-            self.spark.read.parquet(ddir)
-            .select(
-                F.input_file_name().alias("_f"),
-                _bucket_expr(self.key_col, self.num_buckets).alias("_b"),
-                F.col(self.key_col).cast("string").alias("_k"),
-            )
-            .groupBy("_f")
-            .agg(
-                F.sort_array(F.collect_set("_b")).alias("_bs"),
-                F.min("_k").alias("_mn"),
-                F.max("_k").alias("_mx"),
-                F.max(F.col("_k").isNull()).alias("_hn"),
-            )
-            .collect()
+            },
         )
-        out = []
-        for r in rows:
-            name = r["_f"].rsplit("/", 1)[-1]
-            out.append(
-                {
-                    "seq": version,
-                    "d": dirname,
-                    "n": name,
-                    "bs": [int(x) for x in r["_bs"]],
-                    "mn": _trunc_stat_min(r["_mn"]),
-                    "mx": _trunc_stat_max(r["_mx"]),
-                    "hn": bool(r["_hn"]),
-                    "sz": sizes.get(name, 0),
-                }
-            )
-        return sorted(out, key=lambda e: e["n"])
+
+    def _delete_entries(
+        self, version: int, dirname: str, stats: dict
+    ) -> list[dict]:
+        """One manifest delete entry per file of a freshly written
+        delete dir, each carrying the whole commit's ``stats``
+        (``bs``/``mn``/``mx``/``hn``).  A commit past the 5M-key
+        coalesce bound writes several files; the commit's range
+        contains each file's own, so every applicability test stays
+        conservative."""
+        files = self._fio.list_files(self._delete_data_dir(dirname))
+        return [
+            {"seq": version, "d": dirname, "n": name, **stats, "sz": sz}
+            for name, sz in sorted(files)
+            if name.endswith(".parquet")
+        ]
 
     @staticmethod
     def _delete_buckets(d: dict) -> list[int]:
@@ -2124,15 +2045,6 @@ class ParquetMergeTarget:
         return self._read_files(clean, schema).unionByName(survived)
 
     # -- merge semantics ---------------------------------------------------
-
-    def _dedup_latest(self, df: DataFrame, batch_beats_target: bool = False) -> DataFrame:
-        return _dedup_latest_df(
-            df,
-            self.key_col,
-            self.version_col,
-            batch_beats_target=batch_beats_target,
-            tiebreakers=self.tiebreakers,
-        )
 
     def _reconcile_schema(
         self, existing: DataFrame, batch: DataFrame
@@ -2331,7 +2243,7 @@ class ParquetMergeTarget:
         # — equal (version, tiebreakers) — the fused dedup write
         # and MoR's max_by would each pick arbitrarily, and a CoW table
         # could diverge from its MoR twin on the same history.  Folding
-        # the batch through the SAME _dedup_latest aggregate both modes
+        # the batch through the SAME latest_by_key aggregate both modes
         # share keeps the arbitrary-but-consistent pick (pinned by
         # test_stream_mor_e2e_matches_cow_with_adaptive_maintenance);
         # planning still reads the RAW batch (same key set, no fold).
@@ -2358,8 +2270,11 @@ class ParquetMergeTarget:
             existing = self.spark.createDataFrame(
                 [], schema if schema is not None else batch_bucketed.schema
             )
+        batch_latest = latest_by_key(
+            batch, [self.key_col], self.version_col, self.tiebreakers
+        )
         existing, batch_latest = self._reconcile_schema(
-            existing, self._with_bucket(self._dedup_latest(batch))
+            existing, self._with_bucket(batch_latest)
         )
 
         new_version = manifest["version"] + 1
@@ -2410,7 +2325,9 @@ class ParquetMergeTarget:
         files null-fill the new columns at read, exactly like CoW."""
         schema = self._schema_of(manifest)
 
-        batch_latest = self._with_bucket(self._dedup_latest(batch))
+        batch_latest = self._with_bucket(
+            latest_by_key(batch, [self.key_col], self.version_col, self.tiebreakers)
+        )
         if schema is not None:
             empty_existing = self.spark.createDataFrame([], schema)
             ex2, batch2 = self._reconcile_schema(empty_existing, batch_latest)
@@ -2891,10 +2808,22 @@ class ParquetMergeTarget:
             consolidated.coalesce(n_out).write.mode(
                 "errorifexists"
             ).parquet(self._delete_data_dir(del_dirname))
-            new_deletes = [
-                {**e, "sc": True}
-                for e in self._collect_delete_stats(new_version, del_dirname)
-            ]
+            # consolidation keeps exactly the union of the spent
+            # entries' keys, so the union of their stats is exact — no
+            # read-back of the consolidated files (an entry without
+            # mn/mx holds only null keys, which "hn" records)
+            ranged = [d for d in deletes if d["mn"] is not None]
+            new_deletes = self._delete_entries(
+                new_version,
+                del_dirname,
+                {
+                    "bs": sorted({int(b) for d in deletes for b in d["bs"]}),
+                    "mn": min((d["mn"] for d in ranged), default=None),
+                    "mx": max((d["mx"] for d in ranged), default=None),
+                    "hn": any(d["hn"] for d in deletes),
+                    "sc": True,
+                },
+            )
 
         small_set = {(int(f["v"]), int(f["b"]), f["n"]) for f in small}
         kept = [

@@ -37,7 +37,7 @@ with one preparation step the SQL standard forces on us: MERGE requires the
 source to be unique per key (Delta raises, Iceberg's behaviour is
 cardinality-checked), so the batch is first collapsed to latest-per-key with
 the SAME partial-aggregating ``max_by`` used everywhere else
-(``merge.py:_dedup_latest_df``) — identical survivor rule, skew-safe.
+(``dedup.latest_by_key``) — identical survivor rule, skew-safe.
 
 Watermark/shard metadata stays on the create-only ``fsio`` protocol beside the
 table rather than in table properties: property writes are a metadata commit
@@ -58,13 +58,13 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from arcane_stream_parquet_spark.fsio import HadoopFileIO
+from arcane_stream_parquet_spark.operators.dedup import latest_by_key
 from arcane_stream_parquet_spark.operators.manifest import MetaLog
 from arcane_stream_parquet_spark.functions.keys import (
     MERGE_KEY_COLUMN,
@@ -113,20 +113,6 @@ def probe_table_formats(spark: SparkSession) -> dict:
         "delta": all(classes[c] for c in _DELTA_MARKER_CLASSES),
         "classes": classes,
     }
-
-
-def _dedup_batch(
-    batch: DataFrame,
-    key_col: str,
-    version_col: str,
-    tiebreakers: Sequence[str],
-) -> DataFrame:
-    from arcane_stream_parquet_spark.operators.merge import _dedup_latest_df
-
-    return _dedup_latest_df(
-        batch, key_col, version_col, batch_beats_target=False,
-        tiebreakers=tiebreakers,
-    )
 
 
 def _q(ident: str) -> str:
@@ -346,8 +332,8 @@ class _SqlMergeTargetBase:
         """The reference's MERGE (main.scala:121-125 semantics), executed
         by the format's engine. Latest-wins, ``>=`` so the batch wins
         exact-version ties — identical to ParquetMergeTarget.merge."""
-        deduped = _dedup_batch(
-            batch, self.key_col, self.version_col, self.tiebreakers
+        deduped = latest_by_key(
+            batch, [self.key_col], self.version_col, self.tiebreakers
         )
         if self.sorted_by:
             deduped = deduped.sortWithinPartitions(*self.sorted_by)
@@ -380,7 +366,9 @@ class _SqlMergeTargetBase:
             self.spark.catalog.dropTempView(view)
 
     def overwrite(self, df: DataFrame) -> None:
-        deduped = _dedup_batch(df, self.key_col, self.version_col, self.tiebreakers)
+        deduped = latest_by_key(
+            df, [self.key_col], self.version_col, self.tiebreakers
+        )
         if not self.exists():
             self._create(deduped)
         with self._write_limits():

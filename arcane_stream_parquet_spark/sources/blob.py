@@ -15,15 +15,13 @@ Spark gives the listing/change-detection/decode natively:
   the scan itself.
 
 S3 specifics (endpoints, path-style, retries — reference S1) are Hadoop
-``fs.s3a.*`` confs, not code; ``extra_read_options`` passes through
-anything path-scheme-specific.
+``fs.s3a.*`` confs, not code.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 from dataclasses import dataclass, field
-from datetime import datetime
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,38 +40,21 @@ from arcane_stream_parquet_spark.functions.selection import (
 from arcane_stream_parquet_spark.session import configure_session
 
 
-def schema_from_parquet_bytes(raw: bytes) -> StructType:
-    """Decode a ``sourceSchema`` override: an (empty) parquet file whose
-    schema is authoritative (reference docs/crd.md:66-68). PyArrow reads
-    the footer; Spark converts the Arrow schema."""
-    import io
-
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    return from_arrow_schema(pq.read_schema(io.BytesIO(raw)))
-
-
 @dataclass(frozen=True)
 class BlobParquetSource:
     """One configured source prefix (reference ``spec.source``).
 
     ``primary_keys`` drive the merge key; ``field_selection`` is applied
     after enrichment (so essential fields exist); ``modified_after`` is
-    the ISO-8601 backfill start cutoff (reference backfillStartDate).
+    the ISO-8601 backfill start cutoff (reference backfillStartDate). A
+    cutoff without a zone is read in the session time zone, by both the
+    batch and the streaming scan.
     """
 
     path: str
     primary_keys: Sequence[str]
     field_selection: FieldSelectionRule = field(default_factory=FieldSelectionRule)
-    schema: StructType | None = None
     modified_after: str | None = None
-    extra_read_options: dict[str, str] = field(default_factory=dict)
-    # blob format: parquet (the reference's only format) | csv | json —
-    # Spark's DataSource framework makes the other text formats free;
-    # csv/json REQUIRE an explicit schema (no parquet footer to sniff;
-    # sniffing would mistype and inference isn't allowed for streams).
-    format: str = "parquet"
 
     def _enrich(self, df: DataFrame) -> DataFrame:
         """normalize names → createdon (file mtime, µs) → merge key → select."""
@@ -86,34 +67,22 @@ class BlobParquetSource:
     def read_batch(self, spark: SparkSession) -> DataFrame:
         """Backfill-style full scan (reference E2)."""
         configure_session(spark)
-        reader = spark.read.options(**self.extra_read_options)
-        if self.schema is not None:
-            reader = reader.schema(self.schema)
-        elif self.format != "parquet":
-            raise ValueError(f"{self.format} sources require an explicit schema")
+        reader = spark.read
         if self.modified_after:
             reader = reader.option("modifiedAfter", self.modified_after)
-        return self._enrich(reader.format(self.format).load(self.path))
+        return self._enrich(reader.parquet(self.path))
 
     def read_files(self, spark: SparkSession, files: Sequence[str]) -> DataFrame:
         """Read an explicit blob subset with the same enrichment as the
-        full scans — the shard read path (reference ST10
-        ShardStagingProcessor stages one shard's blobs at a time)."""
+        full scans (no ``modified_after`` cutoff)."""
         configure_session(spark)
-        reader = spark.read.options(**self.extra_read_options)
-        if self.schema is not None:
-            reader = reader.schema(self.schema)
-        elif self.format != "parquet":
-            raise ValueError(f"{self.format} sources require an explicit schema")
-        return self._enrich(reader.format(self.format).load(list(files)))
+        return self._enrich(spark.read.parquet(*files))
 
     def sniff_schema(self, spark: SparkSession) -> StructType:
         """Infer the source schema from existing files (reference default:
         'from a random file in the source path')."""
         configure_session(spark)
-        if self.format != "parquet":
-            raise ValueError(f"{self.format} sources require an explicit schema")
-        return spark.read.options(**self.extra_read_options).parquet(self.path).schema
+        return spark.read.parquet(self.path).schema
 
     def read_stream(
         self,
@@ -124,25 +93,33 @@ class BlobParquetSource:
         provides the new-file watermark; the per-trigger file cap is
         the throughput-shaper equivalent (reference ST6)."""
         configure_session(spark)
-        schema = self.schema if self.schema is not None else self.sniff_schema(spark)
-        reader = spark.readStream.schema(schema).options(**self.extra_read_options)
+        reader = spark.readStream.schema(self.sniff_schema(spark))
         # NOTE: `modifiedAfter` is a batch-only reader option (file
         # stream sources reject it); the streaming cutoff is applied as
-        # a row filter on the version column in _enrich_stream below —
-        # the file-source checkpoint already prevents re-reads, so the
-        # filter only gates first-contact old files (reference P3).
+        # a row filter on the version column below — the file-source
+        # checkpoint already prevents re-reads, so the filter only
+        # gates first-contact old files (reference P3).
         if max_files_per_trigger is not None:
             reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-        out = self._enrich(reader.format(self.format).load(self.path))
+        out = self._enrich(reader.parquet(self.path))
         if self.modified_after:
-            cutoff_us = int(
-                datetime.fromisoformat(
-                    self.modified_after.replace("Z", "+00:00")
-                ).timestamp()
-                * 1_000_000
-            )
             # strictly-after, matching the batch path's `modifiedAfter`
             # reader option (which excludes files whose mtime equals the
             # cutoff) — both faces agree on the boundary
+            cutoff_us = _cutoff_micros(spark, self.modified_after)
             out = out.filter(F.col(VERSION_COLUMN) > F.lit(cutoff_us))
         return out
+
+
+def _cutoff_micros(spark: SparkSession, text: str) -> int:
+    """``text`` as epoch microseconds, parsed the way the batch
+    reader's ``modifiedAfter`` parses it: Spark's string-to-timestamp
+    cast, so a value without a zone is read in the session time zone
+    and one with ``Z`` or an offset keeps its own. Evaluated on the
+    driver (a constant query, no job); unparseable text raises."""
+    row = spark.sql(
+        "SELECT unix_micros(CAST(:t AS TIMESTAMP))", args={"t": text}
+    ).first()
+    if row[0] is None:
+        raise ValueError(f"unparseable modified_after timestamp: {text!r}")
+    return int(row[0])

@@ -68,8 +68,3 @@ def _normalize_event_ts(df: DataFrame) -> DataFrame:
         )
     raise TypeError(f"unsupported events.ts physical type: {dt}")
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql use."""
-    for name in TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -44,14 +44,12 @@ def sf_dir() -> str:
 #   pinned elsewhere in seconds: oracle replays (the DRIVER itself runs
 #   every query vs DuckDB as its own gate), crash/kill durability
 #   replays, cross-process soaks, hypothesis property suites,
-#   sharded-backfill kill/resume, changelog replication chains,
-#   multi-batch curation streams;
+#   changelog replication chains, multi-batch curation streams;
 # - individually-measured >=9 s tests inside files that stay fast.
 _SLOW_FILES = {
     "test_oracle.py",
     "test_concurrent_soak.py",
     "test_properties.py",
-    "test_backfill_sharded.py",
     "test_changelog_replication.py",
     "test_curation_stream.py",
     "test_rebucket.py",

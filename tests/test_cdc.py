@@ -352,11 +352,6 @@ def test_key_driven_callers_share_the_touch_planner(
         "read_shard",
         lambda log, n: read_shards.append(n) or orig_read_shard(log, n),
     )
-    monkeypatch.setattr(
-        t,
-        "_collect_delete_stats",
-        lambda *a: pytest.fail("single-file delete commit read its file back"),
-    )
 
     def rows(df):
         return sorted(map(tuple, df.collect()), key=repr)

@@ -22,7 +22,6 @@ from arcane_stream_parquet_spark.config import (
     load_stream_context,
     main_exit_code,
     parse_duration_seconds,
-    parse_size_bytes,
     run_stream_context,
 )
 
@@ -136,7 +135,6 @@ def test_literal_parsers():
     assert parse_duration_seconds("100 millisecond") == pytest.approx(0.1)
     assert parse_duration_seconds("5 second") == 5.0
     assert parse_duration_seconds("6h") == 21600.0
-    assert parse_size_bytes("512MB") == 512 * 1024 * 1024
     with pytest.raises(ValueError):
         parse_duration_seconds("fortnight")
 

@@ -210,14 +210,14 @@ def test_list_files_recursive_filters_and_sorts(spark, tmp_path):
     assert fio.list_files_recursive(f"file://{tmp_path}/nope") == []
 
 
-def test_sharded_backfill_entirely_on_file_uris(spark, tmp_path):
-    """The full E2 path — source listing, shard state, merges, staging
-    swap, watermark — with EVERY path a scheme URI, proving no local-FS
-    call survives anywhere in the backfill stack."""
+def test_backfill_entirely_on_file_uris(spark, tmp_path):
+    """The full E2 path — source scan, overwrite, merge, watermark —
+    with EVERY path a scheme URI, proving no local-FS call survives
+    anywhere in the backfill stack."""
     import random
 
     from arcane_stream_parquet_spark.sources.blob import BlobParquetSource
-    from arcane_stream_parquet_spark.streaming.runner import run_backfill_sharded
+    from arcane_stream_parquet_spark.streaming.runner import run_backfill
     from tests.test_streaming import N_KEYS, write_fixture_file
 
     landing = tmp_path / "landing"
@@ -230,19 +230,11 @@ def test_sharded_backfill_entirely_on_file_uris(spark, tmp_path):
     target = ParquetMergeTarget(
         spark=spark, path=f"file://{tmp_path}/tgt", num_buckets=4
     )
-    run_backfill_sharded(
-        spark,
-        source,
-        target,
-        state_path=f"file://{tmp_path}/state.json",
-        behavior="Overwrite",
-        num_shards=3,
-    )
+    run_backfill(spark, source, target, behavior="Overwrite")
     assert target.read().count() == N_KEYS
-    assert target.watermark() is not None
-    fio = HadoopFileIO(spark)
-    assert not fio.exists(f"file://{tmp_path}/tgt_backfill_staging")
-    assert not fio.exists(f"file://{tmp_path}/state.json")  # cleared
+    run_backfill(spark, source, target, behavior="Merge")  # idempotent
+    assert target.read().count() == N_KEYS
+    assert target.watermark() == (1_700_000_000 + 5 * 60) * 1_000_000
 
 
 def test_merge_target_full_lifecycle_on_file_uri(spark, tmp_path):

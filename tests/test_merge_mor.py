@@ -179,6 +179,17 @@ def test_compact_minor_consolidates_deletes_and_preserves_contents(
     after = t._manifest()["deletes"]
     assert len(after) == 1 and after[0].get("sc") is True
     assert contents(t) == EXPECTED
+    # the entry's stats (the union of the spent entries') are exactly
+    # those of the keys its file holds
+    rows = (
+        spark.read.parquet(t._delete_path(after[0]))
+        .select("arcane_merge_key", merge_module._bucket_expr("arcane_merge_key", 8))
+        .collect()
+    )
+    keys = [r[0] for r in rows if r[0] is not None]
+    assert after[0]["bs"] == sorted({r[1] for r in rows})
+    assert (after[0]["mn"], after[0]["mx"]) == (min(keys), max(keys))
+    assert after[0]["hn"] is any(r[0] is None for r in rows)
 
 
 def test_compact_minor_mixed_entries_then_full_compact(

@@ -1,5 +1,5 @@
 """Runtime-parity tests: CLI exit codes end-to-end, S3 conf mapping,
-jittered trigger loop, observability listener (ST1/ST7/ST11/S1).
+observability listener (ST7/ST11/S1).
 """
 
 from __future__ import annotations
@@ -8,14 +8,11 @@ import json
 import random
 import time
 
-import pytest
-
 from arcane_stream_parquet_spark.config import s3_hadoop_confs
 from arcane_stream_parquet_spark.streaming.observability import MetricsListener
-from arcane_stream_parquet_spark.streaming.runner import run_jittered
 
 from tests.test_config import example_spec
-from tests.test_streaming import N_KEYS, write_fixture_file
+from tests.test_streaming import write_fixture_file
 
 
 def test_s3_conf_mapping():
@@ -68,31 +65,6 @@ def test_cli_main_runs_and_exits_zero(spark, tmp_path, monkeypatch):
     assert main(
         ["--warehouse", str(tmp_path / "wh2"), "--checkpoints", str(tmp_path / "c2")]
     ) == 1
-
-
-def test_jittered_loop_deterministic_and_processes(spark, tmp_path):
-    from tests.test_streaming import make_runner
-
-    src = tmp_path / "landing"
-    src.mkdir()
-    rng = random.Random(5)
-    for i in range(4):
-        write_fixture_file(str(src), i, rng, 1_700_000_000 + i * 60)
-    runner = make_runner(spark, tmp_path, src)
-    runner.change_capture_interval_seconds = 10.0
-
-    slept: list[float] = []
-    delays = run_jittered(
-        spark, runner, cycles=3, jitter_variance=0.1, jitter_seed=42,
-        sleep=slept.append,
-    )
-    assert runner.target.read().count() == N_KEYS
-    assert delays == slept and len(delays) == 3
-    # jitter bounded and seeded-deterministic
-    assert all(9.0 <= d <= 11.0 for d in delays)
-    rng2 = random.Random(42)
-    expect = [10.0 * (1.0 + rng2.uniform(-0.1, 0.1)) for _ in range(3)]
-    assert delays == pytest.approx(expect)
 
 
 def test_metrics_listener_captures_batches(spark, tmp_path):

@@ -15,13 +15,14 @@ import random
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import DateTimeException
 from pyspark.sql import functions as F
 
 from arcane_stream_parquet_spark.functions.selection import FieldSelectionRule
 from arcane_stream_parquet_spark.operators import manifest as manifest_log
 from arcane_stream_parquet_spark.operators import merge as merge_module
 from arcane_stream_parquet_spark.operators.merge import ParquetMergeTarget
-from arcane_stream_parquet_spark.sources.blob import BlobParquetSource
+from arcane_stream_parquet_spark.sources.blob import BlobParquetSource, _cutoff_micros
 from arcane_stream_parquet_spark.streaming.runner import StreamRunner, run_backfill
 
 N_FILES = 10
@@ -146,6 +147,59 @@ def test_backfill_modified_after_cutoff(spark, tmp_path, fixture_dir):
     assert df.select("createdon").distinct().count() == 5
 
 
+def test_stream_and_backfill_read_naive_cutoff_in_session_zone(
+    spark, tmp_path, fixture_dir, monkeypatch
+):
+    """A cutoff without a zone means the same instant to the batch scan
+    and to the stream, whatever the driver process's local zone: both
+    read it in the session time zone (UTC, session.py)."""
+    import datetime as dt
+    import time
+
+    base = 1_700_000_000
+    # an older blob holding a key no later blob has: only a stream
+    # that ignores the cutoff merges it
+    old = os.path.join(str(fixture_dir), "part-old.parquet")
+    pq.write_table(
+        pa.table({"col0": pa.array([999], pa.int64()), "col1": ["old"],
+                  "col2": pa.array([0], pa.int64())}),
+        old,
+    )
+    os.utime(old, (base - 60, base - 60))
+    cutoff_epoch = base + 5 * 60 - 1  # between blob 5 and blob 6
+    iso = dt.datetime.fromtimestamp(cutoff_epoch, dt.timezone.utc).strftime(
+        "%Y-%m-%dT%H:%M:%S"
+    )
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        source = BlobParquetSource(
+            path=str(fixture_dir), primary_keys=["col0"], modified_after=iso
+        )
+        batch = source.read_batch(spark)
+        assert batch.select("createdon").distinct().count() == 5
+        batch_keys = {r[0] for r in batch.select("col0").distinct().collect()}
+        target = ParquetMergeTarget(
+            spark=spark, path=str(tmp_path / "tgt_tz"), num_buckets=4
+        )
+        StreamRunner(
+            source=source, target=target, checkpoint_dir=str(tmp_path / "ckpt_tz")
+        ).run_available_now(spark)
+        stream_keys = {r[0] for r in target.read().select("col0").collect()}
+        assert 999 not in batch_keys
+        assert stream_keys == batch_keys
+        # an explicit zone is kept; text that is no timestamp raises
+        est = dt.timezone(dt.timedelta(hours=-5))
+        est_iso = dt.datetime.fromtimestamp(cutoff_epoch, est).isoformat()
+        for zoned in (iso + "Z", iso + "+00:00", est_iso):
+            assert _cutoff_micros(spark, zoned) == cutoff_epoch * 1_000_000
+        with pytest.raises((ValueError, DateTimeException)):
+            _cutoff_micros(spark, "not a timestamp")
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
 def test_stream_field_selection_applied(spark, tmp_path, fixture_dir):
     source = BlobParquetSource(
         path=str(fixture_dir),
@@ -242,51 +296,6 @@ def test_stream_mor_e2e_matches_cow_with_adaptive_maintenance(
     m = mor.maintenance_metrics()
     assert m["delete_file_count"] <= 1
     assert m["file_count"] <= 8  # ≤ ~1-2 per bucket, not 5 commits' worth
-
-
-def test_csv_and_json_sources_stream_and_merge(spark, tmp_path):
-    """Beyond-reference source formats: the same pipeline over CSV and
-    JSON blobs (schema mandatory — no footer to sniff)."""
-    import json as _json
-
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    schema = StructType(
-        [StructField("col0", LongType()), StructField("col1", StringType())]
-    )
-    for fmt, writer in (
-        ("csv", lambda rows: "\n".join(f"{k},{v}" for k, v in rows)),
-        ("json", lambda rows: "\n".join(
-            _json.dumps({"col0": k, "col1": v}) for k, v in rows)),
-    ):
-        src = tmp_path / f"landing_{fmt}"
-        src.mkdir()
-        (src / f"a.{fmt}").write_text(writer([(1, "x"), (2, "y"), (1, "x2")]))
-        source = BlobParquetSource(
-            path=str(src),
-            primary_keys=["col0"],
-            schema=schema,
-            format=fmt,
-            extra_read_options={} if fmt != "csv" else {"header": "false"},
-        )
-        target = ParquetMergeTarget(
-            spark=spark, path=str(tmp_path / f"tgt_{fmt}"), num_buckets=4
-        )
-        runner = StreamRunner(
-            source=source,
-            target=target,
-            checkpoint_dir=str(tmp_path / f"ckpt_{fmt}"),
-        )
-        runner.run_available_now(spark)
-        assert target.read().count() == 2  # upsert collapsed col0=1
-
-    # schema omission is an explicit error for schemaless formats
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="require an explicit schema"):
-        BlobParquetSource(
-            path=str(tmp_path), primary_keys=["col0"], format="csv"
-        ).read_batch(spark)
 
 
 def test_maintenance_zero_disables_all(spark, tmp_path, fixture_dir, monkeypatch):

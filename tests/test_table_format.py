@@ -258,7 +258,7 @@ def test_merge_statement_semantics_match_parquet_target(spark, tmp_path):
     data — proving both paths share one semantics (latest-wins, ``>=``
     so batch wins ties, intra-batch dedup first)."""
     from arcane_stream_parquet_spark.operators.merge import merge_latest_wins
-    from arcane_stream_parquet_spark.operators.table_format import _dedup_batch
+    from arcane_stream_parquet_spark.operators.dedup import latest_by_key
 
     target = _mk_rows(spark, [("a", 2, "old"), ("b", 1, "keep")])
     batch = _mk_rows(
@@ -271,7 +271,7 @@ def test_merge_statement_semantics_match_parquet_target(spark, tmp_path):
         ).collect()
     }
     # replicate the real targets' two steps: dedup batch, then SQL MERGE
-    deduped = _dedup_batch(batch, "arcane_merge_key", "version", ())
+    deduped = latest_by_key(batch, ["arcane_merge_key"], "version")
     # emulate MERGE INTO via a full outer join (Spark SQL on temp views
     # has no MERGE without a format runtime) with the exact same
     # matched/not-matched conditions
